@@ -9,8 +9,8 @@ Usage:
   python bench_extra.py plans TAG [name ...] # write plans/r06/<q>_TAG.txt
   python bench_extra.py encode               # encode-path decomposition
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
-round-5 measurement scale), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default: bench.py's, the sf0.1 scale),
+SPARK_GRAFT_CPUS (default 32).
 """
 
 from __future__ import annotations
@@ -27,7 +27,8 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+from bench import SF_DIR  # noqa: E402  (one default for both harnesses)
+
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPARK_GRAFT_EXTRA_REPS", "3"))
 
@@ -117,6 +118,9 @@ def write_plans(tag: str, names: list[str]) -> None:
 
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
+    if mode in ("queries", "plans") and not os.path.isdir(SF_DIR):
+        raise SystemExit(f"no data at {SF_DIR}: point SPARK_GRAFT_SF_DIR "
+                         "at a generated scale-factor directory")
     if mode == "queries":
         names = sys.argv[2:] or HEADLINE
         time_queries(names)

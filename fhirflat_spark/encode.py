@@ -71,6 +71,148 @@ def chunk_schema(n_cols: int) -> T.StructType:
     )
 
 
+def chunk_file_schema(n_cols: int) -> pa.Schema:
+    """Schema of one chunk parquet file: ``chunk_schema`` minus
+    ``part_id``, which lives in the ``part_id=N`` directory name."""
+    return pa.schema(
+        [
+            pa.field("chunk_seq", pa.int32(), nullable=False),
+            pa.field("n_rows", pa.int64(), nullable=False),
+            pa.field(
+                "payload",
+                pa.struct([(f"__c{i}", pa.binary()) for i in range(n_cols)]),
+                nullable=False,
+            ),
+            pa.field("stats", pa.string(), nullable=False),
+            pa.field("content_sha", pa.string(), nullable=False),
+            pa.field("raw_bytes", pa.int64(), nullable=False),
+            pa.field("encoded_bytes", pa.int64(), nullable=False),
+            pa.field("repo_min", pa.string()),
+            pa.field("repo_max", pa.string()),
+        ]
+    )
+
+
+_STAT_COLUMNS = ["chunk_seq", "n_rows", "raw_bytes", "encoded_bytes",
+                 "repo_min", "repo_max"]
+
+
+def write_chunk_file(path: str, batches, n_cols: int) -> int:
+    """Stream chunk-row batches into ONE parquet file at ``path`` — the
+    one chunk-file writer of the engine (``encode_table`` tasks and the
+    named sink both use it).
+
+    Rows stream into a dot-prefixed, attempt-unique temporary file next
+    to ``path`` (readers skip dot files) as they arrive, so a partition
+    is never buffered whole; ``fsio.move`` then publishes it. A killed
+    attempt never leaves a truncated chunk file, and a retried or
+    speculative attempt writing the same name replaces it whole.
+    Returns the number of chunk rows written; no file for none."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from fhirflat_spark import fsio
+
+    schema = chunk_file_schema(n_cols)
+    parent, name = path.rsplit("/", 1)
+    tmp = f"{parent}/.{uuid.uuid4().hex[:16]}.{name}"
+    writer = None
+    n = 0
+    try:
+        for b in batches:
+            if not b.num_rows:
+                continue
+            if writer is None:
+                fsio.makedirs(parent)
+                fs, inner = fsio.resolve(tmp)
+                # payloads are compressed and distinct: a dictionary page
+                # or min/max statistics would only store them again
+                writer = pq.ParquetWriter(
+                    inner, schema, filesystem=fs, compression="none",
+                    use_dictionary=False, write_statistics=_STAT_COLUMNS,
+                )
+            writer.write_batch(pa.RecordBatch.from_arrays(
+                [b.column(c) for c in schema.names], schema=schema
+            ))
+            n += b.num_rows
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            fsio.delete_file(tmp)
+        raise
+    if writer is None:
+        return 0
+    writer.close()
+    fsio.move(tmp, path)
+    return n
+
+
+def keep_only(part_dir: str, keep: str) -> None:
+    """Drop the chunk files in a part dir other than the committed one:
+    losing or killed attempts' files, a replaced earlier write of the
+    partition, a replayed micro-batch's prior run."""
+    from fhirflat_spark import fsio
+
+    for name in fsio.list_files(part_dir, suffix=".parquet"):
+        if name != keep:
+            fsio.delete_file(f"{part_dir}/{name}")
+
+
+# the row an encode task returns per written partition, instead of its
+# chunk bytes
+WRITTEN_SCHEMA = T.StructType(
+    [
+        T.StructField("part_id", T.IntegerType(), False),
+        T.StructField("file", T.StringType(), False),
+    ]
+)
+
+
+def _part_slices(batches):
+    """(part_id, batch) for every same-part_id stretch of a chunk-row
+    batch stream, in stream order."""
+    import numpy as np
+
+    for b in batches:
+        if not b.num_rows:
+            continue
+        pids = b.column("part_id").to_numpy()
+        cuts = np.flatnonzero(np.diff(pids)) + 1
+        for s, e in zip([0, *cuts], [*cuts, len(pids)]):
+            yield int(pids[s]), b.slice(s, e - s)
+
+
+def chunk_write_kernel(kernel, chunks_dir: str, n_cols: int):
+    """Wrap a chunk-row kernel so its task writes the chunk files itself.
+
+    Every encode kernel emits whole partitions, each as one consecutive
+    stretch of rows (the stage-2 merge kernel in part_id order). Each
+    stretch streams into ``chunks_dir/part_id=N/part-N.parquet`` through
+    ``write_chunk_file``, and the task yields one ``WRITTEN_SCHEMA`` row
+    per written partition instead of the chunk bytes. The file name is a
+    pure function of the part id because layout is a pure function of
+    the input: retries and speculative duplicates publish identical
+    bytes under one name."""
+    import itertools
+
+    def run(batches):
+        seen: set[int] = set()
+        for pid, group in itertools.groupby(_part_slices(kernel(batches)),
+                                            key=lambda pb: pb[0]):
+            if pid in seen:  # a second stretch would replace the first
+                raise RuntimeError(f"part_id {pid} emitted out of order")
+            seen.add(pid)
+            name = f"part-{pid:06d}.parquet"
+            if write_chunk_file(f"{chunks_dir}/part_id={pid}/{name}",
+                                (b for _, b in group), n_cols):
+                yield pa.RecordBatch.from_pydict(
+                    {"part_id": pa.array([pid], pa.int32()), "file": [name]}
+                )
+
+    return run
+
+
 def _col_raw_sha(arr: pa.Array) -> tuple[str, int]:
     """sha256 + byte count of a column's raw value stream.
 
@@ -485,6 +627,16 @@ def _bq(c: str):  # flat tables may carry dotted names (period.start)
 SALT_STATS_CAP = int(os.environ.get("SPARK_GRAFT_SALT_STATS_CAP", "4096"))
 
 
+def _salt_stats_cap() -> int:
+    """``SALT_STATS_CAP``, checked: below 1 no key stays exact, every key
+    folds into "o:" and placement collapses to the fallback buckets."""
+    if SALT_STATS_CAP < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_SALT_STATS_CAP must be >= 1, got {SALT_STATS_CAP}"
+        )
+    return SALT_STATS_CAP
+
+
 def _salted_prelude(df: DataFrame, rows_per_bucket: int,
                     num_partitions: int | None, salt_col: str | None,
                     key_counts: list[tuple] | None,
@@ -527,7 +679,7 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     # remainder mass (equivalent rows) that sizes the "o:" fallback bucket.
     capped = False
     rest_equiv = 0
-    cap = SALT_STATS_CAP
+    cap = _salt_stats_cap()
     if key_counts is None and weight_col is not None:
         # byte-weighted placement: bucket allocation follows each key's
         # PAYLOAD BYTES, not its row count. Row counts under-provision a
@@ -1439,7 +1591,6 @@ def encode_table(
     profile: str = "balanced",
     append: bool = False,
     part_offset: int = 0,
-    overwrite_partitions: bool = False,
     max_new_partitions: int | None = None,
     bloom_columns: list[str] | None = None,
     ndv_columns: list[str] | None = None,
@@ -1496,8 +1647,8 @@ def encode_table(
     stage 2 renumbers chunk_seq deterministically, CONSOLIDATES runs of
     small chunklets (decode+re-encode below batch_rows//4 rows — keeps
     footprint stable on scattered inputs), and commits the fragments.
-    Since r6 this IS what ``shuffle=True`` runs (the golden manifest
-    re-pinned to it as one deliberate format change): with the r6
+    Since r6 this IS what ``shuffle=True`` runs (it reproduces the
+    golden manifest pin, unchanged since 59b96b4): with the r6
     transit chunklets (slices below the consolidation threshold ship as
     lz4-framed whole-slice Arrow IPC instead of being fully encoded
     twice) and the data-driven stage-2 task count (~2 per core instead
@@ -1510,6 +1661,15 @@ def encode_table(
     ``shuffle="rows"`` keeps the legacy row exchange (``resume``
     implies it: stage-1 map-side encode cannot skip already-committed
     partitions).
+
+    Chunk files are written by the encoding task itself (the stage-2
+    merge task on the encoded exchange), one file per partition under
+    ``chunks/part_id=N/`` with a deterministic name; there are no
+    ``_SUCCESS`` or ``.crc`` files. Retries and speculative duplicates
+    publish identical bytes under that name, and the driver drops every
+    other file in the part dirs the job wrote: a retried append (same
+    ``part_offset``; the crash came before the manifest merge) replaces
+    exactly its own partitions' files instead of adding duplicates.
 
     ``profile``: ``"balanced"`` (default — faster than a parquet/zstd
     write of the same table at near-identical footprint) or
@@ -1626,20 +1786,15 @@ def encode_table(
 
     skip: frozenset[int] = frozenset()
     frag_live: set[int] | None = None  # append: head-reachable pid filter
-    mode = "overwrite"
-    if append:
-        # incremental append: new data lands in NEW part_id directories
-        # (offset past every existing partition); old manifest fragments
-        # stay in place and write_manifest re-merges old + new.
-        # overwrite_partitions flips to dynamic partition overwrite:
-        # re-running the SAME part_offset range replaces exactly its own
-        # partition dirs — the idempotence a replayed streaming
-        # micro-batch needs for exactly-once.
-        mode = "overwrite" if overwrite_partitions else "append"
-    elif resume:
+    if resume and not append:
         skip = completed_partitions(spark, out_dir)
-        mode = "append" if skip else "overwrite"
+    from fhirflat_spark import fsio
 
+    chunks_dir = f"{out_dir}/chunks"
+    if not (append or skip):
+        # a fresh encode owns every chunk dir (an append writes NEW part
+        # ids, a resume keeps its committed ones)
+        fsio.delete_dir(chunks_dir)
     frag_dir = f"{out_dir}/manifest_parts"
     if not (resume or append):
         # a fresh encode owns the whole table: stale stats fragments from
@@ -1647,7 +1802,6 @@ def encode_table(
         # (fresh=True) is skipped (caller-supplied counts / no-shuffle /
         # no salt column) and corrupt load_key_counts totals; stale
         # snapshots would time-travel into a different table's history
-        from fhirflat_spark import fsio
         from fhirflat_spark.manifest import _deletes_dir, _snap_dir, _stats_dir
 
         fsio.delete_dir(frag_dir)
@@ -1674,7 +1828,6 @@ def encode_table(
         # those partitions, and a later rollback BACK onto one of their
         # snapshots must still find them (fragments for pids in any
         # retained snapshot stay on disk until the snapshot expires).
-        from fhirflat_spark import fsio
         from fhirflat_spark.manifest import (
             _branch_staged_versions,
             all_snapshot_part_ids,
@@ -1758,15 +1911,13 @@ def encode_table(
             ),
             schema=encoded_shuffle_schema(len(columns)),
         )
-        chunks = stage1.repartition(n2, F.col("__tok")).mapInArrow(
-            encoded_merge_kernel_factory(
-                len(columns), manifest_dir=frag_dir, columns=safe_names,
-                codec_overrides=codec_overrides, name_map=name_map,
-                codec_opts=codec_opts, batch_rows=batch_rows,
-                bloom_columns=bloom_set, ndv_columns=ndv_set,
-                qsk_columns=qsk_set, sort_names=sort_names,
-            ),
-            schema=chunk_schema(len(columns)),
+        source = stage1.repartition(n2, F.col("__tok"))
+        kernel = encoded_merge_kernel_factory(
+            len(columns), manifest_dir=frag_dir, columns=safe_names,
+            codec_overrides=codec_overrides, name_map=name_map,
+            codec_opts=codec_opts, batch_rows=batch_rows,
+            bloom_columns=bloom_set, ndv_columns=ndv_set,
+            qsk_columns=qsk_set, sort_names=sort_names,
         )
     elif blob_mode:
         # blob-shuffle path (experimental, opt-in via shuffle="blob" —
@@ -1803,9 +1954,7 @@ def encode_table(
             part_offset=part_offset, bloom_columns=bloom_set,
             ndv_columns=ndv_set, qsk_columns=qsk_set,
         )
-        chunks = packed.repartition(P, F.col("__tok")).mapInArrow(
-            kernel, schema=chunk_schema(len(columns))
-        )
+        source = packed.repartition(P, F.col("__tok"))
     else:
         if shuffle:
             # default shuffled plan: literal-map placement (codegen
@@ -1823,7 +1972,7 @@ def encode_table(
         else:  # layout-preserving: encode splits in place, no exchange
             salted = df
             P = df.rdd.getNumPartitions()
-        salted = salted.select(
+        source = salted.select(
             *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)]
         )
         kernel = encode_kernel_factory(
@@ -1832,7 +1981,6 @@ def encode_table(
             part_offset=part_offset, bloom_columns=bloom_set,
             ndv_columns=ndv_set, qsk_columns=qsk_set,
         )
-        chunks = salted.mapInArrow(kernel, schema=chunk_schema(len(columns)))
     if max_new_partitions is not None and P > max_new_partitions:
         # part-id namespace guard (streaming: batch_id * parts_per_batch):
         # silently bleeding into the next range would let a later replay
@@ -1841,14 +1989,18 @@ def encode_table(
             f"planned {P} partitions exceed the {max_new_partitions}-wide "
             "part-id namespace; raise parts_per_batch or rows_per_bucket"
         )
-    # ONE data-sized job: encode + write chunks; tasks commit their own
-    # manifest fragments alongside. partitionBy(part_id) keeps the
-    # Iceberg-style partitioned layout that resume prunes/replaces by
-    # directory.
-    writer = chunks.write.mode(mode).option("compression", "uncompressed")
-    if append and overwrite_partitions:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("part_id").parquet(f"{out_dir}/chunks")
+    # ONE data-sized job: each task writes its partitions' chunk files
+    # and manifest fragments itself and returns one row per written
+    # partition. The driver then drops every other file in those part
+    # dirs: an earlier write an append replays over, killed attempts'
+    # leftovers.
+    written = source.mapInArrow(
+        chunk_write_kernel(kernel, chunks_dir, len(columns)),
+        schema=WRITTEN_SCHEMA,
+    ).collect()
+    fsio.makedirs(chunks_dir)
+    for r in written:
+        keep_only(f"{chunks_dir}/part_id={r['part_id']}", r["file"])
     meta_rows = load_fragments(frag_dir)
     if frag_live is not None:
         # append commit = head-reachable history + this run's range.
@@ -2047,7 +2199,7 @@ def append_table(
     # mint ids past every partition any RETAINED snapshot references,
     # not just the current manifest: after a rollback the dropped
     # partitions are still time-travel-readable, and reusing their ids
-    # (dynamic overwrite clears the dir) would silently rewrite that
+    # (the new write replaces the dir's files) would silently rewrite that
     # history. Ids from a crashed append are in NO snapshot — those stay
     # reusable, which is what makes a retried append idempotent.
     from fhirflat_spark.manifest import all_snapshot_part_ids
@@ -2060,11 +2212,12 @@ def append_table(
         # top-``SALT_STATS_CAP`` heaviest delta keys exact (deterministic
         # order); tail keys place via the planner's "o:" fallback bucket
         # and the persisted delta stats stay O(cap), not O(#keys)
+        cap = _salt_stats_cap()
         rows = (df.groupBy("repo").count()
                 .orderBy(F.desc("count"), F.col("`repo`"))
-                .limit(SALT_STATS_CAP + 1).collect())
-        if len(rows) > SALT_STATS_CAP:
-            rows = rows[:SALT_STATS_CAP]
+                .limit(cap + 1).collect())
+        if len(rows) > cap:
+            rows = rows[:cap]
         delta_stats = [(r[0], r["count"]) for r in rows]
         key_counts = delta_stats
     res = encode_table(
@@ -2085,11 +2238,6 @@ def append_table(
         # count+sum scan; row-count stats are NOT persisted for weighted
         # appends (equivalent-row weights would pollute merged row totals)
         weight_col=weight_col,
-        # a RETRIED append reuses the same offset (the manifest was not
-        # merged before the crash); dynamic partition overwrite makes the
-        # retry replace exactly its own partition dirs instead of
-        # appending duplicate chunk files next to the crashed attempt's
-        overwrite_partitions=True,
     )
     if delta_stats is not None and branch is None:
         # persist only after a successful MAIN append (a staged append's

@@ -2,12 +2,11 @@
 
 Every Python-side metadata read/write (manifest fragments, key-count
 stats fragments, manifest/snapshot parquet, ``_SUMMARY.json``) routes
-through this module. The chunk payloads themselves are written and read
-by Spark's own parquet source/sink, which speaks object stores natively
-through the Hadoop filesystems (``s3a://``, ``gs://``, ``abfss://``) —
-so this layer is what remained local-only (SCALE.md "what would need
-work": swap local ``os.replace`` fragment commits for ``pyarrow.fs``
-puts).
+through this module, and so do the chunk files encode tasks and the
+named sink write (``encode.write_chunk_file``). Spark's own parquet
+source/sink reads chunks and writes ``transcode_table``'s, speaking
+object stores through the Hadoop filesystems (``s3a://``, ``gs://``,
+``abfss://``).
 
 Resolution rules for a dataset path:
 

@@ -332,38 +332,21 @@ def _write_plan(options, schema, overwrite: bool, streaming: bool) -> dict:
     }
 
 
-def _chunk_file_schema(n_cols: int) -> pa.Schema:
-    """The chunk parquet schema Spark's partitionBy writer produces
-    (part_id lives in the directory name, not the file)."""
-    return pa.schema(
-        [
-            pa.field("chunk_seq", pa.int32(), nullable=False),
-            pa.field("n_rows", pa.int64(), nullable=False),
-            pa.field(
-                "payload",
-                pa.struct([(f"__c{i}", pa.binary()) for i in range(n_cols)]),
-                nullable=False,
-            ),
-            pa.field("stats", pa.string(), nullable=False),
-            pa.field("content_sha", pa.string(), nullable=False),
-            pa.field("raw_bytes", pa.int64(), nullable=False),
-            pa.field("encoded_bytes", pa.int64(), nullable=False),
-            pa.field("repo_min", pa.string()),
-            pa.field("repo_max", pa.string()),
-        ]
-    )
-
-
 def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
                       keys_path: str | None = None):
     """Task-side encode: rebatch → kernel-encode each chunk → stream the
-    chunk rows into ONE parquet file at ``out_path``. Returns the chunk
-    meta list (the manifest fragment content). No file is created for an
-    empty partition. ``keys_path`` (upsert): also write this partition's
-    distinct upsert-key values there — collected from the already-cast
-    arrays while encoding, so the key pass is free."""
+    chunk rows into ONE parquet file at ``out_path`` (the shared
+    ``write_chunk_file``). Returns the chunk meta list (the manifest
+    fragment content). No file is created for an empty partition.
+    ``keys_path`` (upsert): also write this partition's distinct
+    upsert-key values there — collected from the already-cast arrays
+    while encoding, so the key pass is free."""
     from fhirflat_spark import fsio
-    from fhirflat_spark.encode import _encode_one_batch, _rebatch
+    from fhirflat_spark.encode import (
+        _encode_one_batch,
+        _rebatch,
+        write_chunk_file,
+    )
     from fhirflat_spark.session import ARROW_BATCH_ROWS
 
     columns = plan["columns"]
@@ -373,15 +356,12 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
     bloom = frozenset(plan["bloom"])
     ndv = frozenset(plan.get("ndv") or ())
     qsk = frozenset(plan.get("qsk") or ())
-    file_schema = _chunk_file_schema(len(columns))
     key_col = plan["upsert_key"] if keys_path else None
     key_idx = columns.index(key_col) if key_col else None
     key_chunks: list[pa.Array] = []
-
     metas: list[dict] = []
-    writer = None
-    fs = None
-    try:
+
+    def chunk_rows():
         for seq, batch in enumerate(_rebatch(batches, ARROW_BATCH_ROWS)):
             if batch.num_rows == 0:
                 continue
@@ -395,8 +375,7 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
                     if arr.type != arrow_of[c]:
                         arr = arr.cast(arrow_of[c])
                 else:  # column absent from this write: typed nulls
-                    arrays.append(pa.nulls(batch.num_rows, type=arrow_of[c]))
-                    continue
+                    arr = pa.nulls(batch.num_rows, type=arrow_of[c])
                 arrays.append(arr)
             if key_idx is not None:
                 key_chunks.append(arrays[key_idx])
@@ -409,22 +388,9 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
                 bloom, ndv, qsk,
             )
             metas.append(meta)
-            if writer is None:
-                fs, inner = fsio.resolve(out_path)
-                fsio.makedirs(out_path.rsplit("/", 1)[0])
-                writer = pq.ParquetWriter(
-                    inner, file_schema, filesystem=fs, compression="none"
-                )
-            # drop the part_id column — it is the directory key
-            writer.write_batch(
-                pa.RecordBatch.from_arrays(
-                    [out.column(n) for n in file_schema.names],
-                    schema=file_schema,
-                )
-            )
-    finally:
-        if writer is not None:
-            writer.close()
+            yield out
+
+    write_chunk_file(out_path, chunk_rows(), len(columns))
     if key_idx is not None and key_chunks:
         import pyarrow.compute as pc
 
@@ -433,16 +399,6 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
         fsio.makedirs(keys_path.rsplit("/", 1)[0])
         pq.write_table(pa.table({key_col: uniq}), kinner, filesystem=kfs)
     return metas
-
-
-def _keep_only(part_dir: str, keep: str) -> None:
-    """Drop files in a part dir other than the committed one (losing
-    speculative/retried attempts; a replayed micro-batch's prior run)."""
-    from fhirflat_spark import fsio
-
-    for name in fsio.list_files(part_dir, suffix=".parquet"):
-        if name != keep:
-            fsio.delete_file(f"{part_dir}/{name}")
 
 
 def _commit_snapshot(plan: dict, by_part: dict[int, list],
@@ -566,6 +522,7 @@ class FhirflatBatchWriter(DataSourceArrowWriter):
 
     def commit(self, messages):
         from fhirflat_spark import fsio
+        from fhirflat_spark.encode import keep_only
 
         plan = self._plan
         by_part: dict[int, list] = {}
@@ -574,7 +531,7 @@ class FhirflatBatchWriter(DataSourceArrowWriter):
             if m is None or m.file is None:
                 continue
             pid = plan["part_offset"] + m.part_rel
-            _keep_only(f"{plan['path']}/chunks/part_id={pid}", m.file)
+            keep_only(f"{plan['path']}/chunks/part_id={pid}", m.file)
             by_part[pid] = m.meta
             if m.keys_file:
                 key_files.add(m.keys_file)
@@ -647,6 +604,7 @@ class FhirflatStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int):
         from fhirflat_spark import fsio
+        from fhirflat_spark.encode import keep_only
 
         plan = self._plan
         ppb = plan["parts_per_batch"]
@@ -667,7 +625,7 @@ class FhirflatStreamWriter(DataSourceStreamArrowWriter):
             target = f"{plan['path']}/chunks/part_id={pid}"
             # a replayed batch re-commits exactly its own dirs: clear the
             # prior attempt's files, then promote this one
-            _keep_only(target, m.file)
+            keep_only(target, m.file)
             fsio.move(f"{self._stage_dir()}/{m.file}", f"{target}/{m.file}")
             by_part[pid] = [dict(meta, part_id=pid) for meta in m.meta]
             if m.keys_file:

@@ -77,7 +77,7 @@ def encode_stream_incremental(stream_df: DataFrame, out_dir: str,
         encode_table(
             batch_df, out_dir, rows_per_bucket=rows_per_bucket,
             append=True, part_offset=int(batch_id) * parts_per_batch,
-            overwrite_partitions=True, max_new_partitions=parts_per_batch,
+            max_new_partitions=parts_per_batch,
         )
         if snapshot_keep_last is not None:
             from fhirflat_spark.manifest import expire_snapshots

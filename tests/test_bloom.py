@@ -140,7 +140,7 @@ def test_direct_append_inherits_blooms(spark, bloomed):
     out, df = bloomed
     delta = gen_spark(spark, 3000, seed=57)
     encode_table(delta, out, rows_per_bucket=2000, append=True,
-                 part_offset=10_000, overwrite_partitions=True)
+                 part_offset=10_000)
     assert read_summary(spark, out)["bloom_columns"] == ["commit"]
     probe = delta.select("commit").limit(1).collect()[0][0]
     truth = (

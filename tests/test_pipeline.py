@@ -703,9 +703,8 @@ def test_decode_filtered_one_call(spark, encoded):
 def test_append_retry_idempotent(spark, tmp_path):
     """A crashed-then-retried append reuses the SAME part_offset (the
     manifest was not merged before the crash). The retry must replace the
-    crashed attempt's partition dirs via dynamic partition overwrite —
-    not add duplicate chunk files — leaving the dataset checksum
-    unchanged and rows exact."""
+    crashed attempt's chunk files — not add duplicates next to them —
+    leaving the dataset checksum unchanged and rows exact."""
     from fhirflat_spark.manifest import read_summary
 
     out = str(tmp_path / "retry")
@@ -717,13 +716,13 @@ def test_append_retry_idempotent(spark, tmp_path):
     kc = [(r[0], r["count"]) for r in df2.groupBy("repo").count().collect()]
     first = encode_table(
         df2, out, rows_per_bucket=300, key_counts=kc,
-        append=True, part_offset=offset, overwrite_partitions=True,
+        append=True, part_offset=offset,
     )
     sha1 = read_summary(spark, out)["dataset_sha256"]
     # the retry: identical data, identical offset
     encode_table(
         df2, out, rows_per_bucket=300, key_counts=kc,
-        append=True, part_offset=offset, overwrite_partitions=True,
+        append=True, part_offset=offset,
     )
     sha2 = read_summary(spark, out)["dataset_sha256"]
     assert sha1 == sha2

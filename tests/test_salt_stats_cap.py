@@ -107,3 +107,22 @@ def test_append_delta_stats_capped(spark, tmp_path, monkeypatch):
     n0 = decode_table(spark, out).count()
     append_table(delta, out, rows_per_bucket=50)
     assert decode_table(spark, out).count() == n0 + delta.count()
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+def test_cap_below_one_raises_naming_the_variable(spark, tmp_path,
+                                                  monkeypatch, cap):
+    """A cap below 1 keeps no key exact: every key would fold into "o:"
+    and placement would silently collapse. It must fail loudly instead,
+    in planning, encode and append alike."""
+    df = _skew_df(spark, n_keys=6, heavy_rows=20, tail_rows=2)
+    out = str(tmp_path / "t")
+    encode_table(df, out, rows_per_bucket=100)
+    monkeypatch.setattr(enc, "SALT_STATS_CAP", cap)
+    for call in (
+        lambda: _salted_prelude(df, 100, None, "repo", None),
+        lambda: encode_table(df, str(tmp_path / "u"), rows_per_bucket=100),
+        lambda: enc.append_table(df, out, rows_per_bucket=100),
+    ):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SALT_STATS_CAP"):
+            call()

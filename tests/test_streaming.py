@@ -369,7 +369,7 @@ def test_incremental_stream_encode_single_dataset(spark, tmp_path):
     # simulate a replay of batch 1 (same id, same rows): must be a no-op
     encode_table(
         df2, out_dir, rows_per_bucket=300, append=True,
-        part_offset=1 * PARTS_PER_BATCH, overwrite_partitions=True,
+        part_offset=1 * PARTS_PER_BATCH,
     )
     sha2 = read_summary(spark, out_dir)["dataset_sha256"]
     assert sha1 == sha2
@@ -392,7 +392,7 @@ def test_incremental_stream_crash_replay_bit_identical(spark, tmp_path):
     The injected crash encodes HALF the batch into the batch's part-id
     namespace (real partitions, fragments, merged manifest — the state a
     task-level kill leaves behind) and then dies; the restarted query
-    replays the full batch under dynamic partition overwrite."""
+    replays the full batch, replacing the crashed run's chunk files."""
     import time as _t
 
     import fhirflat_spark.streaming as streaming_mod
