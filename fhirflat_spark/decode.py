@@ -225,11 +225,14 @@ def _part_range_predicate(ids: list[int]):
 
 # full-table decodes at or above this many rows route through the named
 # Python data source (pyarrow-direct chunk reads in the workers — no JVM
-# row materialization on the input side; measured ~2x the mapInArrow
-# path at 1M rows and far more run-to-run stable). Below it the
-# source's ~1s fixed planning overhead dominates, so small decodes keep
-# the mapInArrow path. Both paths read the same chunks with the same
-# kernels; equality is pinned by test_datasource.py.
+# row materialization on the input side). The source runs one task per
+# part id, so its fixed cost is per Python task; most of that was
+# pyspark.zip directory re-reads, which the zipimport guard in
+# fhirflat_spark/__init__.py now skips. Full decode at local[4] on a
+# 4-vCPU VM, median of 6, wall / process-tree CPU, kernel path vs named
+# source: 131k rows 1.35 s / 3.4 CPU-s vs 1.33 s / 4.1 CPU-s; 1M rows
+# 4.2 s / 12.3 CPU-s vs 3.4 s / 12.1 CPU-s. Both paths read the same
+# chunks with the same kernels; equality is pinned by test_datasource.py.
 DATASOURCE_MIN_ROWS = 200_000
 
 
@@ -284,8 +287,9 @@ def decode_table(spark: SparkSession, out_dir: str,
     ``via`` picks the physical read path: ``"auto"`` (default) routes
     plain full-table decodes — no explicit prune options, no positions —
     of at least ``DATASOURCE_MIN_ROWS`` rows through the named data
-    source (task-side pyarrow chunk reads, no JVM input rows; ~2x
-    faster at 1M rows); everything else uses the ``mapInArrow`` kernel.
+    source (task-side pyarrow chunk reads, no JVM input rows; ~1.25x
+    faster wall at 1M rows, same CPU); everything else uses the
+    ``mapInArrow`` kernel.
     ``"datasource"`` / ``"arrow"`` force a path (``"datasource"`` still
     requires the options it cannot express to be absent).
     """
@@ -323,8 +327,8 @@ def decode_table(spark: SparkSession, out_dir: str,
     if snapshot is not None:
         # auto-route on the SELECTED snapshot's size, not the current
         # table's: a tiny historical snapshot of a large table would
-        # otherwise pay the named source's ~1s fixed planning overhead
-        # for a read the kernel path finishes faster (round-4 advice)
+        # otherwise pay the named source's per-task cost (one task per
+        # part id) for a read the kernel path finishes as fast
         from fhirflat_spark.manifest import read_snapshot_manifest
 
         snapshot = resolve_snapshot(out_dir, snapshot)

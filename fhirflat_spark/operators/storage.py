@@ -1441,7 +1441,7 @@ SELECT event_type, count(*) AS n_events,
        max(event_id) AS max_event,
        CAST(sum(user_id) AS BIGINT) AS user_sum
 FROM events
-WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
+WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' OR ts IS NULL
 GROUP BY event_type ORDER BY event_type
 """
 
