@@ -635,8 +635,7 @@ def ensure_source(spark) -> str:
 
 
 def encode_run(cores: int, src: str, tag: str, key_counts,
-               measure_decode: bool = False, shuffle: bool = True,
-               reps: int | None = None) -> dict:
+               measure_decode: bool = False, shuffle: bool = True) -> dict:
     """Fresh session at the given core count; warmup + min-of-reps encode."""
     from fhirflat_spark.encode import encode_table
     from fhirflat_spark.session import get_spark
@@ -648,7 +647,7 @@ def encode_run(cores: int, src: str, tag: str, key_counts,
         out = f"{SHM}/enc_{tag}"
         walls = []
         res = None
-        for attempt in range(1 + (reps if reps is not None else N_REPS)):  # attempt 0 = warmup
+        for attempt in range(1 + N_REPS):  # attempt 0 = warmup
             shutil.rmtree(out, ignore_errors=True)
             spark.sparkContext._jvm.System.gc()
             time.sleep(4)
@@ -908,20 +907,6 @@ def main() -> None:
     # layout-preserving mode (no exchange): the throughput ceiling when the
     # source table is already clustered by the salt key
     noshuffle = encode_run(CPUS, src, f"n{CPUS}_noshuffle", key_counts, shuffle=False)
-    # encoded shuffle: map-side encode, exchange of the final compressed
-    # chunk bytes — the re-cluster path's answer to the row-exchange tax.
-    # Measured at the same N vs 4N pair as the headline so the north
-    # rule's scaling criterion covers the fast re-cluster path too.
-    encoded_low = encode_run(N_LOW, src, f"n{N_LOW}_encoded", key_counts,
-                             shuffle="encoded", reps=min(3, N_REPS))
-    encoded_high = encode_run(N_HIGH, src, f"n{N_HIGH}_encoded", key_counts,
-                              shuffle="encoded", reps=min(3, N_REPS))
-    encoded = encode_run(CPUS, src, f"n{CPUS}_encoded", key_counts,
-                         shuffle="encoded", reps=min(3, N_REPS))
-    encoded_eff = (
-        round(encoded_high["gbps"] / (4 * encoded_low["gbps"]), 4)
-        if encoded_low["gbps"] else 0.0
-    )
     efficiency = round(high["gbps"] / (4 * low["gbps"]), 4) if low["gbps"] else 0.0
     efficiency_med = (
         round(high["gbps_median"] / (4 * low["gbps_median"]), 4)
@@ -941,10 +926,6 @@ def main() -> None:
             f"local[{N_HIGH}]": high,
             f"local[{CPUS}]": full,
             f"local[{CPUS}]_noshuffle": noshuffle,
-            f"local[{N_LOW}]_encoded_shuffle": encoded_low,
-            f"local[{N_HIGH}]_encoded_shuffle": encoded_high,
-            f"local[{CPUS}]_encoded_shuffle": encoded,
-            "scaling_efficiency_n_to_4n_encoded": encoded_eff,
             "scaling_efficiency_n_to_4n": efficiency,
             "scaling_efficiency_n_to_4n_median": efficiency_med,
         },
@@ -1028,10 +1009,8 @@ def _compact(result: dict) -> dict:
             f"local[{N_HIGH}]": _lvl(f"local[{N_HIGH}]"),
             f"local[{CPUS}]": _lvl(f"local[{CPUS}]"),
             "noshuffle": _lvl(f"local[{CPUS}]_noshuffle"),
-            "encoded_shuffle": _lvl(f"local[{CPUS}]_encoded_shuffle"),
             "scaling_eff_n_to_4n": enc["scaling_efficiency_n_to_4n"],
             "scaling_eff_n_to_4n_median": enc["scaling_efficiency_n_to_4n_median"],
-            "scaling_eff_n_to_4n_encoded": enc["scaling_efficiency_n_to_4n_encoded"],
         },
         "footprint": {
             "ratio_vs_parquet_zstd": fp["ratio_vs_parquet_zstd"],
@@ -1245,15 +1224,14 @@ def _write_report(result: dict) -> None:
         "SLOWER (mapInArrow converts its input per-row regardless of",
         "position); full decomposition and rejected variants in SCALE.md.",
         "",
-        "Round 4 cont.: the ENCODED shuffle (shuffle=\"encoded\", the",
-        "local[N]_encoded_shuffle rows above) closes most of that gap by",
-        "encoding map-side and exchanging only the final compressed chunk",
-        "bytes (~0.25-0.3x of raw — also a ~4x network saving on a real",
-        "cluster); small-chunklet consolidation keeps footprint at parity",
-        "on scattered inputs. Scaling efficiency N→4N for the encoded",
-        f"path: {enc.get('scaling_efficiency_n_to_4n_encoded', '?')}.",
-        "Opt-in (the row shuffle remains the pinned default layout);",
-        "envelope and determinism notes in SCALE.md.",
+        "The shuffled rows above run the ENCODED exchange (the default",
+        "since round 6, now the one re-clustering path: the row and blob",
+        "exchanges are gone). It closes most of that gap by encoding",
+        "map-side and exchanging only the final compressed chunk bytes",
+        "(~0.3-0.5x of raw — also a network saving on a real cluster);",
+        "small-chunklet consolidation keeps footprint at parity on",
+        "scattered inputs, and it reproduces the golden manifest pin.",
+        "Envelope and determinism notes in SCALE.md.",
         "",
         "## Compressed footprint",
         "",

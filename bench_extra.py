@@ -137,12 +137,11 @@ def main() -> None:
 
 def encode_decompose() -> None:
     """Isolate the encode pipeline's stages at a given core count:
-    (a) parquet scan only, (b) plan+exchange+sort via noop (JVM side of
-    the row path), (c) full row-shuffle encode, (d) encoded-shuffle
-    encode, (e) layout-preserving encode. min-of-reps each."""
+    (a) parquet scan only, (b) encoded-exchange encode (the default),
+    (c) layout-preserving encode. min-of-reps each."""
     import shutil
 
-    from fhirflat_spark.encode import encode_table, plan_salted
+    from fhirflat_spark.encode import encode_table
     from fhirflat_spark.session import get_spark
 
     cores = int(os.environ.get("SPARK_GRAFT_EXTRA_CORES", "4"))
@@ -177,14 +176,7 @@ def encode_decompose() -> None:
 
     timed("scan_noop", lambda: df.write.format("noop").mode("overwrite").save())
 
-    def _salted_noop():
-        salted, P = plan_salted(df, rows_per_bucket=rpb, num_partitions=64,
-                                key_counts=key_counts)
-        salted.write.format("noop").mode("overwrite").save()
-
-    timed("plan+exchange+sort_noop", _salted_noop)
-
-    for tag, shuf in (("row", True), ("encoded", "encoded"), ("noshuffle", False)):
+    for tag, shuf in (("encoded", True), ("noshuffle", False)):
         out = f"{shm}/dec_{tag}"
 
         def _enc(out=out, shuf=shuf):

@@ -83,7 +83,7 @@ def main() -> None:
     enc.add_argument("--weight-col", dest="weight_col",
                      help="allocate buckets by this column's bytes, not "
                           "row counts (file-size-skew placement)")
-    enc.add_argument("--shuffle", choices=["true", "false", "auto", "blob", "encoded", "rows"], default="true",
+    enc.add_argument("--shuffle", choices=["true", "false", "auto"], default="true",
                      help="auto = skip the exchange when input is already clustered")
     enc.add_argument("--bloom-columns", dest="bloom_columns",
                      help="comma-separated string columns to Bloom-index per chunk")
@@ -385,8 +385,7 @@ def main() -> None:
             from fhirflat_spark.datagen import gen_spark
 
             df = gen_spark(spark, args.rows, seed=42)
-        shuffle = {"true": True, "false": False, "auto": "auto", "blob": "blob",
-                   "encoded": "encoded", "rows": "rows"}[args.shuffle]
+        shuffle = {"true": True, "false": False, "auto": "auto"}[args.shuffle]
         split = lambda v: [c.strip() for c in v.split(",") if c.strip()] if v else None
         res = encode_table(df, args.out, rows_per_bucket=args.rows_per_bucket,
                            resume=args.resume, profile=args.profile,

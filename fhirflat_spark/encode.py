@@ -333,9 +333,9 @@ def _encode_one_batch(batch: pa.RecordBatch, part_id: int, seq: int,
                       qsk_cols: frozenset[str] | None = None):
     """Encode ONE Arrow batch into a (fragment-meta, chunk-row batch) pair.
 
-    Shared by the legacy row-shuffle kernel and the blob-shuffle unpack
-    kernel so both paths produce byte-identical chunk rows for the same
-    input batch."""
+    Shared by the layout-preserving kernel and both stages of the
+    encoded exchange, so every path produces byte-identical chunk rows
+    for the same input batch."""
     n = batch.num_rows
     payload = {}
     stats = {}
@@ -505,10 +505,8 @@ def _rebatch(batches, target: int):
     groups otherwise leaks each row group through as its own tiny chunk,
     paying full per-chunk overhead (codec tables, stats, manifest rows) —
     at 100 TB a ragged upstream writer would silently multiply chunk
-    count by orders of magnitude. Streams already arriving at ``target``
-    rows (the post-shuffle exchange path, which the golden manifest pins)
-    pass through untouched, so this changes nothing where layout is
-    already planned."""
+    count by orders of magnitude. Batches already arriving at ``target``
+    rows pass through untouched."""
     buf: list[pa.RecordBatch] = []
     n = 0
     for b in batches:
@@ -641,10 +639,9 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
                     num_partitions: int | None, salt_col: str | None,
                     key_counts: list[tuple] | None,
                     weight_col: str | None = None):
-    """Shared skew-plan prelude: sentinel salt key + driver-side bucket
-    allocation. Returns ``None`` when there is no salt column (caller
-    falls back to a plain repartition), else a dict with the salted
-    frame, the bucket allocation, P, and the ``_with_buckets`` builder.
+    """Skew-plan prelude of ``plan_partition_ids``: sentinel salt key +
+    driver-side bucket allocation. Returns a dict with the salted frame,
+    the bucket allocation, P, and the ``_with_buckets`` builder.
 
     Buckets per repo scale with that repo's observed row count, so the one
     giant repo (~40% of rows) spreads over many partitions while small
@@ -825,13 +822,6 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     }
 
 
-def _capture_plan_stats(stats_out, pre):
-    if stats_out is not None:
-        stats_out["key_counts"] = pre["key_counts_sentinel"]
-        stats_out["caller_counts"] = pre.get("caller_counts", False)
-        stats_out["capped"] = pre.get("capped", False)
-
-
 # key-count ceiling for the literal-map placement fast path: below it the
 # bucket map compiles into the projection itself (element_at on map/array
 # literals — stays inside WholeStageCodegen, no BroadcastExchange, and
@@ -866,94 +856,27 @@ def _g_expr_literal(bucket_rows: list[tuple], hash_cols: list[str],
     return (base_col + salt).cast("int")
 
 
-def plan_salted(df: DataFrame, rows_per_bucket: int = 250_000,
-                num_partitions: int | None = None,
-                salt_col: str | None = "repo",
-                sort_cols: list[str] | None = None,
-                key_counts: list[tuple] | None = None,
-                stats_out: dict | None = None,
-                weight_col: str | None = None) -> tuple[DataFrame, int]:
-    """Skew-defusing salted repartition + in-partition sort (the legacy
-    row-shuffle encode plan; see ``plan_partition_ids`` for the
-    blob-shuffle variant). Tables without the salt column fall back to a
-    plain round-robin repartition (no skew key to defuse).
-
-    ``stats_out``: optional dict the planner fills with the (sentinel-
-    keyed) key counts it used — callers persist these as maintained
-    table statistics (the Iceberg partition-stats pattern)."""
-    spark = df.sparkSession
-    if salt_col == "repo" and "repo" not in df.columns:
-        salt_col = None
-    if sort_cols is None:
-        sort_cols = [c for c in ("repo", "path", "commit") if c in df.columns]
-    default_par = spark.sparkContext.defaultParallelism
-
-    if salt_col is None:
-        n = df.count()
-        P = num_partitions or max(math.ceil(n / rows_per_bucket), default_par)
-        out = df.repartition(P)
-        if sort_cols:
-            out = out.sortWithinPartitions(*[_bq(c) for c in sort_cols])
-        return out, P
-
-    pre = _salted_prelude(df, rows_per_bucket, num_partitions, salt_col,
-                          key_counts, weight_col=weight_col)
-    _capture_plan_stats(stats_out, pre)
-    if pre["empty"]:
-        P = num_partitions or 1
-        return pre["df"].drop("__skey").repartition(P), P
-    bucket_rows, P, _with_buckets = pre["bucket_rows"], pre["P"], pre["with_buckets"]
-    df, orig_cols = pre["df"], pre["orig_cols"]
-
-    if len(bucket_rows) <= LITERAL_MAP_MAX_KEYS:
-        # literal-map fast path: placement is a pure projection (codegen)
-        g = _g_expr_literal(bucket_rows, pre["hash_cols"],
-                            pre["caller_counts"] or pre["capped"])
-        # cast to long BEFORE the exchange hashes it: partition_tokens
-        # targets Murmur3.hashLong, and an array<int> literal would make
-        # HashPartitioning use hashInt — landing buckets on wrong partitions
-        tok = F.element_at(F.lit(partition_tokens(P)), g + F.lit(1)).cast("long")
-        out = df.withColumn("__tok", tok).repartition(P, F.col("__tok"))
-    elif len(bucket_rows) > 200_000:
-        # too many keys to broadcast an expanded bucket map — fall back to
-        # plain hash placement (collision imbalance bounded at this scale
-        # because partitions ≫ buckets-per-partition)
-        out = _with_buckets(df).repartition(P, F.col("__skey"), F.col("__salt"))
-    else:
-        # EXACT bucket→partition placement: each (key, salt) pair carries a
-        # precomputed token whose Murmur3 hash lands on its own partition —
-        # no birthday-collision imbalance (a plain repartition(P, key, salt)
-        # can stack 2-3 buckets on one partition while others stay empty)
-        tokens = partition_tokens(P)
-        expanded = []
-        g = 0
-        for k, nb in bucket_rows:
-            for s in range(nb):
-                expanded.append((k, s, tokens[g]))
-                g += 1
-        exp_df = spark.createDataFrame(expanded, ["__skey", "__salt", "__tok"])
-        salted = _with_buckets(df).join(F.broadcast(exp_df), ["__skey", "__salt"])
-        out = salted.repartition(P, F.col("__tok"))
-    if sort_cols:
-        out = out.sortWithinPartitions(*[_bq(c) for c in sort_cols])
-    return out.select(*[_bq(c) for c in orig_cols]), P
-
-
 def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
                        num_partitions: int | None = None,
                        salt_col: str | None = "repo",
                        key_counts: list[tuple] | None = None,
                        stats_out: dict | None = None,
                        weight_col: str | None = None) -> tuple[DataFrame, int]:
-    """Skew plan for the blob-shuffle encode path: NO exchange — returns
+    """Skew-defusing placement plan of the encode: NO exchange — returns
     ``df`` plus an ``__pb`` int column (target partition index, 0..P-1)
     computed entirely map-side (broadcast joins + hash expressions).
+    Tables without the salt column spread round-robin (no skew key to
+    defuse).
 
-    The pack kernel groups each input split's rows by ``__pb`` and ships
-    one Arrow-IPC blob per (split, target partition), so the one exchange
-    of the encode job moves ~splits×P fat binary rows instead of every
-    data row. Same bucket allocation as ``plan_salted`` — a giant repo
-    still fans out over many target partitions."""
+    Stage 1 (``encoded_pack_kernel_factory``) encodes each input split's
+    rows per ``__pb``, so the one exchange of the encode job moves
+    compressed chunk rows instead of every data row. Buckets per salt
+    key scale with that key's observed row count (``_salted_prelude``) —
+    a giant repo fans out over many target partitions.
+
+    ``stats_out``: optional dict the planner fills with the (sentinel-
+    keyed) key counts it used — callers persist these as maintained
+    table statistics (the Iceberg partition-stats pattern)."""
     spark = df.sparkSession
     if salt_col == "repo" and "repo" not in df.columns:
         salt_col = None
@@ -968,9 +891,8 @@ def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
         # split id — NOT a content hash, whose binomial spread leaves
         # partitions 5-10% under target and flags a freshly packed
         # layout as fragmented (table_health min_fill boundary). Equal
-        # counts per target, matching plan_salted's repartition(P)
-        # round-robin; deterministic given the input's split structure,
-        # which is the same guarantee the row path's round-robin has.
+        # counts per target; deterministic given the input's split
+        # structure (a resume over the same input places rows as before).
         rr = F.monotonically_increasing_id().bitwiseAND(
             F.lit((1 << 33) - 1)
         ) + F.spark_partition_id()
@@ -978,7 +900,10 @@ def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
 
     pre = _salted_prelude(df, rows_per_bucket, num_partitions, salt_col,
                           key_counts, weight_col=weight_col)
-    _capture_plan_stats(stats_out, pre)
+    if stats_out is not None:
+        stats_out["key_counts"] = pre["key_counts_sentinel"]
+        stats_out["caller_counts"] = pre.get("caller_counts", False)
+        stats_out["capped"] = pre.get("capped", False)
     if pre["empty"]:
         P = num_partitions or 1
         return pre["df"].drop("__skey").withColumn("__pb", F.lit(0)), P
@@ -990,8 +915,9 @@ def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
                             pre["caller_counts"] or pre["capped"])
         out = df.withColumn("__pb", g)
     elif len(bucket_rows) > 200_000:
-        # hash placement fallback (mirrors plan_salted): partition index =
-        # what HashPartitioning(__skey, __salt) % P would have chosen
+        # hash placement fallback: too many keys to broadcast an expanded
+        # bucket map (collision imbalance bounded at this scale because
+        # partitions ≫ buckets-per-partition)
         out = _with_buckets(df).withColumn(
             "__pb", F.pmod(F.hash("__skey", "__salt"), F.lit(P)).cast("int")
         )
@@ -1006,143 +932,6 @@ def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
         exp_df = spark.createDataFrame(expanded, ["__skey", "__salt", "__pb"])
         out = _with_buckets(df).join(F.broadcast(exp_df), ["__skey", "__salt"])
     return out.select(*[_bq(c) for c in orig_cols], "__pb"), P
-
-
-PACK_SCHEMA = T.StructType(
-    [
-        T.StructField("__tok", T.LongType(), False),
-        T.StructField("__pb", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-    ]
-)
-
-
-def pack_kernel_factory(data_cols: list[str], tokens: list[int]):
-    """Map-side pre-pack: group THIS input split's rows by target
-    partition (``__pb``) and emit ONE Arrow-IPC blob per group.
-
-    This is the exchange-tax fix: the salted shuffle then moves
-    ~splits×P fat binary rows instead of every data row, so the
-    post-shuffle row→Arrow conversion cost (measured ~2.2s/1M rows) and
-    the per-row exchange serialization both collapse to near zero. All
-    grouping is vectorized (numpy argsort + one Arrow take); the only
-    Python loop is per-blob, not per-row."""
-    import numpy as np
-
-    def kernel(batches):
-        parts: list[pa.RecordBatch] = []
-        for batch in batches:
-            if batch.num_rows:
-                parts.append(batch)
-        if not parts:
-            return
-        tbl = pa.Table.from_batches(parts).combine_chunks()
-        pb = tbl.column("__pb").to_numpy()
-        data = tbl.select(data_cols)
-        order = np.argsort(pb, kind="stable")
-        sorted_pb = pb[order]
-        bounds = np.flatnonzero(np.diff(sorted_pb)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(pb)]))
-        taken = data.take(pa.array(order))
-        toks, pbs, nrows, blobs = [], [], [], []
-        for s, e in zip(starts, ends):
-            sl = taken.slice(s, e - s)
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, sl.schema) as w:
-                w.write_table(sl)
-            g = int(sorted_pb[s])
-            blobs.append(sink.getvalue().to_pybytes())
-            pbs.append(g)
-            toks.append(tokens[g])
-            nrows.append(int(e - s))
-        yield pa.RecordBatch.from_pydict(
-            {"__tok": toks, "__pb": pbs, "n_rows": nrows, "blob": blobs},
-            schema=pa.schema(
-                [
-                    ("__tok", pa.int64()),
-                    ("__pb", pa.int32()),
-                    ("n_rows", pa.int64()),
-                    ("blob", pa.binary()),
-                ]
-            ),
-        )
-
-    return kernel
-
-
-def unpack_encode_kernel_factory(columns: list[str],
-                                 codec_overrides: dict | None,
-                                 skip_parts: frozenset[int] | None = None,
-                                 manifest_dir: str | None = None,
-                                 name_map: dict[str, str] | None = None,
-                                 codec_opts: dict | None = None,
-                                 sort_names: list[str] | None = None,
-                                 batch_rows: int = 16384,
-                                 from_blobs: bool = True,
-                                 part_offset: int = 0,
-                                 bloom_columns: frozenset[str] | None = None,
-                                 ndv_columns: frozenset[str] | None = None,
-                                 qsk_columns: frozenset[str] | None = None):
-    """Post-shuffle encode kernel: materialize the partition (from
-    Arrow-IPC blob rows when ``from_blobs``, else directly from the data
-    batches), sort rows IN THE KERNEL (numpy/Arrow sort — replaces a JVM
-    ``sortWithinPartitions`` whose UnsafeRow sort costs more than an
-    argsort+take merged into the kernel's memory traffic), slice into
-    chunk-sized batches, and run the shared encode kernel per batch.
-    Partition size is bounded by rows_per_bucket — the same contract the
-    salted plan enforces. IPC decode is memcpy-level; the per-blob loop
-    is O(#blobs) ≈ splits, never per-row."""
-    overrides = codec_overrides or {}
-    base_opts = codec_opts or {}
-    skip = skip_parts or frozenset()
-    name_map = name_map or {c: c for c in columns}
-    repo_batch_col = next((b for b, o in name_map.items() if o == "repo"), None)
-
-    def kernel(batches):
-        ctx = TaskContext.get()
-        part_id = (ctx.partitionId() if ctx is not None else 0) + part_offset
-        if part_id in skip:
-            return
-        tables: list[pa.Table] = []
-        if from_blobs:
-            for batch in batches:
-                blob_arr = batch.column("blob")
-                for i in range(len(blob_arr)):
-                    buf = blob_arr[i].as_buffer()  # zero-copy view
-                    with pa.ipc.open_stream(pa.BufferReader(buf)) as r:
-                        tables.append(r.read_all())
-        else:
-            parts = [b for b in batches if b.num_rows]
-            if parts:
-                tables.append(pa.Table.from_batches(parts))
-        if not tables:
-            return
-        tbl = pa.concat_tables(tables).combine_chunks()
-        if sort_names:
-            tbl = tbl.sort_by(
-                [(c, "ascending") for c in sort_names],
-                null_placement="at_start",  # Spark sorts NULLS FIRST asc
-            )
-        frag: list[dict] = []
-        seq = 0
-        for off in range(0, tbl.num_rows, batch_rows):
-            sl = tbl.slice(off, batch_rows).combine_chunks()
-            for b in sl.to_batches():
-                if b.num_rows == 0:
-                    continue
-                meta, out = _encode_one_batch(
-                    b, part_id, seq, columns, name_map, overrides,
-                    base_opts, repo_batch_col, bloom_columns,
-                    ndv_columns, qsk_columns,
-                )
-                frag.append(meta)
-                yield out
-                seq += 1
-        _write_fragment(manifest_dir, part_id, frag)
-
-    return kernel
 
 
 def encoded_shuffle_schema(n_cols: int) -> T.StructType:
@@ -1170,20 +959,21 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                                 bloom_columns: frozenset[str] | None = None,
                                 ndv_columns: frozenset[str] | None = None,
                                 qsk_columns: frozenset[str] | None = None):
-    """Stage 1 of ``shuffle="encoded"``: encode THIS input split's rows
-    per target partition BEFORE the exchange, so the shuffle moves the
-    final compressed chunk bytes (~0.25-0.3x of raw on this corpus)
-    instead of every data row — and the expensive work (zstd/fsst/prefix
-    kernels, stats, blooms) runs exactly once, map-side, where the
-    no-shuffle path already proved the input conversion cheap.
+    """Stage 1 of the encoded exchange (``shuffle=True``): encode THIS
+    input split's rows per target partition BEFORE the exchange, so the
+    shuffle moves the final compressed chunk bytes (~0.25-0.3x of raw on
+    this corpus) instead of every data row — and the expensive work
+    (zstd/fsst/prefix kernels, stats, blooms) runs exactly once,
+    map-side, where the no-shuffle path already proved the input
+    conversion cheap.
 
-    Contrast with the rejected blob pre-pack (SCALE.md): that variant
+    Contrast with the removed blob pre-pack (SCALE.md): that variant
     shipped the RAW rows as Arrow-IPC blobs and still paid the full
     encode after the exchange; this one ships nothing that is not final
     output. The trade is chunk granularity: each (input split, target
-    bucket) intersection becomes its own chunk, so unclustered inputs
-    produce smaller chunks than the row shuffle's 16k-row slices — a
-    documented compression-ratio trade, not a correctness one."""
+    bucket) intersection becomes its own chunklet, so unclustered inputs
+    produce chunklets smaller than a 16k-row chunk — stage 2
+    consolidates the small ones."""
     import struct as _struct
 
     import numpy as np
@@ -1365,7 +1155,7 @@ def encoded_merge_kernel_factory(n_cols: int, manifest_dir: str | None = None,
                                  ndv_columns: frozenset[str] | None = None,
                                  qsk_columns: frozenset[str] | None = None,
                                  sort_names: list[str] | None = None):
-    """Stage 2 of ``shuffle="encoded"``: renumber this partition's
+    """Stage 2 of the encoded exchange: renumber this partition's
     chunklets into a deterministic chunk_seq order — (src_split,
     local_seq), a pure function of the input layout — and task-commit
     the manifest fragment.
@@ -1610,15 +1400,31 @@ def encode_table(
     new). Their chunk dirs and fragment files stay on disk for
     time-travel until snapshot expiry + vacuum reclaim them.
 
+    ``shuffle`` is ``True`` (default), ``False`` or ``"auto"``.
+
+    ``shuffle=True`` re-clusters through the ENCODED exchange: placement
+    (``plan_partition_ids``) tags each row with its target partition
+    map-side; stage 1 groups each input split by target bucket and
+    kernel-encodes every (split, bucket) slice, and the one exchange
+    ships those COMPRESSED bytes (~0.3-0.5x of raw; slices below the
+    consolidation threshold travel as lz4-framed Arrow IPC "transit"
+    chunklets); stage 2 renumbers chunk_seq deterministically,
+    CONSOLIDATES runs of small chunklets (decode+re-encode below
+    batch_rows//4 rows — keeps footprint stable on scattered inputs),
+    and commits the fragments. It guarantees sorted-prefix locality +
+    skew defusal regardless of input layout and reproduces the golden
+    manifest pin. Layout is a pure function of the input (same input
+    twice = same dataset checksum), which is what lets ``resume=True``
+    skip exactly the committed partitions: their rows are dropped before
+    stage 1 and the rest land where a clean encode puts them.
+
     ``shuffle=False`` is the layout-preserving mode: encode each input
     split in place with NO exchange — correct for any input, optimal when
     the table is already clustered (e.g. an Iceberg table partitioned by
     repo); compression can be slightly worse because rows aren't
     re-sorted, and skew handling falls back to the source's file split
     sizes (``spark.sql.files.maxPartitionBytes`` caps a split, so a giant
-    repo still spreads across tasks). The salted-shuffle mode stays the
-    default because it guarantees sorted-prefix locality + skew defusal
-    regardless of input layout. ``shuffle="auto"`` runs
+    repo still spreads across tasks). ``shuffle="auto"`` runs
     ``detect_clustering`` (one pruned scan) and picks the layout-
     preserving mode when the input is already clustered.
 
@@ -1628,39 +1434,6 @@ def encode_table(
     repos (row counts under-provision a repo of few giant files, the
     straggler/OOM skew a 10^12-file corpus actually has). Same single
     counting scan; ignored when ``key_counts`` is caller-supplied.
-
-    ``shuffle="blob"`` is the experimental pre-pack path: rows are
-    grouped per target partition map-side and shuffled as Arrow-IPC
-    blobs (few fat rows instead of every data row). Measured SLOWER than
-    the default on this host (1M rows, local[32], min-of-3: 18.5s vs
-    12.9s same-session) because OSS PySpark's ``mapInArrow`` converts
-    its input row→Arrow regardless of position — the pre-pack pays the
-    full per-row conversion BEFORE the exchange and adds Python-side
-    copies, while the exchange itself was already cheap once placement
-    became a literal-map projection (~1s of a ~6s job). Kept as the seam
-    for a columnar-shuffle runtime; not the default.
-
-    ``shuffle="encoded"`` moves the encode BEFORE the exchange: stage 1
-    sorts each input split by (target bucket, key prefix), kernel-
-    encodes every (split, bucket) slice into final chunk rows, and the
-    one exchange ships those COMPRESSED bytes (~0.25-0.3x of raw);
-    stage 2 renumbers chunk_seq deterministically, CONSOLIDATES runs of
-    small chunklets (decode+re-encode below batch_rows//4 rows — keeps
-    footprint stable on scattered inputs), and commits the fragments.
-    Since r6 this IS what ``shuffle=True`` runs (it reproduces the
-    golden manifest pin, unchanged since 59b96b4): with the r6
-    transit chunklets (slices below the consolidation threshold ship as
-    lz4-framed whole-slice Arrow IPC instead of being fully encoded
-    twice) and the data-driven stage-2 task count (~2 per core instead
-    of one per target partition), it measured faster than the row
-    exchange at EVERY level (1M rows, min-of-3, same host: local[1]
-    17.2s vs 28.1, local[4] 5.1 vs 6.5, local[32] 2.4 vs 4.8) at
-    footprint parity, and ships ~0.3-0.5x of raw on the wire vs the
-    row exchange's 1.0x — the 100-TB lever. Layout is a pure function
-    of the input (same input twice = same dataset checksum).
-    ``shuffle="rows"`` keeps the legacy row exchange (``resume``
-    implies it: stage-1 map-side encode cannot skip already-committed
-    partitions).
 
     Chunk files are written by the encoding task itself (the stage-2
     merge task on the encoded exchange), one file per partition under
@@ -1761,28 +1534,10 @@ def encode_table(
             )
     t0 = time.time()
 
+    if shuffle not in (True, False, "auto"):
+        raise ValueError(f"shuffle must be True, False or 'auto', got {shuffle!r}")
     if shuffle == "auto":
         shuffle = not detect_clustering(df, rows_per_bucket=rows_per_bucket)
-    if shuffle is True and not resume:
-        # Re-clustering shuffles default to the ENCODED exchange (r6):
-        # the one data-sized exchange carries compressed chunk bytes
-        # (~0.3-0.5x of raw) instead of raw rows, and the expensive
-        # kernel work runs where the input conversion is cheap. Measured
-        # faster at every level (1M rows, same host, min-of-3: local[1]
-        # 17.2s vs 28.1, local[4] 5.1 vs 6.5, local[32] 2.4 vs 4.8) and
-        # ~2-3x fewer wire bytes at cluster scale. ``shuffle="rows"``
-        # keeps the legacy row exchange; ``resume`` implies it (stage-1
-        # map-side encode cannot skip already-committed partitions).
-        shuffle = "encoded"
-    elif shuffle == "rows":
-        shuffle = True
-    blob_mode = shuffle == "blob"
-    encoded_mode = shuffle == "encoded"
-    if encoded_mode and resume:
-        # stage-1 encodes map-side with no knowledge of which FINAL
-        # partitions already committed — a resume cannot skip work here
-        raise ValueError('resume is not supported with shuffle="encoded"; '
-                         "re-run the encode (or use shuffle=\"rows\")")
 
     skip: frozenset[int] = frozenset()
     frag_live: set[int] | None = None  # append: head-reachable pid filter
@@ -1863,14 +1618,10 @@ def encode_table(
     codec_opts = {"archive": True} if profile == "archive" else None
     plan_stats: dict = {}
 
-    if encoded_mode:
-        # encoded shuffle (opt-in via shuffle="encoded"): encode map-side
-        # per target bucket, exchange the COMPRESSED chunk bytes
-        # (~0.25-0.3x of raw), renumber + fragment-commit post-shuffle.
-        # Wins when the input is unclustered and the network is the
-        # bottleneck (the 100-TB case); trades chunk granularity — each
-        # (split, bucket) intersection is its own chunk — so footprint
-        # is a few percent worse than the row shuffle on scattered keys.
+    if shuffle:
+        # encoded exchange: encode map-side per target bucket, exchange
+        # the COMPRESSED chunk bytes (~0.3-0.5x of raw), renumber +
+        # consolidate + fragment-commit post-shuffle
         bucketed, P = plan_partition_ids(
             df, rows_per_bucket=rows_per_bucket, num_partitions=num_partitions,
             key_counts=key_counts, stats_out=plan_stats, weight_col=weight_col,
@@ -1879,10 +1630,18 @@ def encode_table(
             *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)],
             "__pb",
         )
+        if skip:
+            # resume: placement is a pure function of the input and stage
+            # 1 sets part_id = part_offset + __pb, so dropping the
+            # committed buckets' rows skips exactly the committed
+            # partitions; the rest land where a clean encode puts them
+            bucketed = bucketed.where(
+                ~F.col("__pb").isin([p - part_offset for p in skip])
+            )
         # Stage 2 derives part_id from the DATA (the merge kernel segments
-        # its input by part_id and flushes fragments per part), so unlike
-        # the row path its task count is free: run ~2 tasks per core
-        # instead of one per target partition. At P ≫ cores the per-task
+        # its input by part_id and flushes fragments per part), so its task
+        # count is free: run ~2 tasks per core instead of one per target
+        # partition. At P ≫ cores the per-task
         # costs (python worker round-trip, scheduling, shuffle-block
         # granularity — guide §2.2) otherwise dominate the merge stage;
         # grouping bucket g → task g % n2 spreads each hot key's buckets
@@ -1919,60 +1678,9 @@ def encode_table(
             bloom_columns=bloom_set, ndv_columns=ndv_set,
             qsk_columns=qsk_set, sort_names=sort_names,
         )
-    elif blob_mode:
-        # blob-shuffle path (experimental, opt-in via shuffle="blob" —
-        # measured slower than the row exchange, kept as the columnar-
-        # shuffle seam): bucket ids map-side, pre-pack each
-        # split's rows per target partition into Arrow-IPC blobs, shuffle
-        # the few fat blob rows, reassemble+sort+encode post-shuffle.
-        bucketed, P = plan_partition_ids(
-            df, rows_per_bucket=rows_per_bucket, num_partitions=num_partitions,
-            key_counts=key_counts, stats_out=plan_stats, weight_col=weight_col,
-        )
-        bucketed = bucketed.select(
-            *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)],
-            "__pb",
-        )
-        tokens = partition_tokens(P)
-        packed = bucketed.mapInArrow(
-            pack_kernel_factory(safe_names, tokens), schema=PACK_SCHEMA
-        )
-        sort_names = [
-            s for s, c in zip(safe_names, columns)
-            if c in ("repo", "path", "commit")
-        ]
-        try:
-            batch_rows = int(
-                spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-            )
-        except Exception:
-            from fhirflat_spark.session import ARROW_BATCH_ROWS as batch_rows
-        kernel = unpack_encode_kernel_factory(
-            safe_names, codec_overrides, skip_parts=skip,
-            manifest_dir=frag_dir, name_map=name_map, codec_opts=codec_opts,
-            sort_names=sort_names, batch_rows=batch_rows,
-            part_offset=part_offset, bloom_columns=bloom_set,
-            ndv_columns=ndv_set, qsk_columns=qsk_set,
-        )
-        source = packed.repartition(P, F.col("__tok"))
-    else:
-        if shuffle:
-            # default shuffled plan: literal-map placement (codegen
-            # projection, no broadcast joins) + ONE exchange + Tungsten
-            # in-partition sort, then the STREAMING kernel (no Python-side
-            # partition materialization — memory-safe at any bucket size).
-            # A kernel-side Arrow sort was measured equal-or-slower (the
-            # content-column take copies dominate) and holds the whole
-            # partition in worker memory, so the JVM sort stays.
-            salted, P = plan_salted(
-                df, rows_per_bucket=rows_per_bucket,
-                num_partitions=num_partitions, key_counts=key_counts,
-                stats_out=plan_stats, weight_col=weight_col,
-            )
-        else:  # layout-preserving: encode splits in place, no exchange
-            salted = df
-            P = df.rdd.getNumPartitions()
-        source = salted.select(
+    else:  # layout-preserving: encode splits in place, no exchange
+        P = df.rdd.getNumPartitions()
+        source = df.select(
             *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)]
         )
         kernel = encode_kernel_factory(
@@ -2126,24 +1834,22 @@ def append_table(
     may also OMIT existing columns — they are null-filled from the
     dataset schema. A shared column whose Spark type differs is an
     error: silent coercion at 100 TB is how tables rot. When no
-    ``key_counts`` are given, the append batch's per-key counts are
-    scanned (cost proportional to the DELTA, not the table), used to
-    plan THIS append's buckets, and persisted as this offset's stats
-    fragment — so merged statistics keep tracking the whole dataset
-    across appends without rescanning it, and a retried append replaces
-    its own fragment instead of double-counting. Returned totals cover
-    the WHOLE dataset after the append."""
+    ``key_counts`` are given, the placement planner scans the append
+    batch's per-key counts (cost proportional to the DELTA, not the
+    table), plans THIS append's buckets from them (capped at
+    ``SALT_STATS_CAP`` keys like any placement scan: the tail folds into
+    an "o:" bucket sized from its measured row mass), and persists them
+    as this offset's stats fragment — so merged statistics keep tracking
+    the whole dataset across appends without rescanning it, and a
+    retried append replaces its own fragment instead of double-counting.
+    Returned totals cover the WHOLE dataset after the append."""
     # Planning deliberately counts only the DELTA (cost proportional to
     # the append, never the table): merged totals from load_key_counts
     # would size buckets as if the whole table were in this append and
     # over-fragment small deltas. The persisted merged stats serve
     # whole-table observability (tests/test_pipeline.py) and future
     # full re-plans, not per-append placement.
-    from fhirflat_spark.manifest import (
-        completed_partitions,
-        read_summary,
-        write_key_counts,
-    )
+    from fhirflat_spark.manifest import completed_partitions, read_summary
 
     spark = df.sparkSession
     summary = read_summary(spark, out_dir)
@@ -2206,21 +1912,7 @@ def append_table(
 
     top = max([*existing, *all_snapshot_part_ids(out_dir)], default=None)
     offset = (top + 1) if top is not None else 0
-    delta_stats: list[tuple] | None = None
-    if key_counts is None and "repo" in df.columns and weight_col is None:
-        # same driver-memory ceiling as the placement scan: keep the
-        # top-``SALT_STATS_CAP`` heaviest delta keys exact (deterministic
-        # order); tail keys place via the planner's "o:" fallback bucket
-        # and the persisted delta stats stay O(cap), not O(#keys)
-        cap = _salt_stats_cap()
-        rows = (df.groupBy("repo").count()
-                .orderBy(F.desc("count"), F.col("`repo`"))
-                .limit(cap + 1).collect())
-        if len(rows) > cap:
-            rows = rows[:cap]
-        delta_stats = [(r[0], r["count"]) for r in rows]
-        key_counts = delta_stats
-    res = encode_table(
+    return encode_table(
         df, out_dir, rows_per_bucket=rows_per_bucket,
         num_partitions=num_partitions, key_counts=key_counts,
         shuffle=shuffle, profile=profile, append=True, part_offset=offset,
@@ -2234,20 +1926,8 @@ def append_table(
         ndv_columns=ndv_columns,
         quantile_columns=quantile_columns,
         replace_pids=replace_pids,
-        # byte-weighted delta placement: the planner runs its own
-        # count+sum scan; row-count stats are NOT persisted for weighted
-        # appends (equivalent-row weights would pollute merged row totals)
         weight_col=weight_col,
     )
-    if delta_stats is not None and branch is None:
-        # persist only after a successful MAIN append (a staged append's
-        # stats would leak into main observability and outlive drop_branch)
-        write_key_counts(
-            out_dir,
-            [("n:" if k is None else f"v:{k}", c) for k, c in delta_stats],
-            label=f"{offset:012d}",
-        )
-    return res
 
 
 def upsert_rows(

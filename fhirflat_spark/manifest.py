@@ -1942,7 +1942,7 @@ def write_key_counts(out_dir: str, sentinel_counts: list[tuple],
 def load_key_counts(out_dir: str) -> list[tuple] | None:
     """Merged per-key counts across every stats fragment, as caller-style
     ``key_counts`` (raw key or None, count) — pass straight back into
-    ``encode_table``/``plan_salted``. None when no stats exist."""
+    ``encode_table``/``plan_partition_ids``. None when no stats exist."""
     d = _stats_dir(out_dir)
     names = fsio.list_files(d, suffix=".parquet")
     if not names:

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fhirflat_spark.decode import decode_table, verify_table
-from fhirflat_spark.encode import encode_table, plan_salted
+from fhirflat_spark.encode import encode_table, plan_partition_ids
 from fhirflat_spark.ingest import apply_mapping, condense_one_to_one
 from fhirflat_spark.sources import read_csv, write_errors
 
@@ -83,11 +83,8 @@ def test_adversarial_skew_single_repo(spark, tmp_path):
     pdf["repo"] = "giant/only"  # everything in one repo
     pdf.loc[:3, "repo"] = "tiny/other"
     df = spark.createDataFrame(pdf)
-    salted, P = plan_salted(df, rows_per_bucket=500)
-    sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").count().collect()
-    )
+    bucketed, P = plan_partition_ids(df, rows_per_bucket=500)
+    sizes = bucketed.groupBy("__pb").count().collect()
     nonempty = [r["count"] for r in sizes if r["count"] > 0]
     assert len(nonempty) >= 6, f"giant repo not spread: {sizes}"
     assert max(nonempty) <= 2.5 * 500

@@ -23,7 +23,7 @@ from fhirflat_spark.decode import (
     verify_against_source,
     verify_table,
 )
-from fhirflat_spark.encode import encode_table, plan_salted
+from fhirflat_spark.encode import encode_table, plan_partition_ids
 from fhirflat_spark.manifest import dataset_checksum, read_manifest, read_summary
 
 N_ROWS = 6000
@@ -96,7 +96,7 @@ def test_manifest_deterministic(spark, encoded, tmp_path):
 
 def test_salting_spreads_giant_repo(spark):
     df = gen_spark(spark, N_ROWS, seed=42)
-    salted, P = plan_salted(df, rows_per_bucket=500)
+    bucketed, P = plan_partition_ids(df, rows_per_bucket=500)
     # the giant repo (~40% of rows) must span multiple buckets
     from fhirflat_spark.datagen import repo_boundaries
 
@@ -107,6 +107,9 @@ def test_salting_spreads_giant_repo(spark):
     )
     assert counts[0]["count"] == giant_rows
     assert P >= giant_rows // 500
+    giant = counts[0]["repo"]
+    targets = bucketed.where(F.col("repo") == giant).select("__pb").distinct()
+    assert targets.count() >= giant_rows // 500
 
 
 def test_partition_balance(spark, encoded):
@@ -198,6 +201,53 @@ def test_resume_reencodes_missing(spark, tmp_path):
     assert fails.count() == 0
 
 
+@pytest.mark.parametrize("drop_repo", [True, False], ids=["no_repo", "repo"])
+def test_resume_restores_lost_partitions_exactly(spark, tmp_path, drop_repo):
+    """Two partitions lost from the manifest → resume re-encodes exactly
+    those, on the same placement a clean encode uses: the decoded rows
+    equal the source as a multiset, the dataset checksum equals a clean
+    encode's, and no other partition's chunk file is rewritten. Tables
+    without a ``repo`` column place rows by per-split round-robin, so a
+    resume that re-places them any other way loses and duplicates rows."""
+    from fhirflat_spark import fsio
+
+    df = gen_spark(spark, 6000, seed=7)
+    if drop_repo:
+        df = df.drop("repo")
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "resumed")
+    encode_table(df, clean, rows_per_bucket=500)
+    encode_table(df, out, rows_per_bucket=500)
+    man = f"{out}/manifest/manifest.parquet"
+    t = fsio.read_parquet(man)
+    pids = sorted(t["part_id"].to_pylist())
+    victims = {pids[0], pids[len(pids) // 2]}  # P=12 without repo: {0, 6}
+    for v in victims:
+        fsio.delete_dir(f"{out}/chunks/part_id={v}")
+    keep = [p not in victims for p in t["part_id"].to_pylist()]
+    fsio.write_parquet_atomic(t.filter(keep), man)
+
+    def chunk_files():
+        files = {}
+        for root, _, names in os.walk(f"{out}/chunks"):
+            for name in names:
+                path = os.path.join(root, name)
+                files[path] = os.stat(path).st_mtime_ns
+        return files
+
+    before = chunk_files()
+    encode_table(df, out, rows_per_bucket=500, resume=True)
+    after = chunk_files()
+    assert {p: m for p, m in after.items() if p in before} == before
+    assert {int(p.split("part_id=")[1].split("/")[0])
+            for p in set(after) - set(before)} == victims
+
+    decoded = decode_table(spark, out)
+    assert decoded.exceptAll(df).count() == 0
+    assert df.exceptAll(decoded).count() == 0
+    assert (read_summary(spark, out)["dataset_sha256"]
+            == read_summary(spark, clean)["dataset_sha256"])
+
+
 def test_codec_report_shape(spark, encoded):
     _, out, _ = encoded
     rep = codec_report(spark, out).collect()
@@ -215,6 +265,15 @@ def test_layout_preserving_mode(spark, tmp_path):
     decoded = decode_table(spark, out)
     fails = verify_against_source(df, decoded, ["repo", "path", "commit"])
     assert fails.count() == 0
+
+
+@pytest.mark.parametrize("mode", ["rows", "blob", "encoded"])
+def test_removed_shuffle_modes_raise(spark, tmp_path, mode):
+    """``shuffle`` takes True, False or "auto"; the removed mode strings
+    raise instead of silently running the encoded exchange."""
+    df = gen_spark(spark, 10, seed=1)
+    with pytest.raises(ValueError, match="shuffle"):
+        encode_table(df, str(tmp_path / "x"), shuffle=mode)
 
 
 def test_null_salt_keys_not_dropped(spark, tmp_path):
@@ -291,33 +350,17 @@ def test_zone_filter_unknown_type_keeps_all_chunks(spark, tmp_path):
     assert chunk.where(_zone_predicate(T.StructType([]), "k", 10, 10)).count() == 1
 
 
-def test_blob_shuffle_roundtrip(spark, tmp_path):
-    """shuffle="blob" (Arrow-IPC pre-pack exchange) must produce the same
-    logical dataset as the default row-shuffle: identical footprint class,
-    bit-identical rows, same partition count."""
-    out = str(tmp_path / "blob")
-    df = gen_spark(spark, 4000, seed=11)
-    res = encode_table(df, out, rows_per_bucket=800, shuffle="blob")
-    assert res.rows == 4000
-    decoded = decode_table(spark, out)
-    assert decoded.count() == 4000
-    fails = verify_against_source(
-        df, decoded, ["repo", "path", "commit", "lang", "content"]
-    )
-    assert fails.count() == 0
-
-
 def test_encoded_shuffle_roundtrip_and_determinism(spark, tmp_path):
-    """shuffle="encoded" (map-side encode, exchange of final compressed
-    chunk bytes) must produce the same logical dataset as the row
-    shuffle — bit-identical rows — and its layout must be a pure
-    function of the input (same input twice -> same dataset checksum),
-    since chunk_seq order is (src_split, local_seq)."""
+    """The encoded exchange (map-side encode, exchange of final
+    compressed chunk bytes) must round-trip bit-identical rows, and its
+    layout must be a pure function of the input (same input twice ->
+    same dataset checksum), since chunk_seq order is (src_split,
+    local_seq)."""
     import json as _json
 
     df = gen_spark(spark, 4000, seed=11)
     out1, out2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    res = encode_table(df, out1, rows_per_bucket=800, shuffle="encoded")
+    res = encode_table(df, out1, rows_per_bucket=800)
     assert res.rows == 4000
     decoded = decode_table(spark, out1)
     assert decoded.count() == 4000
@@ -325,7 +368,7 @@ def test_encoded_shuffle_roundtrip_and_determinism(spark, tmp_path):
         df, decoded, ["repo", "path", "commit", "lang", "content"]
     )
     assert fails.count() == 0
-    encode_table(df, out2, rows_per_bucket=800, shuffle="encoded")
+    encode_table(df, out2, rows_per_bucket=800)
     sha1 = _json.loads(open(f"{out1}/_SUMMARY.json").read())["dataset_sha256"]
     sha2 = _json.loads(open(f"{out2}/_SUMMARY.json").read())["dataset_sha256"]
     assert sha1 == sha2
@@ -342,27 +385,28 @@ def test_encoded_shuffle_roundtrip_and_determinism(spark, tmp_path):
 
 
 def test_encoded_shuffle_append_and_stats(spark, tmp_path):
-    """Appends through shuffle="encoded" mint fresh part ids, keep zone/
-    bloom/ndv stats flowing into the manifest, and decode sees the whole
-    table; resume is refused loudly."""
-    import pytest as _pytest
-
+    """Appends through the encoded exchange mint fresh part ids, keep
+    zone/bloom/ndv stats flowing into the manifest, and decode sees the
+    whole table; a resume over the fully committed table rewrites
+    nothing."""
     from fhirflat_spark.encode import append_table
     from fhirflat_spark.manifest import aggregate_from_metadata
 
     out = str(tmp_path / "eapp")
     df = gen_spark(spark, 3000, seed=21)
-    encode_table(df, out, rows_per_bucket=600, shuffle="encoded")
+    encode_table(df, out, rows_per_bucket=600)
     delta = gen_spark(spark, 1000, seed=22)
-    append_table(delta, out, rows_per_bucket=600, shuffle="encoded")
+    append_table(delta, out, rows_per_bucket=600)
     assert decode_table(spark, out).count() == 4000
     # stats v2 rode through both commits: the metadata-only aggregate
     # can answer exactly (None would mean a chunk predated the rollups)
     agg = aggregate_from_metadata(out, ["repo"])
     assert agg is not None and agg["rows"] == 4000
-    with _pytest.raises(ValueError, match="resume"):
-        encode_table(df, out, rows_per_bucket=600, shuffle="encoded",
-                     resume=True)
+    sha = read_summary(spark, out)["dataset_sha256"]
+    res = encode_table(df, out, rows_per_bucket=600, resume=True)
+    assert res.rows == 4000
+    assert read_summary(spark, out)["dataset_sha256"] == sha
+    assert decode_table(spark, out).count() == 4000
 
 
 def test_literal_and_join_placement_agree(spark):

@@ -119,72 +119,8 @@ def test_decode_column_pruning_reaches_scan(spark, tmp_path):
 
 
 def test_encode_plan_single_shuffle(spark):
-    """The encode pipeline must contain exactly ONE data-sized exchange
-    (the salted repartition) — a second shuffle would be a 100-TB bug."""
-    from fhirflat_spark.datagen import gen_spark
-    from fhirflat_spark.encode import chunk_schema, encode_kernel_factory, plan_salted
-
-    df = gen_spark(spark, 2000, seed=3)
-    salted, _ = plan_salted(df, rows_per_bucket=500)
-    kernel = encode_kernel_factory(df.columns, None)
-    chunks = salted.mapInArrow(kernel, schema=chunk_schema(len(df.columns)))
-    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
-        chunks._jdf.queryExecution(), "formatted"
-    )
-    import re
-
-    data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
-    assert len(data_exchanges) == 1, plan
-    # literal-map placement: bucket→partition mapping is a projection, so
-    # no BroadcastExchange may appear below the shuffle at default key
-    # counts (the join path is reserved for >LITERAL_MAP_MAX_KEYS repos)
-    assert "BroadcastExchange" not in plan, plan
-
-
-def test_blob_encode_plan_single_fat_shuffle(spark):
-    """The blob path's ONE exchange must sit ABOVE the pack kernel and
-    hash on __tok — i.e. it moves pre-packed Arrow-IPC blob rows, not
-    data rows."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from fhirflat_spark.datagen import gen_spark
-    from fhirflat_spark.encode import (
-        PACK_SCHEMA,
-        chunk_schema,
-        pack_kernel_factory,
-        partition_tokens,
-        plan_partition_ids,
-        unpack_encode_kernel_factory,
-    )
-
-    df = gen_spark(spark, 2000, seed=3)
-    cols = df.columns
-    safe = [f"__c{i}" for i in range(len(cols))]
-    bucketed, P = plan_partition_ids(df, rows_per_bucket=500)
-    bucketed = bucketed.select(
-        *[F.col(c).alias(s) for s, c in zip(safe, cols)], "__pb"
-    )
-    packed = bucketed.mapInArrow(
-        pack_kernel_factory(safe, partition_tokens(P)), schema=PACK_SCHEMA
-    )
-    kernel = unpack_encode_kernel_factory(
-        safe, None, name_map=dict(zip(safe, cols))
-    )
-    chunks = packed.repartition(P, F.col("__tok")).mapInArrow(
-        kernel, schema=chunk_schema(len(cols))
-    )
-    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
-        chunks._jdf.queryExecution(), "formatted"
-    )
-    data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
-    assert len(data_exchanges) == 1, plan
-    assert "hashpartitioning(__tok" in plan, plan
-
-
-def test_encoded_shuffle_plan_single_compressed_exchange(spark):
-    """shuffle="encoded": the ONE exchange must sit ABOVE the stage-1
+    """The encode pipeline must contain exactly ONE data-sized exchange —
+    a second shuffle would be a 100-TB bug. It must sit ABOVE the stage-1
     encode kernel and hash on __tok — i.e. it moves the final compressed
     chunk rows (~0.25-0.3x of raw), with both MapInArrow stages in the
     plan and no data-row exchange anywhere."""
@@ -225,6 +161,10 @@ def test_encoded_shuffle_plan_single_compressed_exchange(spark):
     assert len(data_exchanges) == 1, plan
     assert "hashpartitioning(__tok" in plan, plan
     assert plan.count("MapInArrow") >= 2, plan
+    # literal-map placement: bucket→partition mapping is a projection, so
+    # no BroadcastExchange may appear below the shuffle at default key
+    # counts (the join path is reserved for >LITERAL_MAP_MAX_KEYS repos)
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_cluster_collapse_pairs_stage_equi_join(spark):

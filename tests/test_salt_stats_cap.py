@@ -126,3 +126,24 @@ def test_cap_below_one_raises_naming_the_variable(spark, tmp_path,
     ):
         with pytest.raises(ValueError, match="SPARK_GRAFT_SALT_STATS_CAP"):
             call()
+
+
+def test_capped_append_sizes_tail_bucket_from_remainder(spark, tmp_path,
+                                                        monkeypatch):
+    """A capped append plans from its own placement scan, so the "o:"
+    fallback bucket is sized from the measured tail mass: a heavy tail
+    spreads over many appended partitions instead of landing in one."""
+    from fhirflat_spark.manifest import completed_partitions, read_manifest
+
+    out = str(tmp_path / "t")
+    encode_table(_skew_df(spark, n_keys=4, heavy_rows=50, tail_rows=10), out,
+                 rows_per_bucket=100)
+    offset = max(completed_partitions(spark, out)) + 1
+    monkeypatch.setattr(enc, "SALT_STATS_CAP", 2)
+    # 59 tail keys x 40 rows: ~2300 rows fold into "o:" past the cap
+    delta = _skew_df(spark, n_keys=60, heavy_rows=200, tail_rows=40)
+    enc.append_table(delta, out, rows_per_bucket=100)
+    sizes = [r["rows"] for r in read_manifest(spark, out).collect()
+             if r["part_id"] >= offset]
+    assert sum(sizes) == delta.count()
+    assert max(sizes) <= 2.5 * 100, sorted(sizes)

@@ -8,7 +8,7 @@ byte size stays bounded regardless of file-size skew.
 from pyspark.sql import functions as F
 
 from fhirflat_spark.decode import decode_table, verify_against_source
-from fhirflat_spark.encode import encode_table, plan_salted
+from fhirflat_spark.encode import encode_table, plan_partition_ids
 
 
 def _skewed(spark):
@@ -34,7 +34,7 @@ def _skewed(spark):
 
 def _alloc(spark, weight_col):
     stats: dict = {}
-    plan_salted(
+    plan_partition_ids(
         _skewed(spark), rows_per_bucket=1000, stats_out=stats,
         weight_col=weight_col,
     )
@@ -90,7 +90,8 @@ def test_null_weight_column_falls_back_to_rows(spark):
         )
     )
     stats: dict = {}
-    plan_salted(df, rows_per_bucket=50, stats_out=stats, weight_col="content")
+    plan_partition_ids(df, rows_per_bucket=50, stats_out=stats,
+                       weight_col="content")
     # all-NULL weights: planner must not collapse to zero buckets
     assert dict(stats["key_counts"])["v:r"] == 200
 

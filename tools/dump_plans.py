@@ -64,48 +64,42 @@ def main() -> None:
         )
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
 
-    from fhirflat_spark.datagen import gen_spark
-    from fhirflat_spark.encode import chunk_schema, encode_kernel_factory, plan_salted
-
-    df = gen_spark(spark, 5000, seed=3)
-    salted, _ = plan_salted(df, rows_per_bucket=1000)
-    kernel = encode_kernel_factory(df.columns, None)
-    chunks = salted.mapInArrow(kernel, schema=chunk_schema(len(df.columns)))
-    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
-        chunks._jdf.queryExecution(), "formatted"
-    )
-    lines += ["## encode pipeline (salted shuffle → mapInArrow kernel)",
-              "", "```", plan.rstrip(), "```", ""]
-
-    # blob-shuffle variant: one exchange over pre-packed Arrow-IPC rows
+    # the encoded exchange: placement projection → stage-1 encode kernel
+    # → one exchange of compressed chunk rows → stage-2 merge kernel
     from pyspark.sql import functions as F
 
+    from fhirflat_spark.datagen import gen_spark
     from fhirflat_spark.encode import (
-        PACK_SCHEMA,
-        pack_kernel_factory,
+        chunk_schema,
+        encoded_merge_kernel_factory,
+        encoded_pack_kernel_factory,
+        encoded_shuffle_schema,
         partition_tokens,
         plan_partition_ids,
-        unpack_encode_kernel_factory,
     )
 
+    df = gen_spark(spark, 5000, seed=3)
     cols = df.columns
     safe = [f"__c{i}" for i in range(len(cols))]
     bucketed, P = plan_partition_ids(df, rows_per_bucket=1000)
     bucketed = bucketed.select(
         *[F.col(c).alias(a) for a, c in zip(safe, cols)], "__pb"
     )
-    packed = bucketed.mapInArrow(
-        pack_kernel_factory(safe, partition_tokens(P)), schema=PACK_SCHEMA
+    stage1 = bucketed.mapInArrow(
+        encoded_pack_kernel_factory(
+            safe, partition_tokens(P), None, name_map=dict(zip(safe, cols))
+        ),
+        schema=encoded_shuffle_schema(len(cols)),
     )
-    kern2 = unpack_encode_kernel_factory(safe, None, name_map=dict(zip(safe, cols)))
-    chunks2 = packed.repartition(P, F.col("__tok")).mapInArrow(
-        kern2, schema=chunk_schema(len(cols))
+    chunks = stage1.repartition(P, F.col("__tok")).mapInArrow(
+        encoded_merge_kernel_factory(len(cols)), schema=chunk_schema(len(cols))
     )
-    plan2 = chunks2._sc._jvm.PythonSQLUtils.explainString(
-        chunks2._jdf.queryExecution(), "formatted"
+    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
+        chunks._jdf.queryExecution(), "formatted"
     )
-    lines += ["## encode pipeline, blob variant (pack → fat-row exchange → unpack)",
-              "", "```", plan2.rstrip(), "```", ""]
+    lines += ["## encode pipeline (stage-1 encode → compressed-chunk "
+              "exchange → stage-2 merge)",
+              "", "```", plan.rstrip(), "```", ""]
 
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/PLANS.md", "w") as f:
