@@ -118,14 +118,9 @@ def test_decode_column_pruning_reaches_scan(spark, tmp_path):
     assert dec.count() == 1000
 
 
-def test_encode_plan_single_shuffle(spark):
-    """The encode pipeline must contain exactly ONE data-sized exchange —
-    a second shuffle would be a 100-TB bug. It must sit ABOVE the stage-1
-    encode kernel and hash on __tok — i.e. it moves the final compressed
-    chunk rows (~0.25-0.3x of raw), with both MapInArrow stages in the
-    plan and no data-row exchange anywhere."""
-    import re
-
+def _encoded_plan(spark) -> str:
+    """Formatted plan of the encode pipeline: stage-1 encode kernel, ONE
+    repartition on __tok, stage-2 merge kernel."""
     from pyspark.sql import functions as F
 
     from fhirflat_spark.datagen import gen_spark
@@ -154,17 +149,37 @@ def test_encode_plan_single_shuffle(spark):
     chunks = stage1.repartition(P, F.col("__tok")).mapInArrow(
         encoded_merge_kernel_factory(len(cols)), schema=chunk_schema(len(cols))
     )
-    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
+    return chunks._sc._jvm.PythonSQLUtils.explainString(
         chunks._jdf.queryExecution(), "formatted"
     )
+
+
+def test_encode_plan_single_shuffle(spark):
+    """The encode pipeline must contain exactly ONE data-sized exchange —
+    a second shuffle would be a 100-TB bug."""
+    import re
+
+    plan = _encoded_plan(spark)
     data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
     assert len(data_exchanges) == 1, plan
-    assert "hashpartitioning(__tok" in plan, plan
-    assert plan.count("MapInArrow") >= 2, plan
     # literal-map placement: bucket→partition mapping is a projection, so
     # no BroadcastExchange may appear below the shuffle at default key
     # counts (the join path is reserved for >LITERAL_MAP_MAX_KEYS repos)
     assert "BroadcastExchange" not in plan, plan
+
+
+def test_encoded_shuffle_plan_single_compressed_exchange(spark):
+    """The ONE exchange must sit ABOVE the stage-1 encode kernel and hash
+    on __tok — i.e. it moves the final compressed chunk rows (~0.25-0.3x
+    of raw), with both MapInArrow stages in the plan and no data-row
+    exchange anywhere."""
+    import re
+
+    plan = _encoded_plan(spark)
+    data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
+    assert len(data_exchanges) == 1, plan
+    assert "hashpartitioning(__tok" in plan, plan
+    assert plan.count("MapInArrow") >= 2, plan
 
 
 def test_cluster_collapse_pairs_stage_equi_join(spark):
