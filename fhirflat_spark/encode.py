@@ -1758,8 +1758,8 @@ def encode_table(
                                     new_deletes=new_deletes, branch=branch)
     if branch is not None:
         # staged commit: the summary and merged key-count stats are
-        # MAIN-visible state — publish_branch patches the summary from
-        # the ref's recorded totals; stats fragments are skipped (stale
+        # MAIN-visible state — publish_branch re-derives the summary from
+        # the published head; stats fragments are skipped (stale
         # counts are safe by design, and drop_branch must not leak them)
         seconds = time.time() - t0
         return EncodeResult(

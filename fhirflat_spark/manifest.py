@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
 from collections import defaultdict
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -79,10 +81,12 @@ class CommitConflictError(RuntimeError):
     the current version and its attempt to publish the next one. The
     in-flight commit published NOTHING (the versioned manifest is
     created exclusively); the winner's SNAPSHOT is intact. Metadata-only
-    commits (delete_rows, rollback) retry internally; data commits
-    surface this because their partition placement was planned on a
-    stale snapshot. Seeing this from an append means the single-data-
-    writer contract was violated (SCALE.md): run ``verify_table`` —
+    commits (delete_rows, delete_rows_at, commit_partition_drop,
+    commit_stats_update, rollback) retry internally and raise this only
+    after 10 straight lost races; data commits surface it at once
+    because their partition placement was planned on a stale snapshot.
+    Seeing this from an append means the single-data-writer contract
+    was violated (SCALE.md): run ``verify_table`` —
     partition checksums flag any chunk files the losing write left in
     partitions the winner committed — then re-run the append."""
 
@@ -345,20 +349,19 @@ def write_manifest(spark: SparkSession, out_dir: str, meta_rows: list,
     part_id order (the checksum-of-checksums pattern of the reference's
     ``sha256sums.txt`` + ``fhirflat.toml``).
 
-    Commit protocol (every write atomic via fsio): (1) the immutable
-    ``snapshots/v{N}.manifest.parquet``, (2) the current
-    ``manifest/manifest.parquet``, (3) the ``snapshots/version-hint.txt``
-    pointer. A reader mid-commit sees the previous manifest or the new
-    one, never a torn state. Chunk files for committed partitions are
-    immutable (appends mint fresh part ids), so every retained snapshot
-    stays readable — the basis for time travel and rollback.
+    Commit protocol (every write atomic via fsio, all through
+    :func:`_commit`): (1) the immutable ``snapshots/v{N}.manifest.parquet``,
+    created exclusively, (2) the current ``manifest/manifest.parquet``,
+    (3) the ``snapshots/version-hint.txt`` pointer. A reader mid-commit
+    sees the previous manifest or the new one, never a torn state. Chunk
+    files for committed partitions are immutable (appends mint fresh part
+    ids), so every retained snapshot stays readable — the basis for time
+    travel and rollback.
     """
     by_part: dict[int, list] = defaultdict(list)
     for r in meta_rows:
         by_part[r["part_id"]].append(r)
     cols: dict[str, list] = defaultdict(list)
-    totals = {"rows": 0, "raw_bytes": 0, "encoded_bytes": 0}
-    dataset_h = hashlib.sha256()
     for part_id in sorted(by_part):
         chunks = sorted(by_part[part_id], key=lambda r: r["chunk_seq"])
         h = hashlib.sha256()
@@ -377,14 +380,12 @@ def write_manifest(spark: SparkSession, out_dir: str, meta_rows: list,
                 rmin = c["repo_min"] if rmin is None else min(rmin, c["repo_min"])
             if c["repo_max"] is not None:
                 rmax = c["repo_max"] if rmax is None else max(rmax, c["repo_max"])
-        psha = h.hexdigest()
-        dataset_h.update(psha.encode())
         cols["part_id"].append(part_id)
         cols["n_chunks"].append(len(chunks))
         cols["rows"].append(rows)
         cols["raw_bytes"].append(raw)
         cols["encoded_bytes"].append(enc)
-        cols["partition_sha"].append(psha)
+        cols["partition_sha"].append(h.hexdigest())
         cols["repo_min"].append(rmin)
         cols["repo_max"].append(rmax)
         cols["status"].append("ok")
@@ -407,14 +408,9 @@ def write_manifest(spark: SparkSession, out_dir: str, meta_rows: list,
             json.dumps(ddqs, separators=(",", ":"))
             if ddqs is not None else None
         )
-        totals["rows"] += rows
-        totals["raw_bytes"] += raw
-        totals["encoded_bytes"] += enc
     table = pa.table(
         {f.name: pa.array(cols[f.name], f.type) for f in MANIFEST_ARROW_SCHEMA}
     )
-    import os
-
     refs = _read_refs_full(out_dir)
     staged_names = [
         n for n, r in refs.items()
@@ -434,96 +430,35 @@ def write_manifest(spark: SparkSession, out_dir: str, meta_rows: list,
         raise ValueError(f"ref {branch!r} has unknown type")
     if bref is not None and bref.get("type") == "tag":
         raise ValueError(f"ref {branch!r} is a tag; tags are immutable")
-    main_head = current_snapshot(out_dir)
-    if branch is not None and main_head is None:
+    if branch is not None and current_snapshot(out_dir) is None:
         raise ValueError("branch staging needs an existing committed table")
-    # base = parent snapshot this commit builds on: the branch head when
-    # extending an active staging cycle, else the main head (a fresh
-    # staging cycle implicitly re-branches from main)
-    if bref is not None and bref.get("history"):
-        prev = int(bref["snapshot"])
-    else:
-        prev = main_head
-    version = _next_version(out_dir)
-    token = str(os.getpid())
-    # a data commit carries the active row-level delete set forward
-    # (deletes are snapshot state, like Iceberg's delete files riding
-    # along in every new snapshot); an upsert commit additionally adds
-    # its own scoped delete entries ATOMICALLY with the data. Dedup by
-    # file name: a re-committed append (replayed batch) must not stack
-    # a second copy of its own delete entry. ``carry_deletes=False`` is
-    # the REPLACE commit (named-sink overwrite): the table's contents
-    # are wholly this commit's meta_rows, so prior delete entries —
-    # including unscoped ones that would shadow the NEW rows — must not
-    # ride along.
-    carried = (
-        active_delete_files(out_dir, prev) if (prev and carry_deletes) else []
-    )
-    seen = {e["file"] for e in carried}
-    active = carried + [
-        e for e in (new_deletes or []) if e["file"] not in seen
-    ]
-    table = _with_deletes_meta(table, active)
-    # commit lineage: parent snapshot version (branch head for staged
-    # commits, main head otherwise) rides in the manifest's metadata —
-    # what fast-forward publish and history inspection walk
-    meta = {**(table.schema.metadata or {}),
-            _PARENT_META_KEY: str(prev or 0).encode(),
-            _COMMITTED_AT_META_KEY: _now_us_bytes()}
-    if branch is not None:
-        # staged snapshots self-identify: a crash between the exclusive
-        # snapshot write and the refs update must not leave an orphan
-        # that recovery would adopt as main (silent publication)
-        meta[_STAGED_META_KEY] = branch.encode()
-    table = table.replace_schema_metadata(meta)
-    # optimistic concurrency: the versioned manifest is CREATED, never
-    # overwritten — two writers racing to v{N} get exactly one winner,
-    # the loser surfaces instead of silently erasing the winner's commit
-    # (the Iceberg commit CAS). The delete set rides inside the created
-    # file, so the commit is ONE atomic object. Data commits do NOT
-    # auto-retry: the loser's partition placement was planned against a
-    # stale snapshot, so the safe reapply is the caller's own documented
-    # retry (re-run the append — it re-reads table state and mints fresh
-    # part ids).
-    try:
-        fsio.write_parquet_exclusive(
-            table, snapshot_manifest_path(out_dir, version), token=token
+
+    def build(_prev_table, prev):
+        # a data commit carries the active row-level delete set forward
+        # (deletes are snapshot state, like Iceberg's delete files
+        # riding along in every new snapshot); an upsert commit also
+        # adds its own scoped delete entries ATOMICALLY with the data.
+        # Dedup by file name: a re-committed append (replayed batch)
+        # must not stack a second copy of its own delete entry.
+        # ``carry_deletes=False`` is the REPLACE commit (named-sink
+        # overwrite): the table's contents are wholly this commit's
+        # meta_rows, so prior delete entries — including unscoped ones
+        # that would shadow the NEW rows — must not ride along.
+        carried = (
+            active_delete_files(out_dir, prev) if (prev and carry_deletes)
+            else []
         )
-    except FileExistsError:
-        raise CommitConflictError(
-            f"snapshot v{version} of {out_dir} was committed concurrently; "
-            "re-run this write against the new table state"
-        ) from None
-    _write_snapshot_deletes(out_dir, version, active, token)
-    stats = {**totals, "dataset_sha256": dataset_h.hexdigest(),
-             "n_partitions": len(by_part), "snapshot": version}
-    if branch is not None:
-        # staged (write-audit-publish): move the branch ref, NOT the main
-        # pointer — main readers keep seeing the pre-stage table until
-        # publish_branch fast-forwards. Totals ride in the ref so publish
-        # can patch the summary without recomputing.
-        fresh_cycle = not (bref and bref.get("history"))
-        refs = _read_refs_full(out_dir)  # re-read: commit won the race
-        old = refs.get(branch, {})
-        refs[branch] = {
-            "type": "branch",
-            "snapshot": version,
-            "base": int(main_head) if fresh_cycle else int(old["base"]),
-            "history": (
-                [] if fresh_cycle else list(old.get("history") or [])
-            ) + [version],
-            "totals": {
-                "rows": stats["rows"],
-                "raw_bytes": stats["raw_bytes"],
-                "encoded_bytes": stats["encoded_bytes"],
-                "n_partitions": stats["n_partitions"],
-                "dataset_sha256": stats["dataset_sha256"],
-            },
-        }
-        _write_refs_full(out_dir, refs)
-    else:
-        _advance_current(out_dir, version, table, token)
-    return stats
+        seen = {e["file"] for e in carried}
+        return table, carried + [
+            e for e in (new_deletes or []) if e["file"] not in seen
+        ]
+
+    # data commits do NOT auto-retry: the loser's partition placement
+    # was planned against a stale snapshot, so the safe reapply is the
+    # caller's own documented retry (re-run the append — it re-reads
+    # table state and mints fresh part ids)
+    c = _commit(out_dir, build, retry=False, branch=branch)
+    return {**_manifest_totals(table), "snapshot": c.version}
 
 
 def build_manifest(chunk_df: DataFrame) -> DataFrame:
@@ -638,12 +573,27 @@ def snapshot_part_ids(out_dir: str, version: int) -> list[int]:
 
 def _sha_of_partition_shas(part_ids, shas) -> str:
     """Dataset checksum-of-checksums: sha256 over partition shas in
-    part_id order — ONE definition shared by the summary
-    (write_manifest), the snapshot log, and rollback."""
+    part_id order — ONE definition shared by the summary, the snapshot
+    log, and rollback."""
     h = hashlib.sha256()
     for _, sha in sorted(zip(part_ids, shas)):
         h.update(sha.encode())
     return h.hexdigest()
+
+
+def _manifest_totals(t: pa.Table) -> dict:
+    """Row/byte totals, partition count and checksum-of-checksums of one
+    manifest — the ONE derivation behind write_manifest's stats, the
+    snapshot log and the summary totals (:func:`_sync_summary`)."""
+    return {
+        "rows": sum(t["rows"].to_pylist()),
+        "raw_bytes": sum(t["raw_bytes"].to_pylist()),
+        "encoded_bytes": sum(t["encoded_bytes"].to_pylist()),
+        "n_partitions": t.num_rows,
+        "dataset_sha256": _sha_of_partition_shas(
+            t["part_id"].to_pylist(), t["partition_sha"].to_pylist()
+        ),
+    }
 
 
 def snapshot_dataset_sha(out_dir: str, version: int) -> str | None:
@@ -673,22 +623,13 @@ def list_snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     rows = []
     for v in _snapshot_versions(out_dir):
         t = read_snapshot_manifest(out_dir, v)
-        sha = _sha_of_partition_shas(
-            t["part_id"].to_pylist(), t["partition_sha"].to_pylist()
-        )
+        tot = _manifest_totals(t)
         meta = t.schema.metadata or {}
-        parent = (
-            int(meta[_PARENT_META_KEY]) or None
-            if _PARENT_META_KEY in meta else None
-        )
-        committed = (
-            int(meta[_COMMITTED_AT_META_KEY])
-            if _COMMITTED_AT_META_KEY in meta else None
-        )
-        rows.append((v, t.num_rows, sum(t["rows"].to_pylist()),
-                     sum(t["raw_bytes"].to_pylist()),
-                     sum(t["encoded_bytes"].to_pylist()),
-                     sha, v == cur, parent, committed))
+        committed = meta.get(_COMMITTED_AT_META_KEY)
+        rows.append((v, tot["n_partitions"], tot["rows"], tot["raw_bytes"],
+                     tot["encoded_bytes"], tot["dataset_sha256"], v == cur,
+                     int(meta.get(_PARENT_META_KEY, 0)) or None,
+                     None if committed is None else int(committed)))
     return spark.createDataFrame(
         rows,
         "version INT, n_partitions BIGINT, rows BIGINT, raw_bytes BIGINT, "
@@ -923,8 +864,9 @@ def drop_tag(out_dir: str, name: str) -> None:
 # Iceberg fast-forward precondition), or drop_branch discards the
 # staged snapshots entirely. While a branch has staged commits, main
 # DATA commits are refused (the fragment-merge manifest would swallow
-# the staged partitions); metadata-only commits (delete_rows, rollback)
-# remain allowed and simply invalidate the fast-forward precondition.
+# the staged partitions); metadata-only commits (deletes, partition
+# drops, stats updates, rollback) remain allowed and simply invalidate
+# the fast-forward precondition.
 
 
 def publish_branch(out_dir: str, name: str) -> int:
@@ -933,8 +875,6 @@ def publish_branch(out_dir: str, name: str) -> int:
     longer descends from main's head, so fast-forward would drop main's
     newer commit. Returns the published version; the branch ref remains,
     pointing at the now-published head with an empty staging cycle."""
-    import os
-
     refs = _read_refs_full(out_dir)
     r = refs.get(name)
     if not r or r.get("type") != "branch" or not r.get("history"):
@@ -969,28 +909,9 @@ def publish_branch(out_dir: str, name: str) -> int:
             if v == head:
                 t = tv
     _advance_current(out_dir, head, t, token)
-    # summary totals were deliberately NOT rewritten while staging (main
-    # readers own the summary) — patch them to the staged state now
-    tot = r.get("totals") or {}
-    try:
-        summary = json.loads(fsio.read_bytes(f"{out_dir}/_SUMMARY.json"))
-    except FileNotFoundError:
-        summary = None
-    if summary is not None and tot:
-        for k in ("rows", "raw_bytes", "encoded_bytes", "n_partitions"):
-            if k in tot:
-                summary["num_partitions" if k == "n_partitions" else k] = \
-                    tot[k]
-        if tot.get("dataset_sha256"):
-            summary["dataset_sha256"] = tot["dataset_sha256"]
-        if summary.get("raw_bytes"):
-            summary["compression_ratio"] = round(
-                summary["encoded_bytes"] / summary["raw_bytes"], 6
-            )
-        fsio.write_bytes_atomic(
-            f"{out_dir}/_SUMMARY.json",
-            json.dumps(summary, indent=2).encode(), token=token,
-        )
+    # the summary was deliberately NOT rewritten while staging (main
+    # readers own it) — re-derive its totals from the published head
+    _sync_summary(out_dir)
     refs = _read_refs_full(out_dir)
     refs[name] = {"type": "branch", "snapshot": head, "base": head,
                   "history": []}
@@ -1095,6 +1016,127 @@ def _advance_current(out_dir: str, version: int, table: pa.Table,
                                 str(cur).encode(), token=token)
 
 
+class _Commit(NamedTuple):
+    version: int              # the snapshot this commit created
+    base: pa.Table | None     # the head manifest it was built from
+    table: pa.Table           # the committed manifest, stamped
+    active: list[dict]        # its active delete set
+    attempts: int             # 1 + version races lost on the way
+
+
+def _commit(out_dir: str, build, retry: bool = True,
+            branch: str | None = None) -> _Commit:
+    """The ONE snapshot-commit primitive every writer goes through.
+
+    ``build(prev_table, prev_version) -> (table, active_deletes)`` derives
+    the new manifest from the head (``prev_table`` is None on a fresh
+    table). The version is minted BEFORE the head is read: a snapshot
+    that lands between the two either shows in the head read or owns
+    the minted version (so the exclusive create below loses) — a commit
+    can never win a version while being built on a stale head (the lost
+    update a read-then-mint order allows: a racing partition drop undone
+    by a stats update built on the pre-drop manifest).
+
+    Stamped here, in one place: the active delete set (embedded in the
+    manifest's key-value metadata, so the exclusive create publishes data
+    + deletes as ONE object — the json sidecar written after it is the
+    inspection copy), the commit instant, and the parent = the head this
+    commit was built on. Then: exclusive-create ``v{N}`` (the Iceberg
+    commit CAS — one winner per version), the deletes sidecar, and
+    :func:`_advance_current`. A lost race re-mints and rebuilds
+    (``retry=True``, metadata commits: they apply to whatever the head
+    is) or raises :class:`CommitConflictError` (``retry=False``).
+
+    ``branch`` stages the commit on a WAP branch instead: the head is
+    the branch's staged head (main's head for a fresh staging cycle),
+    the snapshot carries the staged marker, and the branch ref moves
+    instead of the main pointer."""
+    token = str(os.getpid())
+    for attempt in range(1, 11):
+        version = _next_version(out_dir)
+        bref = _read_refs_full(out_dir).get(branch, {}) if branch else {}
+        prev = (int(bref["snapshot"]) if bref.get("history")
+                else current_snapshot(out_dir))
+        base = None if prev is None else read_snapshot_manifest(out_dir, prev)
+        table, active = build(base, prev)
+        meta = {**(table.schema.metadata or {}),
+                _DELETES_META_KEY: json.dumps(active).encode(),
+                _PARENT_META_KEY: str(prev or 0).encode(),
+                _COMMITTED_AT_META_KEY: _now_us_bytes()}
+        # staged snapshots self-identify: a crash between the exclusive
+        # create and the refs update must not leave an orphan recovery
+        # would adopt as main (silent publication); a main commit never
+        # inherits the marker from a manifest it recommits
+        meta.pop(_STAGED_META_KEY, None)
+        if branch is not None:
+            meta[_STAGED_META_KEY] = branch.encode()
+        table = table.replace_schema_metadata(meta)
+        try:
+            fsio.write_parquet_exclusive(
+                table, snapshot_manifest_path(out_dir, version), token=token
+            )
+        except FileExistsError:
+            if retry:
+                continue
+            raise CommitConflictError(
+                f"snapshot v{version} of {out_dir} was committed "
+                "concurrently; re-run this write against the new table state"
+            ) from None
+        _write_snapshot_deletes(out_dir, version, active, token)
+        if branch is None:
+            _advance_current(out_dir, version, table, token)
+        else:
+            # staged (write-audit-publish): move the branch ref, NOT the
+            # main pointer — main readers keep seeing the pre-stage table
+            # until publish_branch fast-forwards
+            refs = _read_refs_full(out_dir)  # re-read: commit won the race
+            hist = list(refs.get(branch, {}).get("history") or [])
+            refs[branch] = {
+                "type": "branch", "snapshot": version,
+                "base": int(refs[branch]["base"]) if hist else int(prev),
+                "history": hist + [version],
+            }
+            _write_refs_full(out_dir, refs)
+        return _Commit(version, base, table, active, attempt)
+    raise CommitConflictError(
+        f"commit on {out_dir} lost {attempt} straight version races"
+    )
+
+
+def _sync_summary(out_dir: str, patch: dict[str, list] | None = None) -> None:
+    """Re-derive ``_SUMMARY.json``'s totals (rows, raw/encoded bytes,
+    compression ratio, partition count, dataset checksum) from the HEAD
+    snapshot's manifest — the one writer of summary totals after a
+    metadata commit — optionally unioning ``patch``'s column lists into
+    the summary. Then SELF-HEAL (the :func:`_advance_current` pattern): a
+    commit that moved the head while this read-modify-write was in flight
+    may have written its own summary first, so re-derive until the head
+    this write used is still the head. Tables without a summary (bare
+    ``write_manifest`` callers) are left alone."""
+    while True:
+        head = current_snapshot(out_dir)
+        try:
+            summary = read_summary(None, out_dir)
+        except FileNotFoundError:
+            return
+        for key, values in (patch or {}).items():
+            if values:
+                summary[key] = sorted(set(summary.get(key, ())) | set(values))
+        tot = _manifest_totals(read_snapshot_manifest(out_dir, head))
+        raw, enc = tot["raw_bytes"], tot["encoded_bytes"]
+        summary.update(
+            rows=tot["rows"], raw_bytes=raw, encoded_bytes=enc,
+            compression_ratio=round(enc / raw, 6) if raw else 0.0,
+            num_partitions=tot["n_partitions"],
+            dataset_sha256=tot["dataset_sha256"],
+        )
+        fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
+                                json.dumps(summary, indent=2).encode(),
+                                token=str(os.getpid()))
+        if current_snapshot(out_dir) == head:
+            return
+
+
 _DELETES_META_KEY = b"fhirflat.active_deletes"
 _PARENT_META_KEY = b"fhirflat.parent"
 # wall-clock commit instant (epoch MICROS, writer's clock) — what
@@ -1108,15 +1150,6 @@ def _now_us_bytes() -> bytes:
     import time
 
     return str(time.time_ns() // 1000).encode()
-
-
-def _with_commit_time(table: pa.Table) -> pa.Table:
-    """Re-stamp ``committed_at_us`` for a metadata-only commit that
-    reuses an older manifest's bytes (delete / rollback) — the commit
-    instant is THIS commit's, not the copied snapshot's."""
-    meta = {**(table.schema.metadata or {}),
-            _COMMITTED_AT_META_KEY: _now_us_bytes()}
-    return table.replace_schema_metadata(meta)
 
 
 def snapshot_committed_at(out_dir: str, version: int) -> int | None:
@@ -1175,18 +1208,6 @@ def _parse_as_of_us(ts) -> int:
 _STAGED_META_KEY = b"fhirflat.staged_branch"
 
 
-def _with_deletes_meta(table: pa.Table, files: list[dict]) -> pa.Table:
-    """Embed the active-delete list in the manifest parquet's key-value
-    metadata, so the snapshot's EXCLUSIVE create commits data + deletes
-    as one object — a racing writer can never observe a won version
-    whose delete set is still in flight (the sidecar, written after the
-    create, has exactly that window). Other metadata keys preserved;
-    a recommitted older manifest gets ITS key replaced."""
-    meta = dict(table.schema.metadata or {})
-    meta[_DELETES_META_KEY] = json.dumps(files).encode()
-    return table.replace_schema_metadata(meta)
-
-
 def _write_snapshot_deletes(out_dir: str, version: int,
                             files: list[dict], token: str) -> None:
     fsio.write_bytes_atomic(_snapshot_deletes_path(out_dir, version),
@@ -1228,8 +1249,6 @@ def write_delete_keys(spark: SparkSession, out_dir: str, column: str,
     large key sets — a takedown list) through the distributed Spark
     writer into a directory (the reader handles both). Returns
     (name, n_keys)."""
-    import os
-
     from pyspark.sql import DataFrame as _DF
     from pyspark.sql import types as T
 
@@ -1264,6 +1283,13 @@ def write_delete_keys(spark: SparkSession, out_dir: str, column: str,
     return name, len(values)
 
 
+def _head_or_raise(out_dir: str) -> int:
+    prev = current_snapshot(out_dir)
+    if prev is None:
+        raise ValueError(f"{out_dir} has no committed snapshot")
+    return prev
+
+
 def delete_rows(spark: SparkSession, out_dir: str, column: str,
                 values) -> dict:
     """Row-level DELETE by key equality, committed as a new snapshot
@@ -1278,14 +1304,9 @@ def delete_rows(spark: SparkSession, out_dir: str, column: str,
     (``below_part`` — the Iceberg sequence-number analog): a LATER
     append that re-inserts a deleted key is visible, not silently
     swallowed by an old delete."""
-    import os
-
-    prev = current_snapshot(out_dir)
-    if prev is None:
-        raise ValueError(f"{out_dir} has no committed snapshot")
     import uuid
 
-    token = str(os.getpid())
+    prev = _head_or_raise(out_dir)
     # keys file written ONCE, name uuid-disambiguated so a racing
     # writer's file can never be overwritten — same pid, same stale
     # version included (concurrent threads share both). Names are
@@ -1296,32 +1317,19 @@ def delete_rows(spark: SparkSession, out_dir: str, column: str,
         spark, out_dir, column, values,
         f"d{prev + 1:010d}-{uuid.uuid4().hex[:12]}.parquet",
     )
-    # metadata-only commit: safe to auto-retry on conflict (the delete
-    # applies to whatever the current state is — re-reading prev and
-    # re-deriving scope is the correct reapply)
-    for _ in range(10):
-        prev = current_snapshot(out_dir)
-        version = _next_version(out_dir)
-        t = read_snapshot_manifest(out_dir, prev)
+
+    # the delete applies to whatever the head is when the commit wins:
+    # its scope is re-derived from that head on every attempt
+    def build(t, prev):
         below = max((int(p) for p in t["part_id"].to_pylist()), default=-1) + 1
-        active = active_delete_files(out_dir, prev) + [
+        return t, active_delete_files(out_dir, prev) + [
             {"file": dfile, "column": column, "below_part": below}
         ]
-        t = _with_commit_time(_with_deletes_meta(t, active))
-        try:
-            fsio.write_parquet_exclusive(
-                t, snapshot_manifest_path(out_dir, version), token=token
-            )
-        except FileExistsError:
-            continue
-        _write_snapshot_deletes(out_dir, version, active, token)
-        _advance_current(out_dir, version, t, token)
-        return {"snapshot": version, "delete_file": dfile,
-                "n_keys": n_keys, "below_part": below,
-                "active_delete_files": len(active)}
-    raise CommitConflictError(
-        f"delete on {out_dir} lost 10 straight commit races"
-    )
+
+    c = _commit(out_dir, build)
+    return {"snapshot": c.version, "delete_file": dfile,
+            "n_keys": n_keys, "below_part": c.active[-1]["below_part"],
+            "active_delete_files": len(c.active), "attempts": c.attempts}
 
 
 def delete_rows_at(spark: SparkSession, out_dir: str,
@@ -1335,7 +1343,6 @@ def delete_rows_at(spark: SparkSession, out_dir: str,
     keeper too). Addresses stay valid because chunk files are
     immutable; compaction applies deletes while rewriting and starts
     the new table with an empty delete set."""
-    import os
     import uuid
 
     need = {"part_id", "chunk_seq", "row_idx"}
@@ -1348,33 +1355,15 @@ def delete_rows_at(spark: SparkSession, out_dir: str,
     n_keys = keys.count()
     if n_keys == 0:
         raise ValueError("delete requires a non-empty position set")
-    token = str(os.getpid())
+    _head_or_raise(out_dir)
     dfile = f"p{uuid.uuid4().hex[:12]}.parquet"
     keys.write.mode("overwrite").parquet(f"{_deletes_dir(out_dir)}/{dfile}")
-    for _ in range(10):
-        prev = current_snapshot(out_dir)
-        if prev is None:
-            raise ValueError(f"{out_dir} has no committed snapshot")
-        version = _next_version(out_dir)
-        t = read_snapshot_manifest(out_dir, prev)
-        active = active_delete_files(out_dir, prev) + [
-            {"file": dfile, "column": None, "positional": True}
-        ]
-        t = _with_commit_time(_with_deletes_meta(t, active))
-        try:
-            fsio.write_parquet_exclusive(
-                t, snapshot_manifest_path(out_dir, version), token=token
-            )
-        except FileExistsError:
-            continue
-        _write_snapshot_deletes(out_dir, version, active, token)
-        _advance_current(out_dir, version, t, token)
-        return {"snapshot": version, "delete_file": dfile,
-                "n_positions": n_keys,
-                "active_delete_files": len(active)}
-    raise CommitConflictError(
-        f"position delete on {out_dir} lost 10 straight commit races"
-    )
+    entry = {"file": dfile, "column": None, "positional": True}
+    c = _commit(out_dir, lambda t, prev: (
+        t, active_delete_files(out_dir, prev) + [entry]))
+    return {"snapshot": c.version, "delete_file": dfile,
+            "n_positions": n_keys, "active_delete_files": len(c.active),
+            "attempts": c.attempts}
 
 
 def commit_partition_drop(spark: SparkSession, out_dir: str,
@@ -1394,62 +1383,33 @@ def commit_partition_drop(spark: SparkSession, out_dir: str,
     races (a drop applies to whatever the current state is), allowed
     while a WAP branch has staged history (it invalidates the branch's
     fast-forward publish, which ``publish_branch`` detects). Summary
-    physical totals are updated to the surviving manifest (the same
-    update ``rollback`` performs); key-count stats fragments keep the
-    dropped rows as an over-approximation — placement statistics are
-    sizing heuristics, never correctness inputs."""
-    import os
-
+    physical totals are re-derived from the head (``_sync_summary``);
+    key-count stats fragments keep the dropped rows as an
+    over-approximation — placement statistics are sizing heuristics,
+    never correctness inputs."""
     if not drop_pids and pos_delete_file is None:
         raise ValueError("commit_partition_drop: nothing to commit")
     drop_pids = {int(p) for p in drop_pids}
-    token = str(os.getpid())
-    for _ in range(10):
-        prev = current_snapshot(out_dir)
-        if prev is None:
-            raise ValueError(f"{out_dir} has no committed snapshot")
-        version = _next_version(out_dir)
-        t = read_snapshot_manifest(out_dir, prev)
-        pids = [int(p) for p in t["part_id"].to_pylist()]
-        t2 = t.filter(pa.array([p not in drop_pids for p in pids]))
-        active = active_delete_files(out_dir, prev)
-        if pos_delete_file is not None:
-            active = active + [
-                {"file": pos_delete_file, "column": None, "positional": True}
-            ]
-        t2 = _with_commit_time(_with_deletes_meta(t2, active))
-        try:
-            fsio.write_parquet_exclusive(
-                t2, snapshot_manifest_path(out_dir, version), token=token
-            )
-        except FileExistsError:
-            continue
-        _write_snapshot_deletes(out_dir, version, active, token)
-        _advance_current(out_dir, version, t2, token)
-        summary = read_summary(spark, out_dir)
-        raw = sum(t2["raw_bytes"].to_pylist())
-        enc = sum(t2["encoded_bytes"].to_pylist())
-        summary.update(
-            rows=sum(t2["rows"].to_pylist()), raw_bytes=raw,
-            encoded_bytes=enc,
-            compression_ratio=round(enc / raw, 6) if raw else 0.0,
-            num_partitions=t2.num_rows,
-            dataset_sha256=_sha_of_partition_shas(
-                t2["part_id"].to_pylist(), t2["partition_sha"].to_pylist()
-            ),
-        )
-        fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
-                                json.dumps(summary, indent=2).encode(),
-                                token=token)
-        return {
-            "snapshot": version,
-            "parts_dropped": sorted(set(pids) & drop_pids),
-            "n_partitions_after": t2.num_rows,
-            "active_delete_files": len(active),
-        }
-    raise CommitConflictError(
-        f"partition drop on {out_dir} lost 10 straight commit races"
-    )
+    _head_or_raise(out_dir)
+    pos = ([] if pos_delete_file is None else
+           [{"file": pos_delete_file, "column": None, "positional": True}])
+
+    def build(t, prev):
+        keep = [int(p) not in drop_pids for p in t["part_id"].to_pylist()]
+        return (t.filter(pa.array(keep)),
+                active_delete_files(out_dir, prev) + pos)
+
+    c = _commit(out_dir, build)
+    _sync_summary(out_dir)
+    return {
+        "snapshot": c.version,
+        "parts_dropped": sorted(
+            set(c.base["part_id"].to_pylist()) & drop_pids
+        ),
+        "n_partitions_after": c.table.num_rows,
+        "active_delete_files": len(c.active),
+        "attempts": c.attempts,
+    }
 
 
 def commit_stats_update(spark: SparkSession, out_dir: str,
@@ -1463,61 +1423,26 @@ def commit_stats_update(spark: SparkSession, out_dir: str,
     is append-only with zero inserts: CDF readers see an empty delta.
     The summary's tracked-column lists are extended so future appends
     keep sketching the analyzed columns."""
-    import os
-
     if not updates:
         raise ValueError("commit_stats_update: nothing to commit")
-    token = str(os.getpid())
-    for _ in range(10):
-        prev = current_snapshot(out_dir)
-        if prev is None:
-            raise ValueError(f"{out_dir} has no committed snapshot")
-        version = _next_version(out_dir)
-        t = read_snapshot_manifest(out_dir, prev)
-        names = t.schema.names
+    _head_or_raise(out_dir)
+
+    def build(t, prev):
         pids = [int(p) for p in t["part_id"].to_pylist()]
-        new_cols = {}
-        for col in ("col_hlls", "col_ddqs"):
-            j = 0 if col == "col_hlls" else 1
-            base = (t[col].to_pylist() if col in names
-                    else [None] * len(pids))
-            new_cols[col] = [
-                updates[p][j] if p in updates else v
-                for p, v in zip(pids, base)
-            ]
-        for col, vals in new_cols.items():
-            arr = pa.array(vals, type=pa.string())
-            if col in names:
-                t = t.set_column(t.schema.get_field_index(col), col, arr)
-            else:
-                t = t.append_column(col, arr)
-        active = active_delete_files(out_dir, prev)
-        t = _with_commit_time(_with_deletes_meta(t, active))
-        try:
-            fsio.write_parquet_exclusive(
-                t, snapshot_manifest_path(out_dir, version), token=token
-            )
-        except FileExistsError:
-            continue
-        _write_snapshot_deletes(out_dir, version, active, token)
-        _advance_current(out_dir, version, t, token)
-        summary = read_summary(spark, out_dir)
-        if ndv_columns:
-            summary["ndv_columns"] = sorted(
-                set(summary.get("ndv_columns", ())) | set(ndv_columns)
-            )
-        if quantile_columns:
-            summary["quantile_columns"] = sorted(
-                set(summary.get("quantile_columns", ()))
-                | set(quantile_columns)
-            )
-        fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
-                                json.dumps(summary, indent=2).encode(),
-                                token=token)
-        return {"snapshot": version, "parts_updated": sorted(updates)}
-    raise CommitConflictError(
-        f"stats update on {out_dir} lost 10 straight commit races"
-    )
+        for j, col in enumerate(("col_hlls", "col_ddqs")):
+            names = t.schema.names
+            base = t[col].to_pylist() if col in names else [None] * len(pids)
+            arr = pa.array([updates[p][j] if p in updates else v
+                            for p, v in zip(pids, base)], type=pa.string())
+            t = (t.set_column(names.index(col), col, arr) if col in names
+                 else t.append_column(col, arr))
+        return t, active_delete_files(out_dir, prev)
+
+    c = _commit(out_dir, build)
+    _sync_summary(out_dir, {"ndv_columns": ndv_columns,
+                            "quantile_columns": quantile_columns})
+    return {"snapshot": c.version, "parts_updated": sorted(updates),
+            "attempts": c.attempts}
 
 
 def drop_duplicate_rows(spark: SparkSession, out_dir: str,
@@ -1621,32 +1546,13 @@ def rollback(spark: SparkSession, out_dir: str, version: int) -> dict:
     input of the NEXT append — leaving them would resurrect the dropped
     partitions into its manifest). Chunk files are left in place
     (``vacuum`` reclaims the ones no snapshot references)."""
-    import os
-
-    t = read_snapshot_manifest(out_dir, version)
-    restored_ids = {int(p) for p in t["part_id"].to_pylist()}
-    token = str(os.getpid())
+    target = read_snapshot_manifest(out_dir, version)
+    restored_ids = {int(p) for p in target["part_id"].to_pylist()}
     # the restored state includes its row-level delete set (a rollback
-    # across a delete un-deletes; onto a deleted epoch re-deletes)
+    # across a delete un-deletes; onto a deleted epoch re-deletes); the
+    # target is fixed, so a lost version race simply re-mints
     restored_deletes = active_delete_files(out_dir, version)
-    t = _with_commit_time(_with_deletes_meta(t, restored_deletes))
-    # metadata-only commit — retry version minting on a lost race (the
-    # restored state is the fixed target snapshot either way)
-    for _ in range(10):
-        new_version = _next_version(out_dir)
-        try:
-            fsio.write_parquet_exclusive(
-                t, snapshot_manifest_path(out_dir, new_version), token=token
-            )
-        except FileExistsError:
-            continue
-        break
-    else:
-        raise CommitConflictError(
-            f"rollback on {out_dir} lost 10 straight commit races"
-        )
-    _write_snapshot_deletes(out_dir, new_version, restored_deletes, token)
-    _advance_current(out_dir, new_version, t, token)
+    c = _commit(out_dir, lambda _t, _prev: (target, restored_deletes))
     # fragment sweep AFTER the commit landed (a crash before this point
     # changes nothing — appends filter to head-reachable pids at merge
     # time). Only fragments referenced by NO retained snapshot are
@@ -1670,21 +1576,10 @@ def rollback(spark: SparkSession, out_dir: str, version: int) -> dict:
     for name in fsio.list_files(stats_dir, suffix=".parquet"):
         if int(name[:-len(".parquet")]) > max_restored:
             fsio.delete_file(f"{stats_dir}/{name}")
-    summary = read_summary(spark, out_dir)
-    sha = _sha_of_partition_shas(
-        t["part_id"].to_pylist(), t["partition_sha"].to_pylist()
-    )
-    raw = sum(t["raw_bytes"].to_pylist())
-    enc = sum(t["encoded_bytes"].to_pylist())
-    summary.update(
-        rows=sum(t["rows"].to_pylist()), raw_bytes=raw, encoded_bytes=enc,
-        compression_ratio=round(enc / raw, 6) if raw else 0.0,
-        num_partitions=t.num_rows, dataset_sha256=sha,
-    )
-    fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
-                            json.dumps(summary, indent=2).encode(), token=token)
-    return {"snapshot": new_version, "restored": version,
-            "rows": summary["rows"], "n_partitions": t.num_rows}
+    _sync_summary(out_dir)
+    return {"snapshot": c.version, "restored": version,
+            "rows": sum(target["rows"].to_pylist()),
+            "n_partitions": target.num_rows, "attempts": c.attempts}
 
 
 def expire_snapshots(out_dir: str, keep_last: int = 1,
@@ -1882,8 +1777,6 @@ def write_summary(spark: SparkSession, out_dir: str, result, columns: list[str],
     }
     if extra:
         summary.update(extra)
-    import os
-
     fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
                             json.dumps(summary, indent=2).encode(),
                             token=str(os.getpid()))
@@ -1918,8 +1811,6 @@ def write_key_counts(out_dir: str, sentinel_counts: list[tuple],
     retry of the same label replaces, never duplicates). ``fresh=True``
     clears all fragments first (a full re-encode owns the whole table).
     The "o:" fallback pseudo-key is not a real key and is dropped."""
-    import os
-
     d = _stats_dir(out_dir)
     if fresh:
         fsio.delete_dir(d)

@@ -461,7 +461,7 @@ def _commit_snapshot(plan: dict, by_part: dict[int, list],
                            branch=plan.get("branch"))
     if plan.get("branch"):
         # staged: the summary is MAIN-visible state — publish_branch
-        # patches it from the ref's recorded totals
+        # re-derives it from the published head
         return
     result = EncodeResult(
         out_dir=path,

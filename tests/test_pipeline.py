@@ -177,24 +177,27 @@ def test_resume_skips_completed(spark, encoded, tmp_path):
 
 def test_resume_reencodes_missing(spark, tmp_path):
     """Drop one partition's chunks + manifest row → resume re-encodes ONLY
-    that partition and restores the full dataset."""
-    import shutil
+    that partition and restores the full dataset, with one manifest row
+    per partition."""
+    from fhirflat_spark import fsio
 
     out = str(tmp_path / "resume")
     df = gen_spark(spark, 3000, seed=7)
     encode_table(df, out, rows_per_bucket=500)
-    m = read_manifest(spark, out)
-    all_parts = sorted(r["part_id"] for r in m.select("part_id").collect())
+    man = f"{out}/manifest/manifest.parquet"
+    t = fsio.read_parquet(man)
+    all_parts = sorted(t["part_id"].to_pylist())
     victim = all_parts[0]
-    shutil.rmtree(f"{out}/chunks/part_id={victim}")
-    # rewrite manifest without the victim row (simulates a failed task)
-    m.where(F.col("part_id") != victim).write.mode("overwrite").parquet(
-        f"{out}/manifest2"
+    fsio.delete_dir(f"{out}/chunks/part_id={victim}")
+    # rewrite the manifest without the victim row (simulates a failed task)
+    fsio.write_parquet_atomic(
+        t.filter([p != victim for p in t["part_id"].to_pylist()]), man
     )
-    shutil.rmtree(f"{out}/manifest")
-    os.rename(f"{out}/manifest2", f"{out}/manifest")
     res = encode_table(df, out, rows_per_bucket=500, resume=True)
     assert res.rows == 3000
+    pids = [r["part_id"] for r in
+            read_manifest(spark, out).select("part_id").collect()]
+    assert sorted(pids) == all_parts
     decoded = decode_table(spark, out)
     assert decoded.count() == 3000
     fails = verify_against_source(df, decoded, ["repo", "path", "commit"])

@@ -77,6 +77,37 @@ def test_rollback_restores_and_preserves_history(spark, ds):
                       base.unionByName(delta))
 
 
+def test_metadata_commits_record_the_previous_head_as_parent(spark, ds):
+    """A delete, a partition drop, a stats update and a rollback each
+    record the head they were built on as their parent — not the parent
+    stamped in the manifest they recommit (which made a metadata commit
+    on v1 record no parent at all)."""
+    from fhirflat_spark.manifest import (
+        commit_partition_drop,
+        commit_stats_update,
+        delete_rows,
+        list_snapshots,
+        rollback,
+        snapshot_part_ids,
+    )
+
+    out, base, _ = ds
+    pids = snapshot_part_ids(out, 2)
+    doc = base.select("doc_id").first()["doc_id"]
+    commits = [
+        lambda: delete_rows(spark, out, "doc_id", [doc]),
+        lambda: commit_partition_drop(spark, out, {pids[-1]}),
+        lambda: commit_stats_update(spark, out, {pids[0]: (None, None)}),
+        lambda: rollback(spark, out, 1),
+    ]
+    infos = [commit() for commit in commits]
+    parents = {r["version"]: r["parent"]
+               for r in list_snapshots(spark, out).collect()}
+    assert parents == {1: None, 2: 1, 3: 2, 4: 3, 5: 4, 6: 5}
+    assert [i["snapshot"] for i in infos] == [3, 4, 5, 6]
+    assert all(i["attempts"] == 1 for i in infos)
+
+
 def test_append_after_rollback_does_not_rewrite_history(spark, ds):
     from fhirflat_spark.decode import decode_table
     from fhirflat_spark.encode import append_table
