@@ -748,27 +748,96 @@ def decode_key_range(spark: SparkSession, out_dir: str, lo: str, hi: str,
     return df.where(F.col(key_col).between(lo, hi))
 
 
+def _transcode_kernel_factory(src_dir: str, frag_dir: str, pids: list[int],
+                              columns: list[str], overrides: dict,
+                              codec_opts: dict | None):
+    """Task side of ``transcode_table``: each input row is an index into
+    ``pids``. The task reads that whole source partition straight from
+    its chunk files, re-encodes every chunk's present columns, emits the
+    chunk rows in ``chunk_seq`` order (part id, chunk boundaries,
+    content checksum, zones and sketches carried over) and task-commits
+    the partition's manifest fragment, like the encode kernels."""
+
+    def kernel(batches):
+        import pyarrow.dataset as pads
+
+        from fhirflat_spark import fsio
+        from fhirflat_spark.codecs import encode_array
+        from fhirflat_spark.codecs.core import unpack_chunk
+        from fhirflat_spark.encode import _chunk_row, _write_fragment
+
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                pid = pids[i]
+                fs, inner = fsio.resolve(f"{src_dir}/chunks/part_id={pid}")
+                t = (pads.dataset(inner, filesystem=fs, format="parquet")
+                     .to_table().sort_by("chunk_seq").combine_chunks())
+                # a partition written before a column was added has no
+                # payload field for it; a NULL cell marks a chunk that
+                # predates it: either way the absence carries through
+                payload = t.column("payload").chunk(0)
+                fields = {payload.type.field(k).name: payload.field(k)
+                          for k in range(payload.type.num_fields)}
+                frag: list[dict] = []
+                for r in range(t.num_rows):
+                    stats = json.loads(t["stats"][r].as_py())
+                    blobs = []
+                    for j, name in enumerate(columns):
+                        cells = fields.get(f"__c{j}")
+                        if cells is None or not cells[r].is_valid:
+                            blobs.append(None)
+                            continue
+                        blob = encode_array(
+                            decode_array(_blob_view(cells, r)),
+                            codec=overrides.get(name, "auto"),
+                            opts=dict(codec_opts) if codec_opts else None,
+                        )
+                        stats[name]["enc"] = len(blob)
+                        stats[name]["codec"] = unpack_chunk(blob)[0]
+                        blobs.append(blob)
+                    # sketch maps always ride along (possibly empty):
+                    # partitions whose chunks carry no sketches still
+                    # merge to untracked ones
+                    meta, out = _chunk_row(
+                        pid, t["chunk_seq"][r].as_py(),
+                        t["n_rows"][r].as_py(), blobs, stats,
+                        t["content_sha"][r].as_py(), t["repo_min"][r].as_py(),
+                        t["repo_max"][r].as_py(), with_hlls=True,
+                        with_ddqs=True,
+                    )
+                    frag.append(meta)
+                    yield out
+                _write_fragment(frag_dir, pid, frag)
+
+    return kernel
+
+
 def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
                     profile: str = "archive",
                     codec_overrides: dict | None = None):
     """Re-compress an encoded dataset chunk-by-chunk WITHOUT touching the
     raw table (the compaction path: e.g. balanced → archive once data
-    goes cold). Reads only chunk payloads, decodes each column, re-encodes
-    under the new profile/overrides, and rewrites chunks + manifest with
-    identical chunk boundaries and content checksums — so round-trip
-    guarantees and the dataset checksum carry over unchanged. Zero
-    exchanges: one embarrassingly-parallel map over chunk files."""
-    import os as _os
+    goes cold). Decodes each chunk's columns and re-encodes them under
+    the new profile/overrides, keeping part ids, chunk boundaries and
+    content checksums — so round-trip guarantees and the dataset
+    checksum carry over unchanged.
 
-    from fhirflat_spark.codecs import encode_array
-    from fhirflat_spark.codecs.core import unpack_chunk
-    from fhirflat_spark.encode import chunk_schema
+    Zero exchanges: the live part ids are spread over the tasks, each
+    task reads whole partitions with pyarrow and writes each one through
+    encode's chunk writer (one ``part-NNNNNN.parquet`` per partition),
+    and the commit goes through encode's one data-commit tail — so the
+    destination's summary keeps the source's bloom/ndv/quantile
+    columns and later appends keep indexing them."""
+    import os as _os
+    import time as _time
+
+    from fhirflat_spark import fsio
+    from fhirflat_spark.encode import _commit_data, _own_table, _write_chunks
     from fhirflat_spark.manifest import (
         _local,
-        load_fragments,
+        active_delete_files,
+        copy_delete_file,
         read_summary,
-        write_manifest,
-        write_summary,
     )
 
     if profile not in ("balanced", "archive"):
@@ -779,185 +848,43 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
             "the source chunks while they are being read) — use a new "
             "dst_dir and swap after"
         )
-    import time as _time
-
     t0 = _time.time()
     summary = read_summary(spark, src_dir)
     _check_version(summary)
     columns = summary["columns"]
-    overrides = codec_overrides or {}
-    base_opts = {"archive": True} if profile == "archive" else {}
-    schema = chunk_schema(len(columns))
-    frag_dir = f"{dst_dir}/manifest_parts"
-    from fhirflat_spark import fsio as _fsio
-    from fhirflat_spark.manifest import _deletes_dir, _snap_dir, _stats_dir
-
-    # the transcode owns the whole destination: stale snapshots/stats/
-    # delete files from a previous table at dst would otherwise leak
-    # into the new table's first commit (carry-forward reads them)
-    _fsio.delete_dir(frag_dir)
-    _fsio.delete_dir(_snap_dir(dst_dir))
-    _fsio.delete_dir(_stats_dir(dst_dir))
-    _fsio.delete_dir(_deletes_dir(dst_dir))
-
-    def kernel(batches):
-        import json as _json
-        import os as _os
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        tid = ctx.partitionId() if ctx is not None else 0
-        frag: list[dict] = []
-        for batch in batches:
-            cols = [batch.column(f"payload_{i}") for i in range(len(columns))]
-            for i in range(batch.num_rows):
-                stats = _json.loads(batch.column("stats")[i].as_py())
-                payload = {}
-                enc_total = 0
-                for j, name in enumerate(columns):
-                    if not cols[j][i].is_valid:
-                        # chunk predates this column (schema evolution):
-                        # carry the absence through unchanged
-                        payload[f"__c{j}"] = None
-                        continue
-                    arr = decode_array(_blob_view(cols[j], i))
-                    blob = encode_array(
-                        arr, codec=overrides.get(name, "auto"),
-                        opts=dict(base_opts) if base_opts else None,
-                    )
-                    payload[f"__c{j}"] = blob
-                    stats[name]["enc"] = len(blob)
-                    stats[name]["codec"] = unpack_chunk(blob)[0]
-                    enc_total += len(blob)
-                row = {
-                    "part_id": batch.column("part_id")[i].as_py(),
-                    "chunk_seq": batch.column("chunk_seq")[i].as_py(),
-                    "n_rows": batch.column("n_rows")[i].as_py(),
-                    "raw_bytes": batch.column("raw_bytes")[i].as_py(),
-                    "encoded_bytes": enc_total,
-                    "content_sha": batch.column("content_sha")[i].as_py(),
-                    "repo_min": batch.column("repo_min")[i].as_py(),
-                    "repo_max": batch.column("repo_max")[i].as_py(),
-                    # chunk zones ride through unchanged (transcode
-                    # never reorders rows), so the rewritten manifest
-                    # keeps its partition-level pruning power
-                    "zones": {
-                        name: [s["zmin"], s["zmax"]]
-                        for name, s in stats.items()
-                        if "zmin" in s
-                    },
-                }
-                # stats-v2 rollups ride through only when EVERY column
-                # of the source chunk carried them (pre-v2 chunks keep
-                # the partition conservatively untracked)
-                if all("nulls" in s for s in stats.values()):
-                    row["nulls"] = {
-                        name: s["nulls"] for name, s in stats.items()
-                    }
-                    row["sums"] = {
-                        name: s["sum"] for name, s in stats.items()
-                        if "sum" in s
-                    }
-                # sketches ride through; an always-present (possibly
-                # empty) map keeps tracked-but-all-null partitions
-                # distinguishable from untracked ones downstream
-                row["hlls"] = {
-                    name: s["hll"] for name, s in stats.items()
-                    if "hll" in s
-                }
-                row["ddqs"] = {
-                    name: s["ddq"] for name, s in stats.items()
-                    if "ddq" in s
-                }
-                frag.append(row)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "part_id": [row["part_id"]],
-                        "chunk_seq": [row["chunk_seq"]],
-                        "n_rows": [row["n_rows"]],
-                        "payload": [payload],
-                        "stats": [_json.dumps(stats, separators=(",", ":"))],
-                        "content_sha": [row["content_sha"]],
-                        "raw_bytes": [row["raw_bytes"]],
-                        "encoded_bytes": [enc_total],
-                        "repo_min": [row["repo_min"]],
-                        "repo_max": [row["repo_max"]],
-                    },
-                    schema=pa.schema(
-                        [
-                            ("part_id", pa.int32()),
-                            ("chunk_seq", pa.int32()),
-                            ("n_rows", pa.int64()),
-                            ("payload", pa.struct(
-                                [(f"__c{j}", pa.binary()) for j in range(len(columns))]
-                            )),
-                            ("stats", pa.string()),
-                            ("content_sha", pa.string()),
-                            ("raw_bytes", pa.int64()),
-                            ("encoded_bytes", pa.int64()),
-                            ("repo_min", pa.string()),
-                            ("repo_max", pa.string()),
-                        ]
-                    ),
-                )
-        if frag:
-            from fhirflat_spark import fsio as _tfsio
-
-            _tfsio.write_bytes_atomic(f"{frag_dir}/{tid:06d}.json",
-                                      _json.dumps(frag).encode(),
-                                      token=str(_os.getpid()))
-
-    src = spark.read.schema(schema).parquet(f"{src_dir}/chunks").select(
-        "part_id", "chunk_seq", "n_rows", "raw_bytes", "content_sha",
-        "repo_min", "repo_max", "stats",
-        *[F.col(f"payload.__c{i}").alias(f"payload_{i}") for i in range(len(columns))],
-    )
     # the table IS what the manifest says — without this, chunk dirs a
     # rollback orphaned (or a crashed run half-wrote) would be
     # resurrected into the destination
-    live = _live_part_ids(src_dir)
-    if live is not None:
-        src = src.where(_part_range_predicate(live))
-    (
-        src.mapInArrow(kernel, schema=schema)
-        .write.mode("overwrite")
-        .option("compression", "uncompressed")
-        .partitionBy("part_id")
-        .parquet(f"{dst_dir}/chunks")
+    pids = _live_part_ids(src_dir)
+    if pids is None:  # pre-manifest table: every part dir
+        pids = [int(d[len("part_id="):])
+                for d in fsio.list_dirs(f"{src_dir}/chunks")
+                if d.startswith("part_id=")]
+    pids = sorted(pids)
+    # the transcode owns the whole destination
+    fsio.delete_dir(f"{dst_dir}/chunks")
+    _own_table(dst_dir)
+    kernel = _transcode_kernel_factory(
+        src_dir, f"{dst_dir}/manifest_parts", pids, columns,
+        codec_overrides or {}, {"archive": True} if profile == "archive" else None,
     )
-    meta_rows = load_fragments(frag_dir)
-    # chunks were copied VERBATIM (same part ids), so the source's
+    n_tasks = max(1, min(len(pids), spark.sparkContext.defaultParallelism))
+    written = _write_chunks(spark.range(0, len(pids), 1, n_tasks), kernel,
+                            f"{dst_dir}/chunks", len(columns))
+    # chunks keep their part ids and row positions, so the source's
     # active row-level deletes stay exactly valid — copy the key files
     # and commit the same entries, else deleted rows resurrect at dst
-    from fhirflat_spark.manifest import active_delete_files, copy_delete_file
-
     src_deletes = active_delete_files(src_dir)
     for entry in src_deletes:
         copy_delete_file(src_dir, dst_dir, entry["file"])
-    manifest_stats = write_manifest(spark, dst_dir, meta_rows,
-                                    new_deletes=src_deletes)
-    from fhirflat_spark.encode import EncodeResult
-
-    result = EncodeResult(
-        out_dir=dst_dir,
-        num_partitions=manifest_stats["n_partitions"],
-        seconds=_time.time() - t0,
-        rows=manifest_stats["rows"],
-        raw_bytes=manifest_stats["raw_bytes"],
-        encoded_bytes=manifest_stats["encoded_bytes"],
-        shuffled=False,
+    return _commit_data(
+        dst_dir, written, columns=columns,
+        spark_schema=summary.get("spark_schema"), t0=t0,
+        bloom=summary.get("bloom_columns", ()),
+        ndv=summary.get("ndv_columns", ()),
+        qsk=summary.get("quantile_columns", ()),
+        replace=True, new_deletes=src_deletes,
     )
-    write_summary(
-        spark, dst_dir, result, columns,
-        spark_schema=summary.get("spark_schema"),
-        dataset_sha=manifest_stats["dataset_sha256"],
-        extra=(
-            {"bloom_columns": summary["bloom_columns"]}
-            if summary.get("bloom_columns") else None
-        ),
-    )
-    return result
 
 
 def verify_against_source(source: DataFrame, decoded: DataFrame,

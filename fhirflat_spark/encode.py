@@ -99,8 +99,9 @@ _STAT_COLUMNS = ["chunk_seq", "n_rows", "raw_bytes", "encoded_bytes",
 
 def write_chunk_file(path: str, batches, n_cols: int) -> int:
     """Stream chunk-row batches into ONE parquet file at ``path`` — the
-    one chunk-file writer of the engine (``encode_table`` tasks and the
-    named sink both use it).
+    one chunk-file writer of the engine (``encode_table`` and
+    ``transcode_table`` tasks through ``chunk_write_kernel``, and the
+    named sink).
 
     Rows stream into a dot-prefixed, attempt-unique temporary file next
     to ``path`` (readers skip dot files) as they arrive, so a partition
@@ -186,11 +187,12 @@ def _part_slices(batches):
 def chunk_write_kernel(kernel, chunks_dir: str, n_cols: int):
     """Wrap a chunk-row kernel so its task writes the chunk files itself.
 
-    Every encode kernel emits whole partitions, each as one consecutive
-    stretch of rows (the stage-2 merge kernel in part_id order). Each
-    stretch streams into ``chunks_dir/part_id=N/part-N.parquet`` through
-    ``write_chunk_file``, and the task yields one ``WRITTEN_SCHEMA`` row
-    per written partition instead of the chunk bytes. The file name is a
+    Every encode kernel and the transcode kernel emit whole partitions,
+    each as one consecutive stretch of rows (the stage-2 merge kernel in
+    part_id order). Each stretch streams into
+    ``chunks_dir/part_id=N/part-N.parquet`` through ``write_chunk_file``,
+    and the task yields one ``WRITTEN_SCHEMA`` row per written partition
+    instead of the chunk bytes. The file name is a
     pure function of the part id because layout is a pure function of
     the input: retries and speculative duplicates publish identical
     bytes under one name."""
@@ -211,6 +213,57 @@ def chunk_write_kernel(kernel, chunks_dir: str, n_cols: int):
                 )
 
     return run
+
+
+def _write_chunks(source: DataFrame, kernel, chunks_dir: str,
+                  n_cols: int) -> set[int]:
+    """Run the ONE data-sized job of a write: each task writes its
+    partitions' chunk files (``chunk_write_kernel``) and manifest
+    fragments itself and returns one row per written partition. The
+    driver then drops every other file in those part dirs: an earlier
+    write an append replays over, killed attempts' leftovers. Returns
+    the written part ids."""
+    from fhirflat_spark import fsio
+
+    written = source.mapInArrow(
+        chunk_write_kernel(kernel, chunks_dir, n_cols), schema=WRITTEN_SCHEMA,
+    ).collect()
+    fsio.makedirs(chunks_dir)
+    for r in written:
+        keep_only(f"{chunks_dir}/part_id={r['part_id']}", r["file"])
+    return {int(r["part_id"]) for r in written}
+
+
+def _own_table(out_dir: str, keep_history: bool = False) -> None:
+    """A fresh write owns the whole table: stale manifest fragments and
+    key-count stats of previous contents must not merge into its first
+    commit, and (unless ``keep_history``: the named sink's same-schema
+    overwrite keeps time travel) stale snapshots and delete files would
+    time-travel into — or carry forward onto — a different table."""
+    from fhirflat_spark import fsio
+    from fhirflat_spark.manifest import _deletes_dir, _snap_dir, _stats_dir
+
+    fsio.delete_dir(f"{out_dir}/manifest_parts")
+    fsio.delete_dir(_stats_dir(out_dir))
+    if not keep_history:
+        fsio.delete_dir(_snap_dir(out_dir))
+        fsio.delete_dir(_deletes_dir(out_dir))
+
+
+def _head_part_ids(out_dir: str) -> set[int]:
+    """Part ids a new commit carries forward: the head's plus every
+    staged branch's."""
+    from fhirflat_spark.manifest import (
+        _branch_staged_versions,
+        current_snapshot,
+        snapshot_part_ids,
+    )
+
+    head = current_snapshot(out_dir)
+    live = set(snapshot_part_ids(out_dir, head)) if head else set()
+    for sv in _branch_staged_versions(out_dir):
+        live.update(snapshot_part_ids(out_dir, sv))
+    return live
 
 
 def _col_raw_sha(arr: pa.Array) -> tuple[str, int]:
@@ -339,8 +392,6 @@ def _encode_one_batch(batch: pa.RecordBatch, part_id: int, seq: int,
     n = batch.num_rows
     payload = {}
     stats = {}
-    raw_total = 0
-    enc_total = 0
     sha_all = hashlib.sha256()
     for name in columns:
         out_name = name_map[name]
@@ -395,8 +446,6 @@ def _encode_one_batch(batch: pa.RecordBatch, part_id: int, seq: int,
             if sk is not None:  # all-null contributes nothing; NaN/inf
                 stats[out_name]["ddq"] = sk  # poisoning also omits (nulls
                 # cross-check refuses service rather than lying)
-        raw_total += raw_bytes
-        enc_total += len(blob)
     repo_col = (
         batch.column(repo_batch_col)
         if repo_batch_col in batch.schema.names
@@ -408,56 +457,73 @@ def _encode_one_batch(batch: pa.RecordBatch, part_id: int, seq: int,
 
         mm = pc.min_max(repo_col)
         rmin, rmax = mm["min"].as_py(), mm["max"].as_py()
+    return _chunk_row(
+        part_id, seq, n, [payload[name_map[c]] for c in columns], stats,
+        sha_all.hexdigest(), rmin, rmax, bool(ndv_cols), bool(qsk_cols),
+    )
+
+
+def _chunk_row(part_id: int, seq: int, n_rows: int, blobs: list,
+               stats: dict, content_sha: str, rmin, rmax,
+               with_hlls: bool = False, with_ddqs: bool = False):
+    """One encoded chunk as its (fragment-meta, chunk-row batch) pair.
+
+    ``blobs`` are the payload fields' codec blobs in positional order
+    (None where the chunk has no bytes for a column), ``stats`` the
+    chunk's per-column stats keyed by column name. The byte totals,
+    zones and rollups of the fragment row all derive from ``stats``, so
+    every writer (the encode kernels, the named sink and transcode)
+    records a chunk the same way."""
     meta = {
         "part_id": part_id,
         "chunk_seq": seq,
-        "n_rows": n,
-        "raw_bytes": raw_total,
-        "encoded_bytes": enc_total,
-        "content_sha": sha_all.hexdigest(),
+        "n_rows": n_rows,
+        "raw_bytes": sum(s["raw"] for s in stats.values()),
+        "encoded_bytes": sum(s["enc"] for s in stats.values()),
+        "content_sha": content_sha,
         "repo_min": rmin,
         "repo_max": rmax,
         # per-column bounds for the manifest's partition-level zones
         # (write_manifest merges; a column missing from ANY chunk stays
         # unbounded at the partition level)
         "zones": {
-            name: [stats[name]["zmin"], stats[name]["zmax"]]
-            for name in stats
-            if "zmin" in stats[name]
-        },
-        # stats v2 rollup inputs (write_manifest merges per partition;
-        # a column absent from a chunk's nulls map = all-null there)
-        "nulls": {name: stats[name]["nulls"] for name in stats},
-        "sums": {
-            name: stats[name]["sum"] for name in stats
-            if "sum" in stats[name]
+            name: [s["zmin"], s["zmax"]]
+            for name, s in stats.items()
+            if "zmin" in s
         },
     }
-    if ndv_cols:
-        meta["hlls"] = {
-            name: stats[name]["hll"] for name in stats
-            if "hll" in stats[name]
+    # stats v2 rollup inputs (write_manifest merges per partition; a
+    # column absent from a chunk's nulls map = all-null there). A chunk
+    # written before stats v2 has no null counts and leaves its
+    # partition conservatively untracked.
+    if all("nulls" in s for s in stats.values()):
+        meta["nulls"] = {name: s["nulls"] for name, s in stats.items()}
+        meta["sums"] = {
+            name: s["sum"] for name, s in stats.items() if "sum" in s
         }
-    if qsk_cols:
+    # a sketched table's chunks always carry the (possibly empty) map:
+    # a chunk without one marks its partition unsketched
+    if with_hlls:
+        meta["hlls"] = {
+            name: s["hll"] for name, s in stats.items() if "hll" in s
+        }
+    if with_ddqs:
         meta["ddqs"] = {
-            name: stats[name]["ddq"] for name in stats
-            if "ddq" in stats[name]
+            name: s["ddq"] for name, s in stats.items() if "ddq" in s
         }
     payload_type = pa.struct(
-        [(f"__c{i}", pa.binary()) for i in range(len(columns))]
+        [(f"__c{i}", pa.binary()) for i in range(len(blobs))]
     )
     out = pa.RecordBatch.from_pydict(
         {
             "part_id": [part_id],
             "chunk_seq": [seq],
-            "n_rows": [n],
-            "payload": [
-                {f"__c{i}": payload[name_map[c]] for i, c in enumerate(columns)}
-            ],
+            "n_rows": [n_rows],
+            "payload": [{f"__c{i}": b for i, b in enumerate(blobs)}],
             "stats": [json.dumps(stats, separators=(",", ":"))],
-            "content_sha": [sha_all.hexdigest()],
-            "raw_bytes": [raw_total],
-            "encoded_bytes": [enc_total],
+            "content_sha": [content_sha],
+            "raw_bytes": [meta["raw_bytes"]],
+            "encoded_bytes": [meta["encoded_bytes"]],
             "repo_min": [rmin],
             "repo_max": [rmax],
         },
@@ -1368,6 +1434,62 @@ class EncodeResult:
         return self.raw_bytes / 1e9 / max(self.seconds, 1e-9)
 
 
+def _commit_data(out_dir: str, written: set[int], *, columns: list[str],
+                 spark_schema: str | None, t0: float, bloom=(), ndv=(),
+                 qsk=(), replace: bool = False,
+                 replace_pids: set[int] | None = None,
+                 new_deletes: list[dict] | None = None,
+                 branch: str | None = None, shuffled: bool = False,
+                 num_partitions: int | None = None) -> EncodeResult:
+    """The one data-commit tail: ``encode_table``/``append_table``, the
+    named sink's batch and streaming commits and ``transcode_table`` all
+    finish here, after their tasks wrote the chunk files and fragments.
+
+    1. Select the fragments of the new snapshot: the ``written`` part
+       ids, plus — unless the write ``replace``s the whole table — the
+       head's and staged branches' part ids minus ``replace_pids``.
+       Fragments of rolled-back pids stay on disk for rollback-forward
+       but never re-merge (silent resurrection).
+    2. Commit the snapshot (``write_manifest``); a replace commit drops
+       the prior delete entries.
+    3. Build the ``EncodeResult`` (``num_partitions`` overrides the
+       committed partition count: a fresh encode reports its plan).
+    4. Write the summary with the columns, schema and capability
+       columns; its totals derive from the head. A staged commit skips
+       it: the summary is main-visible, and ``publish_branch``
+       re-derives it from the published head."""
+    from fhirflat_spark.manifest import (
+        load_fragments,
+        write_manifest,
+        write_summary,
+    )
+
+    keep = set(written)
+    if not replace:
+        keep |= _head_part_ids(out_dir) - set(replace_pids or ())
+    meta_rows = [r for r in load_fragments(f"{out_dir}/manifest_parts")
+                 if r["part_id"] in keep]
+    stats = write_manifest(None, out_dir, meta_rows, new_deletes=new_deletes,
+                           carry_deletes=not replace, branch=branch)
+    result = EncodeResult(
+        out_dir=out_dir,
+        num_partitions=num_partitions or stats["n_partitions"],
+        seconds=time.time() - t0,
+        rows=stats["rows"],
+        raw_bytes=stats["raw_bytes"],
+        encoded_bytes=stats["encoded_bytes"],
+        shuffled=shuffled,
+    )
+    if branch is None:
+        write_summary(
+            None, out_dir, columns, spark_schema=spark_schema,
+            extra={key: sorted(cols) for key, cols in (
+                ("bloom_columns", bloom), ("ndv_columns", ndv),
+                ("quantile_columns", qsk)) if cols},
+        )
+    return result
+
+
 def encode_table(
     df: DataFrame,
     out_dir: str,
@@ -1449,12 +1571,7 @@ def encode_table(
     ``"archive"`` (high-volume string chunks compress at a higher zstd
     level: ~4-6% smaller than parquet/zstd at default AND level-matched
     settings, at a slower encode — the write-once/store-forever mode)."""
-    from fhirflat_spark.manifest import (
-        completed_partitions,
-        load_fragments,
-        write_manifest,
-        write_summary,
-    )
+    from fhirflat_spark.manifest import completed_partitions
 
     if branch is not None and not append:
         raise ValueError("branch staging is append-only (WAP audits a "
@@ -1540,7 +1657,6 @@ def encode_table(
         shuffle = not detect_clustering(df, rows_per_bucket=rows_per_bucket)
 
     skip: frozenset[int] = frozenset()
-    frag_live: set[int] | None = None  # append: head-reachable pid filter
     if resume and not append:
         skip = completed_partitions(spark, out_dir)
     from fhirflat_spark import fsio
@@ -1552,60 +1668,35 @@ def encode_table(
         fsio.delete_dir(chunks_dir)
     frag_dir = f"{out_dir}/manifest_parts"
     if not (resume or append):
-        # a fresh encode owns the whole table: stale stats fragments from
-        # previous contents would otherwise survive when write_key_counts
-        # (fresh=True) is skipped (caller-supplied counts / no-shuffle /
-        # no salt column) and corrupt load_key_counts totals; stale
-        # snapshots would time-travel into a different table's history
-        from fhirflat_spark.manifest import _deletes_dir, _snap_dir, _stats_dir
-
-        fsio.delete_dir(frag_dir)
-        fsio.delete_dir(_stats_dir(out_dir))
-        fsio.delete_dir(_snap_dir(out_dir))
-        fsio.delete_dir(_deletes_dir(out_dir))
+        _own_table(out_dir)
     elif append:
-        # crashed-attempt fragment sweep: tasks write manifest fragments
-        # as a side effect DURING the job, so a killed append leaves
-        # fragments for part ids its chunk files never committed. A
-        # retry re-mints the same offset, but if it plans FEWER
-        # partitions the leftovers above its range would merge into the
-        # manifest as phantom partitions pointing at missing chunk dirs.
-        # Any fragment at/above this run's offset that no retained
-        # snapshot references is exactly such a leftover (committed pids
-        # are always snapshot-referenced; this run's fragments don't
-        # exist yet) — delete them before the job starts.
-        # Below the offset, the new manifest must mirror the LIVE head:
-        # the keep-set is the current head's part ids plus staged branch
-        # partitions. Pids outside it (rolled-back appends — including
-        # the stale files a CRASHED rollback sweep leaves behind) are
-        # filtered out at merge time (frag_live below) rather than
-        # deleted: their fragments are the only chunk-level metadata for
-        # those partitions, and a later rollback BACK onto one of their
-        # snapshots must still find them (fragments for pids in any
-        # retained snapshot stay on disk until the snapshot expires).
-        from fhirflat_spark.manifest import (
-            _branch_staged_versions,
-            all_snapshot_part_ids,
-            current_snapshot,
-            snapshot_part_ids,
-        )
-
-        committed = all_snapshot_part_ids(out_dir)
-        head = current_snapshot(out_dir)
-        frag_live = set(snapshot_part_ids(out_dir, head)) if head else set()
-        for sv in _branch_staged_versions(out_dir):
-            frag_live.update(snapshot_part_ids(out_dir, sv))
         if replace_pids:
             # rewrite commit: the replaced partitions leave the live
             # manifest atomically with this append (their fragments stay
             # on disk — retained snapshots still reference them)
-            missing = set(replace_pids) - frag_live
+            missing = set(replace_pids) - _head_part_ids(out_dir)
             if missing:
                 raise ValueError(
                     f"replace_pids {sorted(missing)} are not live "
                     "partitions of the current head"
                 )
-            frag_live -= set(replace_pids)
+        # crashed-attempt fragment sweep: tasks write manifest fragments
+        # as a side effect DURING the job, so a killed append leaves
+        # fragments for part ids its chunk files never committed. A
+        # retry re-mints the same offset, but if it plans FEWER
+        # partitions the leftovers above its range would stay on disk
+        # as phantom partitions pointing at missing chunk dirs. Any
+        # fragment at/above this run's offset that no retained snapshot
+        # references is exactly such a leftover (committed pids are
+        # always snapshot-referenced; this run's fragments don't exist
+        # yet) — delete them before the job starts. Below the offset,
+        # fragments of pids the head no longer references (rolled-back
+        # appends) stay: a later rollback BACK onto one of their
+        # snapshots must still find them, and the commit tail leaves
+        # them out of the merge.
+        from fhirflat_spark.manifest import all_snapshot_part_ids
+
+        committed = all_snapshot_part_ids(out_dir)
         for name in fsio.list_files(frag_dir, suffix=".json"):
             pid = int(name[: -len(".json")])
             if pid >= part_offset and pid not in committed:
@@ -1697,27 +1788,7 @@ def encode_table(
             f"planned {P} partitions exceed the {max_new_partitions}-wide "
             "part-id namespace; raise parts_per_batch or rows_per_bucket"
         )
-    # ONE data-sized job: each task writes its partitions' chunk files
-    # and manifest fragments itself and returns one row per written
-    # partition. The driver then drops every other file in those part
-    # dirs: an earlier write an append replays over, killed attempts'
-    # leftovers.
-    written = source.mapInArrow(
-        chunk_write_kernel(kernel, chunks_dir, len(columns)),
-        schema=WRITTEN_SCHEMA,
-    ).collect()
-    fsio.makedirs(chunks_dir)
-    for r in written:
-        keep_only(f"{chunks_dir}/part_id={r['part_id']}", r["file"])
-    meta_rows = load_fragments(frag_dir)
-    if frag_live is not None:
-        # append commit = head-reachable history + this run's range.
-        # Fragments of rolled-back pids stay on disk for rollback-forward
-        # but must not merge into the new manifest (silent resurrection).
-        meta_rows = [
-            r for r in meta_rows
-            if r["part_id"] >= part_offset or r["part_id"] in frag_live
-        ]
+    written = _write_chunks(source, kernel, chunks_dir, len(columns))
     new_deletes = None
     if delete_keys is not None:
         # upsert: shadow-delete matching keys in PRE-EXISTING partitions
@@ -1754,53 +1825,27 @@ def encode_table(
         new_deletes = (new_deletes or []) + [
             {"file": pname, "column": None, "positional": True}
         ]
-    manifest_stats = write_manifest(spark, out_dir, meta_rows,
-                                    new_deletes=new_deletes, branch=branch)
-    if branch is not None:
-        # staged commit: the summary and merged key-count stats are
-        # MAIN-visible state — publish_branch re-derives the summary from
-        # the published head; stats fragments are skipped (stale
-        # counts are safe by design, and drop_branch must not leak them)
-        seconds = time.time() - t0
-        return EncodeResult(
-            out_dir=out_dir,
-            num_partitions=manifest_stats["n_partitions"],
-            seconds=seconds,
-            rows=manifest_stats["rows"],
-            raw_bytes=manifest_stats["raw_bytes"],
-            encoded_bytes=manifest_stats["encoded_bytes"],
-            shuffled=bool(shuffle),
-        )
-    if plan_stats.get("key_counts") and not plan_stats.get("caller_counts"):
+    result = _commit_data(
+        out_dir, written, columns=columns,
+        spark_schema=df.select(*[F.col(f"`{c}`") for c in columns]).schema.json(),
+        bloom=bloom_set, ndv=ndv_set, qsk=qsk_set, t0=t0,
+        replace=not (resume or append), replace_pids=replace_pids,
+        new_deletes=new_deletes, branch=branch, shuffled=bool(shuffle),
+        num_partitions=None if append else P,
+    )
+    if (branch is None and plan_stats.get("key_counts")
+            and not plan_stats.get("caller_counts")):
         # persist SCAN-DERIVED counts only (caller-provided stats are the
-        # caller's to maintain). Fragment keyed by part_offset: a full
-        # encode/resume owns the table (fresh=True clears old fragments);
-        # an append/replayed batch atomically replaces only its own
-        # fragment — idempotent under retries.
+        # caller's to maintain), as this part offset's fragment: a fresh
+        # encode cleared the stats before its job, and an append, a
+        # replayed batch or a resume atomically replaces only its own
+        # fragment — idempotent under retries. A staged commit skips
+        # them: merged counts are main-visible, and drop_branch must not
+        # leak them (stale counts are safe by design).
         from fhirflat_spark.manifest import write_key_counts
 
         write_key_counts(out_dir, plan_stats["key_counts"],
-                         label=f"{part_offset:012d}", fresh=not append)
-    seconds = time.time() - t0
-    result = EncodeResult(
-        out_dir=out_dir,
-        num_partitions=manifest_stats["n_partitions"] if append else P,
-        seconds=seconds,
-        rows=manifest_stats["rows"],
-        raw_bytes=manifest_stats["raw_bytes"],
-        encoded_bytes=manifest_stats["encoded_bytes"],
-        shuffled=bool(shuffle),
-    )
-    write_summary(
-        spark, out_dir, result, columns,
-        spark_schema=df.select(*[F.col(f"`{c}`") for c in columns]).schema.json(),
-        dataset_sha=manifest_stats["dataset_sha256"],
-        extra=(
-            ({"bloom_columns": sorted(bloom_set)} if bloom_set else {})
-            | ({"ndv_columns": sorted(ndv_set)} if ndv_set else {})
-            | ({"quantile_columns": sorted(qsk_set)} if qsk_set else {})
-        ) or None,
-    )
+                         label=f"{part_offset:012d}")
     return result
 
 

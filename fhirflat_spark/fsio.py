@@ -2,11 +2,11 @@
 
 Every Python-side metadata read/write (manifest fragments, key-count
 stats fragments, manifest/snapshot parquet, ``_SUMMARY.json``) routes
-through this module, and so do the chunk files encode tasks and the
-named sink write (``encode.write_chunk_file``). Spark's own parquet
-source/sink reads chunks and writes ``transcode_table``'s, speaking
-object stores through the Hadoop filesystems (``s3a://``, ``gs://``,
-``abfss://``).
+through this module, and so does every chunk file: encode and
+transcode tasks and the named sink write them through
+``encode.write_chunk_file``. Spark's own parquet source reads chunks
+for decode, speaking object stores through the Hadoop filesystems
+(``s3a://``, ``gs://``, ``abfss://``).
 
 Resolution rules for a dataset path:
 
@@ -19,7 +19,7 @@ Resolution rules for a dataset path:
 - any other ``scheme://...`` → ``pyarrow.fs.FileSystem.from_uri``
   (s3, gs, hdfs, ...). ``s3a://`` — the Hadoop scheme Spark uses for
   the chunk files — maps to pyarrow's ``s3://`` so ONE ``out_dir``
-  string serves both the JVM chunk writer and this metadata layer.
+  string serves both Spark's chunk reader and this layer.
   Object-store writes are single-request puts, which S3/GCS make atomic
   (readers see the old object or the new one, never a torn write) — the
   same commit primitive Iceberg relies on for its metadata files.
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import posixpath
 import re
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -83,17 +84,26 @@ def _ensure_parent(fs: pafs.FileSystem, inner: str) -> None:
         fs.create_dir(parent, recursive=True)
 
 
+def _tmp_path(inner: str, kind: str, token: str) -> str:
+    """Dot-prefixed temporary file next to ``inner``, unique per writing
+    thread: threads of one process pass the same ``token`` (its pid), and
+    a shared tmp file would let one thread publish, or unlink, another's
+    bytes."""
+    return (f"{posixpath.dirname(inner)}/.{posixpath.basename(inner)}"
+            f".{kind}.{token}.{threading.get_ident()}")
+
+
 def write_bytes_atomic(path: str, data: bytes, token: str = "w") -> None:
     """Durably publish ``data`` at ``path`` so a concurrent reader sees
     either the previous content or the new content in full.
 
     Local: tmp file in the same directory + atomic rename (``token``
-    disambiguates concurrent writers, e.g. a pid). Object stores: one
-    put — atomic by store semantics."""
+    disambiguates concurrent writers, e.g. a pid; see :func:`_tmp_path`).
+    Object stores: one put — atomic by store semantics."""
     fs, inner = resolve(path)
     _ensure_parent(fs, inner)
     if isinstance(fs, pafs.LocalFileSystem):
-        tmp = f"{posixpath.dirname(inner)}/.{posixpath.basename(inner)}.tmp.{token}"
+        tmp = _tmp_path(inner, "tmp", token)
         with fs.open_output_stream(tmp) as f:
             f.write(data)
         fs.move(tmp, inner)
@@ -119,7 +129,7 @@ def write_bytes_exclusive(path: str, data: bytes, token: str = "w") -> None:
     fs, inner = resolve(path)
     _ensure_parent(fs, inner)
     if isinstance(fs, pafs.LocalFileSystem):
-        tmp = f"{posixpath.dirname(inner)}/.{posixpath.basename(inner)}.xtmp.{token}"
+        tmp = _tmp_path(inner, "xtmp", token)
         with fs.open_output_stream(tmp) as f:
             f.write(data)
         try:

@@ -1103,22 +1103,29 @@ def _commit(out_dir: str, build, retry: bool = True,
     )
 
 
-def _sync_summary(out_dir: str, patch: dict[str, list] | None = None) -> None:
+def _sync_summary(out_dir: str, patch: dict[str, list] | None = None,
+                  base: dict | None = None) -> None:
     """Re-derive ``_SUMMARY.json``'s totals (rows, raw/encoded bytes,
     compression ratio, partition count, dataset checksum) from the HEAD
-    snapshot's manifest — the one writer of summary totals after a
-    metadata commit — optionally unioning ``patch``'s column lists into
-    the summary. Then SELF-HEAL (the :func:`_advance_current` pattern): a
-    commit that moved the head while this read-modify-write was in flight
-    may have written its own summary first, so re-derive until the head
-    this write used is still the head. Tables without a summary (bare
-    ``write_manifest`` callers) are left alone."""
+    snapshot's manifest — the one writer of summary totals, after data
+    and metadata commits alike — optionally unioning ``patch``'s column
+    lists into the summary. ``base`` (a data commit's
+    :func:`write_summary`) replaces the stored summary instead of being
+    read from it. Then SELF-HEAL (the :func:`_advance_current` pattern):
+    a commit that moved the head while this read-modify-write was in
+    flight may have written its own summary first, so re-read and
+    re-derive until the head this write used is still the head. Tables
+    without a summary (bare ``write_manifest`` callers) are left
+    alone."""
     while True:
         head = current_snapshot(out_dir)
-        try:
-            summary = read_summary(None, out_dir)
-        except FileNotFoundError:
-            return
+        if base is not None:
+            summary, base = base, None
+        else:
+            try:
+                summary = read_summary(None, out_dir)
+            except FileNotFoundError:
+                return
         for key, values in (patch or {}).items():
             if values:
                 summary[key] = sorted(set(summary.get(key, ())) | set(values))
@@ -1755,10 +1762,14 @@ def dataset_checksum(manifest: DataFrame) -> str:
     return h.hexdigest()
 
 
-def write_summary(spark: SparkSession, out_dir: str, result, columns: list[str],
+def write_summary(spark: SparkSession, out_dir: str, columns: list[str],
                   spark_schema: str | None = None,
-                  dataset_sha: str | None = None,
-                  extra: dict | None = None) -> dict:
+                  extra: dict | None = None) -> None:
+    """Write ``_SUMMARY.json`` after a data commit: the engine/format
+    versions, ``columns``, ``spark_schema`` and ``extra`` keys, with the
+    totals derived from the head snapshot by :func:`_sync_summary` — so
+    a metadata commit that lands between the data commit and this write
+    is not undone by stale totals."""
     from fhirflat_spark import __version__
 
     summary = {
@@ -1768,19 +1779,9 @@ def write_summary(spark: SparkSession, out_dir: str, result, columns: list[str],
         "format_version": FORMAT_VERSION,
         "columns": columns,
         "spark_schema": spark_schema,
-        "rows": result.rows,
-        "raw_bytes": result.raw_bytes,
-        "encoded_bytes": result.encoded_bytes,
-        "compression_ratio": round(result.ratio, 6),
-        "num_partitions": result.num_partitions,
-        "dataset_sha256": dataset_sha,
+        **(extra or {}),
     }
-    if extra:
-        summary.update(extra)
-    fsio.write_bytes_atomic(f"{out_dir}/_SUMMARY.json",
-                            json.dumps(summary, indent=2).encode(),
-                            token=str(os.getpid()))
-    return summary
+    _sync_summary(out_dir, base=summary)
 
 
 def read_summary(spark: SparkSession, out_dir: str) -> dict:
@@ -1804,16 +1805,13 @@ def _stats_dir(out_dir: str) -> str:
 
 
 def write_key_counts(out_dir: str, sentinel_counts: list[tuple],
-                     label: str = "000000000000",
-                     fresh: bool = False) -> None:
+                     label: str = "000000000000") -> None:
     """Persist sentinel-keyed counts ("v:<k>" / "n:" / "o:") as a
     raw-keyed stats fragment named by ``label`` (atomic publish — a
-    retry of the same label replaces, never duplicates). ``fresh=True``
-    clears all fragments first (a full re-encode owns the whole table).
-    The "o:" fallback pseudo-key is not a real key and is dropped."""
+    retry of the same label replaces, never duplicates; a fresh encode
+    clears the other labels before its job). The "o:" fallback
+    pseudo-key is not a real key and is dropped."""
     d = _stats_dir(out_dir)
-    if fresh:
-        fsio.delete_dir(d)
     rows: dict[str | None, int] = {}
     for sk, c in sentinel_counts:
         if sk == "o:":

@@ -25,8 +25,9 @@ Commit protocol (the DSv2 contract mapped onto the engine's manifest):
 - **The driver commits ONE snapshot.** ``commit(messages)`` drops files
   from losing task attempts (speculation/retries write distinct file
   names; only the message's file survives), publishes per-partition
-  manifest fragments, and runs ``write_manifest`` — readers see the
-  previous snapshot or the new one, never a torn table.
+  manifest fragments, and finishes through encode's one data-commit
+  tail (``encode._commit_data``) — readers see the previous snapshot or
+  the new one, never a torn table.
 - **abort() leaves the table untouched.** Data landed only in part-id
   dirs no manifest references; abort deletes them (and staged files).
   Even without abort, readers trust the manifest, so a crashed job's
@@ -354,8 +355,8 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
     safe = [f"__c{i}" for i in range(len(columns))]
     name_map = dict(zip(safe, columns))
     bloom = frozenset(plan["bloom"])
-    ndv = frozenset(plan.get("ndv") or ())
-    qsk = frozenset(plan.get("qsk") or ())
+    ndv = frozenset(plan["ndv"])
+    qsk = frozenset(plan["qsk"])
     key_col = plan["upsert_key"] if keys_path else None
     key_idx = columns.index(key_col) if key_col else None
     key_chunks: list[pa.Array] = []
@@ -403,87 +404,32 @@ def _encode_partition(plan: dict, part_id: int, batches, out_path: str,
 
 def _commit_snapshot(plan: dict, by_part: dict[int, list],
                      new_deletes: list[dict] | None = None) -> None:
-    """Driver-side snapshot commit: publish fragments, merge, manifest,
-    summary. ``by_part``: part_id → its chunk meta rows (this job's);
-    ``new_deletes``: upsert's scoped delete entries, committed in the
-    SAME snapshot as the data."""
-    from fhirflat_spark.encode import EncodeResult, _write_fragment
-    from fhirflat_spark.manifest import (
-        load_fragments,
-        write_manifest,
-        write_summary,
-    )
+    """Driver-side snapshot commit: publish this job's fragments
+    (``by_part``: part_id → its chunk meta rows), then finish through
+    encode's one data-commit tail. ``new_deletes``: upsert's scoped
+    delete entries, committed in the SAME snapshot as the data."""
+    from fhirflat_spark.encode import _commit_data, _own_table, _write_fragment
 
     path = plan["path"]
-    frag_dir = f"{path}/manifest_parts"
     # streaming commits are always append-style: the plan's "create"
     # mode describes the TABLE at query start, not each micro-batch —
     # batch N must not wipe batches 0..N-1
     replace = not plan["streaming"] and plan["mode"] in ("create", "replace")
     if replace:
-        from fhirflat_spark import fsio
-        from fhirflat_spark.manifest import _deletes_dir, _snap_dir, _stats_dir
-
-        # the new commit owns the whole table: stale fragments/stats —
-        # including a crashed prior job's (a dir with fragments but no
-        # _SUMMARY.json plans as "create") — must not merge in (same
-        # contract as a fresh encode_table)
-        fsio.delete_dir(frag_dir)
-        fsio.delete_dir(_stats_dir(path))
-        if not plan["history_compatible"]:
-            # a schema-changing overwrite cannot keep time travel — the
-            # summary records ONE schema per table (decode of an old
-            # snapshot under a new schema would mis-type every column)
-            fsio.delete_dir(_snap_dir(path))
-            fsio.delete_dir(_deletes_dir(path))
+        # the new commit owns the whole table — including a crashed
+        # prior job's fragments (a dir with fragments but no
+        # _SUMMARY.json plans as "create"). A schema-changing overwrite
+        # cannot keep time travel: the summary records ONE schema per
+        # table, and an old snapshot decoded under a new schema would
+        # mis-type every column.
+        _own_table(path, keep_history=plan["history_compatible"])
     for pid in sorted(by_part):
-        _write_fragment(frag_dir, pid, by_part[pid])
-    meta_rows = load_fragments(frag_dir)
-    if not replace:
-        # append commit = head-reachable history + this job's partitions
-        # (fragments of rolled-back pids stay on disk for rollback-
-        # forward but must not re-merge — same rule as encode.py)
-        from fhirflat_spark.manifest import (
-            _branch_staged_versions,
-            current_snapshot,
-            snapshot_part_ids,
-        )
-
-        head = current_snapshot(path)
-        live = set(snapshot_part_ids(path, head)) if head else set()
-        for sv in _branch_staged_versions(path):
-            live.update(snapshot_part_ids(path, sv))
-        live.update(int(p) for p in by_part)
-        meta_rows = [r for r in meta_rows if r["part_id"] in live]
-    stats = write_manifest(None, path, meta_rows,
-                           new_deletes=new_deletes,
-                           carry_deletes=not replace,
-                           branch=plan.get("branch"))
-    if plan.get("branch"):
-        # staged: the summary is MAIN-visible state — publish_branch
-        # re-derives it from the published head
-        return
-    result = EncodeResult(
-        out_dir=path,
-        num_partitions=stats["n_partitions"],
-        seconds=time.time() - plan["t0"],
-        rows=stats["rows"],
-        raw_bytes=stats["raw_bytes"],
-        encoded_bytes=stats["encoded_bytes"],
-        shuffled=False,
-    )
-    write_summary(
-        None, path, result, plan["columns"],
-        spark_schema=plan["schema_json"],
-        dataset_sha=stats["dataset_sha256"],
-        extra=(
-            ({"bloom_columns": sorted(plan["bloom"])}
-             if plan["bloom"] else {})
-            | ({"ndv_columns": sorted(plan.get("ndv") or ())}
-               if plan.get("ndv") else {})
-            | ({"quantile_columns": sorted(plan.get("qsk") or ())}
-               if plan.get("qsk") else {})
-        ) or None,
+        _write_fragment(f"{path}/manifest_parts", pid, by_part[pid])
+    _commit_data(
+        path, set(by_part), columns=plan["columns"],
+        spark_schema=plan["schema_json"], t0=plan["t0"],
+        bloom=plan["bloom"], ndv=plan["ndv"], qsk=plan["qsk"],
+        replace=replace, new_deletes=new_deletes, branch=plan["branch"],
     )
 
 

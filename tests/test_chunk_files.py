@@ -8,7 +8,7 @@ every part dir the job wrote. These tests pin:
 - a retried or speculative duplicate of a task's write leaves exactly
   one chunk file with identical bytes;
 - an append replayed over a part dir that already holds an older
-  Spark-written chunk file removes that file;
+  chunk file under a Spark-written name removes that file;
 - without Hadoop's ``.crc`` sidecars, a flipped payload byte is still
   caught by ``verify_table`` and never decoded silently.
 """
@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from fhirflat_spark.datagen import gen_spark
 from fhirflat_spark.decode import (
     decode_table,
-    transcode_table,
     verify_against_source,
     verify_table,
 )
@@ -95,26 +94,24 @@ def test_duplicate_task_write_publishes_one_file(spark, tmp_path):
 
 
 def test_append_replay_replaces_spark_written_file(spark, tmp_path):
-    """A part dir the append writes may already hold a chunk file written
-    by Spark's parquet writer (an earlier, crashed write of that part id:
-    ids in no snapshot are reused). After the append only the
-    task-written file is left, and the table decodes to its sources."""
+    """A part dir the append writes may already hold a chunk file under
+    the name Spark's parquet writer gives it (an earlier, crashed write
+    of that part id: ids in no snapshot are reused). After the append
+    only the task-written file is left, and the table decodes to its
+    sources."""
     base = _local(spark, 2000, seed=43)
     delta = _local(spark, 600, seed=44)
     out = str(tmp_path / "t")
     encode_table(base, out, rows_per_bucket=500)
     top = max(completed_partitions(spark, out))
 
-    # a Spark-written chunk file of this table's layout, planted in the
-    # dir of the first part id the append will mint
-    other = str(tmp_path / "spark_written")
-    transcode_table(spark, out, other)
-    src_dir = f"{other}/chunks/part_id={top}"
-    (spark_file,) = [n for n in os.listdir(src_dir) if n.endswith(".parquet")]
-    assert spark_file.endswith(".c000.parquet")  # Spark's naming
+    # a chunk file of this table's layout under a Spark-written name,
+    # planted in the dir of the first part id the append will mint
+    spark_file = "part-00000-0f1e2d3c-4b5a-6978-8796-a5b4c3d2e1f0.c000.parquet"
     stale = f"{out}/chunks/part_id={top + 1}"
     os.makedirs(stale)
-    shutil.copy(f"{src_dir}/{spark_file}", f"{stale}/{spark_file}")
+    shutil.copy(f"{out}/chunks/part_id={top}/part-{top:06d}.parquet",
+                f"{stale}/{spark_file}")
 
     append_table(delta, out, rows_per_bucket=500)
     assert _files(stale) == [f"part-{top + 1:06d}.parquet"]

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import hashlib
 import threading
-from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -166,16 +165,9 @@ def _synthetic_table(out: str, n_parts: int = 4, rows: int = 100) -> str:
          "content_sha": hashlib.sha256(str(p).encode()).hexdigest()}
         for p in range(n_parts)
     ]
-    stats = write_manifest(None, out, meta_rows)
-    result = SimpleNamespace(
-        rows=stats["rows"], raw_bytes=stats["raw_bytes"],
-        encoded_bytes=stats["encoded_bytes"],
-        ratio=stats["encoded_bytes"] / stats["raw_bytes"],
-        num_partitions=stats["n_partitions"],
-    )
+    write_manifest(None, out, meta_rows)
     schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    write_summary(None, out, result, ["doc_id"], spark_schema=schema.json(),
-                  dataset_sha=stats["dataset_sha256"])
+    write_summary(None, out, ["doc_id"], spark_schema=schema.json())
     return out
 
 
@@ -249,6 +241,29 @@ def test_summary_follows_a_head_that_moved_mid_write(tmp_path, monkeypatch):
     assert current_snapshot(out) == 3
     s = read_summary(None, out)
     assert (s["rows"], s["num_partitions"]) == (400, 4)
+    _assert_summary_is_head(out)
+
+
+def test_data_commit_summary_follows_a_later_drop(spark, ds, monkeypatch):
+    """Stale summary after a DATA commit: a partition drop commits (and
+    writes its summary) after an append's snapshot but before the append
+    writes its summary. The append's summary must end on the head's
+    totals, not on those of the manifest it committed."""
+    from fhirflat_spark.encode import append_table
+
+    out, docs = ds
+    real = mf.write_manifest
+    dropped = {}
+
+    def write_manifest_hook(*args, **kwargs):
+        stats = real(*args, **kwargs)
+        dropped.update(commit_partition_drop(None, out, {0}))
+        return stats
+
+    monkeypatch.setattr(mf, "write_manifest", write_manifest_hook)
+    append_table(docs.where(F.col("doc_id") < 20), out, rows_per_bucket=500)
+    assert dropped["snapshot"] == current_snapshot(out) == 3
+    assert 0 not in snapshot_part_ids(out, 3)
     _assert_summary_is_head(out)
 
 

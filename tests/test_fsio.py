@@ -15,6 +15,7 @@ out of scope here by design.
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyarrow import fs as pafs
@@ -74,7 +75,7 @@ def test_key_counts_roundtrip_through_registered_fs(testfs):
 
     out = "testfs://ds"
     write_key_counts(out, [("v:repoA", 10), ("n:", 3), ("o:", 99)],
-                     label="000000000000", fresh=True)
+                     label="000000000000")
     write_key_counts(out, [("v:repoA", 5)], label="000000000007")
     # physically under the subtree root — proves fs routing
     assert os.path.isdir(
@@ -131,9 +132,42 @@ def test_manifest_commit_and_summary_through_registered_fs(spark, testfs):
     assert snapshot_part_ids(out, 1) == [0, 1]
     assert completed_partitions(spark, out) == frozenset({0, 1})
 
-    class R:
-        rows, raw_bytes, encoded_bytes, num_partitions, ratio = 10, 100, 32, 2, 0.32
-
-    write_summary(spark, out, R, ["a", "b"], dataset_sha=stats["dataset_sha256"])
+    write_summary(spark, out, ["a", "b"])
     assert os.path.exists(os.path.join(testfs, "ds", "_SUMMARY.json"))
     assert read_summary(spark, out)["rows"] == 10
+
+
+def test_same_token_writers_in_threads_do_not_collide(tmp_path):
+    """Threads of one process pass the same token (the pid) to the
+    atomic and exclusive writers. An atomic write must never fail or
+    leave a tmp file behind, and each exclusive create must publish
+    exactly its winner's bytes while every loser sees FileExistsError."""
+    target = str(tmp_path / "summary.json")
+    errs, wins = [], []
+
+    def run(i):
+        try:
+            for k in range(100):
+                fsio.write_bytes_atomic(target, str(i).encode(), token="7")
+                try:
+                    fsio.write_bytes_exclusive(str(tmp_path / f"v{k}"),
+                                               str(i).encode(), token="7")
+                    wins.append((k, str(i).encode()))
+                except FileExistsError:
+                    pass
+        except Exception as e:  # pragma: no cover - failure detail
+            errs.append(e)
+
+    ts = [threading.Thread(target=run, args=(i,)) for i in range(8)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in ts)
+    assert not errs
+    assert sorted(k for k, _ in wins) == list(range(100))
+    for k, data in wins:
+        assert fsio.read_bytes(str(tmp_path / f"v{k}")) == data
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["summary.json", *(f"v{k}" for k in range(100))]
+    )

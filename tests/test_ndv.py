@@ -17,6 +17,7 @@ from fhirflat_spark.encode import append_table, encode_table
 from fhirflat_spark.manifest import (
     delete_rows,
     read_snapshot_manifest,
+    read_summary,
 )
 from fhirflat_spark.ndv import hll_estimate, hll_registers, ndv_from_metadata
 
@@ -126,3 +127,7 @@ def test_transcode_carries_sketches(spark, docs, tmp_path):
     encode_table(docs, src, rows_per_bucket=100, ndv_columns=["lang"])
     transcode_table(spark, src, dst)
     assert ndv_from_metadata(dst, "lang") == ndv_from_metadata(src, "lang")
+    # the destination stays a sketched table: an append keeps sketching
+    append_table(docs.limit(50), dst, rows_per_bucket=100)
+    assert ndv_from_metadata(dst, "lang") is not None
+    assert "lang" in read_summary(None, dst)["ndv_columns"]

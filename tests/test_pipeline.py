@@ -204,6 +204,31 @@ def test_resume_reencodes_missing(spark, tmp_path):
     assert fails.count() == 0
 
 
+def test_resume_keeps_appended_key_counts(spark, tmp_path):
+    """A resume replaces only its own key-count stats fragment: the
+    appended offsets' fragments survive, so the merged counts still
+    cover the appended rows."""
+    from fhirflat_spark import fsio
+    from fhirflat_spark.encode import append_table
+    from fhirflat_spark.manifest import load_key_counts
+
+    out = str(tmp_path / "resume_stats")
+    df = gen_spark(spark, 3000, seed=7)
+    encode_table(df, out, rows_per_bucket=500)
+    append_table(gen_spark(spark, 1000, seed=8), out, rows_per_bucket=500)
+    assert sum(c for _, c in load_key_counts(out)) == 4000
+    man = f"{out}/manifest/manifest.parquet"
+    t = fsio.read_parquet(man)
+    victim = min(t["part_id"].to_pylist())
+    fsio.delete_dir(f"{out}/chunks/part_id={victim}")
+    fsio.write_parquet_atomic(
+        t.filter([p != victim for p in t["part_id"].to_pylist()]), man
+    )
+    encode_table(df, out, rows_per_bucket=500, resume=True)
+    assert sum(c for _, c in load_key_counts(out)) == 4000
+    assert decode_table(spark, out).count() == 4000
+
+
 @pytest.mark.parametrize("drop_repo", [True, False], ids=["no_repo", "repo"])
 def test_resume_restores_lost_partitions_exactly(spark, tmp_path, drop_repo):
     """Two partitions lost from the manifest → resume re-encodes exactly
@@ -476,6 +501,7 @@ def test_transcode_balanced_to_archive(spark, tmp_path):
     identical rows/checksums/boundaries, smaller bytes, verify green.
     Needs chunks above the archive level-by-volume threshold (2 MiB of
     string bytes), hence one big bucket."""
+    from fhirflat_spark import fsio
     from fhirflat_spark.decode import transcode_table
     from fhirflat_spark.manifest import read_summary
 
@@ -483,7 +509,17 @@ def test_transcode_balanced_to_archive(spark, tmp_path):
     out = str(tmp_path / "src_big")
     res = encode_table(df, out, rows_per_bucket=30000)
     dst = str(tmp_path / "transcoded")
-    tres = transcode_table(spark, out, dst, profile="archive")
+    sc = spark.sparkContext
+    sc.setJobGroup("transcode", None)
+    try:
+        tres = transcode_table(spark, out, dst, profile="archive")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # no exchange: every job of the transcode is a single stage
+    jobs = sc.statusTracker().getJobIdsForGroup("transcode")
+    assert jobs and all(
+        len(sc.statusTracker().getJobInfo(j).stageIds) == 1 for j in jobs
+    )
     assert tres.rows == res.rows
     assert tres.encoded_bytes < res.encoded_bytes
     # dataset checksum (content-derived) must carry over unchanged
@@ -496,6 +532,32 @@ def test_transcode_balanced_to_archive(spark, tmp_path):
     decoded = decode_table(spark, dst)
     fails = verify_against_source(df, decoded, ["repo", "path", "commit"])
     assert fails.count() == 0
+    # written by encode's chunk writer: one named file per partition,
+    # no Spark/Hadoop sidecars
+    src_m, dst_m = (fsio.read_parquet(f"{d}/manifest") for d in (out, dst))
+    assert sorted(os.listdir(f"{dst}/chunks")) == sorted(
+        f"part_id={p}" for p in dst_m["part_id"].to_pylist()
+    )
+    for pid in dst_m["part_id"].to_pylist():
+        assert os.listdir(f"{dst}/chunks/part_id={pid}") == [
+            f"part-{pid:06d}.parquet"
+        ]
+    assert not [n for _, _, fs in os.walk(dst) for n in fs
+                if n.endswith(".crc") or n == "_SUCCESS"]
+    # identical chunk boundaries and per-chunk content checksums
+    def n_chunks(m):
+        return m.select(["part_id", "n_chunks"]).sort_by("part_id")
+
+    assert n_chunks(dst_m).equals(n_chunks(src_m))
+    shas = {
+        d: sorted(
+            (r["part_id"], r["chunk_seq"], r["content_sha"])
+            for r in spark.read.parquet(f"{d}/chunks")
+            .select("part_id", "chunk_seq", "content_sha").collect()
+        )
+        for d in (out, dst)
+    }
+    assert shas[dst] == shas[out]
 
 
 def test_archive_profile_roundtrip_and_smaller(spark, tmp_path):

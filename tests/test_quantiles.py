@@ -16,7 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fhirflat_spark.encode import append_table, encode_table
-from fhirflat_spark.manifest import delete_rows, read_snapshot_manifest
+from fhirflat_spark.manifest import (
+    delete_rows,
+    read_snapshot_manifest,
+    read_summary,
+)
 from fhirflat_spark.quantiles import (
     ALPHA,
     MIN_POSITIVE,
@@ -189,6 +193,10 @@ def test_transcode_carries_sketches(spark, docs, tmp_path):
     transcode_table(spark, src, dst)
     assert (quantile_from_metadata(dst, "n_chars", 0.9)
             == quantile_from_metadata(src, "n_chars", 0.9))
+    # the destination stays a sketched table: an append keeps sketching
+    append_table(docs.limit(50), dst, rows_per_bucket=100)
+    assert quantile_from_metadata(dst, "n_chars", 0.9) is not None
+    assert "n_chars" in read_summary(None, dst)["quantile_columns"]
 
 
 def test_named_sink_option(spark, docs, tmp_path):
