@@ -34,25 +34,26 @@ from pyspark.sql import DataFrame, SparkSession
 def register_dataset(spark: SparkSession, out_dir: str, name: str) -> dict[str, DataFrame]:
     from fhirflat_spark.decode import decode_table
     from fhirflat_spark.manifest import (
-        active_delete_files,
         list_snapshots,
         read_chunk_stats,
         read_manifest,
         read_summary,
+        table_view,
     )
 
     if not name.isidentifier():
         raise ValueError(f"{name!r} is not a valid SQL view name")
+    view = table_view(out_dir)
     views = {
-        name: decode_table(spark, out_dir),
-        f"{name}_manifest": read_manifest(spark, out_dir),
+        name: decode_table(spark, out_dir, snapshot=view),
+        f"{name}_manifest": read_manifest(spark, out_dir, view),
         f"{name}_chunks": read_chunk_stats(spark, out_dir),
         f"{name}_summary": spark.createDataFrame([read_summary(spark, out_dir)]),
         f"{name}_snapshots": list_snapshots(spark, out_dir),
         f"{name}_deletes": spark.createDataFrame(
             [
                 (e["file"], e["column"], e.get("below_part"))
-                for e in active_delete_files(out_dir)
+                for e in view.deletes
             ],
             "file STRING, column STRING, below_part INT",
         ),

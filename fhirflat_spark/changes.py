@@ -44,9 +44,8 @@ def table_changes(spark: SparkSession, out_dir: str,
     from fhirflat_spark.decode import decode_table
     from fhirflat_spark.manifest import (
         _snapshot_versions,
-        active_delete_files,
         resolve_snapshot,
-        snapshot_part_ids,
+        table_view,
     )
 
     # names resolve through the ref layer, so to_snapshot="audit" diffs
@@ -61,21 +60,24 @@ def table_changes(spark: SparkSession, out_dir: str,
             raise ValueError(f"snapshot {v} is not a retained snapshot")
     if to_snapshot < from_snapshot:
         raise ValueError("to_snapshot must be >= from_snapshot")
+    # one view per end: every decode below reads the snapshot it names
+    frm = table_view(out_dir, from_snapshot)
+    to = table_view(out_dir, to_snapshot)
     if to_snapshot == from_snapshot:
-        empty = decode_table(spark, out_dir, snapshot=to_snapshot).limit(0)
+        empty = decode_table(spark, out_dir, snapshot=to).limit(0)
         return empty.withColumn(CHANGE_COL, F.lit("insert"))
 
-    a_parts = set(snapshot_part_ids(out_dir, from_snapshot))
-    b_parts = set(snapshot_part_ids(out_dir, to_snapshot))
-    a_del = active_delete_files(out_dir, from_snapshot)
-    b_del = active_delete_files(out_dir, to_snapshot)
+    a_parts = set(frm.part_ids)
+    b_parts = set(to.part_ids)
+    a_del = frm.deletes
+    b_del = to.deletes
     append_only = a_parts <= b_parts and (
         _delete_names(b_del)[: len(a_del)] == _delete_names(a_del)
     )
     if not append_only:
         # history was rewritten (rollback/compaction): diff the views
-        a_view = decode_table(spark, out_dir, snapshot=from_snapshot)
-        b_view = decode_table(spark, out_dir, snapshot=to_snapshot)
+        a_view = decode_table(spark, out_dir, snapshot=frm)
+        b_view = decode_table(spark, out_dir, snapshot=to)
         return (
             b_view.exceptAll(a_view).withColumn(CHANGE_COL, F.lit("insert"))
             .unionByName(
@@ -87,9 +89,9 @@ def table_changes(spark: SparkSession, out_dir: str,
     new_parts = sorted(b_parts - a_parts)
     inserts = (
         decode_table(spark, out_dir, part_ids=new_parts,
-                     snapshot=to_snapshot)
+                     snapshot=to)
         if new_parts
-        else decode_table(spark, out_dir, snapshot=to_snapshot).limit(0)
+        else decode_table(spark, out_dir, snapshot=to).limit(0)
     ).withColumn(CHANGE_COL, F.lit("insert"))
 
     deletes = None
@@ -121,7 +123,7 @@ def table_changes(spark: SparkSession, out_dir: str,
             # snapshot=a visibility still applies: a position already
             # dead at `a` never decodes, so it can't be re-reported.
             view = decode_table(spark, out_dir, part_ids=scoped,
-                                snapshot=from_snapshot,
+                                snapshot=frm,
                                 with_positions=True)
             hit = (
                 view.alias(dal)
@@ -143,7 +145,7 @@ def table_changes(spark: SparkSession, out_dir: str,
             # snapshot=a visibility: rows already deleted before the
             # window must not be re-reported as deleted by it
             view = decode_table(spark, out_dir, part_ids=scoped,
-                                snapshot=from_snapshot)
+                                snapshot=frm)
             hit = (
                 view.alias(dal)
                 .join(

@@ -183,24 +183,6 @@ def _arrow_types(spark: SparkSession, schema: T.StructType) -> list:
         return [f.type for f in spark.createDataFrame([], schema).toArrow().schema]
 
 
-def _live_part_ids(out_dir: str) -> list[int] | None:
-    """ok part ids from the current manifest; None ONLY when no manifest
-    exists (read everything — the pre-manifest behavior). Any other
-    read error propagates: falling back on e.g. a throttled object
-    store would silently include rolled-back/uncommitted partitions."""
-    from fhirflat_spark import fsio
-
-    try:
-        t = fsio.read_parquet(f"{out_dir}/manifest",
-                              columns=["part_id", "status"])
-    except FileNotFoundError:
-        return None
-    return [
-        int(p) for p, s in zip(t["part_id"].to_pylist(), t["status"].to_pylist())
-        if s == "ok"
-    ]
-
-
 def _part_range_predicate(ids: list[int]):
     """part-id membership as OR-of-BETWEENs over the contiguous runs —
     predicate size O(discontinuities) (one per append epoch), not
@@ -225,14 +207,17 @@ def _part_range_predicate(ids: list[int]):
 
 # full-table decodes at or above this many rows route through the named
 # Python data source (pyarrow-direct chunk reads in the workers — no JVM
-# row materialization on the input side). The source runs one task per
-# part id, so its fixed cost is per Python task; most of that was
-# pyspark.zip directory re-reads, which the zipimport guard in
-# fhirflat_spark/__init__.py now skips. Full decode at local[4] on a
-# 4-vCPU VM, median of 6, wall / process-tree CPU, kernel path vs named
-# source: 131k rows 1.35 s / 3.4 CPU-s vs 1.33 s / 4.1 CPU-s; 1M rows
-# 4.2 s / 12.3 CPU-s vs 3.4 s / 12.1 CPU-s. Both paths read the same
-# chunks with the same kernels; equality is pinned by test_datasource.py.
+# row materialization on the input side); smaller ones stay on the
+# mapInArrow kernel. Each path wins on one side of the gate. Full decode
+# plus fingerprint check of gen_spark rows at local[4] on a 4-vCPU VM,
+# alternating medians, process-tree CPU — kernel path / named source /
+# the named source's reader run inside mapInArrow: 131,072 rows 3.5 /
+# 5.1 / 5.4 CPU-s; 1,048,576 rows 12.5 / 11.9 / 11.6 CPU-s at 4.45 /
+# 3.27 / 3.23 s wall. So the small-table cost is the pyarrow-direct
+# reader's own fixed cost, not the source's task plumbing
+# (use_threads=False does not change it); one path can go once that
+# cost is explained. Both paths read the same chunks with the same
+# kernels; equality is pinned by test_datasource.py.
 DATASOURCE_MIN_ROWS = 200_000
 
 
@@ -277,12 +262,14 @@ def decode_table(spark: SparkSession, out_dir: str,
     string) time-travels by wall clock instead: the snapshot whose
     commit instant was latest at ``ts`` (``manifest.snapshot_as_of``).
 
-    The table IS what the manifest says: decode always prunes to the
-    manifest's ok partitions (as contiguous part-id ranges — a handful
+    The table IS what the resolved snapshot says
+    (``manifest.table_view``): decode always prunes to that snapshot's
+    partitions (for the head, as contiguous part-id ranges — a handful
     of BETWEENs regardless of partition count, so the predicate stays
-    O(appends), never O(partitions)). Chunk directories a rollback
-    orphaned, or a crashed run half-wrote, are thereby invisible to
-    readers even before ``vacuum`` reclaims them.
+    O(appends), never O(partitions)) and applies that snapshot's
+    deletes. Chunk directories a rollback orphaned, or a crashed run
+    half-wrote, are thereby invisible to readers even before ``vacuum``
+    reclaims them.
 
     ``via`` picks the physical read path: ``"auto"`` (default) routes
     plain full-table decodes — no explicit prune options, no positions —
@@ -293,26 +280,14 @@ def decode_table(spark: SparkSession, out_dir: str,
     ``"datasource"`` / ``"arrow"`` force a path (``"datasource"`` still
     requires the options it cannot express to be absent).
     """
-    from fhirflat_spark.manifest import (
-        read_summary,
-        resolve_snapshot,
-        snapshot_part_ids,
-    )
-
     from fhirflat_spark.encode import chunk_schema
+    from fhirflat_spark.manifest import read_summary, table_view
 
     summary = read_summary(spark, out_dir)
     _check_version(summary)
     if via not in ("auto", "arrow", "datasource"):
         raise ValueError(f"via={via!r}: expected auto | arrow | datasource")
-    if as_of is not None:
-        # AS-OF-timestamp time travel: resolve the wall-clock instant to
-        # the snapshot that was current then (epoch seconds or ISO-8601)
-        if snapshot is not None:
-            raise ValueError("pass snapshot= or as_of=, not both")
-        from fhirflat_spark.manifest import snapshot_as_of
-
-        snapshot = snapshot_as_of(out_dir, as_of)
+    view = table_view(out_dir, snapshot, as_of)
     plain = (
         part_ids is None and key_range is None and zone_filter is None
         and point_filter is None and not with_positions
@@ -323,20 +298,11 @@ def decode_table(spark: SparkSession, out_dir: str,
             "key_range, zone_filter, point_filter and with_positions need "
             'the kernel path (via="auto"/"arrow")'
         )
-    gate_rows = int(summary.get("rows") or 0)
-    if snapshot is not None:
-        # auto-route on the SELECTED snapshot's size, not the current
-        # table's: a tiny historical snapshot of a large table would
-        # otherwise pay the named source's per-task cost (one task per
-        # part id) for a read the kernel path finishes as fast
-        from fhirflat_spark.manifest import read_snapshot_manifest
-
-        snapshot = resolve_snapshot(out_dir, snapshot)
-        gate_rows = sum(
-            read_snapshot_manifest(out_dir, snapshot, columns=["rows"])[
-                "rows"
-            ].to_pylist()
-        )
+    # auto-route on the SELECTED snapshot's size: a tiny historical
+    # snapshot of a large table would otherwise pay the named source's
+    # per-task cost (one task per part id) for a read the kernel path
+    # finishes as fast
+    gate_rows = sum(view.manifest["rows"].to_pylist())
     if plain and via != "arrow" and (
         via == "datasource" or gate_rows >= DATASOURCE_MIN_ROWS
     ):
@@ -346,17 +312,15 @@ def decode_table(spark: SparkSession, out_dir: str,
         reader = spark.read.format("fhirflat").option("path", out_dir)
         if columns is not None:
             reader = reader.option("columns", ",".join(columns))
-        if snapshot is not None:
-            reader = reader.option("snapshot", str(snapshot))
+        if view.version is not None:
+            # the source reads the version this call resolved
+            reader = reader.option("snapshot", str(view.version))
         return reader.load()
-    if snapshot is not None:
-        snapshot = resolve_snapshot(out_dir, snapshot)
-        snap_ids = snapshot_part_ids(out_dir, snapshot)
-        part_ids = (
-            snap_ids if part_ids is None
-            else sorted(set(part_ids) & set(snap_ids))
-        )
-    live = _live_part_ids(out_dir)
+    # the table IS what the view says: part ids outside it (rolled
+    # back, replaced, crashed half-writes) are never read
+    ids = view.part_ids
+    if part_ids is not None:
+        ids = sorted(set(part_ids) & set(ids))
     all_cols = summary["columns"]
     if columns is None:
         columns = all_cols
@@ -379,32 +343,22 @@ def decode_table(spark: SparkSession, out_dir: str,
                 raise ValueError(
                     f"zone_filter column {zcol!r} not in dataset columns {all_cols}"
                 )
-        # partition-level pruning from the manifest's per-partition
-        # column zones, BEFORE any chunk file is listed or scanned —
+        # partition-level pruning from the view's per-partition column
+        # zones, BEFORE any chunk file is listed or scanned —
         # metadata-only, so a selective read of a 10^5-partition table
         # never touches the non-matching partitions' files at all.
         # Conservative by construction (ids without zones are kept);
         # the chunk-level zones + exact residual still apply below.
-        candidates = part_ids if part_ids is not None else live
-        if candidates is not None:
-            from fhirflat_spark.manifest import prune_part_ids_by_zones
+        from fhirflat_spark.manifest import prune_part_ids_by_zones
 
-            type_of = {f.name: f.dataType for f in zschema.fields}
-            pruned = prune_part_ids_by_zones(
-                out_dir, candidates, zfilters, type_of
-            )
-            if part_ids is not None:
-                part_ids = pruned
-            else:
-                live = pruned
+        type_of = {f.name: f.dataType for f in zschema.fields}
+        ids = prune_part_ids_by_zones(view.manifest, ids, zfilters, type_of)
     # explicit schema: no footer sniffing, and empty datasets stay readable
     chunks = spark.read.schema(chunk_schema(len(all_cols))).parquet(f"{out_dir}/chunks")
-    if part_ids is not None:
-        chunks = chunks.where(F.col("part_id").isin(part_ids))
-    elif live is not None:
-        # current view (no explicit part list / snapshot pin): read only
-        # manifest-committed partitions
-        chunks = chunks.where(_part_range_predicate(live))
+    chunks = chunks.where(
+        F.col("part_id").isin(ids) if part_ids is not None
+        else _part_range_predicate(ids)
+    )
     if key_range is not None:
         lo, hi = key_range
         chunks = chunks.where(
@@ -444,10 +398,9 @@ def decode_table(spark: SparkSession, out_dir: str,
     # widen a selective decode to include them, drop them again after.
     # Scoped entries (below_part, the sequence-number analog) also need
     # each row's partition id carried through the kernel.
-    from fhirflat_spark.manifest import active_delete_files, apply_deletes
+    from fhirflat_spark.manifest import apply_deletes
 
-    snap_for_deletes = snapshot  # None = current
-    delete_entries = active_delete_files(out_dir, snap_for_deletes)
+    delete_entries = view.deletes
     delete_cols = {
         e["column"] for e in delete_entries if e.get("column") is not None
     }
@@ -486,7 +439,7 @@ def decode_table(spark: SparkSession, out_dir: str,
     )
     if delete_entries:
         decoded = apply_deletes(
-            spark, out_dir, decoded, snap_for_deletes,
+            spark, out_dir, decoded, delete_entries,
             part_col="__part_id" if need_part else None,
         )
     if need_part and not with_positions:
@@ -522,11 +475,12 @@ def read_parts_arrow(out_dir: str, part_ids: list[int],
     import pyarrow.dataset as pads
 
     from fhirflat_spark import fsio
-    from fhirflat_spark.manifest import active_delete_files, read_summary
+    from fhirflat_spark.manifest import read_summary, table_view
 
     summary = read_summary(None, out_dir)
     _check_version(summary)
-    if active_delete_files(out_dir, None):
+    view = table_view(out_dir)
+    if view.deletes:
         raise ValueError(
             "dataset has active row-level deletes: read_parts_arrow "
             "reads physical chunks — use decode_table(part_ids=...)"
@@ -535,12 +489,9 @@ def read_parts_arrow(out_dir: str, part_ids: list[int],
     # delete_where but the chunk dir not yet vacuumed — would silently
     # return superseded rows, and a vacuumed dir would surface as
     # FileNotFoundError instead of a routable error. Validate against
-    # the LIVE manifest so callers (e.g. a stale vector index) get a
+    # the head view so callers (e.g. a stale vector index) get a
     # ValueError they already treat as "defer to the Spark path".
-    from fhirflat_spark.manifest import current_snapshot, snapshot_part_ids
-
-    head = current_snapshot(out_dir)
-    live = set(snapshot_part_ids(out_dir, head)) if head else set()
+    live = set(view.part_ids)
     stale = [p for p in part_ids if p not in live]
     if stale:
         raise ValueError(
@@ -698,12 +649,11 @@ def verify_table(spark: SparkSession, out_dir: str,
         *[F.col(f"payload.{f}").alias(f"__v_{f}") for f in fields],
     )
     if snapshot is not None:
-        from fhirflat_spark.manifest import resolve_snapshot, snapshot_part_ids
+        from fhirflat_spark.manifest import table_view
 
-        ids = snapshot_part_ids(
-            out_dir, resolve_snapshot(out_dir, snapshot)
+        chunks = chunks.where(
+            _part_range_predicate(table_view(out_dir, snapshot).part_ids)
         )
-        chunks = chunks.where(_part_range_predicate(ids))
     return chunks.mapInArrow(verify_kernel_factory(columns, fields), schema=VERIFY_SCHEMA)
 
 
@@ -717,16 +667,15 @@ def partitions_for_key_range(spark: SparkSession, out_dir: str,
     thousands — manifest-driven skipping, the Iceberg
     partition-stats/zone-map pattern. Partitions with NULL bounds (no
     key column recorded) are kept conservatively."""
-    from fhirflat_spark.manifest import read_manifest
+    from fhirflat_spark.manifest import table_view
 
-    rows = read_manifest(spark, out_dir).select(
-        "part_id", "repo_min", "repo_max"
-    ).collect()
+    t = table_view(out_dir).manifest
     keep = []
-    for r in rows:
-        rmin, rmax = r["repo_min"], r["repo_max"]
+    for pid, rmin, rmax in zip(t["part_id"].to_pylist(),
+                               t["repo_min"].to_pylist(),
+                               t["repo_max"].to_pylist()):
         if rmin is None or rmax is None or not (rmax < lo or rmin > hi):
-            keep.append(int(r["part_id"]))
+            keep.append(int(pid))
     return sorted(keep)
 
 
@@ -755,8 +704,9 @@ def _transcode_kernel_factory(src_dir: str, frag_dir: str, pids: list[int],
     ``pids``. The task reads that whole source partition straight from
     its chunk files, re-encodes every chunk's present columns, emits the
     chunk rows in ``chunk_seq`` order (part id, chunk boundaries,
-    content checksum, zones and sketches carried over) and task-commits
-    the partition's manifest fragment, like the encode kernels."""
+    content checksum, zones and sketches carried over — backfilled
+    sketches from the source's fragment) and task-commits the
+    partition's manifest fragment, like the encode kernels."""
 
     def kernel(batches):
         import pyarrow.dataset as pads
@@ -778,6 +728,11 @@ def _transcode_kernel_factory(src_dir: str, frag_dir: str, pids: list[int],
                 payload = t.column("payload").chunk(0)
                 fields = {payload.type.field(k).name: payload.field(k)
                           for k in range(payload.type.num_fields)}
+                src_frag = {
+                    int(c["chunk_seq"]): c for c in json.loads(fsio.read_bytes(
+                        f"{src_dir}/manifest_parts/{pid:06d}.json"
+                    ))
+                }
                 frag: list[dict] = []
                 for r in range(t.num_rows):
                     stats = json.loads(t["stats"][r].as_py())
@@ -798,12 +753,12 @@ def _transcode_kernel_factory(src_dir: str, frag_dir: str, pids: list[int],
                     # sketch maps always ride along (possibly empty):
                     # partitions whose chunks carry no sketches still
                     # merge to untracked ones
+                    seq = t["chunk_seq"][r].as_py()
                     meta, out = _chunk_row(
-                        pid, t["chunk_seq"][r].as_py(),
-                        t["n_rows"][r].as_py(), blobs, stats,
+                        pid, seq, t["n_rows"][r].as_py(), blobs, stats,
                         t["content_sha"][r].as_py(), t["repo_min"][r].as_py(),
                         t["repo_max"][r].as_py(), with_hlls=True,
-                        with_ddqs=True,
+                        with_ddqs=True, sketches=src_frag.get(seq),
                     )
                     frag.append(meta)
                     yield out
@@ -835,9 +790,9 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
     from fhirflat_spark.encode import _commit_data, _own_table, _write_chunks
     from fhirflat_spark.manifest import (
         _local,
-        active_delete_files,
         copy_delete_file,
         read_summary,
+        table_view,
     )
 
     if profile not in ("balanced", "archive"):
@@ -852,15 +807,11 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
     summary = read_summary(spark, src_dir)
     _check_version(summary)
     columns = summary["columns"]
-    # the table IS what the manifest says — without this, chunk dirs a
-    # rollback orphaned (or a crashed run half-wrote) would be
+    # the table IS what its head snapshot says — without this, chunk
+    # dirs a rollback orphaned (or a crashed run half-wrote) would be
     # resurrected into the destination
-    pids = _live_part_ids(src_dir)
-    if pids is None:  # pre-manifest table: every part dir
-        pids = [int(d[len("part_id="):])
-                for d in fsio.list_dirs(f"{src_dir}/chunks")
-                if d.startswith("part_id=")]
-    pids = sorted(pids)
+    view = table_view(src_dir)
+    pids = view.part_ids
     # the transcode owns the whole destination
     fsio.delete_dir(f"{dst_dir}/chunks")
     _own_table(dst_dir)
@@ -874,8 +825,7 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
     # chunks keep their part ids and row positions, so the source's
     # active row-level deletes stay exactly valid — copy the key files
     # and commit the same entries, else deleted rows resurrect at dst
-    src_deletes = active_delete_files(src_dir)
-    for entry in src_deletes:
+    for entry in view.deletes:
         copy_delete_file(src_dir, dst_dir, entry["file"])
     return _commit_data(
         dst_dir, written, columns=columns,
@@ -883,7 +833,7 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
         bloom=summary.get("bloom_columns", ()),
         ndv=summary.get("ndv_columns", ()),
         qsk=summary.get("quantile_columns", ()),
-        replace=True, new_deletes=src_deletes,
+        replace=True, new_deletes=view.deletes,
     )
 
 
@@ -905,29 +855,17 @@ def verify_against_source(source: DataFrame, decoded: DataFrame,
 
 
 def codec_report(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Which codec won per column, with sizes — from chunk stats JSON."""
-    chunks = spark.read.parquet(f"{out_dir}/chunks").select("stats")
-    stat_map = F.from_json(
-        "stats",
-        T.MapType(
-            T.StringType(),
-            T.StructType(
-                [
-                    T.StructField("codec", T.StringType()),
-                    T.StructField("raw", T.LongType()),
-                    T.StructField("enc", T.LongType()),
-                    T.StructField("sha", T.StringType()),
-                ]
-            ),
-        ),
-    )
-    exploded = chunks.select(F.explode(stat_map).alias("column", "s"))
+    """Which codec won per column, with sizes — the head snapshot's
+    chunk stats (``manifest.read_chunk_stats``) rolled up per codec."""
+    from fhirflat_spark.manifest import read_chunk_stats
+
     return (
-        exploded.groupBy("column", F.col("s.codec").alias("codec"))
+        read_chunk_stats(spark, out_dir)
+        .groupBy("column", "codec")
         .agg(
             F.count("*").alias("chunks"),
-            F.sum("s.raw").alias("raw_bytes"),
-            F.sum("s.enc").alias("encoded_bytes"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("encoded_bytes").alias("encoded_bytes"),
         )
         .withColumn("ratio", F.round(F.col("encoded_bytes") / F.col("raw_bytes"), 4))
         .orderBy("column", "codec")
@@ -969,7 +907,7 @@ def compact_table(spark: SparkSession, src_dir: str, dst_dir: str,
 
     if _os.path.realpath(_local(src_dir)) == _os.path.realpath(_local(dst_dir)):
         raise ValueError("compact_table cannot write in place — use a new dst_dir")
-    from fhirflat_spark.manifest import active_delete_files
+    from fhirflat_spark.manifest import table_view
 
     summary = read_summary(spark, src_dir)
     if zorder and not order_by:
@@ -978,17 +916,19 @@ def compact_table(spark: SparkSession, src_dir: str, dst_dir: str,
         if c not in summary["columns"]:
             raise ValueError(f"order_by column {c!r} not in dataset "
                              f"columns {summary['columns']}")
-    df = decode_table(spark, src_dir)
-    # summary rows are PHYSICAL; with active row-level deletes the
+    view = table_view(src_dir)
+    df = decode_table(spark, src_dir, snapshot=view)
+    # manifest rows are PHYSICAL; with active row-level deletes the
     # rewrite legitimately holds fewer (compaction materializes the
     # deletes) — validate against the logical row count, computed via a
     # SINGLE-column selective decode (reads ~1/n of the bytes and a
     # different column path than the rewrite, so the cross-check still
     # catches decode loss without a second full decode)
     expected = (
-        decode_table(spark, src_dir, columns=[summary["columns"][0]]).count()
-        if active_delete_files(src_dir)
-        else summary["rows"]
+        decode_table(spark, src_dir, columns=[summary["columns"][0]],
+                     snapshot=view).count()
+        if view.deletes
+        else sum(view.manifest["rows"].to_pylist())
     )
     if order_by:
         from pyspark.sql import functions as F

@@ -80,18 +80,16 @@ def build_dedup_index(
     pinned version / tag name via ``snapshot=`` — refresh then advances
     incrementally from there)."""
     from fhirflat_spark.decode import decode_table
-    from fhirflat_spark.manifest import current_snapshot, resolve_snapshot
+    from fhirflat_spark.manifest import table_view
 
     if hasher not in _HASHERS:
         raise ValueError(f"hasher must be one of {sorted(_HASHERS)}")
-    if snapshot is not None:
-        v = resolve_snapshot(table_dir, snapshot)
-    else:
-        v = current_snapshot(table_dir)
+    view = table_view(table_dir, snapshot)
+    v = view.version
     if v is None:
         raise ValueError(f"{table_dir} has no committed snapshot")
     docs = decode_table(spark, table_dir, columns=[key_col, text_col],
-                        snapshot=v)
+                        snapshot=view)
     sigs = signatures_of(docs, key_col, text_col, hasher).withColumn(
         "batch_snapshot", F.lit(v)
     )

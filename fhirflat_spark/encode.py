@@ -255,12 +255,11 @@ def _head_part_ids(out_dir: str) -> set[int]:
     staged branch's."""
     from fhirflat_spark.manifest import (
         _branch_staged_versions,
-        current_snapshot,
         snapshot_part_ids,
+        table_view,
     )
 
-    head = current_snapshot(out_dir)
-    live = set(snapshot_part_ids(out_dir, head)) if head else set()
+    live = set(table_view(out_dir).part_ids)
     for sv in _branch_staged_versions(out_dir):
         live.update(snapshot_part_ids(out_dir, sv))
     return live
@@ -465,7 +464,8 @@ def _encode_one_batch(batch: pa.RecordBatch, part_id: int, seq: int,
 
 def _chunk_row(part_id: int, seq: int, n_rows: int, blobs: list,
                stats: dict, content_sha: str, rmin, rmax,
-               with_hlls: bool = False, with_ddqs: bool = False):
+               with_hlls: bool = False, with_ddqs: bool = False,
+               sketches: dict | None = None):
     """One encoded chunk as its (fragment-meta, chunk-row batch) pair.
 
     ``blobs`` are the payload fields' codec blobs in positional order
@@ -473,7 +473,10 @@ def _chunk_row(part_id: int, seq: int, n_rows: int, blobs: list,
     chunk's per-column stats keyed by column name. The byte totals,
     zones and rollups of the fragment row all derive from ``stats``, so
     every writer (the encode kernels, the named sink and transcode)
-    records a chunk the same way."""
+    records a chunk the same way. ``sketches`` (transcode: the source
+    chunk's fragment row) adds the ``hlls``/``ddqs`` sketches that live
+    only in fragments — ``maintenance.analyze_table`` backfills them
+    there, not into the chunk stats."""
     meta = {
         "part_id": part_id,
         "chunk_seq": seq,
@@ -503,14 +506,13 @@ def _chunk_row(part_id: int, seq: int, n_rows: int, blobs: list,
         }
     # a sketched table's chunks always carry the (possibly empty) map:
     # a chunk without one marks its partition unsketched
-    if with_hlls:
-        meta["hlls"] = {
-            name: s["hll"] for name, s in stats.items() if "hll" in s
-        }
-    if with_ddqs:
-        meta["ddqs"] = {
-            name: s["ddq"] for name, s in stats.items() if "ddq" in s
-        }
+    for kind, key, on in (("hlls", "hll", with_hlls),
+                          ("ddqs", "ddq", with_ddqs)):
+        if on:
+            meta[kind] = {
+                **{name: s[key] for name, s in stats.items() if key in s},
+                **(sketches or {}).get(kind, {}),
+            }
     payload_type = pa.struct(
         [(f"__c{i}", pa.binary()) for i in range(len(blobs))]
     )
@@ -1571,8 +1573,6 @@ def encode_table(
     ``"archive"`` (high-volume string chunks compress at a higher zstd
     level: ~4-6% smaller than parquet/zstd at default AND level-matched
     settings, at a slower encode — the write-once/store-forever mode)."""
-    from fhirflat_spark.manifest import completed_partitions
-
     if branch is not None and not append:
         raise ValueError("branch staging is append-only (WAP audits a "
                          "delta against an existing table)")
@@ -1657,14 +1657,21 @@ def encode_table(
         shuffle = not detect_clustering(df, rows_per_bucket=rows_per_bucket)
 
     skip: frozenset[int] = frozenset()
+    committed = False
     if resume and not append:
-        skip = completed_partitions(spark, out_dir)
+        # the head's partitions are the skip set; only a table with no
+        # snapshot yet resumes from scratch — a failed metadata read
+        # raises instead of masquerading as "nothing committed"
+        from fhirflat_spark.manifest import table_view
+
+        view = table_view(out_dir)
+        skip, committed = frozenset(view.part_ids), view.version is not None
     from fhirflat_spark import fsio
 
     chunks_dir = f"{out_dir}/chunks"
-    if not (append or skip):
+    if not (append or committed):
         # a fresh encode owns every chunk dir (an append writes NEW part
-        # ids, a resume keeps its committed ones)
+        # ids, a resume keeps the ones its snapshots reference)
         fsio.delete_dir(chunks_dir)
     frag_dir = f"{out_dir}/manifest_parts"
     if not (resume or append):
@@ -1894,7 +1901,7 @@ def append_table(
     # over-fragment small deltas. The persisted merged stats serve
     # whole-table observability (tests/test_pipeline.py) and future
     # full re-plans, not per-append placement.
-    from fhirflat_spark.manifest import completed_partitions, read_summary
+    from fhirflat_spark.manifest import read_summary
 
     spark = df.sparkSession
     summary = read_summary(spark, out_dir)
@@ -1946,16 +1953,16 @@ def append_table(
             "with this engine — or re-encode from source if it contains "
             "chunks this engine's codecs no longer read)"
         )
-    existing = completed_partitions(spark, out_dir)
-    # mint ids past every partition any RETAINED snapshot references,
-    # not just the current manifest: after a rollback the dropped
-    # partitions are still time-travel-readable, and reusing their ids
-    # (the new write replaces the dir's files) would silently rewrite that
-    # history. Ids from a crashed append are in NO snapshot — those stay
-    # reusable, which is what makes a retried append idempotent.
+    # mint ids past every partition any RETAINED snapshot references
+    # (the head is one of them), not just the head's: after a rollback
+    # the dropped partitions are still time-travel-readable, and reusing
+    # their ids (the new write replaces the dir's files) would silently
+    # rewrite that history. Ids from a crashed append are in NO
+    # snapshot — those stay reusable, which is what makes a retried
+    # append idempotent.
     from fhirflat_spark.manifest import all_snapshot_part_ids
 
-    top = max([*existing, *all_snapshot_part_ids(out_dir)], default=None)
+    top = max(all_snapshot_part_ids(out_dir), default=None)
     offset = (top + 1) if top is not None else 0
     return encode_table(
         df, out_dir, rows_per_bucket=rows_per_bucket,

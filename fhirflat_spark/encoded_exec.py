@@ -517,17 +517,12 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
     masked branch-wise (OR of branch hits) — except here the result
     is FINAL (no Spark residual), so literals/types are validated
     up front and refused when exactness cannot be guaranteed."""
-    from fhirflat_spark.decode import (
-        _check_version,
-        _live_part_ids,
-        _part_range_predicate,
-    )
+    from fhirflat_spark.decode import _check_version, _part_range_predicate
     from fhirflat_spark.encode import chunk_schema
     from fhirflat_spark.manifest import (
-        active_delete_files,
+        prune_part_ids_by_zones,
         read_summary,
-        resolve_snapshot,
-        snapshot_part_ids,
+        table_view,
     )
 
     summary = read_summary(spark, out_dir)
@@ -541,9 +536,8 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
     for c in scan_cols:
         if c not in all_cols:
             raise ValueError(f"column {c!r} not in dataset columns {all_cols}")
-    if snapshot is not None:
-        snapshot = resolve_snapshot(out_dir, snapshot)
-    if active_delete_files(out_dir, snapshot):
+    view = table_view(out_dir, snapshot)
+    if view.deletes:
         raise ValueError(
             "dataset has active row-level deletes: encoded-domain "
             "aggregation reads physical chunks — run compact_table to "
@@ -571,30 +565,19 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
         if op in ("eq", "in")
         and c in set(summary.get("bloom_columns", ()))
     ]
-    if snapshot is not None:
-        ids = snapshot_part_ids(out_dir, snapshot)
-    else:
-        ids = _live_part_ids(out_dir)
-    if zones and ids is not None:
-        # partition-level pruning from the manifest's column zones —
+    ids = view.part_ids
+    if zones:
+        # partition-level pruning from the view's column zones —
         # metadata-only, before any chunk file is listed
-        from fhirflat_spark.manifest import prune_part_ids_by_zones
-
-        ids = prune_part_ids_by_zones(out_dir, ids, zones, type_of)
+        ids = prune_part_ids_by_zones(view.manifest, ids, zones, type_of)
     if only_part_ids is not None:
         # caller-supplied restriction (metadata-tier split): intersect
         # with our own pruning — may legitimately be empty
-        only = {int(p) for p in only_part_ids}
-        ids = sorted(only) if ids is None else sorted(set(ids) & only)
+        ids = sorted(set(ids) & {int(p) for p in only_part_ids})
     field_of = {c: f"__c{i}" for i, c in enumerate(all_cols)}
     chunks = spark.read.schema(chunk_schema(len(all_cols))).parquet(
         f"{out_dir}/chunks"
-    )
-    if snapshot is not None:
-        if ids is not None:
-            chunks = chunks.where(F.col("part_id").isin(ids))
-    elif ids is not None:
-        chunks = chunks.where(_part_range_predicate(ids))
+    ).where(_part_range_predicate(ids))
     pruned = chunks.select(
         "n_rows",
         *(["stats"] if preds else []),
@@ -602,6 +585,7 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
           for j, c in enumerate(scan_cols)],
     )
     fplan = {
+        "view": view,
         "preds": preds,
         "zones": zones,
         "points": points,
@@ -1319,7 +1303,7 @@ def group_topk_encoded(spark: SparkSession, out_dir: str, group_col: str,
 
 
 def _topk_zone_threshold(out_dir: str, order_col: str, k: int,
-                         snapshot: int | None, descending: bool,
+                         snapshot, descending: bool,
                          preds: list[list[tuple]] | None = None):
     """A sound metadata-only bound for global top-``k``: every non-null
     row in a chunk is >= its zone min (string zone mins are truncated
@@ -1342,26 +1326,17 @@ def _topk_zone_threshold(out_dir: str, order_col: str, k: int,
     so tau stays sound: >= k WHERE-matching rows at-or-beyond tau are
     proven to exist before anything is pruned."""
     preds = _normalize_where(preds)  # idempotent — accepts flat or CNF
-    from fhirflat_spark.decode import _live_part_ids
-    from fhirflat_spark.manifest import (
-        active_delete_files,
-        load_fragments,
-        snapshot_part_ids,
-    )
+    from fhirflat_spark.manifest import load_fragments, table_view
 
-    if active_delete_files(out_dir, snapshot):
+    view = table_view(out_dir, snapshot)
+    if view.deletes:
         return None
-    if snapshot is not None:
-        ids = snapshot_part_ids(out_dir, snapshot)
-    else:
-        ids = _live_part_ids(out_dir)
     try:
         rows = load_fragments(f"{out_dir}/manifest_parts")
     except FileNotFoundError:
         return None
-    if ids is not None:
-        idset = set(ids)
-        rows = [r for r in rows if r["part_id"] in idset]
+    idset = set(view.part_ids)
+    rows = [r for r in rows if r["part_id"] in idset]
     bounds = []  # (guaranteed bound, non-null rows) per chunk
     for c in rows:
         if "nulls" not in c:
@@ -1413,7 +1388,7 @@ def topk_rows_encoded(spark: SparkSession, out_dir: str, order_col: str,
     pruning stays sound under filters. Unlike the residual-free
     encoded aggregates, any Spark-coercible literal is accepted."""
     from fhirflat_spark.decode import _check_version
-    from fhirflat_spark.manifest import read_summary, resolve_snapshot
+    from fhirflat_spark.manifest import read_summary, table_view
     from fhirflat_spark.sources.datasource import register
 
     summary = read_summary(spark, out_dir)
@@ -1425,11 +1400,11 @@ def topk_rows_encoded(spark: SparkSession, out_dir: str, order_col: str,
               *(p[0] for p in _flat_preds(preds))}:
         if c not in all_cols:
             raise ValueError(f"column {c!r} not in dataset columns {all_cols}")
-    snap = resolve_snapshot(out_dir, snapshot) if snapshot is not None else None
+    view = table_view(out_dir, snapshot)
     full = T.StructType.fromJson(json.loads(summary["spark_schema"]))
     otype = {f.name: f.dataType for f in full.fields}[order_col]
     tau = (
-        _topk_zone_threshold(out_dir, order_col, int(k), snap, descending,
+        _topk_zone_threshold(out_dir, order_col, int(k), view, descending,
                              preds)
         # zones survive the JSON round-trip comparably for exactly the
         # integral + string types (the row-level pushdown exactness set);
@@ -1441,8 +1416,9 @@ def topk_rows_encoded(spark: SparkSession, out_dir: str, order_col: str,
 
     register(spark)
     reader = spark.read.format("fhirflat").option("path", out_dir)
-    if snap is not None:
-        reader = reader.option("snapshot", str(snap))
+    if view.version is not None:
+        # the source reads the version the threshold was computed on
+        reader = reader.option("snapshot", str(view.version))
     scan_cols = list(dict.fromkeys(
         [*out_cols, order_col, tiebreak_col,
          *(p[0] for p in _flat_preds(preds))]
@@ -1467,10 +1443,9 @@ def topk_rows_encoded(spark: SparkSession, out_dir: str, order_col: str,
     )
 
 
-def _partition_tiers(out_dir: str, preds: list[list[tuple]],
-                     snapshot: int | None):
-    """Classify the selected snapshot's partitions for a filtered
-    aggregate: returns ``(entailed, straddle, meta)`` where
+def _partition_tiers(view, preds: list[list[tuple]], type_of: dict):
+    """Classify a view's partitions for a filtered aggregate: returns
+    ``(entailed, straddle, meta)`` where
     ``entailed`` partitions' manifest rollups (col_zones + col_nulls)
     prove EVERY physical row matches the CNF where — their contribution
     comes from metadata with zero data IO, the filtered analog of
@@ -1483,26 +1458,13 @@ def _partition_tiers(out_dir: str, preds: list[list[tuple]],
     refusal (physical rollups vs logical view)."""
     import json as _json
 
-    from fhirflat_spark import fsio
     from fhirflat_spark.maintenance import _entails_partition
-    from fhirflat_spark.manifest import (
-        current_snapshot,
-        prune_part_ids_by_zones,
-        read_snapshot_manifest,
-    )
+    from fhirflat_spark.manifest import prune_part_ids_by_zones
 
-    ver = snapshot if snapshot is not None else current_snapshot(out_dir)
-    if ver is None:
-        return [], [], {}
-    summary = _json.loads(fsio.read_bytes(f"{out_dir}/_SUMMARY.json"))
-    full = T.StructType.fromJson(_json.loads(summary["spark_schema"]))
-    type_of = {f.name: f.dataType for f in full.fields}
-    t = read_snapshot_manifest(out_dir, ver)
+    t = view.manifest
     names = t.schema.names
     meta = {}
     for i in range(t.num_rows):
-        if t["status"][i].as_py() != "ok":
-            continue
         pid = int(t["part_id"][i].as_py())
         zj = t["col_zones"][i].as_py() if "col_zones" in names else None
         nj = t["col_nulls"][i].as_py() if "col_nulls" in names else None
@@ -1513,9 +1475,8 @@ def _partition_tiers(out_dir: str, preds: list[list[tuple]],
             _json.loads(nj) if nj is not None else None,
             _json.loads(sj) if sj is not None else None,
         )
-    cand = prune_part_ids_by_zones(
-        out_dir, sorted(meta), _where_zones(preds), type_of
-    )
+    cand = prune_part_ids_by_zones(t, sorted(meta), _where_zones(preds),
+                                   type_of)
     entailed, straddle = [], []
     for pid in cand:
         n_rows, zones, nulls, _sums = meta[pid]
@@ -1551,13 +1512,9 @@ def count_encoded(spark: SparkSession, out_dir: str, where=None,
     # _plan_scan validated everything (version, nested cols, literal
     # exactness) and refused active deletes — the metadata tier below
     # is only sound after that refusal
-    from fhirflat_spark.manifest import resolve_snapshot
-
-    snap = resolve_snapshot(out_dir, snapshot) if snapshot is not None \
-        else None
-    entailed, straddle, meta = _partition_tiers(
-        out_dir, fplan["preds"], snap
-    )
+    view = fplan["view"]
+    entailed, straddle, meta = _partition_tiers(view, fplan["preds"],
+                                                fplan["type_of"])
     total = sum(meta[p][0] for p in entailed)
     if report is not None:
         report.update(
@@ -1566,7 +1523,7 @@ def count_encoded(spark: SparkSession, out_dir: str, where=None,
         )
     if not straddle:
         return total
-    pruned, _, fplan = _plan_scan(spark, out_dir, [], snapshot,
+    pruned, _, fplan = _plan_scan(spark, out_dir, [], view,
                                   where=where, only_part_ids=straddle)
 
     def kernel(batches):
@@ -1607,13 +1564,9 @@ def sum_encoded(spark: SparkSession, out_dir: str, value_col: str,
     _check_integral(vfield, value_col)
     meta_total, meta_seen = 0, 0
     if fplan["preds"]:
-        from fhirflat_spark.manifest import resolve_snapshot
-
-        snap = resolve_snapshot(out_dir, snapshot) \
-            if snapshot is not None else None
-        entailed, straddle, meta = _partition_tiers(
-            out_dir, fplan["preds"], snap
-        )
+        view = fplan["view"]
+        entailed, straddle, meta = _partition_tiers(view, fplan["preds"],
+                                                    fplan["type_of"])
         for pid in list(entailed):
             n_rows, _zones, nulls, sums = meta[pid]
             nonnull = n_rows - (nulls or {}).get(value_col, n_rows)
@@ -1634,7 +1587,7 @@ def sum_encoded(spark: SparkSession, out_dir: str, value_col: str,
         if not straddle:
             return meta_total if meta_seen else None
         pruned, (vfield,), fplan = _plan_scan(
-            spark, out_dir, [value_col], snapshot, where=where,
+            spark, out_dir, [value_col], view, where=where,
             only_part_ids=straddle,
         )
 

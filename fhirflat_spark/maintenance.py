@@ -32,21 +32,18 @@ def table_health(spark: SparkSession, out_dir: str,
     maintenance trigger, never an answer."""
     from fhirflat_spark.manifest import (
         _snapshot_versions,
-        active_delete_files,
         read_summary,
+        table_view,
     )
 
-    t = fsio.read_parquet(f"{out_dir}/manifest", columns=["rows", "status"])
-    part_rows = [
-        int(r) for r, s in zip(t["rows"].to_pylist(), t["status"].to_pylist())
-        if s == "ok"
-    ]
+    view = table_view(out_dir)
+    part_rows = [int(r) for r in view.manifest["rows"].to_pylist()]
     rows = sum(part_rows)
     n_parts = len(part_rows)
     underfilled = sum(1 for r in part_rows if r < rows_per_bucket / 2)
     ideal = max(1, math.ceil(rows / rows_per_bucket))
     summary = read_summary(spark, out_dir)
-    active = active_delete_files(out_dir)
+    active = view.deletes
     delete_keys = sum(
         fsio.count_parquet_rows(f"{out_dir}/deletes/{e['file']}")
         for e in active
@@ -104,6 +101,7 @@ def binpack_partitions(spark: SparkSession, out_dir: str,
     from fhirflat_spark.manifest import (
         _branch_staged_versions,
         read_summary,
+        table_view,
     )
 
     if _branch_staged_versions(out_dir):
@@ -112,13 +110,11 @@ def binpack_partitions(spark: SparkSession, out_dir: str,
         raise ValueError("branch(es) have unpublished staged commits; "
                          "publish or drop them before binpacking")
     summary = read_summary(spark, out_dir)
-    t = fsio.read_parquet(f"{out_dir}/manifest",
-                          columns=["part_id", "rows", "status"])
+    view = table_view(out_dir)
     live = {
         int(p): int(r)
-        for p, r, s in zip(t["part_id"].to_pylist(), t["rows"].to_pylist(),
-                           t["status"].to_pylist())
-        if s == "ok"
+        for p, r in zip(view.manifest["part_id"].to_pylist(),
+                        view.manifest["rows"].to_pylist())
     }
     if part_ids is None:
         victims = sorted(
@@ -143,7 +139,7 @@ def binpack_partitions(spark: SparkSession, out_dir: str,
     if dry_run:
         report["would_pack"] = True
         return report
-    df = decode_table(spark, out_dir, part_ids=victims)
+    df = decode_table(spark, out_dir, part_ids=victims, snapshot=view)
     n = df.count()  # LOGICAL rows (merge-on-read deletes applied)
     if n == 0:
         # r6 (ADVICE): every victim row is delete-shadowed — there is
@@ -273,11 +269,10 @@ def delete_where(spark: SparkSession, out_dir: str, where,
     from fhirflat_spark.manifest import (
         _deletes_dir,
         commit_partition_drop,
-        current_snapshot,
         prune_part_ids_by_nulls,
         prune_part_ids_by_zones,
-        read_snapshot_manifest,
         read_summary,
+        table_view,
     )
 
     preds = _normalize_where(where)
@@ -291,36 +286,30 @@ def delete_where(spark: SparkSession, out_dir: str, where,
     if unknown:
         raise ValueError(f"where columns {unknown} not in dataset "
                          f"columns {summary['columns']}")
-    prev = current_snapshot(out_dir)
-    if prev is None:
+    view = table_view(out_dir)
+    if view.version is None:
         raise ValueError(f"{out_dir} has no committed snapshot")
     schema = T.StructType.fromJson(_json.loads(summary["spark_schema"]))
     type_of = {f.name: f.dataType for f in schema.fields}
-    t = read_snapshot_manifest(out_dir, prev)
+    t = view.manifest
     names = t.schema.names
     meta = {}
     for i in range(t.num_rows):
-        row = {c: t[c][i].as_py() for c in
-               ("part_id", "rows", "status")
-               if c in names}
-        if row.get("status") != "ok":
-            continue
         zj = t["col_zones"][i].as_py() if "col_zones" in names else None
         nj = t["col_nulls"][i].as_py() if "col_nulls" in names else None
-        meta[int(row["part_id"])] = (
-            int(row["rows"]),
+        meta[int(t["part_id"][i].as_py())] = (
+            int(t["rows"][i].as_py()),
             _json.loads(zj) if zj else {},
             _json.loads(nj) if nj is not None else None,
         )
-    cand = prune_part_ids_by_zones(
-        out_dir, sorted(meta), _where_zones(preds), type_of
-    )
+    cand = prune_part_ids_by_zones(t, sorted(meta), _where_zones(preds),
+                                   type_of)
     # null-prune only from UNIT clauses: an OR'd nu/nn can be satisfied
     # through its sibling branch
     nullchecks = [(c, op == "nu") for cl in preds if len(cl) == 1
                   for c, op, _ in cl if op in ("nu", "nn")]
     if nullchecks:
-        cand = prune_part_ids_by_nulls(out_dir, cand, nullchecks)
+        cand = prune_part_ids_by_nulls(t, cand, nullchecks)
     drop, scan = [], []
     for pid in cand:
         n_rows, zones, nulls = meta[pid]
@@ -347,7 +336,7 @@ def delete_where(spark: SparkSession, out_dir: str, where,
             decode_table(spark, out_dir,
                          columns=sorted({c for c, _, _
                                          in _flat_preds(preds)}),
-                         part_ids=scan, with_positions=True)
+                         part_ids=scan, with_positions=True, snapshot=view)
             .where(cond)
             .select(
                 F.col("__part_id").cast("int").alias("part_id"),
@@ -416,8 +405,8 @@ def update_where(spark: SparkSession, out_dir: str, where,
         current_snapshot,
         prune_part_ids_by_nulls,
         prune_part_ids_by_zones,
-        read_snapshot_manifest,
         read_summary,
+        table_view,
     )
 
     preds = _normalize_where(where)
@@ -434,20 +423,18 @@ def update_where(spark: SparkSession, out_dir: str, where,
     if bad:
         raise ValueError(f"columns {sorted(set(bad))} not in dataset "
                          f"columns {cols}")
-    prev = current_snapshot(out_dir)
-    if prev is None:
+    view = table_view(out_dir)
+    if view.version is None:
         raise ValueError(f"{out_dir} has no committed snapshot")
     schema = T.StructType.fromJson(_json.loads(summary["spark_schema"]))
     type_of = {f.name: f.dataType for f in schema.fields}
-    t = read_snapshot_manifest(out_dir, prev, columns=["part_id", "status"])
-    live = [int(p) for p, s in zip(t["part_id"].to_pylist(),
-                                   t["status"].to_pylist()) if s == "ok"]
-    cand = prune_part_ids_by_zones(out_dir, live, _where_zones(preds),
+    live = view.part_ids
+    cand = prune_part_ids_by_zones(view.manifest, live, _where_zones(preds),
                                    type_of)
     nullchecks = [(c, op == "nu") for cl in preds if len(cl) == 1
                   for c, op, _ in cl if op in ("nu", "nn")]
     if nullchecks:
-        cand = prune_part_ids_by_nulls(out_dir, cand, nullchecks)
+        cand = prune_part_ids_by_nulls(view.manifest, cand, nullchecks)
     report = {"snapshot": None, "rows_updated": 0,
               "parts_scanned": len(cand), "parts_pruned": len(live) - len(cand)}
     if not cand:
@@ -455,7 +442,8 @@ def update_where(spark: SparkSession, out_dir: str, where,
     cond = reduce(_ops.and_, _where_exprs(preds))
     pos = ["__part_id", "__chunk_seq", "__row_idx"]
     matched = (
-        decode_table(spark, out_dir, part_ids=cand, with_positions=True)
+        decode_table(spark, out_dir, part_ids=cand, with_positions=True,
+                     snapshot=view)
         .where(cond)
         .persist()
     )
@@ -521,13 +509,13 @@ def analyze_table(spark: SparkSession, out_dir: str,
 
     from fhirflat_spark import ndv as _ndv
     from fhirflat_spark import quantiles as _q
-    from fhirflat_spark.decode import _check_version, _live_part_ids
+    from fhirflat_spark.decode import _check_version
     from fhirflat_spark.encode import chunk_schema
     from fhirflat_spark.manifest import (
         _branch_staged_versions,
-        active_delete_files,
         commit_stats_update,
         read_summary,
+        table_view,
     )
 
     ncols = list(dict.fromkeys(ndv_columns or []))
@@ -559,7 +547,8 @@ def analyze_table(spark: SparkSession, out_dir: str,
                 f"quantile column {c!r} must be a numeric column "
                 f"(got {schema[c].dataType})"
             )
-    if active_delete_files(out_dir):
+    view = table_view(out_dir)
+    if view.deletes:
         raise ValueError(
             "dataset has active row-level deletes: chunk sketches are "
             "physical while the logical view diverges — run "
@@ -568,7 +557,6 @@ def analyze_table(spark: SparkSession, out_dir: str,
     if _branch_staged_versions(out_dir):
         raise ValueError("branch(es) have unpublished staged commits; "
                          "publish or drop them before analyzing")
-    live = _live_part_ids(out_dir)
     frag_dir = f"{out_dir}/manifest_parts"
     frags: dict[int, list[dict]] = {}
     # per chunk, the (col, kind) sketches still missing where values
@@ -576,7 +564,7 @@ def analyze_table(spark: SparkSession, out_dir: str,
     # from "untracked", but the nulls rollup can (absent = all-null)
     need: dict[tuple[int, int], list[tuple[str, bool, bool]]] = {}
     affected: set[int] = set()
-    for pid in (live if live is not None else []):
+    for pid in view.part_ids:
         rows = _json.loads(fsio.read_bytes(f"{frag_dir}/{pid:06d}.json"))
         frags[pid] = rows
         for ci, ch in enumerate(rows):

@@ -5,15 +5,19 @@ The analog of the reference's dataset bundle metadata: ``fhirflat.toml``
 (per-file sha256), reference fhirflat/ingest.py:381-432. Here the unit of
 lineage is the *partition*: codec choices, sizes, row counts, and a
 content checksum per partition, all queryable as a parquet table — which
-is what makes encode runs checkpoint-resumable (skip partitions whose
-manifest row says ``ok``, re-encode the rest).
+is what makes encode runs checkpoint-resumable (skip partitions the head
+snapshot lists, re-encode the rest).
+
+Readers plan from ONE resolved view (:func:`table_view`): a snapshot
+version, that immutable ``snapshots/v{N}`` manifest and its active
+delete entries. ``manifest/manifest.parquet`` is an advisory copy of
+the head, written by every commit for on-disk compatibility; no reader
+plans from it.
 
 Scale note: manifest cardinality is #partitions (+#chunks while being
 aggregated) — input_rows/8192 chunks, so ~1/10^4 of the data. It is
-aggregated driver-side from a column-pruned scan of the chunk files
-(payload blobs never read); a run large enough for that to matter
-(≳10^7 partitions) should flip ``build_manifest`` — the distributed
-DataFrame variant kept below — into the write path instead.
+aggregated driver-side from the task-committed manifest fragments
+(payload blobs never read).
 """
 
 from __future__ import annotations
@@ -26,7 +30,6 @@ from collections import defaultdict
 from typing import NamedTuple
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -252,24 +255,21 @@ def coerce_zone_bound(dt, value):
     return None
 
 
-def prune_part_ids_by_zones(out_dir: str, candidates: list[int],
+def prune_part_ids_by_zones(manifest: pa.Table, candidates: list[int],
                             filters: list[tuple], type_of: dict) -> list[int]:
-    """Driver-side partition pruning from the manifest's per-partition
-    column zones: drop candidate part-ids whose recorded [zmin, zmax]
-    cannot intersect EVERY ``(col, lo, hi)`` filter (lo/hi None =
-    one-sided). Metadata-only — one column-pruned read of the manifest
-    parquet, payload bytes untouched; at 10^5+ partitions this is what
-    keeps a selective scan from listing every chunk file. Ids absent
-    from the current manifest (e.g. a pinned snapshot's rolled-back
-    partitions) and partitions without zones are KEPT — pruning is
-    always conservative; chunk-level zones and the exact residual still
-    apply downstream."""
-    try:
-        t = fsio.read_parquet(f"{out_dir}/manifest",
-                              columns=["part_id", "col_zones"])
-    except (FileNotFoundError, pa.ArrowInvalid, KeyError):
-        return candidates  # pre-zone manifest or none at all
-    zones_of = dict(zip(t["part_id"].to_pylist(), t["col_zones"].to_pylist()))
+    """Driver-side partition pruning from a snapshot manifest's
+    per-partition column zones (``manifest`` = the read's
+    :func:`table_view` rows): drop candidate part-ids whose recorded
+    [zmin, zmax] cannot intersect EVERY ``(col, lo, hi)`` filter (lo/hi
+    None = one-sided). Metadata-only — payload bytes untouched; at 10^5+
+    partitions this is what keeps a selective scan from listing every
+    chunk file. Ids absent from the manifest, partitions without zones
+    and pre-zone manifests are KEPT — pruning is always conservative;
+    chunk-level zones and the exact residual still apply downstream."""
+    if "col_zones" not in manifest.schema.names:
+        return candidates  # pre-zone manifest
+    zones_of = dict(zip(manifest["part_id"].to_pylist(),
+                        manifest["col_zones"].to_pylist()))
     keep = []
     for pid in candidates:
         z = zones_of.get(pid)
@@ -298,7 +298,7 @@ def prune_part_ids_by_zones(out_dir: str, candidates: list[int],
     return keep
 
 
-def prune_part_ids_by_nulls(out_dir: str, candidates: list[int],
+def prune_part_ids_by_nulls(manifest: pa.Table, candidates: list[int],
                             checks: list[tuple]) -> list[int]:
     """Partition pruning for pushed IS [NOT] NULL predicates from the
     per-partition null rollups (stats v2 ``col_nulls``): a partition
@@ -306,15 +306,12 @@ def prune_part_ids_by_nulls(out_dir: str, candidates: list[int],
     null count equals its row count has no IS NOT NULL rows. Same
     conservative contract as the zone variant — missing rollups, ids
     absent from the manifest, and pre-v2 partitions are kept."""
-    try:
-        t = fsio.read_parquet(f"{out_dir}/manifest",
-                              columns=["part_id", "rows", "col_nulls"])
-    except (FileNotFoundError, pa.ArrowInvalid, KeyError):
+    if "col_nulls" not in manifest.schema.names:
         return candidates
     info = {
         pid: (r, n) for pid, r, n in zip(
-            t["part_id"].to_pylist(), t["rows"].to_pylist(),
-            t["col_nulls"].to_pylist(),
+            manifest["part_id"].to_pylist(), manifest["rows"].to_pylist(),
+            manifest["col_nulls"].to_pylist(),
         )
     }
     keep = []
@@ -461,42 +458,6 @@ def write_manifest(spark: SparkSession, out_dir: str, meta_rows: list,
     return {**_manifest_totals(table), "snapshot": c.version}
 
 
-def build_manifest(chunk_df: DataFrame) -> DataFrame:
-    """Distributed manifest aggregation (for runs whose manifest itself is
-    big data); same schema/semantics as the driver-side path."""
-    return (
-        chunk_df.groupBy("part_id")
-        .agg(
-            F.count("*").cast("int").alias("n_chunks"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-            F.sha2(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("chunk_seq", "content_sha"))
-                        ),
-                        lambda s: s["content_sha"],
-                    ),
-                ),
-                256,
-            ).alias("partition_sha"),
-            F.min("repo_min").alias("repo_min"),
-            F.max("repo_max").alias("repo_max"),
-            F.lit("ok").alias("status"),
-            # distributed zone aggregation would parse the chunks' stats
-            # JSON here; the doc-path emits unbounded (conservative)
-            F.lit(None).cast("string").alias("col_zones"),
-            F.lit(None).cast("string").alias("col_nulls"),
-            F.lit(None).cast("string").alias("col_sums"),
-            F.lit(None).cast("string").alias("col_hlls"),
-            F.lit(None).cast("string").alias("col_ddqs"),
-        )
-    )
-
-
 # --- snapshots (Iceberg-style versioned metadata): every write_manifest
 # commit leaves an immutable snapshots/v{N}.manifest.parquet plus a
 # version-hint pointer. Because committed chunk partitions are never
@@ -562,13 +523,10 @@ def read_snapshot_manifest(out_dir: str, version: int,
 
 
 def snapshot_part_ids(out_dir: str, version: int) -> list[int]:
-    """Partitions an historical snapshot committed as ok — the part-id
-    set time-travel decode prunes to."""
-    t = read_snapshot_manifest(out_dir, version, columns=["part_id", "status"])
-    return [
-        int(p) for p, s in zip(t["part_id"].to_pylist(), t["status"].to_pylist())
-        if s == "ok"
-    ]
+    """Partitions one snapshot committed — a column-pruned read for the
+    lineage diffs (change feeds, index refreshes, branch drops)."""
+    t = read_snapshot_manifest(out_dir, version, columns=["part_id"])
+    return [int(p) for p in t["part_id"].to_pylist()]
 
 
 def _sha_of_partition_shas(part_ids, shas) -> str:
@@ -662,13 +620,8 @@ def aggregate_from_metadata(out_dir: str, columns: list[str],
     partition mixing all-NULL chunks with valued ones merges to
     unbounded). ``snapshot`` accepts a version, tag, or branch name.
     """
-    version = (
-        resolve_snapshot(out_dir, snapshot) if snapshot is not None
-        else current_snapshot(out_dir)
-    )
-    if version is None:
-        return None
-    if active_delete_files(out_dir, version):
+    view = table_view(out_dir, snapshot)
+    if view.version is None or view.deletes:
         return None
     summary = json.loads(fsio.read_bytes(f"{out_dir}/_SUMMARY.json"))
     if not summary.get("spark_schema"):
@@ -689,7 +642,7 @@ def aggregate_from_metadata(out_dir: str, columns: list[str],
         if isinstance(dtype[c], (T.ByteType, T.ShortType, T.IntegerType,
                                  T.LongType))
     )
-    t = read_snapshot_manifest(out_dir, version)
+    t = view.manifest
     names = t.schema.names
     if "col_zones" not in names or "col_nulls" not in names:
         return None  # pre-stats manifest: never recorded
@@ -698,13 +651,10 @@ def aggregate_from_metadata(out_dir: str, columns: list[str],
     sums = dict.fromkeys(integral, 0)
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
-    for n_rows, status, zjson, njson, sjson in zip(
-        t["rows"].to_pylist(), t["status"].to_pylist(),
-        t["col_zones"].to_pylist(), t["col_nulls"].to_pylist(),
-        t["col_sums"].to_pylist(),
+    for n_rows, zjson, njson, sjson in zip(
+        t["rows"].to_pylist(), t["col_zones"].to_pylist(),
+        t["col_nulls"].to_pylist(), t["col_sums"].to_pylist(),
     ):
-        if status != "ok":
-            continue
         total += n_rows
         if n_rows == 0:
             continue
@@ -1222,13 +1172,9 @@ def _write_snapshot_deletes(out_dir: str, version: int,
 
 
 def active_delete_files(out_dir: str, version: int | None = None) -> list[dict]:
-    """The equality-delete files a snapshot applies, newest-commit order:
-    ``[{"file": name, "column": key_col}, ...]``. Authoritative source =
-    the list embedded in the snapshot manifest's parquet metadata
-    (atomic with the commit); the json sidecar remains as the
-    inspection-friendly copy and the fallback for snapshots written
-    before the embedded form. Snapshots predating the delete feature
-    have neither → empty set."""
+    """The equality-delete files a snapshot (default: the head) applies,
+    newest-commit order: ``[{"file": name, "column": key_col}, ...]``.
+    Empty when no snapshot exists."""
     if version is None:
         version = current_snapshot(out_dir)
     if version is None:
@@ -1239,6 +1185,15 @@ def active_delete_files(out_dir: str, version: int | None = None) -> list[dict]:
         ).metadata
     except FileNotFoundError:
         meta = None
+    return _snapshot_deletes(out_dir, version, meta)
+
+
+def _snapshot_deletes(out_dir: str, version: int, meta) -> list[dict]:
+    """Authoritative source = the list embedded in the snapshot
+    manifest's parquet metadata (atomic with the commit); the json
+    sidecar remains as the inspection-friendly copy and the fallback
+    for snapshots written before the embedded form. Snapshots predating
+    the delete feature have neither → empty set."""
     if meta and _DELETES_META_KEY in meta:
         return json.loads(meta[_DELETES_META_KEY])
     try:
@@ -1247,6 +1202,51 @@ def active_delete_files(out_dir: str, version: int | None = None) -> list[dict]:
         )
     except FileNotFoundError:
         return []
+
+
+class TableView(NamedTuple):
+    """What one read sees: the resolved snapshot ``version`` (None when
+    the table has no snapshot yet), that snapshot's ``manifest`` rows
+    and its active ``deletes`` entries."""
+
+    version: int | None
+    manifest: pa.Table
+    deletes: list[dict]
+
+    @property
+    def part_ids(self) -> list[int]:
+        return sorted(int(p) for p in self.manifest["part_id"].to_pylist())
+
+
+def table_view(out_dir: str, snapshot=None, as_of=None) -> TableView:
+    """THE way library code learns a table's partitions and deletes.
+
+    ``snapshot`` is a version, an int-string, a tag or a branch name
+    (:func:`resolve_snapshot`); ``as_of`` a wall-clock instant
+    (:func:`snapshot_as_of`); neither = the head (:func:`current_snapshot`,
+    which recovers past a stale version hint). A ``TableView`` passes
+    through unchanged, so a planner can hand its view to the helpers it
+    calls instead of re-reading the manifest. The manifest rows and the
+    delete entries come from the ONE immutable ``snapshots/v{N}`` file,
+    never from the advisory ``manifest/`` copy — a crash between a
+    commit's snapshot create and its copy write cannot make a reader
+    pair one snapshot's partitions with another's deletes. The view is
+    empty only when no snapshot exists; every read error propagates."""
+    if isinstance(snapshot, TableView):
+        return snapshot
+    if as_of is not None:
+        if snapshot is not None:
+            raise ValueError("pass snapshot= or as_of=, not both")
+        version = snapshot_as_of(out_dir, as_of)
+    elif snapshot is not None:
+        version = resolve_snapshot(out_dir, snapshot)
+    else:
+        version = current_snapshot(out_dir)
+    if version is None:
+        return TableView(None, MANIFEST_ARROW_SCHEMA.empty_table(), [])
+    t = read_snapshot_manifest(out_dir, version)
+    return TableView(version, t,
+                     _snapshot_deletes(out_dir, version, t.schema.metadata))
 
 
 def write_delete_keys(spark: SparkSession, out_dir: str, column: str,
@@ -1499,9 +1499,9 @@ def copy_delete_file(src_dir: str, dst_dir: str, name: str) -> None:
 
 
 def apply_deletes(spark: SparkSession, out_dir: str, df: DataFrame,
-                  version: int | None = None,
+                  entries: list[dict],
                   part_col: str | None = None) -> DataFrame:
-    """Anti-join ``df`` against the snapshot's active delete files.
+    """Anti-join ``df`` against a view's active delete ``entries``.
     Delete files are read through the Spark reader (scales to large key
     sets; AQE broadcasts the small ones). A scoped entry (``below_part``)
     removes only rows from partitions that existed at delete time —
@@ -1510,7 +1510,7 @@ def apply_deletes(spark: SparkSession, out_dir: str, df: DataFrame,
     apply to every row. Column references are alias-qualified and
     backticked: flattened datasets have DOTTED column names
     (period.start) that bare resolution would read as struct paths."""
-    for i, entry in enumerate(active_delete_files(out_dir, version)):
+    for i, entry in enumerate(entries):
         keys = spark.read.parquet(f"{_deletes_dir(out_dir)}/{entry['file']}")
         dal, kal = f"__dd{i}", f"__dk{i}"
         d, k = df.alias(dal), keys.alias(kal)
@@ -1690,14 +1690,11 @@ def vacuum(spark: SparkSession, out_dir: str) -> list[int]:
 
 
 def read_manifest(spark: SparkSession, out_dir: str,
-                  snapshot: int | None = None) -> DataFrame:
-    """Current manifest via the Spark reader; an historical ``snapshot``
-    loads through fsio (manifest cardinality is #partitions — driver-
-    sized by design, SCALE.md)."""
-    if snapshot is None:
-        return spark.read.parquet(f"{out_dir}/manifest")
-    t = read_snapshot_manifest(out_dir, snapshot)
-    return spark.createDataFrame(t.to_pandas())
+                  snapshot: int | str | None = None) -> DataFrame:
+    """A snapshot's manifest (default: the head) as a DataFrame — the
+    :func:`table_view` rows (manifest cardinality is #partitions —
+    driver-sized by design, SCALE.md)."""
+    return spark.createDataFrame(table_view(out_dir, snapshot).manifest)
 
 
 CHUNK_STATS_SCHEMA = (
@@ -1707,17 +1704,22 @@ CHUNK_STATS_SCHEMA = (
 
 
 def read_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Per-(chunk, column) lineage as a queryable DataFrame: codec choice,
-    raw/encoded bytes, content sha, and zone-map span for every chunk of
-    every column — the flattened view of the per-chunk ``stats`` JSON the
-    encode kernel records (the Iceberg manifest-file analog).
+    """Per-(chunk, column) lineage of the head snapshot's partitions as a
+    queryable DataFrame: codec choice, raw/encoded bytes, content sha,
+    and zone-map span for every chunk of every column — the flattened
+    view of the per-chunk ``stats`` JSON the encode kernel records (the
+    Iceberg manifest-file analog). Chunk dirs no live snapshot
+    references (rolled back or replaced, not yet vacuumed) are left out.
 
     Reads ONLY the metadata columns of the chunk files (payload blobs are
     pruned by the nested-column projection), so cost is #chunks, not data
     size. Zone bounds come back as strings (numeric columns stringify);
     cast at the call site for numeric min/max semantics."""
+    from fhirflat_spark.decode import _part_range_predicate
+
     return (
         spark.read.parquet(f"{out_dir}/chunks")
+        .where(_part_range_predicate(table_view(out_dir).part_ids))
         .select(
             "part_id",
             "chunk_seq",
@@ -1737,19 +1739,6 @@ def read_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
             F.col("st.zmin").alias("zmin"),
             F.col("st.zmax").alias("zmax"),
         )
-    )
-
-
-def completed_partitions(spark: SparkSession, out_dir: str) -> frozenset[int]:
-    """Partitions already encoded + recorded ok — the resume skip set."""
-    try:
-        t = fsio.read_parquet(f"{out_dir}/manifest",
-                              columns=["part_id", "status"])
-    except Exception:
-        return frozenset()
-    return frozenset(
-        int(p) for p, s in zip(t["part_id"].to_pylist(), t["status"].to_pylist())
-        if s == "ok"
     )
 
 

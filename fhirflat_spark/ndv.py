@@ -106,33 +106,22 @@ def ndv_from_metadata(out_dir: str, column: str,
     values cannot be subtracted from an HLL)."""
     import json
 
-    from fhirflat_spark import fsio
-    from fhirflat_spark.manifest import (
-        active_delete_files,
-        current_snapshot,
-        read_snapshot_manifest,
-        resolve_snapshot,
-    )
+    from fhirflat_spark.manifest import table_view
 
-    version = (
-        resolve_snapshot(out_dir, snapshot) if snapshot is not None
-        else current_snapshot(out_dir)
-    )
-    if version is None:
+    view = table_view(out_dir, snapshot)
+    if view.version is None or view.deletes:
         return None
-    if active_delete_files(out_dir, version):
-        return None
-    t = read_snapshot_manifest(out_dir, version)
+    t = view.manifest
     names = t.schema.names
     if "col_hlls" not in names or "col_nulls" not in names:
         return None
     merged: bytes | None = None
     any_rows = False
-    for n_rows, status, hjson, njson in zip(
-        t["rows"].to_pylist(), t["status"].to_pylist(),
-        t["col_hlls"].to_pylist(), t["col_nulls"].to_pylist(),
+    for n_rows, hjson, njson in zip(
+        t["rows"].to_pylist(), t["col_hlls"].to_pylist(),
+        t["col_nulls"].to_pylist(),
     ):
-        if status != "ok" or n_rows == 0:
+        if n_rows == 0:
             continue
         any_rows = True
         hl = json.loads(hjson) if hjson else {}

@@ -139,11 +139,7 @@ def _plan(options) -> dict:
     from pyspark.sql import types as T
 
     from fhirflat_spark import fsio
-    from fhirflat_spark.manifest import (
-        MANIFEST_VERSION,
-        active_delete_files,
-        snapshot_part_ids,
-    )
+    from fhirflat_spark.manifest import MANIFEST_VERSION, table_view
 
     path = options.get("path") or options.get("location")
     if not path:
@@ -185,49 +181,19 @@ def _plan(options) -> dict:
         )
         type_of = {c: T.StringType() for c in all_cols}
 
-    snapshot = options.get("snapshot")
-    as_of = options.get("as_of")
-    if as_of is not None:  # wall-clock time travel (epoch s / ISO-8601)
-        if snapshot is not None:
-            raise ValueError('pass option "snapshot" or "as_of", not both')
-        from fhirflat_spark.manifest import snapshot_as_of
-
-        snapshot = snapshot_as_of(path, as_of)
-    if snapshot is not None:  # int version or tag name (manifest refs)
-        from fhirflat_spark.manifest import resolve_snapshot
-
-        snapshot = resolve_snapshot(path, snapshot)
-    chunks_of: dict[int, int] = {}
-    if snapshot is not None:
-        from fhirflat_spark.manifest import read_snapshot_manifest
-
-        part_ids = snapshot_part_ids(path, snapshot)
-        ts = read_snapshot_manifest(path, snapshot,
-                                    columns=["part_id", "n_chunks"])
-        chunks_of = dict(
-            zip(ts["part_id"].to_pylist(), ts["n_chunks"].to_pylist())
-        )
-    else:
-        t = fsio.read_parquet(f"{path}/manifest",
-                              columns=["part_id", "status", "n_chunks"])
-        part_ids = [
-            int(p)
-            for p, s in zip(t["part_id"].to_pylist(), t["status"].to_pylist())
-            if s == "ok"
-        ]
-        chunks_of = dict(
-            zip(t["part_id"].to_pylist(), t["n_chunks"].to_pylist())
-        )
-    deletes = []
-    for entry in active_delete_files(path, snapshot):
-        deletes.append(
-            {
-                "file": entry["file"],
-                "column": entry.get("column"),
-                "below_part": entry.get("below_part"),
-                "positional": bool(entry.get("positional")),
-            }
-        )
+    # int version, tag/branch name or wall-clock as_of (epoch s /
+    # ISO-8601); neither = the head
+    view = table_view(path, options.get("snapshot"), options.get("as_of"))
+    t = view.manifest
+    deletes = [
+        {
+            "file": entry["file"],
+            "column": entry.get("column"),
+            "below_part": entry.get("below_part"),
+            "positional": bool(entry.get("positional")),
+        }
+        for entry in view.deletes
+    ]
     return {
         "path": path,
         "summary_rows": int(summary.get("rows") or 0),
@@ -236,8 +202,15 @@ def _plan(options) -> dict:
         "schema": schema,
         "type_of": type_of,
         "bloomed": set(summary.get("bloom_columns") or ()),
-        "part_ids": sorted(part_ids),
-        "chunks_of": chunks_of,
+        "part_ids": view.part_ids,
+        "chunks_of": dict(
+            zip(t["part_id"].to_pylist(), t["n_chunks"].to_pylist())
+        ),
+        # the view's pruning rollups: partitions() prunes on the
+        # snapshot this read resolved, without re-reading it
+        "rollups": t.select([c for c in ("part_id", "rows", "col_zones",
+                                         "col_nulls")
+                             if c in t.schema.names]),
         "split_chunks": int(options.get("split_chunks") or 16),
         "deletes": deletes,
     }
@@ -737,17 +710,12 @@ METADATA_DDL = {
 
 class FhirflatMetadataReader(DataSourceReader):
     def __init__(self, options, table: str):
-        from fhirflat_spark import fsio
+        from fhirflat_spark.manifest import table_view
 
         self._table = table
         self._path = options.get("path") or options.get("location")
         if table == "chunks":
-            t = fsio.read_parquet(f"{self._path}/manifest",
-                                  columns=["part_id", "status"])
-            self._part_ids = [
-                int(p) for p, s in zip(t["part_id"].to_pylist(),
-                                       t["status"].to_pylist()) if s == "ok"
-            ]
+            self._part_ids = table_view(self._path).part_ids
 
     def partitions(self):
         if self._table == "chunks":
@@ -803,9 +771,9 @@ class FhirflatMetadataReader(DataSourceReader):
         from fhirflat_spark.manifest import (
             _sha_of_partition_shas,
             _snapshot_versions,
-            active_delete_files,
             current_snapshot,
             read_snapshot_manifest,
+            table_view,
         )
 
         path = self._path
@@ -844,7 +812,7 @@ class FhirflatMetadataReader(DataSourceReader):
                 schema=schema,
             )
         elif self._table == "partitions":
-            t = fsio.read_parquet(f"{path}/manifest")
+            t = table_view(path).manifest
             for f in schema:  # pre-stats-v2 manifests lack the rollups
                 if f.name not in t.schema.names:
                     t = t.append_column(f, pa.nulls(t.num_rows, f.type))
@@ -867,7 +835,7 @@ class FhirflatMetadataReader(DataSourceReader):
             )
         elif self._table == "deletes":
             rows = []
-            for e in active_delete_files(path):
+            for e in table_view(path).deletes:
                 keys = _delete_keys(path, e["file"])
                 rows.append((e["file"], e["column"], e.get("below_part"),
                              len(keys)))
@@ -1003,7 +971,7 @@ class FhirflatBatchReader(DataSourceReader, _ReadMixin):
             from fhirflat_spark.manifest import prune_part_ids_by_zones
 
             ids = prune_part_ids_by_zones(
-                self._plan_state["path"], ids, self._zones,
+                self._plan_state["rollups"], ids, self._zones,
                 self._plan_state["type_of"],
             )
         if self._nulls:
@@ -1012,7 +980,7 @@ class FhirflatBatchReader(DataSourceReader, _ReadMixin):
             from fhirflat_spark.manifest import prune_part_ids_by_nulls
 
             ids = prune_part_ids_by_nulls(
-                self._plan_state["path"], ids, self._nulls
+                self._plan_state["rollups"], ids, self._nulls
             )
         split = self._plan_state["split_chunks"]
         chunks_of = self._plan_state["chunks_of"]

@@ -118,11 +118,7 @@ def _write_plan(options, schema, overwrite: bool, streaming: bool) -> dict:
     from pyspark.sql.pandas.types import to_arrow_type
 
     from fhirflat_spark import fsio
-    from fhirflat_spark.manifest import (
-        FORMAT_VERSION,
-        all_snapshot_part_ids,
-        completed_partitions,
-    )
+    from fhirflat_spark.manifest import FORMAT_VERSION, all_snapshot_part_ids
 
     path = options.get("path") or options.get("location")
     if not path:
@@ -281,10 +277,7 @@ def _write_plan(options, schema, overwrite: bool, streaming: bool) -> dict:
     # immutability — encode.append_table); crashed-attempt ids live in
     # no snapshot and stay reusable
     if exists:
-        top = max(
-            [*completed_partitions(None, path), *all_snapshot_part_ids(path)],
-            default=None,
-        )
+        top = max(all_snapshot_part_ids(path), default=None)
         offset = (top + 1) if top is not None else 0
     else:
         offset = 0

@@ -92,17 +92,13 @@ def build_token_index(
     (or a pinned version / tag via ``snapshot=``)."""
     from fhirflat_spark.decode import decode_table
     from fhirflat_spark.manifest import (
-        current_snapshot,
         read_summary,
-        resolve_snapshot,
         snapshot_dataset_sha,
+        table_view,
     )
 
-    v = (
-        resolve_snapshot(table_dir, snapshot)
-        if snapshot is not None
-        else current_snapshot(table_dir)
-    )
+    view = table_view(table_dir, snapshot)
+    v = view.version
     if v is None:
         raise ValueError(f"{table_dir} has no committed snapshot")
     cols = list(read_summary(spark, table_dir)["columns"])
@@ -110,7 +106,7 @@ def build_token_index(
         raise ValueError(
             f"text_col {text_col!r} not in table columns {cols}"
         )
-    df = decode_table(spark, table_dir, columns=[text_col], snapshot=v,
+    df = decode_table(spark, table_dir, columns=[text_col], snapshot=view,
                       with_positions=True)
     _postings(df, text_col, pattern).write.mode("overwrite").parquet(
         f"{index_dir}/v{v}"

@@ -99,18 +99,14 @@ def build_vector_index(
     pinned version / tag via ``snapshot=``)."""
     from fhirflat_spark.decode import decode_table
     from fhirflat_spark.manifest import (
-        current_snapshot,
         read_summary,
-        resolve_snapshot,
         snapshot_dataset_sha,
+        table_view,
     )
     from fhirflat_spark.operators.similarity import train_centroids
 
-    v = (
-        resolve_snapshot(table_dir, snapshot)
-        if snapshot is not None
-        else current_snapshot(table_dir)
-    )
+    view = table_view(table_dir, snapshot)
+    v = view.version
     if v is None:
         raise ValueError(f"{table_dir} has no committed snapshot")
     cols = list(read_summary(spark, table_dir)["columns"])
@@ -118,7 +114,7 @@ def build_vector_index(
         if c not in cols:
             raise ValueError(f"column {c!r} not in table columns {cols}")
     df = decode_table(spark, table_dir, columns=[id_col, vector_col],
-                      snapshot=v, with_positions=True)
+                      snapshot=view, with_positions=True)
     C = train_centroids(df.select(id_col, vector_col), k,
                         vec_col=vector_col, id_col=id_col, iters=iters)
     _postings(df, C, vector_col).write.mode("overwrite").parquet(
@@ -245,12 +241,11 @@ DRIVER_SEARCH_ROWS = 500_000
 
 
 def _candidate_rows(table_dir: str, parts: list[int]) -> int:
-    """Manifest row total of the posting partitions (metadata-only)."""
-    try:
-        t = fsio.read_parquet(f"{table_dir}/manifest",
-                              columns=["part_id", "rows"])
-    except FileNotFoundError:
-        return DRIVER_SEARCH_ROWS + 1
+    """Head-snapshot row total of the posting partitions
+    (metadata-only)."""
+    from fhirflat_spark.manifest import table_view
+
+    t = table_view(table_dir).manifest
     rows_of = dict(zip(t["part_id"].to_pylist(), t["rows"].to_pylist()))
     return sum(int(rows_of.get(int(p), 0)) for p in parts)
 

@@ -136,21 +136,22 @@ def test_binpack_then_append_expire_vacuum_lifecycle(spark, fragged):
 def test_binpack_with_order_by_sorts_the_slice(spark, fragged):
     from pyspark.sql import types as T
 
-    from fhirflat_spark.decode import _live_part_ids
-    from fhirflat_spark.manifest import prune_part_ids_by_zones
+    from fhirflat_spark.manifest import prune_part_ids_by_zones, table_view
 
     out, src = fragged
-    before = set(_live_part_ids(out))
+    before = set(table_view(out).part_ids)
     rep = binpack_partitions(spark, out, rows_per_bucket=100,
                              order_by=["doc_id"])
     assert rep["packed"] is True and rep["new_partitions"] >= 2
     assert _rows(spark, out) == sorted(tuple(r) for r in src.collect())
     # the rewritten slice is range-clustered: a narrow probe inside it
     # prunes to ONE of the new partitions
-    pids = _live_part_ids(out)
+    view = table_view(out)
+    pids = view.part_ids
     new_pids = sorted(set(pids) - before)
     assert len(new_pids) == rep["new_partitions"]
-    keep = prune_part_ids_by_zones(out, pids, [("doc_id", 340, 355)],
+    keep = prune_part_ids_by_zones(view.manifest, pids,
+                                   [("doc_id", 340, 355)],
                                    {"doc_id": T.LongType()})
     assert len([p for p in keep if p in new_pids]) <= 1
 

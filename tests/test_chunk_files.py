@@ -33,7 +33,7 @@ from fhirflat_spark.encode import (
     encode_kernel_factory,
     encode_table,
 )
-from fhirflat_spark.manifest import completed_partitions
+from fhirflat_spark.manifest import table_view
 
 KEYS = ["repo", "path", "commit"]
 
@@ -103,7 +103,7 @@ def test_append_replay_replaces_spark_written_file(spark, tmp_path):
     delta = _local(spark, 600, seed=44)
     out = str(tmp_path / "t")
     encode_table(base, out, rows_per_bucket=500)
-    top = max(completed_partitions(spark, out))
+    top = max(table_view(out).part_ids)
 
     # a chunk file of this table's layout under a Spark-written name,
     # planted in the dir of the first part id the append will mint

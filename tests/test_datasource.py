@@ -628,8 +628,8 @@ def test_read_parts_arrow_matches_decode_and_refuses_deletes(
     )
     append_table(df2, out, rows_per_bucket=10)
 
-    from fhirflat_spark.decode import _live_part_ids
-    pids = _live_part_ids(out)
+    from fhirflat_spark.manifest import table_view
+    pids = table_view(out).part_ids
     t = read_parts_arrow(out, pids, ["doc_id", "extra"])
     got = sorted(zip(t.column("doc_id").to_pylist(),
                      t.column("extra").to_pylist()))

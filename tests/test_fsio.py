@@ -103,10 +103,10 @@ def test_fragment_commit_and_merge_through_registered_fs(testfs):
 
 def test_manifest_commit_and_summary_through_registered_fs(spark, testfs):
     from fhirflat_spark.manifest import (
-        completed_partitions,
         current_snapshot,
         read_summary,
         snapshot_part_ids,
+        table_view,
         write_manifest,
         write_summary,
     )
@@ -130,7 +130,7 @@ def test_manifest_commit_and_summary_through_registered_fs(spark, testfs):
     )
     assert current_snapshot(out) == 1
     assert snapshot_part_ids(out, 1) == [0, 1]
-    assert completed_partitions(spark, out) == frozenset({0, 1})
+    assert table_view(out).part_ids == [0, 1]
 
     write_summary(spark, out, ["a", "b"])
     assert os.path.exists(os.path.join(testfs, "ds", "_SUMMARY.json"))

@@ -125,11 +125,11 @@ def test_maintain_compacts_expires_and_preserves_content(spark, fragmented):
 
 
 def _zone_pruned(out, col, lo, hi, dtype):
-    from fhirflat_spark.decode import _live_part_ids
-    from fhirflat_spark.manifest import prune_part_ids_by_zones
+    from fhirflat_spark.manifest import prune_part_ids_by_zones, table_view
 
-    pids = _live_part_ids(out)
-    return prune_part_ids_by_zones(out, pids, [(col, lo, hi)],
+    view = table_view(out)
+    pids = view.part_ids
+    return prune_part_ids_by_zones(view.manifest, pids, [(col, lo, hi)],
                                    {col: dtype}), pids
 
 

@@ -131,3 +131,20 @@ def test_transcode_carries_sketches(spark, docs, tmp_path):
     append_table(docs.limit(50), dst, rows_per_bucket=100)
     assert ndv_from_metadata(dst, "lang") is not None
     assert "lang" in read_summary(None, dst)["ndv_columns"]
+
+
+def test_transcode_keeps_backfilled_sketches(spark, tmp_path):
+    """Sketches ``analyze_table`` backfilled live only in the manifest
+    fragments, not in the chunk stats: transcode carries them over."""
+    from fhirflat_spark.datagen import gen_spark
+    from fhirflat_spark.decode import transcode_table
+    from fhirflat_spark.maintenance import analyze_table
+
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    encode_table(gen_spark(spark, 3000, seed=5), src)
+    assert ndv_from_metadata(src, "lang") is None
+    analyze_table(spark, src, ndv_columns=["lang"])
+    assert ndv_from_metadata(src, "lang") == 12
+    transcode_table(spark, src, dst)
+    assert ndv_from_metadata(dst, "lang") == 12

@@ -15,7 +15,12 @@ from pyspark.sql import types as T
 from fhirflat_spark import fsio
 from fhirflat_spark.decode import decode_table
 from fhirflat_spark.encode import encode_table
-from fhirflat_spark.manifest import prune_part_ids_by_zones
+from fhirflat_spark.manifest import (
+    current_snapshot,
+    prune_part_ids_by_zones,
+    snapshot_manifest_path,
+    table_view,
+)
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -59,7 +64,8 @@ def test_prune_part_ids_matches_zones(clustered_ds):
         if not (json.loads(z)["doc_id"][1] < lo or json.loads(z)["doc_id"][0] > hi)
     ]
     kept = prune_part_ids_by_zones(
-        out, ids, [("doc_id", lo, hi)], {"doc_id": T.LongType()}
+        table_view(out).manifest,
+        ids, [("doc_id", lo, hi)], {"doc_id": T.LongType()}
     )
     assert kept == sorted(expect)
     assert 0 < len(kept) < len(ids)
@@ -71,17 +77,20 @@ def test_unknown_ids_and_columns_kept_conservatively(clustered_ds):
     # a candidate id the current manifest does not know (pinned snapshot
     # whose partition was rolled back) must be KEPT, not dropped
     kept = prune_part_ids_by_zones(
-        out, [*ids, 9999], [("doc_id", -50, -10)], {"doc_id": T.LongType()}
+        table_view(out).manifest,
+        [*ids, 9999], [("doc_id", -50, -10)], {"doc_id": T.LongType()}
     )
     assert kept == [9999]
     # a filter on a column without recorded zones prunes nothing
     kept2 = prune_part_ids_by_zones(
-        out, ids, [("no_such_col", 0, 1)], {"no_such_col": T.LongType()}
+        table_view(out).manifest,
+        ids, [("no_such_col", 0, 1)], {"no_such_col": T.LongType()}
     )
     assert kept2 == ids
     # unknown type: conservative keep
     kept3 = prune_part_ids_by_zones(
-        out, ids, [("doc_id", 10**9, 2 * 10**9)], {"doc_id": None}
+        table_view(out).manifest,
+        ids, [("doc_id", 10**9, 2 * 10**9)], {"doc_id": None}
     )
     assert kept3 == ids
 
@@ -102,12 +111,14 @@ def test_pre_zone_manifest_keeps_everything(spark, clustered_ds, tmp_path):
     out, _ = clustered_ds
     legacy = str(tmp_path / "legacy")
     shutil.copytree(out, legacy)
-    t = fsio.read_parquet(f"{legacy}/manifest")
+    head = snapshot_manifest_path(legacy, current_snapshot(legacy))
+    t = fsio.read_parquet(head)
     t2 = t.drop_columns(["col_zones"])
-    fsio.write_parquet_atomic(t2, f"{legacy}/manifest/manifest.parquet")
+    fsio.write_parquet_atomic(t2, head)
     ids = t["part_id"].to_pylist()
     kept = prune_part_ids_by_zones(
-        legacy, ids, [("doc_id", -50, -10)], {"doc_id": T.LongType()}
+        table_view(legacy).manifest,
+        ids, [("doc_id", -50, -10)], {"doc_id": T.LongType()}
     )
     assert kept == ids
 

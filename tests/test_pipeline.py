@@ -24,7 +24,13 @@ from fhirflat_spark.decode import (
     verify_table,
 )
 from fhirflat_spark.encode import encode_table, plan_partition_ids
-from fhirflat_spark.manifest import dataset_checksum, read_manifest, read_summary
+from fhirflat_spark.manifest import (
+    current_snapshot,
+    dataset_checksum,
+    read_manifest,
+    read_summary,
+    snapshot_manifest_path,
+)
 
 N_ROWS = 6000
 
@@ -184,12 +190,13 @@ def test_resume_reencodes_missing(spark, tmp_path):
     out = str(tmp_path / "resume")
     df = gen_spark(spark, 3000, seed=7)
     encode_table(df, out, rows_per_bucket=500)
-    man = f"{out}/manifest/manifest.parquet"
+    man = snapshot_manifest_path(out, current_snapshot(out))
     t = fsio.read_parquet(man)
     all_parts = sorted(t["part_id"].to_pylist())
     victim = all_parts[0]
     fsio.delete_dir(f"{out}/chunks/part_id={victim}")
-    # rewrite the manifest without the victim row (simulates a failed task)
+    # rewrite the head snapshot's manifest without the victim row
+    # (simulates a failed task)
     fsio.write_parquet_atomic(
         t.filter([p != victim for p in t["part_id"].to_pylist()]), man
     )
@@ -217,7 +224,7 @@ def test_resume_keeps_appended_key_counts(spark, tmp_path):
     encode_table(df, out, rows_per_bucket=500)
     append_table(gen_spark(spark, 1000, seed=8), out, rows_per_bucket=500)
     assert sum(c for _, c in load_key_counts(out)) == 4000
-    man = f"{out}/manifest/manifest.parquet"
+    man = snapshot_manifest_path(out, current_snapshot(out))
     t = fsio.read_parquet(man)
     victim = min(t["part_id"].to_pylist())
     fsio.delete_dir(f"{out}/chunks/part_id={victim}")
@@ -245,7 +252,7 @@ def test_resume_restores_lost_partitions_exactly(spark, tmp_path, drop_repo):
     clean, out = str(tmp_path / "clean"), str(tmp_path / "resumed")
     encode_table(df, clean, rows_per_bucket=500)
     encode_table(df, out, rows_per_bucket=500)
-    man = f"{out}/manifest/manifest.parquet"
+    man = snapshot_manifest_path(out, current_snapshot(out))
     t = fsio.read_parquet(man)
     pids = sorted(t["part_id"].to_pylist())
     victims = {pids[0], pids[len(pids) // 2]}  # P=12 without repo: {0, 6}

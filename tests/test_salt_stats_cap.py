@@ -133,12 +133,12 @@ def test_capped_append_sizes_tail_bucket_from_remainder(spark, tmp_path,
     """A capped append plans from its own placement scan, so the "o:"
     fallback bucket is sized from the measured tail mass: a heavy tail
     spreads over many appended partitions instead of landing in one."""
-    from fhirflat_spark.manifest import completed_partitions, read_manifest
+    from fhirflat_spark.manifest import read_manifest, table_view
 
     out = str(tmp_path / "t")
     encode_table(_skew_df(spark, n_keys=4, heavy_rows=50, tail_rows=10), out,
                  rows_per_bucket=100)
-    offset = max(completed_partitions(spark, out)) + 1
+    offset = max(table_view(out).part_ids) + 1
     monkeypatch.setattr(enc, "SALT_STATS_CAP", 2)
     # 59 tail keys x 40 rows: ~2300 rows fold into "o:" past the cap
     delta = _skew_df(spark, n_keys=60, heavy_rows=200, tail_rows=40)

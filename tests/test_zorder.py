@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 from fhirflat_spark import fsio
 from fhirflat_spark.decode import decode_table
 from fhirflat_spark.encode import encode_table
-from fhirflat_spark.manifest import prune_part_ids_by_zones
+from fhirflat_spark.manifest import prune_part_ids_by_zones, table_view
 from fhirflat_spark.zorder import cluster_by_zorder, zorder_key
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -67,13 +67,14 @@ def test_both_dimensions_prune_partitions(spark, zordered):
     type_of = {"doc_id": T.LongType(), "n_chars": T.LongType()}
     hi_d = docs.agg(F.max("doc_id")).collect()[0][0]
     k_doc = prune_part_ids_by_zones(
-        out, ids, [("doc_id", 0, hi_d // 5)], type_of
+        table_view(out).manifest, ids, [("doc_id", 0, hi_d // 5)], type_of
     )
     p = docs.agg(
         F.expr("percentile(n_chars, array(0.4, 0.6))").alias("p")
     ).collect()[0]["p"]
     k_chars = prune_part_ids_by_zones(
-        out, ids, [("n_chars", int(p[0]), int(p[1]))], type_of
+        table_view(out).manifest,
+        ids, [("n_chars", int(p[0]), int(p[1]))], type_of
     )
     # a 1-d layout prunes only its sort column; the curve prunes BOTH
     assert len(k_doc) < len(ids)
@@ -105,7 +106,8 @@ def test_string_column_participates(spark, tmp_path):
         r["lang"] for r in docs.select("lang").distinct().collect()
     )
     kept = prune_part_ids_by_zones(
-        out, ids, [("lang", langs[0], langs[0])], {"lang": T.StringType()}
+        table_view(out).manifest,
+        ids, [("lang", langs[0], langs[0])], {"lang": T.StringType()}
     )
     assert len(kept) < len(ids)
     dec = (
