@@ -313,8 +313,9 @@ def main() -> None:
     gby.add_argument("--out", required=True)
     gby.add_argument("--group", required=True,
                      help="group column (comma list = tuple GROUP BY)")
-    gby.add_argument("--value", help="integral value column: adds "
-                                     "sum/min/max (default: count only)")
+    gby.add_argument("--value", help="integral or string value column: "
+                                     "adds count/sum/min/max, no sum on "
+                                     "strings (default: count only)")
     gby.add_argument("--snapshot", default=None)
     gby.add_argument("--where", default=None,
                      help="filters: comma = AND, | inside a term = OR, "
@@ -734,15 +735,11 @@ def main() -> None:
         gcols = [c.strip() for c in args.group.split(",") if c.strip()]
         where = _parse_where(args.where)
         if args.value:
-            if len(gcols) != 1:
-                raise SystemExit("--value needs exactly one --group column")
-            df = group_agg_encoded(spark, args.out, gcols[0], args.value,
+            df = group_agg_encoded(spark, args.out, gcols, args.value,
                                    snapshot=snap, where=where)
         else:
-            df = group_count_encoded(
-                spark, args.out, gcols[0] if len(gcols) == 1 else gcols,
-                snapshot=snap, where=where,
-            )
+            df = group_count_encoded(spark, args.out, gcols, snapshot=snap,
+                                     where=where)
         df.orderBy(F.col("cnt").desc()).show(args.show, truncate=40)
         print(json.dumps({"groups": df.count()}))
     elif args.cmd == "topk":

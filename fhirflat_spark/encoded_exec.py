@@ -3,21 +3,20 @@
 The classic payoff of lightweight compression (C-Store / Abadi,
 "Integrating Compression and Execution in Column-Oriented Database
 Systems", SIGMOD'06) is that some operators can run on the encoded
-representation without ever materializing row values:
+representation without ever materializing row values.
 
-- **dict** chunks: ``np.bincount`` over the bit-packed code stream +
-  the (tiny) dictionary — per-chunk work is O(rows) on small ints and
-  O(distinct) on the actual values; the strings themselves are touched
-  once per distinct value, not once per row.
-- **rle** chunks: the run-length stream *is* a pre-aggregated
-  (value, count) list — group-count needs no row materialization at
-  all, just a sum of run lengths per run value.
-- **constant** chunks: one (value, n_rows) pair straight from the
-  chunk header.
-- anything else (zstd/fsst/prefix strings, numeric streams) falls back
-  to a normal chunk decode followed by Arrow's C++ hash group-by — the
-  partial-aggregation shape is identical, only the per-chunk constant
-  factor differs.
+Every group column of a chunk becomes one code stream plus a small
+key array (``_codes_keys``): **dict** chunks give their bit-unpacked
+codes and dictionary, **rle** chunks their run index per row and run
+values, **constant** chunks an all-zero stream and the header value;
+anything else (zstd/fsst/prefix strings, numeric streams) decodes and
+dictionary-encodes with Arrow. One path then serves every codec and
+any number of group columns (``_group_ids``): the code streams combine
+into a mixed-radix int64 id per row, the ids are counted with
+``np.bincount`` (or ``np.unique`` when the radix product exceeds the
+chunk's rows), and only the distinct tuples touch the key arrays — so
+per-chunk work is O(rows) on small ints and O(distinct) on the actual
+values; a single group column is the 1-tuple case.
 
 Both entry points emit **per-task partial aggregates** (one row per
 distinct group value per task — metadata-sized), so the only shuffle
@@ -41,6 +40,7 @@ deletes are logical overlays — compact first, or use
 from __future__ import annotations
 
 import json
+import math
 
 import numpy as np
 import pyarrow as pa
@@ -52,47 +52,6 @@ from pyspark.sql import types as T
 from fhirflat_spark.codecs import decode_array
 from fhirflat_spark.codecs.core import from_physical, unpack_bits
 from fhirflat_spark.codecs.kernels import _dec_sub, ipc_array
-
-
-def _keys_counts(blob) -> tuple[pa.Array, np.ndarray, int]:
-    """One chunk blob -> (distinct values, counts, null_count).
-
-    Stays in the encoded domain for dict/rle/constant; decodes + Arrow
-    ``value_counts`` otherwise. The returned ``values`` array is the
-    chunk's LOGICAL type and never longer than the chunk's distinct
-    count."""
-    from fhirflat_spark.codecs.core import unpack_chunk
-
-    codec, n, token, meta, secs = unpack_chunk(blob)
-    if n == 0:
-        return None, None, 0
-    if codec == "nullable":
-        vals, cnts, _ = _keys_counts(secs[1])
-        return vals, cnts, n - meta["valid"]
-    if codec == "constant":
-        one = from_physical(ipc_array(bytes(secs[0])), token)
-        return one.slice(0, 1), np.array([n], dtype=np.int64), 0
-    if codec == "dict":
-        codes = unpack_bits(secs[0], meta["width"], n).view(np.int64)
-        cnts = np.bincount(codes, minlength=meta["size"]).astype(np.int64)
-        vals = from_physical(_dec_sub(secs[1]), token)
-        return vals, cnts, 0
-    if codec == "rle":
-        lens = _dec_sub(secs[0]).to_numpy(zero_copy_only=False)
-        vals = from_physical(_dec_sub(secs[1]), token)
-        return vals, lens.astype(np.int64, copy=False), 0
-    arr = decode_array(blob)
-    nulls = arr.null_count
-    if nulls:
-        arr = arr.drop_null()
-    import pyarrow.compute as pc
-
-    vc = pc.value_counts(arr)
-    return (
-        vc.field("values"),
-        vc.field("counts").to_numpy(zero_copy_only=False).astype(np.int64),
-        nulls,
-    )
 
 
 def _codes_keys(blob) -> tuple[np.ndarray, pa.Array]:
@@ -607,6 +566,118 @@ def _arrow_field(spark, field: T.StructField) -> pa.DataType:
     return _arrow_types(spark, T.StructType([field]))[0]
 
 
+_RADIX_CAP = 1 << 62  # mixed-radix group ids stay clear of int64 overflow
+
+
+def _group_ids(codes_l: list[np.ndarray], keys_l: list[pa.Array],
+               radix_cap: int):
+    """One chunk's group columns -> ``(ids, uniq, cnts, keys)``.
+
+    Each column's ``_codes_keys`` stream (code -1 = NULL, shifted +1)
+    is one digit of a mixed-radix int64 id per row. ``uniq`` holds the
+    sorted distinct ids, ``cnts`` their row counts and ``keys`` one
+    array per column with the group values aligned to ``uniq`` — values
+    are touched once per distinct tuple, never once per row. Distinct
+    ids come from ``np.bincount`` when the radix product is at most the
+    row count, from ``np.unique`` otherwise. A product at or above
+    ``radix_cap`` (int64 overflow) uniques the code tuples row-wise
+    instead; ``ids`` are then their dense ranks — same groups, slower."""
+    radices = [len(k) + 1 for k in keys_l]
+    prod = math.prod(radices)
+    if prod >= radix_cap:
+        tup, ids, cnts = np.unique(np.stack(codes_l, axis=1), axis=0,
+                                   return_inverse=True, return_counts=True)
+        ids, uniq, digits = ids.reshape(-1), np.arange(len(cnts)), tup.T
+    else:
+        ids = codes_l[0] + 1
+        for cds, r in zip(codes_l[1:], radices[1:]):
+            ids = ids * r + (cds + 1)
+        if prod <= len(ids):
+            cnts = np.bincount(ids, minlength=prod)
+            uniq = np.flatnonzero(cnts)
+            cnts = cnts[uniq]
+        else:
+            uniq, cnts = np.unique(ids, return_counts=True)
+        digits, rem = [], uniq
+        for r in reversed(radices):
+            digits.append(rem % r - 1)  # back to -1 = NULL
+            rem = rem // r
+        digits.reverse()
+    keys = [k.take(pa.array(d, mask=d < 0)) for d, k in zip(digits, keys_l)]
+    return ids, uniq, cnts.astype(np.int64, copy=False), keys
+
+
+def _chunk_groups(batches, fplan: dict, ats: list[pa.DataType],
+                  radix_cap: int):
+    """Per chunk with matching rows of a ``_plan_scan`` frame: yields
+    ``(batch, i, m, _group_ids(...))`` over the group blobs ``__b0..``
+    (one per Arrow type in ``ats``), row-masked by the where plan ``m``
+    (None = every row). A chunk that predates a group column gives it
+    an all-NULL digit."""
+    from fhirflat_spark.decode import _blob_view
+
+    for batch in batches:
+        nrs = batch.column("n_rows")
+        for i in range(batch.num_rows):  # chunk granularity (~16k rows)
+            n = nrs[i].as_py()
+            m = _chunk_mask(fplan, batch, i, n) if n else "skip"
+            if isinstance(m, str):  # empty chunk or zone/Bloom/mask skip
+                continue
+            codes_l, keys_l = [], []
+            for j, at in enumerate(ats):
+                blobs = batch.column(f"__b{j}")
+                if blobs[i].is_valid:
+                    cds, kys = _codes_keys(_blob_view(blobs, i))
+                else:
+                    cds = np.full(n, -1, dtype=np.int64)
+                    kys = pa.array([], type=at)
+                if isinstance(kys, pa.ChunkedArray):
+                    kys = kys.combine_chunks()
+                codes_l.append(cds if m is None else cds[m])
+                keys_l.append(kys.cast(at))
+            yield batch, i, m, _group_ids(codes_l, keys_l, radix_cap)
+
+
+def _merge_parts(parts: list[pa.Table], kn: list[str],
+                 ats: list[pa.DataType], aggs: list[tuple]):
+    """Task-wide merge of per-chunk partials: group on the key columns
+    ``kn`` and fold each ``(column, arrow agg, type)`` of ``aggs``.
+    ``min_count=1`` keeps SQL semantics: an all-NULL sum stays NULL."""
+    import pyarrow.compute as pc
+
+    opts = pc.ScalarAggregateOptions(min_count=1)
+    merged = pa.concat_tables(parts).group_by(
+        kn, use_threads=False
+    ).aggregate([(c, fn, opts) for c, fn, _ in aggs])
+    return pa.RecordBatch.from_arrays(
+        [merged.column(k).combine_chunks().cast(at)
+         for k, at in zip(kn, ats)]
+        + [merged.column(f"{c}_{fn}").combine_chunks().cast(t)
+           for c, fn, t in aggs],
+        names=kn + [c for c, _, _ in aggs],
+    )
+
+
+def _group_by(pruned: DataFrame, kernel, gfields: list[T.StructField],
+              cols: list[str], tail: list[T.StructField],
+              aggs: list) -> DataFrame:
+    """Run ``kernel`` over the chunk scan — it emits key columns
+    ``k0..`` then the ``tail`` fields, one row per group per task — and
+    merge the partials with one Catalyst groupBy; the keys come back
+    named ``cols``."""
+    if not cols:
+        raise ValueError("encoded GROUP BY needs at least one group column")
+    kn = [f"k{j}" for j in range(len(cols))]
+    partial = T.StructType(
+        [T.StructField(k, f.dataType, True) for k, f in zip(kn, gfields)]
+        + tail
+    )
+    merged = pruned.mapInArrow(kernel, schema=partial).groupBy(*kn).agg(
+        *aggs
+    )
+    return merged.toDF(*cols, *merged.columns[len(kn):])
+
+
 def group_count_encoded(spark: SparkSession, out_dir: str,
                         column: str | list[str],
                         snapshot: int | str | None = None,
@@ -614,91 +685,40 @@ def group_count_encoded(spark: SparkSession, out_dir: str,
     """``SELECT column(s), COUNT(*) AS cnt FROM dataset [WHERE ...]
     GROUP BY ...`` computed on the encoded chunks — dict/rle/constant
     chunks never materialize a row's value (see module docstring).
-    Exact, including the NULL group(s). A list of columns groups on the
-    tuple: per chunk the per-column code streams combine into one
-    mixed-radix id, so the distinct work is O(rows) integer ops +
-    O(distinct tuples) value touches. ``where`` pushes conjunctive
-    predicates down the zone → Bloom → dictionary-domain row-mask tower
-    (see ``_plan_scan``); exactness is validated up front since no
-    residual re-check exists."""
-    if isinstance(column, (list, tuple)):
-        return _group_count_multi(spark, out_dir, list(column), snapshot,
-                                  where=where)
-    pruned, (gfield,), fplan = _plan_scan(spark, out_dir, [column],
-                                          snapshot, where=where)
-    at = _arrow_field(spark, gfield)
-    out_pa = pa.schema([pa.field("k", at), pa.field("cnt", pa.int64())])
+    Exact, including the NULL group(s). A single column is the 1-tuple
+    case: per chunk the per-column code streams combine into one
+    mixed-radix id (:func:`_group_ids`), so the distinct work is
+    O(rows) integer ops + O(distinct tuples) value touches. ``where``
+    pushes predicates down the zone → Bloom → dictionary-domain
+    row-mask tower (see ``_plan_scan``); exactness is validated up
+    front since no residual re-check exists."""
+    cols = [column] if isinstance(column, str) else list(column)
+    return _group_count_multi(spark, out_dir, cols, snapshot, where=where)
+
+
+def _group_count_multi(spark: SparkSession, out_dir: str,
+                       cols: list[str], snapshot,
+                       radix_cap: int = _RADIX_CAP,
+                       where=None) -> DataFrame:
+    """:func:`group_count_encoded` over a list of group columns; a low
+    ``radix_cap`` forces the overflow fallback of :func:`_group_ids`."""
+    pruned, gfields, fplan = _plan_scan(spark, out_dir, cols, snapshot,
+                                        where=where)
+    ats = [_arrow_field(spark, f) for f in gfields]
+    kn = [f"k{j}" for j in range(len(cols))]
 
     def kernel(batches):
-        from fhirflat_spark.decode import _blob_view
+        parts = [
+            pa.table(dict(zip(kn, keys)) | {"cnt": cnts})
+            for *_, (_ids, _uniq, cnts, keys)
+            in _chunk_groups(batches, fplan, ats, radix_cap)
+        ]
+        if parts:
+            yield _merge_parts(parts, kn, ats, [("cnt", "sum", pa.int64())])
 
-        keys: list[pa.Array] = []
-        counts: list[np.ndarray] = []
-        null_cnt = 0
-        for batch in batches:
-            nrs = batch.column("n_rows")
-            blobs = batch.column("__b0")
-            for i in range(batch.num_rows):  # chunk granularity (~16k rows)
-                n = nrs[i].as_py()
-                m = _chunk_mask(fplan, batch, i, n)
-                if isinstance(m, str):  # zone/Bloom/row-mask chunk skip
-                    continue
-                if not blobs[i].is_valid:
-                    # schema evolution: chunk predates the column
-                    null_cnt += n if m is None else int(m.sum())
-                    continue
-                if m is None:
-                    vals, cnts, nc = _keys_counts(_blob_view(blobs, i))
-                else:
-                    # filtered: needs row alignment — codes path
-                    codes, kys = _codes_keys(_blob_view(blobs, i))
-                    codes = codes[m]
-                    nc = int((codes < 0).sum())
-                    posc = codes[codes >= 0]
-                    if isinstance(kys, pa.ChunkedArray):
-                        kys = kys.combine_chunks()
-                    cnts = np.bincount(
-                        posc, minlength=len(kys)
-                    ).astype(np.int64)
-                    nz = np.flatnonzero(cnts)
-                    vals = kys.take(pa.array(nz)) if len(nz) else None
-                    cnts = cnts[nz]
-                null_cnt += nc
-                if vals is not None and len(vals):
-                    keys.append(vals.cast(at))
-                    counts.append(cnts)
-        if not keys and not null_cnt:
-            return
-        if keys:
-            t = pa.table({
-                "k": pa.concat_arrays(
-                    [k.combine_chunks() if isinstance(k, pa.ChunkedArray)
-                     else k for k in keys]
-                ),
-                "cnt": pa.array(np.concatenate(counts), type=pa.int64()),
-            })
-            merged = t.group_by("k").aggregate([("cnt", "sum")])
-            kcol = merged.column("k").combine_chunks()
-            ccol = merged.column("cnt_sum").cast(pa.int64()).combine_chunks()
-        else:
-            kcol = pa.array([], type=at)
-            ccol = pa.array([], type=pa.int64())
-        if null_cnt:
-            kcol = pa.concat_arrays([kcol, pa.nulls(1, type=at)])
-            ccol = pa.concat_arrays(
-                [ccol, pa.array([null_cnt], type=pa.int64())]
-            )
-        yield pa.RecordBatch.from_arrays([kcol, ccol], schema=out_pa)
-
-    partial = T.StructType([
-        T.StructField("k", gfield.dataType, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-    partials = pruned.mapInArrow(kernel, schema=partial)
-    return (
-        partials.groupBy("k").agg(F.sum("cnt").alias("cnt"))
-        .withColumnRenamed("k", column)
-    )
+    return _group_by(pruned, kernel, gfields, cols,
+                     [T.StructField("cnt", T.LongType(), False)],
+                     [F.sum("cnt").alias("cnt")])
 
 
 _BUCKET_US = {
@@ -804,120 +824,6 @@ def group_timebucket_encoded(spark: SparkSession, out_dir: str,
     )
 
 
-def _group_count_multi(spark: SparkSession, out_dir: str,
-                       cols: list[str], snapshot,
-                       radix_cap: int = 1 << 62,
-                       where=None) -> DataFrame:
-    """Tuple GROUP BY in the encoded domain. Per chunk, each column's
-    code stream (code -1 = NULL, shifted +1) becomes a digit in a
-    mixed-radix combined id; ``np.unique`` over the ids yields the
-    distinct tuples + counts, and only those distinct tuples ever touch
-    the value arrays (``keys.take``). If the radix product would
-    overflow int64 (pathological per-chunk cardinalities) the chunk
-    falls back to materialize + Arrow hash group-by — same result."""
-    if len(cols) < 2:
-        raise ValueError("_group_count_multi needs >= 2 columns")
-    pruned, gfields, fplan = _plan_scan(spark, out_dir, cols, snapshot,
-                                        where=where)
-    ats = [_arrow_field(spark, f) for f in gfields]
-    out_pa = pa.schema(
-        [pa.field(f"k{j}", at) for j, at in enumerate(ats)]
-        + [pa.field("cnt", pa.int64())]
-    )
-
-    def kernel(batches):
-        from fhirflat_spark.decode import _blob_view
-
-        parts: list[pa.Table] = []
-        for batch in batches:
-            nrs = batch.column("n_rows")
-            bcols = [batch.column(f"__b{j}") for j in range(len(cols))]
-            for i in range(batch.num_rows):
-                n = nrs[i].as_py()
-                if n == 0:
-                    continue
-                m = _chunk_mask(fplan, batch, i, n)
-                if isinstance(m, str):
-                    continue
-                codes_l, keys_l = [], []
-                for j in range(len(cols)):
-                    if bcols[j][i].is_valid:
-                        cds, kys = _codes_keys(_blob_view(bcols[j], i))
-                    else:  # chunk predates the column: all-NULL digit
-                        cds = np.full(n, -1, dtype=np.int64)
-                        kys = pa.array([], type=ats[j])
-                    if isinstance(kys, pa.ChunkedArray):
-                        kys = kys.combine_chunks()
-                    codes_l.append(cds if m is None else cds[m])
-                    keys_l.append(kys.cast(ats[j]))
-                if m is not None:
-                    n = int(m.sum())
-                    if n == 0:
-                        continue
-                radices = [len(k) + 1 for k in keys_l]
-                prod = 1
-                for r in radices:
-                    prod *= r
-                if prod < radix_cap:
-                    combined = np.zeros(n, dtype=np.int64)
-                    for cds, r in zip(codes_l, radices):
-                        combined = combined * r + (cds + 1)
-                    uniq, cnts = np.unique(combined, return_counts=True)
-                    digits = []
-                    rem = uniq
-                    for r in reversed(radices):
-                        digits.append(rem % r)
-                        rem = rem // r
-                    digits.reverse()
-                    arrays = {}
-                    for j, (d, kys) in enumerate(zip(digits, keys_l)):
-                        d0 = d - 1  # back to -1 = NULL
-                        idx = pa.array(d0, mask=d0 < 0)
-                        arrays[f"k{j}"] = kys.take(idx)
-                    arrays["cnt"] = pa.array(cnts.astype(np.int64))
-                    parts.append(pa.table(arrays))
-                else:  # per-chunk fallback: materialize + hash group-by
-                    t = pa.table({
-                        f"k{j}": kys.take(
-                            pa.array(cds, mask=cds < 0)
-                        )
-                        for j, (cds, kys) in enumerate(zip(codes_l, keys_l))
-                    })
-                    agg = t.group_by(
-                        [f"k{j}" for j in range(len(cols))],
-                        use_threads=False,
-                    ).aggregate([([], "count_all")])
-                    parts.append(pa.table(
-                        {f"k{j}": agg.column(f"k{j}")
-                         for j in range(len(cols))}
-                        | {"cnt": agg.column("count_all").cast(pa.int64())}
-                    ))
-        if not parts:
-            return
-        allp = pa.concat_tables(parts)
-        merged = allp.group_by([f"k{j}" for j in range(len(cols))],
-                               use_threads=False).aggregate([("cnt", "sum")])
-        yield pa.RecordBatch.from_arrays(
-            [merged.column(f"k{j}").combine_chunks().cast(ats[j])
-             for j in range(len(cols))]
-            + [merged.column("cnt_sum").cast(pa.int64()).combine_chunks()],
-            schema=out_pa,
-        )
-
-    partial = T.StructType(
-        [T.StructField(f"k{j}", f.dataType, True)
-         for j, f in enumerate(gfields)]
-        + [T.StructField("cnt", T.LongType(), False)]
-    )
-    partials = pruned.mapInArrow(kernel, schema=partial)
-    merged = partials.groupBy(*[f"k{j}" for j in range(len(cols))]).agg(
-        F.sum("cnt").alias("cnt")
-    )
-    for j, c in enumerate(cols):
-        merged = merged.withColumnRenamed(f"k{j}", c)
-    return merged
-
-
 def _check_integral(vfield: T.StructField, value_col: str) -> None:
     if not isinstance(vfield.dataType,
                       (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -938,141 +844,85 @@ def group_agg_encoded(spark: SparkSession, out_dir: str,
     values) and the value column decoded once per chunk. Output columns:
     ``group_col(s), cnt, count_{v}, sum_{v}, min_{v}, max_{v}`` —
     ``count_{v}`` is the NON-NULL value count (AVG's denominator;
-    ``cnt`` counts rows). A list of group columns groups on the tuple
+    ``cnt`` counts rows). One or more group columns group on the tuple
     (mixed-radix combined codes, as in :func:`group_count_encoded`).
 
     ``value_col`` is integral — int64 partial sums stay bit-exact
     under re-aggregation (the same reason manifest col_sums track only
-    integer columns; float partial sums drift) — or (single group
-    column only) a string, where the aggregate is ``cnt, MIN, MAX``
-    with no SUM (binary-collated string min/max re-aggregates exactly;
-    arrow's byte-wise UTF-8 comparison equals Spark's). ``where`` as in
+    integer columns; float partial sums drift) — or a string, where
+    the aggregate is ``cnt, COUNT, MIN, MAX`` with no SUM
+    (binary-collated string min/max re-aggregates exactly; arrow's
+    byte-wise UTF-8 comparison equals Spark's). ``where`` as in
     :func:`group_count_encoded`."""
-    if isinstance(group_col, (list, tuple)):
-        return _group_agg_multi(spark, out_dir, list(group_col), value_col,
-                                snapshot, where=where)
-    pruned, (gfield, vfield), fplan = _plan_scan(
-        spark, out_dir, [group_col, value_col], snapshot, where=where
-    )
+    gcols = [group_col] if isinstance(group_col, str) else list(group_col)
+    return _group_agg_multi(spark, out_dir, gcols, value_col, snapshot,
+                            where=where)
+
+
+def _group_agg_multi(spark: SparkSession, out_dir: str, gcols: list[str],
+                     value_col: str, snapshot,
+                     radix_cap: int = _RADIX_CAP, where=None) -> DataFrame:
+    """:func:`group_agg_encoded` over a list of group columns: Arrow's
+    hash aggregate runs over each chunk's combined group ids (small
+    ints), and the distinct tuples materialize once per chunk, never
+    per row. A low ``radix_cap`` forces :func:`_group_ids`' fallback."""
+    pruned, fields, fplan = _plan_scan(spark, out_dir, gcols + [value_col],
+                                       snapshot, where=where)
+    gfields, vfield = fields[:-1], fields[-1]
     is_str = isinstance(vfield.dataType, T.StringType)
     if not is_str:
         _check_integral(vfield, value_col)
-    gat = _arrow_field(spark, gfield)
-    vat = pa.string() if is_str else pa.int64()
-    out_fields = [pa.field("k", gat), pa.field("cnt", pa.int64()),
-                  pa.field("vc", pa.int64())]
+    ats = [_arrow_field(spark, f) for f in gfields]
+    vat, vst = ((pa.string(), vfield.dataType) if is_str
+                else (pa.int64(), T.LongType()))
+    # (arrow per-chunk agg, arrow merge agg, arrow type, spark type,
+    # spark merge agg) per value aggregate; "count" is COUNT(v)
+    vaggs = [("count", "sum", pa.int64(), T.LongType(), F.sum)]
     if not is_str:
-        out_fields.append(pa.field("s", pa.int64()))
-    out_fields += [pa.field("mn", vat), pa.field("mx", vat)]
-    out_pa = pa.schema(out_fields)
+        vaggs.append(("sum", "sum", pa.int64(), T.LongType(), F.sum))
+    vaggs += [("min", "min", vat, vst, F.min), ("max", "max", vat, vst, F.max)]
+    kn = [f"k{j}" for j in range(len(gcols))]
 
     def kernel(batches):
-        import pyarrow.compute as pc
-
         from fhirflat_spark.decode import _blob_view
 
         parts: list[pa.Table] = []
-        for batch in batches:
-            nrs = batch.column("n_rows")
-            gblobs = batch.column("__b0")
-            vblobs = batch.column("__b1")
-            for i in range(batch.num_rows):
-                n = nrs[i].as_py()
-                if n == 0:
-                    continue
-                m = _chunk_mask(fplan, batch, i, n)
-                if isinstance(m, str):
-                    continue
-                if gblobs[i].is_valid:
-                    codes, keys = _codes_keys(_blob_view(gblobs, i))
-                else:
-                    codes = np.full(n, -1, dtype=np.int64)
-                    keys = pa.array([], type=gat)
-                if vblobs[i].is_valid:
-                    vals = decode_array(_blob_view(vblobs, i)).cast(vat)
-                else:
-                    vals = pa.nulls(n, type=vat)
+        for batch, i, m, (ids, uniq, cnts, keys) in _chunk_groups(
+            batches, fplan, ats, radix_cap
+        ):
+            vblobs = batch.column(f"__b{len(gcols)}")
+            if vblobs[i].is_valid:
+                vals = decode_array(_blob_view(vblobs, i)).cast(vat)
                 if m is not None:
-                    codes = codes[m]
                     vals = vals.filter(pa.array(m))
-                    if len(codes) == 0:
-                        continue
-                # group ids shifted +1: 0 is the NULL group
-                t = pa.table({"g": pa.array(codes + 1), "v": vals})
-                # ("v","count") defaults to only_valid — the non-null
-                # count COUNT(v) needs (AVG's denominator); ("g","count")
-                # is the row count (group codes are never null)
-                agg = t.group_by("g").aggregate(
-                    ([] if is_str else [("v", "sum")])
-                    + [("v", "min"), ("v", "max"), ("v", "count"),
-                       ("g", "count")]
-                )
-                g = agg.column("g").to_numpy(zero_copy_only=False)
-                kc = pa.concat_arrays([
-                    pa.nulls(1, type=gat),
-                    keys.cast(gat).combine_chunks()
-                    if isinstance(keys, pa.ChunkedArray) else keys.cast(gat),
-                ])
-                cols = {
-                    "k": kc.take(pa.array(g)),
-                    "cnt": agg.column("g_count").cast(pa.int64()),
-                    "vc": agg.column("v_count").cast(pa.int64()),
-                }
-                if not is_str:
-                    cols["s"] = agg.column("v_sum").cast(pa.int64())
-                cols["mn"] = agg.column("v_min").cast(vat)
-                cols["mx"] = agg.column("v_max").cast(vat)
-                parts.append(pa.table(cols))
-        if not parts:
-            return
-        allp = pa.concat_tables(parts)
-        # second-level (task-wide) merge: SUM of partial sums must keep
-        # SQL semantics — arrow hash_sum skips nulls but returns 0 (not
-        # NULL) when min_count=0; min_count=1 preserves all-NULL -> NULL
-        opts = pc.ScalarAggregateOptions(min_count=1)
-        merged = allp.group_by("k").aggregate(
-            [("cnt", "sum"), ("vc", "sum")]
-            + ([] if is_str else [("s", "sum", opts)])
-            + [("mn", "min", opts), ("mx", "max", opts)]
-        )
-        arrays = [
-            merged.column("k").combine_chunks().cast(gat),
-            merged.column("cnt_sum").cast(pa.int64()).combine_chunks(),
-            merged.column("vc_sum").cast(pa.int64()).combine_chunks(),
-        ]
-        if not is_str:
-            arrays.append(
-                merged.column("s_sum").cast(pa.int64()).combine_chunks())
-        arrays += [
-            merged.column("mn_min").cast(vat).combine_chunks(),
-            merged.column("mx_max").cast(vat).combine_chunks(),
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_pa)
+            else:  # chunk predates the value column: all NULL
+                vals = pa.nulls(len(ids), type=vat)
+            # ("v", "count") counts only valid values: COUNT(v)
+            agg = pa.table({"g": pa.array(ids), "v": vals}).group_by(
+                "g", use_threads=False
+            ).aggregate([("v", fn) for fn, *_ in vaggs])
+            pos = np.searchsorted(uniq, agg.column("g").to_numpy())
+            parts.append(pa.table(
+                {k: key.take(pa.array(pos)) for k, key in zip(kn, keys)}
+                | {"cnt": cnts[pos]}
+                | {f"v_{fn}": agg.column(f"v_{fn}").cast(t)
+                   for fn, _, t, _, _ in vaggs}
+            ))
+        if parts:
+            yield _merge_parts(
+                parts, kn, ats,
+                [("cnt", "sum", pa.int64())]
+                + [(f"v_{fn}", mfn, t) for fn, mfn, t, _, _ in vaggs],
+            )
 
-    vst = vfield.dataType if is_str else T.LongType()
-    partial = T.StructType(
-        [
-            T.StructField("k", gfield.dataType, True),
-            T.StructField("cnt", T.LongType(), False),
-            T.StructField("vc", T.LongType(), False),
-        ]
-        + ([] if is_str else [T.StructField("s", T.LongType(), True)])
-        + [
-            T.StructField("mn", vst, True),
-            T.StructField("mx", vst, True),
-        ]
-    )
-    partials = pruned.mapInArrow(kernel, schema=partial)
-    aggs = [F.sum("cnt").alias("cnt"),
-            F.sum("vc").alias(f"count_{value_col}")]
-    if not is_str:
-        aggs.append(F.sum("s").alias(f"sum_{value_col}"))
-    aggs += [
-        F.min("mn").alias(f"min_{value_col}"),
-        F.max("mx").alias(f"max_{value_col}"),
-    ]
-    return (
-        partials.groupBy("k").agg(*aggs).withColumnRenamed("k", group_col)
+    return _group_by(
+        pruned, kernel, gfields, gcols,
+        [T.StructField("cnt", T.LongType(), False)]
+        + [T.StructField(f"v_{fn}", st, fn != "count")
+           for fn, _, _, st, _ in vaggs],
+        [F.sum("cnt").alias("cnt")]
+        + [sagg(f"v_{fn}").alias(f"{fn}_{value_col}")
+           for fn, _, _, _, sagg in vaggs],
     )
 
 
@@ -1103,160 +953,6 @@ def group_avg_encoded(spark: SparkSession, out_dir: str,
         (F.col(f"sum_{value_col}").cast("double")
          / F.col(f"count_{value_col}")).alias(f"avg_{value_col}"),
     )
-
-
-def _group_agg_multi(spark: SparkSession, out_dir: str, gcols: list[str],
-                     value_col: str, snapshot,
-                     radix_cap: int = 1 << 62, where=None) -> DataFrame:
-    """Tuple-grouped COUNT/SUM/MIN/MAX: the group columns stay encoded
-    (mixed-radix combined code stream), the value column decodes once
-    per chunk; Arrow's hash aggregate runs over small ints and the
-    distinct tuples materialize once per chunk, never per row."""
-    if len(gcols) < 2:
-        raise ValueError("_group_agg_multi needs >= 2 group columns")
-    pruned, fields, fplan = _plan_scan(spark, out_dir, gcols + [value_col],
-                                       snapshot, where=where)
-    gfields, vfield = fields[:-1], fields[-1]
-    _check_integral(vfield, value_col)
-    ats = [_arrow_field(spark, f) for f in gfields]
-    kf = [pa.field(f"k{j}", at) for j, at in enumerate(ats)]
-    out_pa = pa.schema(kf + [
-        pa.field("cnt", pa.int64()), pa.field("vc", pa.int64()),
-        pa.field("s", pa.int64()),
-        pa.field("mn", pa.int64()), pa.field("mx", pa.int64()),
-    ])
-    nk = len(gcols)
-
-    def kernel(batches):
-        import pyarrow.compute as pc
-
-        from fhirflat_spark.decode import _blob_view
-
-        parts: list[pa.Table] = []
-        for batch in batches:
-            nrs = batch.column("n_rows")
-            bcols = [batch.column(f"__b{j}") for j in range(nk + 1)]
-            for i in range(batch.num_rows):
-                n = nrs[i].as_py()
-                if n == 0:
-                    continue
-                m = _chunk_mask(fplan, batch, i, n)
-                if isinstance(m, str):
-                    continue
-                codes_l, keys_l = [], []
-                for j in range(nk):
-                    if bcols[j][i].is_valid:
-                        cds, kys = _codes_keys(_blob_view(bcols[j], i))
-                    else:
-                        cds = np.full(n, -1, dtype=np.int64)
-                        kys = pa.array([], type=ats[j])
-                    if isinstance(kys, pa.ChunkedArray):
-                        kys = kys.combine_chunks()
-                    codes_l.append(cds if m is None else cds[m])
-                    keys_l.append(kys.cast(ats[j]))
-                if bcols[nk][i].is_valid:
-                    vals = decode_array(
-                        _blob_view(bcols[nk], i)
-                    ).cast(pa.int64())
-                else:
-                    vals = pa.nulls(n, type=pa.int64())
-                if m is not None:
-                    vals = vals.filter(pa.array(m))
-                    n = int(m.sum())
-                    if n == 0:
-                        continue
-                radices = [len(k) + 1 for k in keys_l]
-                prod = 1
-                for r in radices:
-                    prod *= r
-                if prod < radix_cap:
-                    combined = np.zeros(n, dtype=np.int64)
-                    for cds, r in zip(codes_l, radices):
-                        combined = combined * r + (cds + 1)
-                    t = pa.table({"g": pa.array(combined), "v": vals})
-                    agg = t.group_by("g", use_threads=False).aggregate(
-                        [("v", "sum"), ("v", "min"), ("v", "max"),
-                         ("v", "count"), ("g", "count")]
-                    )
-                    g = agg.column("g").to_numpy(zero_copy_only=False)
-                    arrays = {}
-                    rem = g
-                    digits = []
-                    for r in reversed(radices):
-                        digits.append(rem % r)
-                        rem = rem // r
-                    digits.reverse()
-                    for j, (d, kys) in enumerate(zip(digits, keys_l)):
-                        d0 = d - 1
-                        arrays[f"k{j}"] = kys.take(
-                            pa.array(d0, mask=d0 < 0)
-                        )
-                else:  # overflow fallback: materialize the group tuple
-                    t = pa.table(
-                        {f"k{j}": kys.take(pa.array(cds, mask=cds < 0))
-                         for j, (cds, kys) in
-                         enumerate(zip(codes_l, keys_l))}
-                        | {"v": vals}
-                    )
-                    agg = t.group_by(
-                        [f"k{j}" for j in range(nk)], use_threads=False
-                    ).aggregate(
-                        [("v", "sum"), ("v", "min"), ("v", "max"),
-                         ("v", "count"), ([], "count_all")]
-                    )
-                    arrays = {f"k{j}": agg.column(f"k{j}")
-                              for j in range(nk)}
-                cnt_col = (
-                    agg.column("g_count") if "g_count" in agg.column_names
-                    else agg.column("count_all")
-                )
-                arrays["cnt"] = cnt_col.cast(pa.int64())
-                arrays["vc"] = agg.column("v_count").cast(pa.int64())
-                arrays["s"] = agg.column("v_sum").cast(pa.int64())
-                arrays["mn"] = agg.column("v_min").cast(pa.int64())
-                arrays["mx"] = agg.column("v_max").cast(pa.int64())
-                parts.append(pa.table(arrays))
-        if not parts:
-            return
-        allp = pa.concat_tables(parts)
-        opts = pc.ScalarAggregateOptions(min_count=1)
-        merged = allp.group_by(
-            [f"k{j}" for j in range(nk)], use_threads=False
-        ).aggregate([
-            ("cnt", "sum"), ("vc", "sum"), ("s", "sum", opts),
-            ("mn", "min", opts), ("mx", "max", opts),
-        ])
-        yield pa.RecordBatch.from_arrays(
-            [merged.column(f"k{j}").combine_chunks().cast(ats[j])
-             for j in range(nk)]
-            + [merged.column("cnt_sum").cast(pa.int64()).combine_chunks(),
-               merged.column("vc_sum").cast(pa.int64()).combine_chunks(),
-               merged.column("s_sum").cast(pa.int64()).combine_chunks(),
-               merged.column("mn_min").cast(pa.int64()).combine_chunks(),
-               merged.column("mx_max").cast(pa.int64()).combine_chunks()],
-            schema=out_pa,
-        )
-
-    partial = T.StructType(
-        [T.StructField(f"k{j}", f.dataType, True)
-         for j, f in enumerate(gfields)]
-        + [T.StructField("cnt", T.LongType(), False),
-           T.StructField("vc", T.LongType(), False),
-           T.StructField("s", T.LongType(), True),
-           T.StructField("mn", T.LongType(), True),
-           T.StructField("mx", T.LongType(), True)]
-    )
-    partials = pruned.mapInArrow(kernel, schema=partial)
-    merged = partials.groupBy(*[f"k{j}" for j in range(nk)]).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("vc").alias(f"count_{value_col}"),
-        F.sum("s").alias(f"sum_{value_col}"),
-        F.min("mn").alias(f"min_{value_col}"),
-        F.max("mx").alias(f"max_{value_col}"),
-    )
-    for j, c in enumerate(gcols):
-        merged = merged.withColumnRenamed(f"k{j}", c)
-    return merged
 
 
 def group_count_distinct_encoded(spark: SparkSession, out_dir: str,

@@ -49,6 +49,15 @@ Design (scale-first):
   Every filter is returned to Spark unchanged: zones and Blooms
   overapproximate, so pruning is always conservative and the residual
   makes the answer exact.
+  Known limitation (PySpark 4.1.2): ``PythonScanBuilder.pushFilters``
+  stores the reader it planned with the pushed filters in
+  ``PythonDataSourceV2.setReadInfo``. A later action on the same loaded
+  DataFrame with no pushable filter skips Python pushdown, and
+  ``getOrCreateReadInfo`` hands back that filtered reader, whose row
+  masks and prunes drop rows the new action asked for: after
+  ``df.where(...).count()``, ``df.collect()`` returns only the filtered
+  rows. Build a fresh ``spark.read.format("fhirflat")`` DataFrame per
+  filtered action.
 - **Merge-on-read deletes.** Active equality-delete files (incl.
   partition-scoped entries, the sequence-number analog) are applied
   in-task with vectorized ``is_in`` masks. Delete-key files are

@@ -17,7 +17,6 @@ from fhirflat_spark.codecs import encode_array
 from fhirflat_spark.encode import append_table, encode_table
 from fhirflat_spark.encoded_exec import (
     _codes_keys,
-    _keys_counts,
     distinct_encoded,
     group_agg_encoded,
     group_count_encoded,
@@ -36,32 +35,6 @@ CODEC_CASES = [
     ("for", pa.array([5, 5, 9, 5, 7], type=pa.int64())),
     ("delta", pa.array([1, 2, 3, 4, 5], type=pa.int64())),
 ]
-
-
-@pytest.mark.parametrize("codec,arr", CODEC_CASES, ids=[c for c, _ in CODEC_CASES])
-def test_keys_counts_per_codec(codec, arr):
-    blob = encode_array(arr, codec=codec)
-    vals, cnts, nulls = _keys_counts(blob)
-    got = dict(zip(vals.to_pylist(), cnts.tolist()))
-    # rle may repeat a value across runs — fold
-    import collections
-
-    folded = collections.Counter()
-    for v, c in zip(vals.to_pylist(), cnts.tolist()):
-        folded[v] += c
-    exp = collections.Counter(arr.to_pylist())
-    assert dict(folded) == dict(exp)
-    assert nulls == 0
-    assert int(sum(cnts)) == len(arr)
-    assert got is not None  # silence lints
-
-
-def test_keys_counts_nullable_wrapper():
-    arr = pa.array(["a", None, "a", None, "b", None])
-    blob = encode_array(arr, codec="dict")
-    vals, cnts, nulls = _keys_counts(blob)
-    assert nulls == 3
-    assert dict(zip(vals.to_pylist(), cnts.tolist())) == {"a": 2, "b": 1}
 
 
 @pytest.mark.parametrize("codec,arr", CODEC_CASES, ids=[c for c, _ in CODEC_CASES])
@@ -173,9 +146,16 @@ def test_group_agg_string_value(spark, tmp_path):
     got = group_agg_encoded(spark, out, "grp", "s",
                             where=[("id", "ge", 300)])
     assert _rows(got) == _rows(_exp(df.where("id >= 300")))
-    # the multi-column group path still requires an integral value
-    with pytest.raises(ValueError, match="integral"):
-        group_agg_encoded(spark, out, ["grp", "id"], "s")
+    # a group tuple takes the same string aggregate
+    got = group_agg_encoded(spark, out, ["grp", "id"], "s")
+    exp = df.groupBy("grp", "id").agg(
+        F.count("*").alias("cnt"),
+        F.count("s").alias("count_s"),
+        F.min("s").alias("min_s"),
+        F.max("s").alias("max_s"),
+    )
+    assert got.columns == ["grp", "id", "cnt", "count_s", "min_s", "max_s"]
+    assert _rows(got) == _rows(exp)
 
 
 def test_schema_evolution_null_group(spark, tmp_path):
@@ -282,6 +262,58 @@ def test_group_count_multi_radix_fallback(spark, tmp_path):
     exp = df.groupBy("grp", "val").agg(F.count("*").alias("cnt"))
     assert _rows(fast) == _rows(exp)
     assert _rows(slow) == _rows(exp)
+
+
+def test_group_single_column_radix_fallback(spark, tmp_path):
+    """The 1-tuple group runs the same overflow fallback as a tuple."""
+    from fhirflat_spark.encoded_exec import (
+        _group_agg_multi,
+        _group_count_multi,
+    )
+
+    df = _null_frame(spark)
+    out = str(tmp_path / "ds")
+    encode_table(df, out, rows_per_bucket=200)
+    slow = _group_count_multi(spark, out, ["grp"], None, radix_cap=1)
+    exp = df.groupBy("grp").agg(F.count("*").alias("cnt"))
+    assert _rows(slow) == _rows(exp)
+    slow = _group_agg_multi(spark, out, ["grp"], "val", None, radix_cap=1)
+    assert _rows(slow) == _rows(_expect_agg(df, "grp", "val"))
+
+
+@pytest.mark.parametrize("codec", ["dict", "rle", "zstd", "constant"])
+def test_single_column_group_per_codec(spark, tmp_path, codec):
+    """One group column forced onto each codec family — the encoded
+    paths (dict codes, rle runs, constant header) and a heavy codec
+    that decodes first — equals Spark's groupBy, with and without a
+    where. The constant case groups an all-equal column."""
+    import pyarrow.parquet as pq
+
+    from fhirflat_spark.codecs.core import unpack_chunk
+    from fhirflat_spark.manifest import read_summary
+
+    df = _null_frame(spark)
+    if codec == "constant":
+        df = df.withColumn("grp", F.lit("k"))
+    out = str(tmp_path / "ds")
+    encode_table(df, out, rows_per_bucket=200,
+                 codec_overrides={"grp": codec})
+
+    def _inner(blob):  # the codec under a nullable wrapper
+        name, _n, _tok, _meta, secs = unpack_chunk(blob)
+        return _inner(secs[1]) if name == "nullable" else name
+
+    idx = read_summary(spark, out)["columns"].index("grp")
+    blobs = pq.read_table(f"{out}/chunks").column("payload") \
+        .combine_chunks().field(f"__c{idx}")
+    assert {_inner(b.as_py()) for b in blobs} == {codec}
+    for where, cond in ((None, "true"), (("val", "ge", 0), "val >= 0")):
+        sub = df.where(cond)
+        got = group_count_encoded(spark, out, "grp", where=where)
+        exp = sub.groupBy("grp").agg(F.count("*").alias("cnt"))
+        assert _rows(got) == _rows(exp), where
+        got = group_agg_encoded(spark, out, "grp", "val", where=where)
+        assert _rows(got) == _rows(_expect_agg(sub, "grp", "val")), where
 
 
 def _expect_agg_multi(df, gcols, v):
