@@ -16,11 +16,11 @@ positions per value via Kirsch-Mitzenmacher double hashing over a
 vectorized FNV-1a 64 (numpy, no per-row Python on the encode side;
 values hashed over their first ``PREFIX`` bytes — probe and encode
 truncate identically, so a long-key collision only costs a false
-positive). The bit set is stored hex-encoded in the chunk's stats JSON,
-which makes the PROBE pure Catalyst: bit ``p`` lives in one nibble of
-one hex char, so membership of a known value is a conjunction of K
-``substring(bloom, char, 1) IN (8 hex digits)`` predicates — evaluated
-JVM-side against the stats column before any payload bytes are decoded.
+positive). The bit set is stored hex-encoded in the chunk's stats JSON:
+bit ``p`` lives in one nibble of one hex char (``hex_probe``), so
+membership of a known value is K nibble tests (``might_contain``) —
+evaluated in the reader task against the chunk's stats before any of
+its payload bytes are read.
 """
 
 from __future__ import annotations
@@ -120,7 +120,7 @@ def hex_probe(pos: int) -> tuple[int, str]:
 
 
 def might_contain(hexstr: str, value: str | bytes) -> bool:
-    """Pure-python membership check (test oracle for the SQL predicate)."""
+    """Pure-python membership check of ``value`` in one chunk's bloom."""
     for pos in probe_positions(value):
         char_idx, chars = hex_probe(pos)
         if hexstr[char_idx] not in chars:

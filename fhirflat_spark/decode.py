@@ -7,10 +7,18 @@ column-by-column and (optionally) re-verified against the checksum its
 manifest row recorded at encode time, with failures surfaced on a
 side-channel instead of poisoning the run (the valid/errors split,
 reference fhirflat/ingest.py:571-580).
+
+Every Spark chunk scan of the engine (decode, verify, the encoded
+aggregates, stats backfill, chunk lineage) runs through
+:func:`scan_chunks`: the driver spreads the table view's part ids over
+the tasks and each task reads its own part directories with pyarrow
+(:func:`read_chunks`), so no scan lists ``chunks/`` through Spark's file
+index or converts payload bytes through a JVM parquet scan.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 
@@ -115,60 +123,149 @@ def decode_kernel_factory(columns: list[str], field_names: list[str],
     return kernel
 
 
-def _zone_predicate(schema: T.StructType, col: str, lo, hi):
-    """Chunk-keep condition from the per-column zone bounds in stats
-    (JSON): keep when bounds are absent (conservative) or intersect
-    [lo, hi]. Numeric columns compare after a cast (JSON renders them as
-    strings) with lo/hi coerced python-side to the same family — a
-    mismatched-type bound must not become an ANSI cast crash mid-stage;
-    string bounds compare directly (encode stored a SAFE truncated
-    upper bound). When the column's Spark type is UNKNOWN (dataset
-    summary lacks spark_schema), zone filtering is skipped entirely —
-    lexicographic comparison of JSON-rendered numbers ('9' > '10') is
-    not conservative and could wrongly prune matching chunks."""
-    zmin = F.get_json_object(F.col("stats"), f"$['{col}'].zmin")
-    zmax = F.get_json_object(F.col("stats"), f"$['{col}'].zmax")
-    dt = schema[col].dataType if col in schema.names else None
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        zmin, zmax = zmin.cast("long"), zmax.cast("long")
-        lo = int(lo) if lo is not None else None
-        hi = int(hi) if hi is not None else None
-    elif isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-        zmin, zmax = zmin.cast("double"), zmax.cast("double")
-        lo = float(lo) if lo is not None else None
-        hi = float(hi) if hi is not None else None
-    elif isinstance(dt, T.StringType):
-        lo = str(lo) if lo is not None else None
-        hi = str(hi) if hi is not None else None
-    else:
-        return F.lit(True)  # unknown type: keep every chunk (conservative)
-    drop = F.lit(False)  # lo/hi None = one-sided filter
-    if lo is not None:
-        drop = drop | (zmax < lo)
-    if hi is not None:
-        drop = drop | (zmin > hi)
-    return zmin.isNull() | zmax.isNull() | ~drop
+def _chunk_keeps(prune: dict, row: dict) -> bool:
+    """Whether one chunk may hold matching rows, from its metadata row
+    alone: ``key_range`` against [repo_min, repo_max], ``zones``
+    ``(col, lo, hi)`` through ``_zone_keeps`` and ``points``
+    ``(col, [values])`` through ``_bloom_keeps`` — the predicates the
+    named source and the encoded aggregates share, all conjunctive.
+    Missing bounds, an unknown column type and a chunk without a Bloom
+    filter keep the chunk: pruning is conservative, callers still apply
+    the exact residual."""
+    from fhirflat_spark.sources.datasource import _bloom_keeps, _zone_keeps
+
+    if prune.get("key_range") is not None:
+        lo, hi = prune["key_range"]
+        rmin, rmax = row["repo_min"], row["repo_max"]
+        if rmin is not None and rmax is not None and (rmax < lo or rmin > hi):
+            return False
+    if not (prune.get("zones") or prune.get("points")):
+        return True
+    stats = json.loads(row["stats"])
+    type_of = prune.get("type_of") or {}
+    return all(
+        _zone_keeps(stats, c, type_of.get(c), lo, hi)
+        for c, lo, hi in prune.get("zones", ())
+    ) and all(_bloom_keeps(stats, c, vals) for c, vals in prune.get("points", ()))
 
 
-def _bloom_predicate(col: str, value: str):
-    """Chunk-keep condition for a point lookup against the per-chunk
-    Bloom filter in stats (fhirflat_spark/bloom.py). The K probe bit
-    positions are constants computed driver-side, so membership becomes
-    a conjunction of ``substring(bloom_hex, char, 1) IN (8 hex
-    digits)`` — pure Catalyst over the stats column, no payload bytes
-    touched for pruned chunks. Chunks without a bloom (other datasets'
-    columns, all-null chunks, a different bit-set geometry) are KEPT —
-    pruning is always conservative; callers still apply the exact
-    residual filter (Bloom false positives pass the probe)."""
-    from fhirflat_spark import bloom as B
+def read_chunks(out_dir: str, pid: int, payload: dict | None = None,
+                meta: list[str] = ("n_rows",), prune: dict | None = None):
+    """Task side of every Spark chunk scan: the chunk rows of partition
+    ``pid`` as Arrow batches in ``chunk_seq`` order, one parquet row
+    group (one chunk, as the chunk writer lays them out) at a time, so a
+    task never holds a whole partition's payloads.
 
-    bl = F.get_json_object(F.col("stats"), f"$['{col}'].bloom")
-    bb = F.get_json_object(F.col("stats"), f"$['{col}'].bbits")
-    hit = F.lit(True)
-    for pos in B.probe_positions(value):
-        char_idx, chars = B.hex_probe(pos)
-        hit = hit & F.substring(bl, char_idx + 1, 1).isin(*chars)
-    return bl.isNull() | (bb != F.lit(str(B.M_BITS))) | hit
+    ``meta`` names the chunk-row columns returned (``part_id`` comes
+    from the directory name); ``payload`` maps each returned binary
+    column to its chunk-struct field (``__c{i}``), and only those
+    fields' bytes are read. A field the partition's files lack (written
+    before the column was added) comes back as a typed null, like a NULL
+    cell (a chunk that predates the column). ``prune`` (see
+    :func:`_chunk_keeps`) drops chunks from their metadata before their
+    payload is read. Only this partition's directory is listed; dot- and
+    underscore-files (a writer's in-flight temp files) are skipped."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from fhirflat_spark import fsio
+
+    payload = payload or {}
+    prune = prune or {}
+    by_key = prune.get("key_range") is not None
+    by_stats = bool(prune.get("zones") or prune.get("points"))
+    need = ["chunk_seq", *meta, *(["repo_min", "repo_max"] if by_key else []),
+            *(["stats"] if by_stats else [])]
+    need = [c for c in dict.fromkeys(need) if c != "part_id"]
+    part = f"{out_dir}/chunks/part_id={pid}"
+    with contextlib.ExitStack() as files:
+        units = []
+        for name in fsio.list_files(part):
+            if name.startswith((".", "_")):
+                continue
+            fs, inner = fsio.resolve(f"{part}/{name}")
+            pf = files.enter_context(pq.ParquetFile(inner, filesystem=fs))
+            ptype = pf.schema_arrow.field("payload").type
+            present = {ptype.field(k).name for k in range(ptype.num_fields)}
+            for rg in range(pf.num_row_groups):
+                t = pf.read_row_group(rg, columns=need)
+                if t.num_rows:
+                    seq = t.column("chunk_seq").to_numpy()
+                    units.append((int(seq.min()), seq, t, pf, rg, present))
+        units.sort(key=lambda u: u[0])
+        for _, seq, t, pf, rg, present in units:
+            idx = np.argsort(seq, kind="stable")
+            if by_key or by_stats:
+                rows = t.to_pylist()
+                idx = idx[[_chunk_keeps(prune, rows[i]) for i in idx]]
+                if not len(idx):
+                    continue  # every chunk pruned: no payload byte read
+            n = t.num_rows
+            cols = {
+                c: pa.array(np.full(n, pid, dtype=np.int32)) if c == "part_id"
+                else t.column(c).combine_chunks()
+                for c in meta
+            }
+            fields = list(dict.fromkeys(
+                f for f in payload.values() if f in present
+            ))
+            if fields:
+                # a nested selection reads back as a `payload` struct
+                # holding only the selected fields
+                st = pf.read_row_group(
+                    rg, columns=[f"payload.{f}" for f in fields]
+                ).column("payload").combine_chunks()
+            for name, f in payload.items():
+                cols[name] = (st.field(f) if f in present
+                              else pa.nulls(n, pa.binary()))
+            batch = pa.RecordBatch.from_pydict(cols)
+            if len(idx) < n or (idx != np.arange(n)).any():
+                batch = batch.take(pa.array(idx))
+            yield batch
+
+
+def scan_chunks(spark: SparkSession, out_dir: str, view, pids: list[int],
+                kernel, schema, payload: dict | None = None,
+                meta: list[str] = ("n_rows",),
+                prune: dict | None = None) -> DataFrame:
+    """Driver side of every Spark chunk scan: ``mapInArrow(kernel)`` over
+    the :func:`read_chunks` batches of the partitions ``pids``, planned
+    from the table view — no driver listing of ``chunks/``, no Spark
+    file-index job, no JVM parquet scan of payload bytes.
+
+    The part ids are spread over ``spark.range(0, n, 1, n)`` (no
+    exchange), ``n`` at most ``defaultParallelism``: largest partition
+    first onto the task with the fewest rows, by the ``view``'s row
+    counts (ids the view lacks weigh as its largest), so the assignment
+    is a pure function of the view. Each task runs ``kernel`` ONCE over
+    the chunk batches of all its partitions, so a kernel that aggregates
+    per task still emits one partial."""
+    import heapq
+
+    t = view.manifest
+    rows_of = dict(zip(t["part_id"].to_pylist(), t["rows"].to_pylist()))
+    default = max(rows_of.values(), default=1)
+    n = max(1, min(len(pids), spark.sparkContext.defaultParallelism))
+    bins: list[list[int]] = [[] for _ in range(n)]
+    heap = [(0, j) for j in range(n)]
+    for pid in sorted(pids, key=lambda p: (-rows_of.get(p, default), p)):
+        load, j = heapq.heappop(heap)
+        bins[j].append(int(pid))
+        heapq.heappush(heap, (load + rows_of.get(pid, default), j))
+    bins = [sorted(b) for b in bins]
+    meta = list(meta)
+
+    def run(batches):
+        def chunks():
+            for b in batches:
+                for j in b.column("id").to_pylist():
+                    for pid in bins[j]:
+                        yield from read_chunks(out_dir, pid, payload, meta,
+                                               prune)
+
+        yield from kernel(chunks())
+
+    return spark.range(0, n, 1, n).mapInArrow(run, schema=schema)
 
 
 def _arrow_types(spark: SparkSession, schema: T.StructType) -> list:
@@ -183,41 +280,20 @@ def _arrow_types(spark: SparkSession, schema: T.StructType) -> list:
         return [f.type for f in spark.createDataFrame([], schema).toArrow().schema]
 
 
-def _part_range_predicate(ids: list[int]):
-    """part-id membership as OR-of-BETWEENs over the contiguous runs —
-    predicate size O(discontinuities) (one per append epoch), not
-    O(partitions), so it pushes to the scan even at 10^5+ partitions."""
-    if not ids:
-        return F.lit(False)
-    ids = sorted(ids)
-    ranges = []
-    start = prev = ids[0]
-    for i in ids[1:]:
-        if i == prev + 1:
-            prev = i
-            continue
-        ranges.append((start, prev))
-        start = prev = i
-    ranges.append((start, prev))
-    pred = F.col("part_id").between(*ranges[0])
-    for lo, hi in ranges[1:]:
-        pred = pred | F.col("part_id").between(lo, hi)
-    return pred
-
-
 # full-table decodes at or above this many rows route through the named
-# Python data source (pyarrow-direct chunk reads in the workers — no JVM
-# row materialization on the input side); smaller ones stay on the
-# mapInArrow kernel. Each path wins on one side of the gate. Full decode
-# plus fingerprint check of gen_spark rows at local[4] on a 4-vCPU VM,
-# alternating medians, process-tree CPU — kernel path / named source /
-# the named source's reader run inside mapInArrow: 131,072 rows 3.5 /
-# 5.1 / 5.4 CPU-s; 1,048,576 rows 12.5 / 11.9 / 11.6 CPU-s at 4.45 /
-# 3.27 / 3.23 s wall. So the small-table cost is the pyarrow-direct
-# reader's own fixed cost, not the source's task plumbing
-# (use_threads=False does not change it); one path can go once that
-# cost is explained. Both paths read the same chunks with the same
-# kernels; equality is pinned by test_datasource.py.
+# Python data source; smaller ones stay on the mapInArrow kernel over
+# scan_chunks. Full decode plus fingerprint check of gen_spark rows at
+# local[4] on a 4-vCPU VM, 5 alternating pairs, medians, process-tree
+# CPU — kernel path / named source: 131,072 rows 1.67 / 4.70 CPU-s
+# (0.55 / 1.47 s wall); 262,144 rows 2.64 / 6.00 CPU-s (0.92 / 1.77 s);
+# 1,048,576 rows 9.22 / 13.44 CPU-s (2.47 / 3.59 s). The kernel path's
+# old fixed cost was Spark's file-index listing of chunks/ (a job of one
+# task per part dir above 32 dirs) plus the JVM parquet scan of the
+# payload bytes; with both gone it wins at every measured size, so the
+# gate now sends large plain decodes to the slower path. Its value is
+# kept until the route goes (the named source stays the format users
+# read with spark.read.format("fhirflat")). Both paths decode the same
+# chunks with the same kernels; equality is pinned by test_datasource.py.
 DATASOURCE_MIN_ROWS = 200_000
 
 
@@ -238,12 +314,12 @@ def decode_table(spark: SparkSession, out_dir: str,
     position deletes (``manifest.delete_rows_at``) take, e.g. to drop
     all-but-one copy of duplicate rows without a key column.
 
-    ``part_ids`` prunes to specific partitions — parquet partition pruning
-    on the ``part_id`` directory key makes this a metadata-only skip, the
+    ``part_ids`` prunes to specific partitions — the scan plans its part
+    directories from that list, so this is a metadata-only skip, the
     mechanism behind manifest-driven selective re-reads. ``key_range``
     additionally filters CHUNK rows by their recorded [repo_min,
-    repo_max] zone (JVM-side, before any payload reaches the Python
-    kernel), so chunks outside the range cost no decode CPU.
+    repo_max] zone (in the reader task, before the chunk's payload is
+    read), so chunks outside the range cost no decode CPU.
     ``zone_filter=(col, lo, hi)`` — or a list of such triples, applied
     conjunctively — does the same for ANY orderable column via the
     per-column zone bounds recorded in chunk stats — an
@@ -263,24 +339,24 @@ def decode_table(spark: SparkSession, out_dir: str,
     commit instant was latest at ``ts`` (``manifest.snapshot_as_of``).
 
     The table IS what the resolved snapshot says
-    (``manifest.table_view``): decode always prunes to that snapshot's
-    partitions (for the head, as contiguous part-id ranges — a handful
-    of BETWEENs regardless of partition count, so the predicate stays
-    O(appends), never O(partitions)) and applies that snapshot's
-    deletes. Chunk directories a rollback orphaned, or a crashed run
-    half-wrote, are thereby invisible to readers even before ``vacuum``
-    reclaims them.
+    (``manifest.table_view``): decode reads exactly that snapshot's
+    partitions (:func:`scan_chunks` spreads the view's part ids over
+    the tasks, each task reads its own part directories — no listing of
+    ``chunks/``) and applies that snapshot's deletes. Chunk directories
+    a rollback orphaned, or a crashed run half-wrote, are thereby
+    invisible to readers even before ``vacuum`` reclaims them.
 
     ``via`` picks the physical read path: ``"auto"`` (default) routes
     plain full-table decodes — no explicit prune options, no positions —
     of at least ``DATASOURCE_MIN_ROWS`` rows through the named data
-    source (task-side pyarrow chunk reads, no JVM input rows; ~1.25x
-    faster wall at 1M rows, same CPU); everything else uses the
-    ``mapInArrow`` kernel.
+    source; everything else uses the ``mapInArrow`` kernel over
+    :func:`scan_chunks`. Both read their chunk files with pyarrow in
+    the task; the kernel path packs several part ids into one task and
+    costs less at every measured size (1M rows at local[4]: 9.2 vs 13.4
+    CPU-s, 2.5 vs 3.6 s wall; see ``DATASOURCE_MIN_ROWS``).
     ``"datasource"`` / ``"arrow"`` force a path (``"datasource"`` still
     requires the options it cannot express to be absent).
     """
-    from fhirflat_spark.encode import chunk_schema
     from fhirflat_spark.manifest import read_summary, table_view
 
     summary = read_summary(spark, out_dir)
@@ -326,49 +402,37 @@ def decode_table(spark: SparkSession, out_dir: str,
         columns = all_cols
     field_of = {c: f"__c{i}" for i, c in enumerate(all_cols)}
     fields = [field_of[c] for c in columns]
-    zfilters = None
+    full = (
+        T.StructType.fromJson(json.loads(summary["spark_schema"]))
+        if summary.get("spark_schema") else None
+    )
+    by_name = {f.name: f for f in full.fields} if full else {
+        c: T.StructField(c, T.StringType(), True) for c in all_cols
+    }
+    type_of = {f.name: f.dataType for f in full.fields} if full else {}
+    prune = {"key_range": key_range, "zones": [], "points": [],
+             "type_of": type_of}
     if zone_filter is not None:
         # one (col, lo, hi) triple or a list of them (conjunctive: a
         # chunk survives only if EVERY predicate's zone intersects)
-        zfilters = (
+        prune["zones"] = (
             [zone_filter] if isinstance(zone_filter, tuple) else list(zone_filter)
         )
-        zschema = (
-            T.StructType.fromJson(json.loads(summary["spark_schema"]))
-            if summary.get("spark_schema")
-            else T.StructType([])
-        )
-        for zcol, _, _ in zfilters:
+        for zcol, _, _ in prune["zones"]:
             if zcol not in all_cols:
                 raise ValueError(
                     f"zone_filter column {zcol!r} not in dataset columns {all_cols}"
                 )
         # partition-level pruning from the view's per-partition column
-        # zones, BEFORE any chunk file is listed or scanned —
-        # metadata-only, so a selective read of a 10^5-partition table
-        # never touches the non-matching partitions' files at all.
-        # Conservative by construction (ids without zones are kept);
-        # the chunk-level zones + exact residual still apply below.
+        # zones, BEFORE any chunk file is opened — metadata-only, so a
+        # selective read of a 10^5-partition table never touches the
+        # non-matching partitions' files at all. Conservative by
+        # construction (ids without zones are kept); the chunk-level
+        # zones + exact residual still apply in the task.
         from fhirflat_spark.manifest import prune_part_ids_by_zones
 
-        type_of = {f.name: f.dataType for f in zschema.fields}
-        ids = prune_part_ids_by_zones(view.manifest, ids, zfilters, type_of)
-    # explicit schema: no footer sniffing, and empty datasets stay readable
-    chunks = spark.read.schema(chunk_schema(len(all_cols))).parquet(f"{out_dir}/chunks")
-    chunks = chunks.where(
-        F.col("part_id").isin(ids) if part_ids is not None
-        else _part_range_predicate(ids)
-    )
-    if key_range is not None:
-        lo, hi = key_range
-        chunks = chunks.where(
-            F.col("repo_min").isNull()
-            | F.col("repo_max").isNull()
-            | ~((F.col("repo_max") < lo) | (F.col("repo_min") > hi))
-        )
-    if zfilters is not None:
-        for zcol, zlo, zhi in zfilters:
-            chunks = chunks.where(_zone_predicate(zschema, zcol, zlo, zhi))
+        ids = prune_part_ids_by_zones(view.manifest, ids, prune["zones"],
+                                      type_of)
     if point_filter is not None:
         pfilters = (
             [point_filter] if isinstance(point_filter, tuple)
@@ -387,13 +451,8 @@ def decode_table(spark: SparkSession, out_dir: str,
                     f"encode with bloom_columns=[{pcol!r}] "
                     f"(bloomed: {sorted(bloomed)})"
                 )
-            chunks = chunks.where(_bloom_predicate(pcol, pval))
-    if summary.get("spark_schema"):
-        full = T.StructType.fromJson(json.loads(summary["spark_schema"]))
-        by_name = {f.name: f for f in full.fields}
-        schema = T.StructType([by_name[c] for c in columns])
-    else:
-        schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
+            prune["points"].append((pcol, [pval]))
+    schema = T.StructType([by_name[c] for c in columns])
     # row-level deletes: the anti-join needs its key columns decoded —
     # widen a selective decode to include them, drop them again after.
     # Scoped entries (below_part, the sequence-number analog) also need
@@ -411,11 +470,7 @@ def decode_table(spark: SparkSession, out_dir: str,
     for c in sorted(delete_cols - set(columns)):
         columns = [*columns, c]
         fields = [*fields, field_of[c]]
-        schema = schema.add(
-            T.StructType.fromJson(json.loads(summary["spark_schema"]))[c]
-            if summary.get("spark_schema")
-            else T.StructField(c, T.StringType(), True)
-        )
+        schema = schema.add(by_name[c])
     arrow_types = _arrow_types(spark, schema)
     if need_part:
         schema = schema.add(T.StructField("__part_id", T.IntegerType(), False))
@@ -423,19 +478,17 @@ def decode_table(spark: SparkSession, out_dir: str,
         schema = schema.add(
             T.StructField("__chunk_seq", T.IntegerType(), False)
         ).add(T.StructField("__row_idx", T.IntegerType(), False))
-    # select only the requested payload fields plus the per-chunk row
-    # count (int64/chunk — needed to size typed null fills for columns
-    # added after a chunk was written): nested-schema pruning still
-    # reaches the parquet scan, so unselected columns cost zero IO
-    pruned = chunks.select(
-        "n_rows", *(["part_id"] if need_part else []),
-        *(["chunk_seq"] if need_pos else []),
-        *[F.col(f"payload.{f}").alias(f) for f in fields],
-    )
-    decoded = pruned.mapInArrow(
+    # the requested payload fields plus the per-chunk row count (sizes
+    # the typed null fill for columns added after a chunk was written):
+    # unselected columns' bytes are never read
+    decoded = scan_chunks(
+        spark, out_dir, view, ids,
         decode_kernel_factory(columns, fields, arrow_types,
                               emit_part=need_part, emit_pos=need_pos),
-        schema=schema,
+        schema, payload={f: f for f in fields},
+        meta=["n_rows", *(["part_id"] if need_part else []),
+              *(["chunk_seq"] if need_pos else [])],
+        prune=prune,
     )
     if delete_entries:
         decoded = apply_deletes(
@@ -472,9 +525,6 @@ def read_parts_arrow(out_dir: str, part_ids: list[int],
     payload field / null blob cell → typed nulls). Raises ValueError on
     active row-level deletes — the merge-on-read overlay is a
     distributed anti-join; callers fall back to decode_table."""
-    import pyarrow.dataset as pads
-
-    from fhirflat_spark import fsio
     from fhirflat_spark.manifest import read_summary, table_view
 
     summary = read_summary(None, out_dir)
@@ -508,40 +558,15 @@ def read_parts_arrow(out_dir: str, part_ids: list[int],
     from pyspark.sql.pandas.types import to_arrow_type
 
     arrow_of = {c: to_arrow_type(by_name[c].dataType) for c in columns}
-    field_of = {c: f"__c{i}" for i, c in enumerate(all_cols)}
+    fields = [f"__c{all_cols.index(c)}" for c in columns]
     out_schema = pa.schema([(c, arrow_of[c]) for c in columns])
-    batches: list[pa.RecordBatch] = []
-    for pid in sorted(set(int(p) for p in part_ids)):
-        fs, inner = fsio.resolve(f"{out_dir}/chunks/part_id={pid}")
-        dset = pads.dataset(inner, filesystem=fs, format="parquet")
-        pf = dset.schema.field("payload").type
-        present = {pf.field(i).name for i in range(pf.num_fields)}
-        proj = {"chunk_seq": pads.field("chunk_seq"),
-                "n_rows": pads.field("n_rows")}
-        for c in columns:
-            if field_of[c] in present:
-                proj[field_of[c]] = pads.field("payload", field_of[c])
-        t = dset.to_table(columns=proj).sort_by("chunk_seq")
-        nrs = t.column("n_rows")
-        for i in range(t.num_rows):
-            n = nrs[i].as_py()
-            arrays = []
-            for c in columns:
-                cell = (t.column(field_of[c])[i]
-                        if field_of[c] in proj else None)
-                if cell is None or not cell.is_valid:
-                    arrays.append(pa.nulls(n, type=arrow_of[c]))
-                    continue
-                arr = decode_array(memoryview(cell.as_buffer()))
-                if arr.type != arrow_of[c]:
-                    arr = arr.cast(arrow_of[c])
-                arrays.append(arr)
-            batches.append(
-                pa.record_batch(arrays, schema=out_schema)
-            )
-    if not batches:
-        return out_schema.empty_table()
-    return pa.Table.from_batches(batches, schema=out_schema)
+    kernel = decode_kernel_factory(columns, fields,
+                                   [arrow_of[c] for c in columns])
+    return pa.concat_tables([out_schema.empty_table()] + [
+        pa.Table.from_batches([b]).cast(out_schema)
+        for pid in sorted({int(p) for p in part_ids})
+        for b in kernel(read_chunks(out_dir, pid, {f: f for f in fields}))
+    ])
 
 
 def verify_kernel_factory(columns: list[str], field_names: list[str]):
@@ -555,7 +580,7 @@ def verify_kernel_factory(columns: list[str], field_names: list[str]):
 
     def kernel(batches):
         for batch in batches:
-            cols = [batch.column(f"__v_{f}") for f in field_names]
+            cols = [batch.column(f) for f in field_names]
             for i in range(batch.num_rows):  # chunk granularity
                 part_id = batch.column("part_id")[i].as_py()
                 seq = batch.column("chunk_seq")[i].as_py()
@@ -630,10 +655,10 @@ def verify_table(spark: SparkSession, out_dir: str,
     ``snapshot`` (version, tag, or branch name) restricts verification
     to that snapshot's partitions — the WAP audit step checksums the
     staged branch (``snapshot="audit"``) before ``publish_branch``.
-    Default: every chunk on disk, staged and historical included."""
-    from fhirflat_spark.manifest import read_summary
-
-    from fhirflat_spark.encode import chunk_schema
+    Default: every part directory on disk (one listing of ``chunks/``),
+    staged, historical and uncommitted included."""
+    from fhirflat_spark import fsio
+    from fhirflat_spark.manifest import read_summary, table_view
 
     summary = read_summary(spark, out_dir)
     _check_version(summary)
@@ -642,19 +667,16 @@ def verify_table(spark: SparkSession, out_dir: str,
         columns = all_cols
     field_of = {c: f"__c{i}" for i, c in enumerate(all_cols)}
     fields = [field_of[c] for c in columns]
-    chunks = spark.read.schema(chunk_schema(len(all_cols))).parquet(
-        f"{out_dir}/chunks"
-    ).select(
-        "part_id", "chunk_seq", "n_rows", "content_sha", "stats",
-        *[F.col(f"payload.{f}").alias(f"__v_{f}") for f in fields],
+    view = table_view(out_dir, snapshot)
+    pids = view.part_ids if snapshot is not None else sorted(
+        int(d.split("=", 1)[1]) for d in fsio.list_dirs(f"{out_dir}/chunks")
+        if d.startswith("part_id=")
     )
-    if snapshot is not None:
-        from fhirflat_spark.manifest import table_view
-
-        chunks = chunks.where(
-            _part_range_predicate(table_view(out_dir, snapshot).part_ids)
-        )
-    return chunks.mapInArrow(verify_kernel_factory(columns, fields), schema=VERIFY_SCHEMA)
+    return scan_chunks(
+        spark, out_dir, view, pids, verify_kernel_factory(columns, fields),
+        VERIFY_SCHEMA, payload={f: f for f in fields},
+        meta=["part_id", "chunk_seq", "n_rows", "content_sha", "stats"],
+    )
 
 
 def partitions_for_key_range(spark: SparkSession, out_dir: str,
@@ -701,67 +723,63 @@ def _transcode_kernel_factory(src_dir: str, frag_dir: str, pids: list[int],
                               columns: list[str], overrides: dict,
                               codec_opts: dict | None):
     """Task side of ``transcode_table``: each input row is an index into
-    ``pids``. The task reads that whole source partition straight from
-    its chunk files, re-encodes every chunk's present columns, emits the
-    chunk rows in ``chunk_seq`` order (part id, chunk boundaries,
+    ``pids``. The task reads that source partition chunk by chunk
+    (:func:`read_chunks`), re-encodes every chunk's present columns,
+    emits the chunk rows in ``chunk_seq`` order (part id, chunk boundaries,
     content checksum, zones and sketches carried over — backfilled
     sketches from the source's fragment) and task-commits the
     partition's manifest fragment, like the encode kernels."""
 
     def kernel(batches):
-        import pyarrow.dataset as pads
-
         from fhirflat_spark import fsio
         from fhirflat_spark.codecs import encode_array
         from fhirflat_spark.codecs.core import unpack_chunk
         from fhirflat_spark.encode import _chunk_row, _write_fragment
 
+        fields = {f"__c{j}": f"__c{j}" for j in range(len(columns))}
+        row_cols = ["chunk_seq", "n_rows", "stats", "content_sha",
+                    "repo_min", "repo_max"]
         for b in batches:
             for i in b.column("id").to_pylist():
                 pid = pids[i]
-                fs, inner = fsio.resolve(f"{src_dir}/chunks/part_id={pid}")
-                t = (pads.dataset(inner, filesystem=fs, format="parquet")
-                     .to_table().sort_by("chunk_seq").combine_chunks())
-                # a partition written before a column was added has no
-                # payload field for it; a NULL cell marks a chunk that
-                # predates it: either way the absence carries through
-                payload = t.column("payload").chunk(0)
-                fields = {payload.type.field(k).name: payload.field(k)
-                          for k in range(payload.type.num_fields)}
                 src_frag = {
                     int(c["chunk_seq"]): c for c in json.loads(fsio.read_bytes(
                         f"{src_dir}/manifest_parts/{pid:06d}.json"
                     ))
                 }
                 frag: list[dict] = []
-                for r in range(t.num_rows):
-                    stats = json.loads(t["stats"][r].as_py())
-                    blobs = []
-                    for j, name in enumerate(columns):
-                        cells = fields.get(f"__c{j}")
-                        if cells is None or not cells[r].is_valid:
-                            blobs.append(None)
-                            continue
-                        blob = encode_array(
-                            decode_array(_blob_view(cells, r)),
-                            codec=overrides.get(name, "auto"),
-                            opts=dict(codec_opts) if codec_opts else None,
+                # a partition written before a column was added, or a
+                # chunk that predates it, reads back a NULL cell: the
+                # absence carries through
+                for t in read_chunks(src_dir, pid, fields, row_cols):
+                    for r in range(t.num_rows):
+                        stats = json.loads(t["stats"][r].as_py())
+                        blobs = []
+                        for j, name in enumerate(columns):
+                            cells = t.column(f"__c{j}")
+                            if not cells[r].is_valid:
+                                blobs.append(None)
+                                continue
+                            blob = encode_array(
+                                decode_array(_blob_view(cells, r)),
+                                codec=overrides.get(name, "auto"),
+                                opts=dict(codec_opts) if codec_opts else None,
+                            )
+                            stats[name]["enc"] = len(blob)
+                            stats[name]["codec"] = unpack_chunk(blob)[0]
+                            blobs.append(blob)
+                        # sketch maps always ride along (possibly empty):
+                        # partitions whose chunks carry no sketches still
+                        # merge to untracked ones
+                        seq = t["chunk_seq"][r].as_py()
+                        meta, out = _chunk_row(
+                            pid, seq, t["n_rows"][r].as_py(), blobs, stats,
+                            t["content_sha"][r].as_py(), t["repo_min"][r].as_py(),
+                            t["repo_max"][r].as_py(), with_hlls=True,
+                            with_ddqs=True, sketches=src_frag.get(seq),
                         )
-                        stats[name]["enc"] = len(blob)
-                        stats[name]["codec"] = unpack_chunk(blob)[0]
-                        blobs.append(blob)
-                    # sketch maps always ride along (possibly empty):
-                    # partitions whose chunks carry no sketches still
-                    # merge to untracked ones
-                    seq = t["chunk_seq"][r].as_py()
-                    meta, out = _chunk_row(
-                        pid, seq, t["n_rows"][r].as_py(), blobs, stats,
-                        t["content_sha"][r].as_py(), t["repo_min"][r].as_py(),
-                        t["repo_max"][r].as_py(), with_hlls=True,
-                        with_ddqs=True, sketches=src_frag.get(seq),
-                    )
-                    frag.append(meta)
-                    yield out
+                        frag.append(meta)
+                        yield out
                 _write_fragment(frag_dir, pid, frag)
 
     return kernel
@@ -778,7 +796,7 @@ def transcode_table(spark: SparkSession, src_dir: str, dst_dir: str,
     checksum carry over unchanged.
 
     Zero exchanges: the live part ids are spread over the tasks, each
-    task reads whole partitions with pyarrow and writes each one through
+    task reads its partitions chunk by chunk and writes each one through
     encode's chunk writer (one ``part-NNNNNN.parquet`` per partition),
     and the commit goes through encode's one data-commit tail — so the
     destination's summary keeps the source's bloom/ndv/quantile

@@ -16,7 +16,9 @@ into a mixed-radix int64 id per row, the ids are counted with
 ``np.bincount`` (or ``np.unique`` when the radix product exceeds the
 chunk's rows), and only the distinct tuples touch the key arrays — so
 per-chunk work is O(rows) on small ints and O(distinct) on the actual
-values; a single group column is the 1-tuple case.
+values; a single group column is the 1-tuple case. An unfiltered
+single-column count does not expand rle and constant chunks to rows:
+their runs are counted weighted by run length (``_run_codes``).
 
 Both entry points emit **per-task partial aggregates** (one row per
 distinct group value per task — metadata-sized), so the only shuffle
@@ -54,6 +56,40 @@ from fhirflat_spark.codecs.core import from_physical, unpack_bits
 from fhirflat_spark.codecs.kernels import _dec_sub, ipc_array
 
 
+def _runs(codec: str, n: int, token, secs):
+    """(run codes, run values, run lengths) of an unwrapped rle or
+    constant chunk — its code stream before expansion to rows — or None
+    for any other codec."""
+    if codec == "constant":
+        one = from_physical(ipc_array(bytes(secs[0])), token)
+        return np.zeros(1, dtype=np.int64), one.slice(0, 1), np.array([n])
+    if codec == "rle":
+        lens = _dec_sub(secs[0]).to_numpy(zero_copy_only=False)
+        vals = from_physical(_dec_sub(secs[1]), token)
+        return np.arange(len(lens), dtype=np.int64), vals, lens
+    return None
+
+
+def _run_codes(blob):
+    """``_runs`` of an rle or constant chunk, NULL-wrapped or not (the
+    NULL rows become one run of code -1), or None for any other codec:
+    what an unfiltered count needs — each run counts its length."""
+    from fhirflat_spark.codecs.core import unpack_chunk
+
+    codec, n, token, _, secs = unpack_chunk(blob)
+    nulls = 0
+    if codec == "nullable":
+        nulls = n - int(np.unpackbits(
+            np.frombuffer(secs[0], dtype=np.uint8), count=n
+        ).sum())
+        codec, n, token, _, secs = unpack_chunk(secs[1])
+    runs = _runs(codec, n, token, secs)
+    if runs is None or not nulls:
+        return runs
+    codes, vals, lens = runs
+    return np.append(codes, -1), vals, np.append(lens, nulls)
+
+
 def _codes_keys(blob) -> tuple[np.ndarray, pa.Array]:
     """One chunk blob -> (full-length group codes, code->value array).
 
@@ -73,17 +109,13 @@ def _codes_keys(blob) -> tuple[np.ndarray, pa.Array]:
         codes = np.full(n, -1, dtype=np.int64)
         codes[valid] = inner_codes
         return codes, keys
-    if codec == "constant":
-        one = from_physical(ipc_array(bytes(secs[0])), token)
-        return np.zeros(n, dtype=np.int64), one.slice(0, 1)
+    runs = _runs(codec, n, token, secs)
+    if runs is not None:
+        codes, vals, lens = runs
+        return np.repeat(codes, lens), vals
     if codec == "dict":
         codes = unpack_bits(secs[0], meta["width"], n).view(np.int64)
         return codes, from_physical(_dec_sub(secs[1]), token)
-    if codec == "rle":
-        lens = _dec_sub(secs[0]).to_numpy(zero_copy_only=False)
-        vals = from_physical(_dec_sub(secs[1]), token)
-        codes = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
-        return codes, vals
     arr = decode_array(blob)
     de = arr.dictionary_encode()
     idx = de.indices
@@ -386,8 +418,9 @@ def _where_exprs(cnf: list[list[tuple]]) -> list:
 
 def _chunk_mask(fplan: dict, batch, i: int, n: int):
     """Evaluate a filter plan against one chunk: returns ``None`` (no
-    filters), the string ``"skip"`` (chunk-level zone/Bloom prune or
-    all-miss row mask), or a boolean numpy keep-mask of length n.
+    filters), the string ``"skip"`` (all-miss row mask), or a boolean
+    numpy keep-mask of length n. Chunk-level zone/Bloom pruning already
+    ran in the reader (``_plan_scan``).
 
     Per-column evaluation prefers the dictionary domain
     (``_encoded_filter_ctx``) — the same machinery the named source's
@@ -396,24 +429,12 @@ def _chunk_mask(fplan: dict, batch, i: int, n: int):
     bug (literals were validated driver-side), so it raises."""
     if not fplan["preds"]:
         return None
-    import json as _json
-
     from fhirflat_spark.sources.datasource import (
-        _bloom_keeps,
         _encoded_filter_ctx,
         _encoded_pred_mask,
         _pred_mask,
-        _zone_keeps,
     )
 
-    if fplan["zones"] or fplan["points"]:
-        stats = _json.loads(batch.column("stats")[i].as_py())
-        for col, lo, hi in fplan["zones"]:
-            if not _zone_keeps(stats, col, fplan["type_of"][col], lo, hi):
-                return "skip"
-        for col, vals in fplan["points"]:
-            if not _bloom_keeps(stats, col, vals):
-                return "skip"
     mask = None
     ctxs = {}
     decoded = {}
@@ -462,10 +483,12 @@ def _chunk_mask(fplan: dict, batch, i: int, n: int):
 
 def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
                snapshot, where=None, only_part_ids=None):
-    """Shared chunk-store scan plan: live/snapshot part pruning + nested
-    payload projection of exactly the needed columns. Returns
-    (pruned DataFrame with n_rows + one blob col per requested column,
-    spark field per column, filter plan for ``_chunk_mask``).
+    """Shared chunk-store scan plan: live/snapshot part pruning + payload
+    projection of exactly the needed columns. Returns (``scan(kernel,
+    schema)``, which runs ``kernel`` over chunk batches holding n_rows +
+    one blob col ``__b{j}`` per scanned column through
+    ``decode.scan_chunks``; spark field per column; filter plan for
+    ``_chunk_mask``).
 
     ``where`` — one ``(col, op, literal)``, a conjunctive list, or CNF
     (list elements that are themselves lists of predicates OR within
@@ -476,8 +499,7 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
     masked branch-wise (OR of branch hits) — except here the result
     is FINAL (no Spark residual), so literals/types are validated
     up front and refused when exactness cannot be guaranteed."""
-    from fhirflat_spark.decode import _check_version, _part_range_predicate
-    from fhirflat_spark.encode import chunk_schema
+    from fhirflat_spark.decode import _check_version, scan_chunks
     from fhirflat_spark.manifest import (
         prune_part_ids_by_zones,
         read_summary,
@@ -534,20 +556,19 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
         # with our own pruning — may legitimately be empty
         ids = sorted(set(ids) & {int(p) for p in only_part_ids})
     field_of = {c: f"__c{i}" for i, c in enumerate(all_cols)}
-    chunks = spark.read.schema(chunk_schema(len(all_cols))).parquet(
-        f"{out_dir}/chunks"
-    ).where(_part_range_predicate(ids))
-    pruned = chunks.select(
-        "n_rows",
-        *(["stats"] if preds else []),
-        *[F.col(f"payload.{field_of[c]}").alias(f"__b{j}")
-          for j, c in enumerate(scan_cols)],
-    )
+
+    def scan(kernel, schema: T.StructType) -> DataFrame:
+        # chunk-level zone and Bloom pruning runs in the reader, on each
+        # chunk's stats before its payload is read
+        return scan_chunks(
+            spark, out_dir, view, ids, kernel, schema,
+            payload={f"__b{j}": field_of[c] for j, c in enumerate(scan_cols)},
+            prune={"zones": zones, "points": points, "type_of": type_of},
+        )
+
     fplan = {
         "view": view,
         "preds": preds,
-        "zones": zones,
-        "points": points,
         "type_of": type_of,
         "arrow_of": {
             p[0]: _arrow_field(spark, by_name[p[0]]) for p in flat
@@ -557,7 +578,7 @@ def _plan_scan(spark: SparkSession, out_dir: str, cols: list[str],
             for c in dict.fromkeys(p[0] for p in flat)
         },
     }
-    return pruned, [by_name[c] for c in cols], fplan
+    return scan, [by_name[c] for c in cols], fplan
 
 
 def _arrow_field(spark, field: T.StructField) -> pa.DataType:
@@ -570,7 +591,7 @@ _RADIX_CAP = 1 << 62  # mixed-radix group ids stay clear of int64 overflow
 
 
 def _group_ids(codes_l: list[np.ndarray], keys_l: list[pa.Array],
-               radix_cap: int):
+               radix_cap: int, weights: np.ndarray | None = None):
     """One chunk's group columns -> ``(ids, uniq, cnts, keys)``.
 
     Each column's ``_codes_keys`` stream (code -1 = NULL, shifted +1)
@@ -581,23 +602,28 @@ def _group_ids(codes_l: list[np.ndarray], keys_l: list[pa.Array],
     ids come from ``np.bincount`` when the radix product is at most the
     row count, from ``np.unique`` otherwise. A product at or above
     ``radix_cap`` (int64 overflow) uniques the code tuples row-wise
-    instead; ``ids`` are then their dense ranks — same groups, slower."""
+    instead; ``ids`` are then their dense ranks — same groups, slower.
+    ``weights`` gives each code position a row count (``_run_codes``:
+    one position per run), which ``cnts`` then sums."""
     radices = [len(k) + 1 for k in keys_l]
     prod = math.prod(radices)
     if prod >= radix_cap:
-        tup, ids, cnts = np.unique(np.stack(codes_l, axis=1), axis=0,
-                                   return_inverse=True, return_counts=True)
-        ids, uniq, digits = ids.reshape(-1), np.arange(len(cnts)), tup.T
+        tup, ids = np.unique(np.stack(codes_l, axis=1), axis=0,
+                             return_inverse=True)
+        ids = ids.reshape(-1)
+        cnts = np.bincount(ids, weights)
+        uniq, digits = np.arange(len(cnts)), tup.T
     else:
         ids = codes_l[0] + 1
         for cds, r in zip(codes_l[1:], radices[1:]):
             ids = ids * r + (cds + 1)
         if prod <= len(ids):
-            cnts = np.bincount(ids, minlength=prod)
+            cnts = np.bincount(ids, weights, minlength=prod)
             uniq = np.flatnonzero(cnts)
             cnts = cnts[uniq]
         else:
-            uniq, cnts = np.unique(ids, return_counts=True)
+            uniq, inv = np.unique(ids, return_inverse=True)
+            cnts = np.bincount(inv.reshape(-1), weights)
         digits, rem = [], uniq
         for r in reversed(radices):
             digits.append(rem % r - 1)  # back to -1 = NULL
@@ -608,12 +634,14 @@ def _group_ids(codes_l: list[np.ndarray], keys_l: list[pa.Array],
 
 
 def _chunk_groups(batches, fplan: dict, ats: list[pa.DataType],
-                  radix_cap: int):
+                  radix_cap: int, runs: bool = False):
     """Per chunk with matching rows of a ``_plan_scan`` frame: yields
     ``(batch, i, m, _group_ids(...))`` over the group blobs ``__b0..``
     (one per Arrow type in ``ats``), row-masked by the where plan ``m``
     (None = every row). A chunk that predates a group column gives it
-    an all-NULL digit."""
+    an all-NULL digit. ``runs`` (counting only): an unmasked single
+    rle or constant column groups its runs, weighted by their lengths,
+    instead of one code per row — ``ids`` then index runs, not rows."""
     from fhirflat_spark.decode import _blob_view
 
     for batch in batches:
@@ -621,21 +649,25 @@ def _chunk_groups(batches, fplan: dict, ats: list[pa.DataType],
         for i in range(batch.num_rows):  # chunk granularity (~16k rows)
             n = nrs[i].as_py()
             m = _chunk_mask(fplan, batch, i, n) if n else "skip"
-            if isinstance(m, str):  # empty chunk or zone/Bloom/mask skip
+            if isinstance(m, str):  # empty chunk or all-miss mask
                 continue
-            codes_l, keys_l = [], []
+            codes_l, keys_l, w = [], [], None
             for j, at in enumerate(ats):
                 blobs = batch.column(f"__b{j}")
-                if blobs[i].is_valid:
-                    cds, kys = _codes_keys(_blob_view(blobs, i))
-                else:
+                if not blobs[i].is_valid:
                     cds = np.full(n, -1, dtype=np.int64)
                     kys = pa.array([], type=at)
+                else:
+                    blob = _blob_view(blobs, i)
+                    rc = (_run_codes(blob)
+                          if runs and m is None and len(ats) == 1 else None)
+                    cds, kys = rc[:2] if rc else _codes_keys(blob)
+                    w = rc[2] if rc else None
                 if isinstance(kys, pa.ChunkedArray):
                     kys = kys.combine_chunks()
                 codes_l.append(cds if m is None else cds[m])
                 keys_l.append(kys.cast(at))
-            yield batch, i, m, _group_ids(codes_l, keys_l, radix_cap)
+            yield batch, i, m, _group_ids(codes_l, keys_l, radix_cap, w)
 
 
 def _merge_parts(parts: list[pa.Table], kn: list[str],
@@ -658,7 +690,7 @@ def _merge_parts(parts: list[pa.Table], kn: list[str],
     )
 
 
-def _group_by(pruned: DataFrame, kernel, gfields: list[T.StructField],
+def _group_by(scan, kernel, gfields: list[T.StructField],
               cols: list[str], tail: list[T.StructField],
               aggs: list) -> DataFrame:
     """Run ``kernel`` over the chunk scan — it emits key columns
@@ -672,9 +704,7 @@ def _group_by(pruned: DataFrame, kernel, gfields: list[T.StructField],
         [T.StructField(k, f.dataType, True) for k, f in zip(kn, gfields)]
         + tail
     )
-    merged = pruned.mapInArrow(kernel, schema=partial).groupBy(*kn).agg(
-        *aggs
-    )
+    merged = scan(kernel, partial).groupBy(*kn).agg(*aggs)
     return merged.toDF(*cols, *merged.columns[len(kn):])
 
 
@@ -702,8 +732,8 @@ def _group_count_multi(spark: SparkSession, out_dir: str,
                        where=None) -> DataFrame:
     """:func:`group_count_encoded` over a list of group columns; a low
     ``radix_cap`` forces the overflow fallback of :func:`_group_ids`."""
-    pruned, gfields, fplan = _plan_scan(spark, out_dir, cols, snapshot,
-                                        where=where)
+    scan, gfields, fplan = _plan_scan(spark, out_dir, cols, snapshot,
+                                      where=where)
     ats = [_arrow_field(spark, f) for f in gfields]
     kn = [f"k{j}" for j in range(len(cols))]
 
@@ -711,12 +741,12 @@ def _group_count_multi(spark: SparkSession, out_dir: str,
         parts = [
             pa.table(dict(zip(kn, keys)) | {"cnt": cnts})
             for *_, (_ids, _uniq, cnts, keys)
-            in _chunk_groups(batches, fplan, ats, radix_cap)
+            in _chunk_groups(batches, fplan, ats, radix_cap, runs=True)
         ]
         if parts:
             yield _merge_parts(parts, kn, ats, [("cnt", "sum", pa.int64())])
 
-    return _group_by(pruned, kernel, gfields, cols,
+    return _group_by(scan, kernel, gfields, cols,
                      [T.StructField("cnt", T.LongType(), False)],
                      [F.sum("cnt").alias("cnt")])
 
@@ -758,8 +788,8 @@ def group_timebucket_encoded(spark: SparkSession, out_dir: str,
         )
     step = _BUCKET_US[bucket]
     anchor = _WEEK_ANCHOR_US if bucket == "week" else 0
-    pruned, (tfield,), fplan = _plan_scan(spark, out_dir, [ts_col],
-                                          snapshot, where=where)
+    scan, (tfield,), fplan = _plan_scan(spark, out_dir, [ts_col],
+                                        snapshot, where=where)
     if not isinstance(tfield.dataType, T.TimestampNTZType):
         raise ValueError(
             f"time-bucket column {ts_col!r} "
@@ -817,7 +847,7 @@ def group_timebucket_encoded(spark: SparkSession, out_dir: str,
         T.StructField("b", tfield.dataType, True),
         T.StructField("cnt", T.LongType(), False),
     ])
-    partials = pruned.mapInArrow(kernel, schema=partial)
+    partials = scan(kernel, partial)
     return (
         partials.groupBy("b").agg(F.sum("cnt").alias("cnt"))
         .withColumnRenamed("b", "bucket")
@@ -866,8 +896,8 @@ def _group_agg_multi(spark: SparkSession, out_dir: str, gcols: list[str],
     hash aggregate runs over each chunk's combined group ids (small
     ints), and the distinct tuples materialize once per chunk, never
     per row. A low ``radix_cap`` forces :func:`_group_ids`' fallback."""
-    pruned, fields, fplan = _plan_scan(spark, out_dir, gcols + [value_col],
-                                       snapshot, where=where)
+    scan, fields, fplan = _plan_scan(spark, out_dir, gcols + [value_col],
+                                     snapshot, where=where)
     gfields, vfield = fields[:-1], fields[-1]
     is_str = isinstance(vfield.dataType, T.StringType)
     if not is_str:
@@ -916,7 +946,7 @@ def _group_agg_multi(spark: SparkSession, out_dir: str, gcols: list[str],
             )
 
     return _group_by(
-        pruned, kernel, gfields, gcols,
+        scan, kernel, gfields, gcols,
         [T.StructField("cnt", T.LongType(), False)]
         + [T.StructField(f"v_{fn}", st, fn != "count")
            for fn, _, _, st, _ in vaggs],
@@ -1200,27 +1230,25 @@ def count_encoded(spark: SparkSession, out_dir: str, where=None,
     popcount. Pass a dict as ``report`` to observe the split
     (parts_metadata / parts_scanned / rows_metadata). Returns a
     Python int (the partial frame is |tasks| rows)."""
-    pruned, _, fplan = _plan_scan(spark, out_dir, [], snapshot,
-                                  where=where)
-    if not fplan["preds"]:
-        row = pruned.agg(F.sum("n_rows").alias("c")).collect()[0]
-        return int(row["c"] or 0)
-    # _plan_scan validated everything (version, nested cols, literal
-    # exactness) and refused active deletes — the metadata tier below
-    # is only sound after that refusal
-    view = fplan["view"]
-    entailed, straddle, meta = _partition_tiers(view, fplan["preds"],
-                                                fplan["type_of"])
-    total = sum(meta[p][0] for p in entailed)
-    if report is not None:
-        report.update(
-            parts_metadata=len(entailed), parts_scanned=len(straddle),
-            rows_metadata=total,
-        )
-    if not straddle:
-        return total
-    pruned, _, fplan = _plan_scan(spark, out_dir, [], view,
-                                  where=where, only_part_ids=straddle)
+    scan, _, fplan = _plan_scan(spark, out_dir, [], snapshot, where=where)
+    total = 0
+    if fplan["preds"]:
+        # _plan_scan validated everything (version, nested cols, literal
+        # exactness) and refused active deletes — the metadata tier
+        # below is only sound after that refusal
+        view = fplan["view"]
+        entailed, straddle, meta = _partition_tiers(view, fplan["preds"],
+                                                    fplan["type_of"])
+        total = sum(meta[p][0] for p in entailed)
+        if report is not None:
+            report.update(
+                parts_metadata=len(entailed), parts_scanned=len(straddle),
+                rows_metadata=total,
+            )
+        if not straddle:
+            return total
+        scan, _, fplan = _plan_scan(spark, out_dir, [], view,
+                                    where=where, only_part_ids=straddle)
 
     def kernel(batches):
         total = 0
@@ -1236,9 +1264,7 @@ def count_encoded(spark: SparkSession, out_dir: str, where=None,
             [pa.array([total], type=pa.int64())], names=["c"]
         )
 
-    partials = pruned.mapInArrow(
-        kernel, schema=T.StructType([T.StructField("c", T.LongType())])
-    )
+    partials = scan(kernel, T.StructType([T.StructField("c", T.LongType())]))
     row = partials.agg(F.sum("c").alias("c")).collect()[0]
     return total + int(row["c"] or 0)
 
@@ -1255,8 +1281,8 @@ def sum_encoded(spark: SparkSession, out_dir: str, value_col: str,
     chunk IO (demoted to the scan tier when the sum rollup is absent
     for a partition with real values); only straddlers decode. Returns
     None for the SQL all-NULL/empty case."""
-    pruned, (vfield,), fplan = _plan_scan(spark, out_dir, [value_col],
-                                          snapshot, where=where)
+    scan, (vfield,), fplan = _plan_scan(spark, out_dir, [value_col],
+                                        snapshot, where=where)
     _check_integral(vfield, value_col)
     meta_total, meta_seen = 0, 0
     if fplan["preds"]:
@@ -1282,7 +1308,7 @@ def sum_encoded(spark: SparkSession, out_dir: str, value_col: str,
             )
         if not straddle:
             return meta_total if meta_seen else None
-        pruned, (vfield,), fplan = _plan_scan(
+        scan, (vfield,), fplan = _plan_scan(
             spark, out_dir, [value_col], view, where=where,
             only_part_ids=straddle,
         )
@@ -1314,9 +1340,7 @@ def sum_encoded(spark: SparkSession, out_dir: str, value_col: str,
             names=["s"],
         )
 
-    partials = pruned.mapInArrow(
-        kernel, schema=T.StructType([T.StructField("s", T.LongType())])
-    )
+    partials = scan(kernel, T.StructType([T.StructField("s", T.LongType())]))
     row = partials.agg(F.sum("s").alias("s")).collect()[0]
     if row["s"] is None:
         return meta_total if meta_seen else None

@@ -504,13 +504,11 @@ def analyze_table(spark: SparkSession, out_dir: str,
     null-count cross-check refuses service rather than lying)."""
     import json as _json
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from fhirflat_spark import ndv as _ndv
     from fhirflat_spark import quantiles as _q
-    from fhirflat_spark.decode import _check_version
-    from fhirflat_spark.encode import chunk_schema
+    from fhirflat_spark.decode import _check_version, scan_chunks
     from fhirflat_spark.manifest import (
         _branch_staged_versions,
         commit_stats_update,
@@ -601,16 +599,6 @@ def analyze_table(spark: SparkSession, out_dir: str,
             for c, wh, wq in ents:  # a chunk may need BOTH kinds of c
                 ph, pq = m.get(c, (False, False))
                 m[c] = (ph or wh, pq or wq)
-        chunks = (
-            spark.read.schema(chunk_schema(len(all_cols)))
-            .parquet(f"{out_dir}/chunks")
-            .where(F.col("part_id").isin(scan_pids))
-            .select(
-                "part_id", "chunk_seq",
-                *[F.col(f"payload.{field_of[c]}").alias(f"__b{j}")
-                  for j, c in enumerate(scan_cols)],
-            )
-        )
         out_schema = T.StructType([
             T.StructField("part_id", T.IntegerType(), False),
             T.StructField("chunk_seq", T.IntegerType(), False),
@@ -667,7 +655,10 @@ def analyze_table(spark: SparkSession, out_dir: str,
                         ]),
                     )
 
-        for r in chunks.mapInArrow(kernel, schema=out_schema).collect():
+        payload = {f"__b{j}": field_of[c] for j, c in enumerate(scan_cols)}
+        for r in scan_chunks(spark, out_dir, view, scan_pids, kernel,
+                             out_schema, payload=payload,
+                             meta=["part_id", "chunk_seq"]).collect():
             computed.setdefault((r["part_id"], r["chunk_seq"]), {})[
                 r["col"]] = (r["hll"], r["ddq"])
     # rewrite affected fragments: every chunk row gains the tracked

@@ -1711,15 +1711,24 @@ def read_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     Iceberg manifest-file analog). Chunk dirs no live snapshot
     references (rolled back or replaced, not yet vacuumed) are left out.
 
-    Reads ONLY the metadata columns of the chunk files (payload blobs are
-    pruned by the nested-column projection), so cost is #chunks, not data
-    size. Zone bounds come back as strings (numeric columns stringify);
+    The tasks read ONLY the metadata columns of the chunk files
+    (``decode.scan_chunks``, no payload byte), so cost is #chunks, not
+    data size. Zone bounds come back as strings (numeric columns stringify);
     cast at the call site for numeric min/max semantics."""
-    from fhirflat_spark.decode import _part_range_predicate
+    from pyspark.sql import types as T
 
+    from fhirflat_spark.decode import scan_chunks
+
+    view = table_view(out_dir)
+    meta = T.StructType([
+        T.StructField("part_id", T.IntegerType(), False),
+        T.StructField("chunk_seq", T.IntegerType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("stats", T.StringType(), False),
+    ])
     return (
-        spark.read.parquet(f"{out_dir}/chunks")
-        .where(_part_range_predicate(table_view(out_dir).part_ids))
+        scan_chunks(spark, out_dir, view, view.part_ids, lambda b: b, meta,
+                    meta=meta.names)
         .select(
             "part_id",
             "chunk_seq",

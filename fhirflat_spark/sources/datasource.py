@@ -774,9 +774,6 @@ class FhirflatMetadataReader(DataSourceReader):
         return self._ARROW[self._table]
 
     def read(self, partition):
-        import pyarrow.dataset as pads
-
-        from fhirflat_spark import fsio
         from fhirflat_spark.manifest import (
             _sha_of_partition_shas,
             _snapshot_versions,
@@ -857,17 +854,12 @@ class FhirflatMetadataReader(DataSourceReader):
         else:  # chunks: per-(chunk, column) lineage from the stats JSON
             if partition is None or partition.part_id < 0:
                 return
+            from fhirflat_spark.decode import read_chunks
+
             pid = partition.part_id
-            fs, inner = fsio.resolve(f"{path}/chunks/part_id={pid}")
-            dset = pads.dataset(inner, filesystem=fs, format="parquet")
             cols = {n: [] for n in schema.names}
-            for batch in dset.to_batches(
-                columns={
-                    "chunk_seq": pads.field("chunk_seq"),
-                    "n_rows": pads.field("n_rows"),
-                    "stats": pads.field("stats"),
-                }
-            ):
+            for batch in read_chunks(path, pid,
+                                     meta=["chunk_seq", "n_rows", "stats"]):
                 seqs = batch.column("chunk_seq").to_pylist()
                 nrs = batch.column("n_rows").to_pylist()
                 for seq, n, stats_json in zip(

@@ -1,11 +1,11 @@
 """Per-chunk Bloom filters (fhirflat_spark/bloom.py): point-lookup chunk
-pruning for unsorted high-cardinality keys, probed as pure-Catalyst
-substring predicates over the hex bit set in chunk stats.
+pruning for unsorted high-cardinality keys, probed in the reader task
+over the hex bit set in chunk stats before any payload is read.
 
 Invariants: never a false negative (pruning is always safe), probe
 positions computed by the driver's pure-python path are byte-identical
-to the numpy encode path, and the SQL predicate agrees with the python
-``might_contain`` oracle.
+to the numpy encode path, and the reader's chunk probe agrees with the
+python ``might_contain`` oracle.
 """
 
 from __future__ import annotations
@@ -170,19 +170,35 @@ def test_compaction_preserves_blooms(spark, bloomed, tmp_path):
 
 
 def test_bloom_predicate_agrees_with_python_oracle(spark, bloomed):
-    """The Catalyst substring predicate and might_contain must agree
-    chunk-by-chunk for present and absent probes."""
-    from fhirflat_spark.decode import _bloom_predicate
-
-    out, df = bloomed
-    chunks = spark.read.parquet(f"{out}/chunks").select("stats")
-    rows = [r["stats"] for r in chunks.collect()]
+    """The reader task's chunk probe (``_bloom_keeps``) and might_contain
+    must agree chunk-by-chunk for present and absent probes, and the
+    reader keeps exactly the chunks the oracle keeps."""
     import json
 
+    from fhirflat_spark.decode import read_chunks
+    from fhirflat_spark.manifest import table_view
+    from fhirflat_spark.sources.datasource import _bloom_keeps
+
+    out, df = bloomed
+    pids = table_view(out).part_ids
+
+    def chunks(prune=None):
+        return [
+            (pid, seq, json.loads(st))
+            for pid in pids
+            for b in read_chunks(out, pid, meta=["chunk_seq", "stats"],
+                                 prune=prune)
+            for seq, st in zip(b.column("chunk_seq").to_pylist(),
+                               b.column("stats").to_pylist())
+        ]
+
+    every = chunks()
+    assert every
     for probe in [df.select("commit").limit(1).collect()[0][0], "nope-123"]:
-        sql_keep = chunks.where(_bloom_predicate("commit", probe)).count()
-        py_keep = sum(
-            1 for s in rows
-            if B.might_contain(json.loads(s)["commit"]["bloom"], probe)
-        )
-        assert sql_keep == py_keep
+        keep = [_bloom_keeps(s, "commit", [probe]) for _, _, s in every]
+        oracle = [B.might_contain(s["commit"]["bloom"], probe)
+                  for _, _, s in every]
+        assert keep == oracle
+        kept = [(p, q) for p, q, _ in
+                chunks({"points": [("commit", [probe])]})]
+        assert kept == [(p, q) for (p, q, _), k in zip(every, oracle) if k]

@@ -16,7 +16,10 @@ from pyspark.sql import types as T
 from fhirflat_spark.codecs import encode_array
 from fhirflat_spark.encode import append_table, encode_table
 from fhirflat_spark.encoded_exec import (
+    _RADIX_CAP,
     _codes_keys,
+    _group_ids,
+    _run_codes,
     distinct_encoded,
     group_agg_encoded,
     group_count_encoded,
@@ -54,6 +57,56 @@ def test_codes_keys_nullable():
         None if c < 0 else keys[c].as_py() for c in codes
     ]
     assert rebuilt == arr.to_pylist()
+
+
+RUN_CASES = [
+    ("rle", pa.array(["x", "x", "x", "y", "y", "x", "z", "z"])),
+    ("constant", pa.array(["k"] * 7)),
+    ("rle", pa.array([None, "x", "x", None, None, "y", "x", None])),
+    ("constant", pa.array([None, "k", "k", None])),
+    ("rle", pa.array([3, 3, 3, 1, 1, 3], type=pa.int64())),
+]
+
+
+@pytest.mark.parametrize(
+    "codec,arr", RUN_CASES,
+    ids=["rle", "constant", "nullable-rle", "nullable-constant", "rle-int"],
+)
+@pytest.mark.parametrize("radix_cap", [_RADIX_CAP, 1],
+                         ids=["radix", "row-tuples"])
+def test_run_counts_equal_row_counts(codec, arr, radix_cap):
+    """An unfiltered single-column count over an rle or constant chunk
+    counts its runs weighted by their lengths (``_run_codes``) instead of
+    expanding one code per row; the groups and counts it gives must equal
+    the expanded per-row ones, NULL group included, through both
+    ``_group_ids`` branches."""
+    blob = encode_array(arr, codec=codec)
+    codes, keys, lens = _run_codes(blob)
+    assert len(codes) < len(arr)  # counted from runs, not rows
+    assert int(lens.sum()) == len(arr)
+
+    def groups(*res):
+        _, _, cnts, (ks,) = res
+        out: dict = {}
+        for k, c in zip(ks.to_pylist(), cnts.tolist()):
+            out[k] = out.get(k, 0) + c  # rle run values may repeat
+        return out
+
+    row_codes, row_keys = _codes_keys(blob)
+    want = groups(*_group_ids([row_codes], [row_keys], radix_cap))
+    got = groups(*_group_ids([codes], [keys], radix_cap, lens))
+    assert got == want
+    expect: dict = {}
+    for v in arr.to_pylist():
+        expect[v] = expect.get(v, 0) + 1
+    assert got == expect
+
+
+def test_run_codes_declines_other_codecs():
+    """Codecs without a run structure keep the per-row path."""
+    for codec, arr in CODEC_CASES:
+        if codec not in ("rle", "constant"):
+            assert _run_codes(encode_array(arr, codec=codec)) is None
 
 
 # ---------------------------------------------------------------------------

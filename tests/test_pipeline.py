@@ -366,23 +366,29 @@ def test_duplicate_key_counts_do_not_multiply_rows(spark, tmp_path):
     assert fails.count() == 0
 
 
-def test_zone_filter_unknown_type_keeps_all_chunks(spark, tmp_path):
+def test_zone_filter_unknown_type_keeps_all_chunks():
     """A zone_filter on a column whose Spark type is unknown (summary
     without spark_schema) must keep EVERY chunk — string comparison of
-    JSON-rendered numbers ('9' > '10') is not conservative."""
-    import json as _json
-
-    from fhirflat_spark.decode import _zone_predicate
+    JSON-rendered numbers ('9' > '10') is not conservative. The chunk
+    check runs in the reader task through ``_zone_keeps``."""
+    from fhirflat_spark.decode import _chunk_keeps
+    from fhirflat_spark.sources.datasource import _zone_keeps
     from pyspark.sql import types as T
 
-    # numeric bounds rendered as JSON strings: lexicographic would prune
-    stats = _json.dumps({"k": {"zmin": 9, "zmax": 11}})
-    chunk = spark.createDataFrame([(stats,)], "stats STRING")
-    # typed path: value 10 intersects [9, 11] -> kept
-    typed = T.StructType([T.StructField("k", T.LongType())])
-    assert chunk.where(_zone_predicate(typed, "k", 10, 10)).count() == 1
-    # unknown-type path: must keep (string '10' < '9' would wrongly prune)
-    assert chunk.where(_zone_predicate(T.StructType([]), "k", 10, 10)).count() == 1
+    # numeric bounds rendered as JSON: lexicographic would prune
+    for zmin, zmax in [(9, 11), ("9", "11")]:
+        stats = {"k": {"zmin": zmin, "zmax": zmax}}
+        # typed path: value 10 intersects [9, 11] -> kept; 12 does not
+        assert _zone_keeps(stats, "k", T.LongType(), 10, 10)
+        assert not _zone_keeps(stats, "k", T.LongType(), 12, 12)
+        # unknown-type path: must keep (string '10' < '9' would prune)
+        assert _zone_keeps(stats, "k", None, 10, 10)
+        assert _zone_keeps(stats, "k", None, 12, 12)
+        row = {"stats": json.dumps(stats)}
+        assert _chunk_keeps({"zones": [("k", 10, 10)], "type_of": {}}, row)
+        assert not _chunk_keeps(
+            {"zones": [("k", 12, 12)], "type_of": {"k": T.LongType()}}, row
+        )
 
 
 def test_encoded_shuffle_roundtrip_and_determinism(spark, tmp_path):
