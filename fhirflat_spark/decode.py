@@ -280,23 +280,6 @@ def _arrow_types(spark: SparkSession, schema: T.StructType) -> list:
         return [f.type for f in spark.createDataFrame([], schema).toArrow().schema]
 
 
-# full-table decodes at or above this many rows route through the named
-# Python data source; smaller ones stay on the mapInArrow kernel over
-# scan_chunks. Full decode plus fingerprint check of gen_spark rows at
-# local[4] on a 4-vCPU VM, 5 alternating pairs, medians, process-tree
-# CPU — kernel path / named source: 131,072 rows 1.67 / 4.70 CPU-s
-# (0.55 / 1.47 s wall); 262,144 rows 2.64 / 6.00 CPU-s (0.92 / 1.77 s);
-# 1,048,576 rows 9.22 / 13.44 CPU-s (2.47 / 3.59 s). The kernel path's
-# old fixed cost was Spark's file-index listing of chunks/ (a job of one
-# task per part dir above 32 dirs) plus the JVM parquet scan of the
-# payload bytes; with both gone it wins at every measured size, so the
-# gate now sends large plain decodes to the slower path. Its value is
-# kept until the route goes (the named source stays the format users
-# read with spark.read.format("fhirflat")). Both paths decode the same
-# chunks with the same kernels; equality is pinned by test_datasource.py.
-DATASOURCE_MIN_ROWS = 200_000
-
-
 def decode_table(spark: SparkSession, out_dir: str,
                  columns: list[str] | None = None,
                  part_ids: list[int] | None = None,
@@ -346,16 +329,18 @@ def decode_table(spark: SparkSession, out_dir: str,
     a rollback orphaned, or a crashed run half-wrote, are thereby
     invisible to readers even before ``vacuum`` reclaims them.
 
-    ``via`` picks the physical read path: ``"auto"`` (default) routes
-    plain full-table decodes — no explicit prune options, no positions —
-    of at least ``DATASOURCE_MIN_ROWS`` rows through the named data
-    source; everything else uses the ``mapInArrow`` kernel over
-    :func:`scan_chunks`. Both read their chunk files with pyarrow in
-    the task; the kernel path packs several part ids into one task and
-    costs less at every measured size (1M rows at local[4]: 9.2 vs 13.4
-    CPU-s, 2.5 vs 3.6 s wall; see ``DATASOURCE_MIN_ROWS``).
-    ``"datasource"`` / ``"arrow"`` force a path (``"datasource"`` still
-    requires the options it cannot express to be absent).
+    ``via`` picks the physical read path: ``"auto"`` (default) and
+    ``"arrow"`` run the ``mapInArrow`` kernel over :func:`scan_chunks`;
+    ``"datasource"`` reads through the named data source
+    (``spark.read.format("fhirflat")``) instead, and requires the
+    options it cannot express to be absent. Both read their chunk files
+    with pyarrow in the task, but the kernel path packs several part ids
+    into one task and costs less at every measured size: full decode
+    plus fingerprint check of ``gen_spark`` rows at local[4], 5
+    alternating pairs, medians, process-tree CPU — 131,072 rows 1.67 vs
+    4.70 CPU-s; 262,144 rows 2.64 vs 6.00; 1,048,576 rows 9.22 vs 13.44
+    (2.47 vs 3.59 s wall). ``"datasource"`` stays as the reference the
+    named source is checked against (``tests/test_datasource.py``).
     """
     from fhirflat_spark.manifest import read_summary, table_view
 
@@ -364,24 +349,14 @@ def decode_table(spark: SparkSession, out_dir: str,
     if via not in ("auto", "arrow", "datasource"):
         raise ValueError(f"via={via!r}: expected auto | arrow | datasource")
     view = table_view(out_dir, snapshot, as_of)
-    plain = (
-        part_ids is None and key_range is None and zone_filter is None
-        and point_filter is None and not with_positions
-    )
-    if via == "datasource" and not plain:
-        raise ValueError(
-            'via="datasource" supports only columns/snapshot — part_ids, '
-            "key_range, zone_filter, point_filter and with_positions need "
-            'the kernel path (via="auto"/"arrow")'
-        )
-    # auto-route on the SELECTED snapshot's size: a tiny historical
-    # snapshot of a large table would otherwise pay the named source's
-    # per-task cost (one task per part id) for a read the kernel path
-    # finishes as fast
-    gate_rows = sum(view.manifest["rows"].to_pylist())
-    if plain and via != "arrow" and (
-        via == "datasource" or gate_rows >= DATASOURCE_MIN_ROWS
-    ):
+    if via == "datasource":
+        if not (part_ids is None and key_range is None and zone_filter is None
+                and point_filter is None and not with_positions):
+            raise ValueError(
+                'via="datasource" supports only columns/snapshot — '
+                "part_ids, key_range, zone_filter, point_filter and "
+                'with_positions need the kernel path (via="auto"/"arrow")'
+            )
         from fhirflat_spark.sources.datasource import register
 
         register(spark)

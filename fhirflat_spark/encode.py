@@ -3,23 +3,29 @@ table + manifest.
 
 Spark-first shape (SURVEY.md §7 M3):
 
-1. **Skew plan**: per-repo row counts → bucket counts (a giant repo gets
-   many buckets) → broadcast join → ``salt`` column. This is explicit
-   salted repartitioning on ``repo`` — the cluster-scale analog of the
+1. **Skew plan** (``placement_plan``): per-repo row counts → bucket
+   counts (a giant repo gets many buckets) → a ``Placement`` shipped to
+   the stage-1 kernel, which places every row on ``base +
+   pmod(xxhash64(...), n_buckets)`` of its repo. This is explicit salted
+   repartitioning on ``repo`` — the cluster-scale analog of the
    reference's joblib fan-out over resource types
    (reference fhirflat/ingest.py:582-594), except skew-aware.
-2. ``repartition(P, repo, salt)`` then ``sortWithinPartitions(repo, path,
-   commit)`` so front-coding/RLE see sorted path prefixes.
-3. ``mapInArrow`` encode kernel: each Arrow batch becomes one *chunk row*
-   — a map of column → serialized codec blob, plus stats and a
-   content checksum (sha256 of the concatenated raw column bytes, which
-   is equivalent to per-row equality without per-row hashing).
-4. Chunk rows written as parquet (uncompressed — payloads are already
-   compressed); a **manifest** table + dataset summary records lineage
-   (the ``fhirflat.toml`` + ``sha256sums.txt`` analog, reference
+2. Stage-1 ``mapInArrow`` kernel: reads the input files itself when the
+   input is a bare parquet scan (else Spark feeds it the rows), places
+   the rows, sorts each target bucket's slice on (repo, path, commit)
+   so front-coding/RLE see sorted path prefixes, and encodes it — each
+   chunk becomes one *chunk row*: a struct of column → serialized codec
+   blob, plus stats and a content checksum (sha256 of the concatenated
+   raw column bytes, which is equivalent to per-row equality without
+   per-row hashing).
+3. ONE exchange of those compressed chunk rows; the stage-2 kernel
+   renumbers and consolidates them and writes each partition's chunk
+   file (uncompressed parquet — payloads are already compressed); a
+   **manifest** table + dataset summary records lineage (the
+   ``fhirflat.toml`` + ``sha256sums.txt`` analog, reference
    fhirflat/ingest.py:381-432) and drives checkpoint resume.
 
-At 100 TB the only shuffle is the single salted repartition, sized so each
+At 100 TB the only shuffle is that single exchange, sized so each
 partition holds ~``rows_per_bucket`` rows; the per-repo count aggregation
 is map-side-combined and tiny (#repos ≪ #rows). Everything after the
 shuffle is embarrassingly parallel.
@@ -27,6 +33,7 @@ shuffle is embarrassingly parallel.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import math
@@ -194,8 +201,9 @@ def chunk_write_kernel(kernel, chunks_dir: str, n_cols: int):
     and the task yields one ``WRITTEN_SCHEMA`` row per written partition
     instead of the chunk bytes. The file name is a
     pure function of the part id because layout is a pure function of
-    the input: retries and speculative duplicates publish identical
-    bytes under one name."""
+    the input, the session's ``defaultParallelism`` and the input's
+    split structure, all fixed within one job: retries and speculative
+    duplicates publish identical bytes under one name."""
     import itertools
 
     def run(batches):
@@ -681,6 +689,15 @@ def _bq(c: str):  # flat tables may carry dotted names (period.start)
     return F.col(f"`{c}`")
 
 
+def _skey(c: str):
+    """Sentinel placement key of salt column ``c``: NULL -> "n:", value v
+    -> "v:<v as string>". A NULL never matches a lookup (SQL null
+    semantics), so placement keys on the sentinel and drops no row."""
+    return F.when(_bq(c).isNull(), F.lit("n:")).otherwise(
+        F.concat(F.lit("v:"), _bq(c).cast("string"))
+    )
+
+
 # Driver-side salting-stats ceiling: the placement scan keeps at most this
 # many exact per-key entries on the driver; key spaces above it keep the
 # heaviest ``cap`` keys exact and fold every other key's rows into the
@@ -707,33 +724,26 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
                     num_partitions: int | None, salt_col: str | None,
                     key_counts: list[tuple] | None,
                     weight_col: str | None = None):
-    """Skew-plan prelude of ``plan_partition_ids``: sentinel salt key +
-    driver-side bucket allocation. Returns a dict with the salted frame,
-    the bucket allocation, P, and the ``_with_buckets`` builder.
+    """Skew plan of ``placement_plan``: per sentinel salt key row counts
+    (one pruned scan, or the caller's ``key_counts``) -> driver-side
+    bucket allocation. Returns a dict with the bucket allocation
+    (``bucket_rows``, sorted keys, "o:" last), P and the hash columns.
 
     Buckets per repo scale with that repo's observed row count, so the one
     giant repo (~40% of rows) spreads over many partitions while small
     repos coalesce. ``xxhash64(*other cols)`` gives a deterministic,
     uniform in-repo split.
 
-    NULL-safe: placement joins run on a sentinel string key (NULL and
-    keys missing from caller ``key_counts`` both get placed, never
-    dropped). Caller-supplied ``key_counts`` keys are matched via their
+    NULL-safe: placement keys on a sentinel string (``_skey``), so NULL
+    and keys missing from caller ``key_counts`` both get placed, never
+    dropped. Caller-supplied ``key_counts`` keys are matched via their
     string form (``str(k)`` must equal Spark's string cast — true for
     string/int keys).
     """
     spark = df.sparkSession
     default_par = spark.sparkContext.defaultParallelism
     hash_cols = [c for c in df.columns if c != salt_col][:3] or [salt_col]
-    # NULL salt keys never match an equi-join (SQL null semantics), so all
-    # placement joins run on a prefixed-string sentinel key: NULL -> "n:",
-    # value v -> "v:<v>", rows whose key is missing from caller-supplied
-    # stats -> the "o:" fallback key. No row can be dropped by placement.
-    skey = F.when(F.col(f"`{salt_col}`").isNull(), F.lit("n:")).otherwise(
-        F.concat(F.lit("v:"), F.col(f"`{salt_col}`").cast("string"))
-    )
-    orig_cols = list(df.columns)
-    df = df.withColumn("__skey", skey)
+    df = df.withColumn("__skey", _skey(salt_col))
     # one pruned-scan job; bucket math on the driver (#keys ≪ #rows —
     # at 10^12 files this is #repos rows, still driver-sized).
     # ``key_counts`` lets callers supply maintained table statistics
@@ -801,8 +811,7 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     else:
         # dedupe/aggregate by the STRINGIFIED key: duplicate caller keys (or
         # mixed-type keys whose string forms collide, int 1 vs '1') would
-        # otherwise produce duplicate __skey rows in the broadcast bucket map
-        # and the placement join would silently MULTIPLY matching data rows
+        # otherwise give one key two bucket entries and two placements
         merged: dict[str, int] = {}
         for k, c in key_counts:
             sk = "n:" if k is None else f"v:{k}"
@@ -815,8 +824,7 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     # different partitions and exactly-once replay breaks bit-identity.
     key_counts = sorted(key_counts)
     if not key_counts:  # empty input: nothing to salt, keep a valid plan
-        return {"empty": True, "df": df, "orig_cols": orig_cols,
-                "key_counts_sentinel": []}
+        return {"empty": True, "key_counts_sentinel": []}
 
     # caller-supplied stats may be stale/incomplete: reserve a bounded
     # fallback key for rows whose key has no bucket entry (appended LAST
@@ -836,7 +844,6 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
             )
         else:
             nb_other = max(1, math.ceil(rest_equiv / rows_per_bucket))
-        nb_other = min(nb_other, (1 << _NB_BITS) - 1)
     else:
         nb_other = 0
     alloc_target = (num_partitions - nb_other) if num_partitions else None
@@ -858,31 +865,10 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
         ]
     if nb_other:
         bucket_rows.append(("o:", nb_other))
-    P = int(sum(b for _, b in bucket_rows))
-
-    def _with_buckets(frame: DataFrame) -> DataFrame:
-        buckets = spark.createDataFrame(bucket_rows, ["__skey", "n_buckets"])
-        joined = frame.join(F.broadcast(buckets), "__skey", "left")
-        if caller_counts or capped:
-            joined = joined.withColumn(
-                "__skey",
-                F.when(F.col("n_buckets").isNull(), F.lit("o:")).otherwise(F.col("__skey")),
-            ).withColumn(
-                "n_buckets",
-                F.coalesce(F.col("n_buckets"), F.lit(bucket_rows[-1][1])),
-            )
-        return joined.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(*[_bq(c) for c in hash_cols]), F.col("n_buckets")).cast("int"),
-        ).drop("n_buckets")
-
     return {
         "empty": False,
-        "df": df,
-        "orig_cols": orig_cols,
         "bucket_rows": bucket_rows,
-        "P": P,
-        "with_buckets": _with_buckets,
+        "P": int(sum(b for _, b in bucket_rows)),
         "hash_cols": hash_cols,
         "caller_counts": caller_counts,
         "capped": capped,
@@ -890,38 +876,168 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     }
 
 
-# key-count ceiling for the literal-map placement fast path: below it the
-# bucket map compiles into the projection itself (element_at on map/array
-# literals — stays inside WholeStageCodegen, no BroadcastExchange, and
-# measured ~7s cheaper per 1M rows than feeding mapInArrow from a join
-# output on this host); above it the broadcast-join path takes over
-# (millions of repos can't live in a plan literal).
-LITERAL_MAP_MAX_KEYS = 1024
-_NB_BITS = 21  # packed long = (bucket base << 21) | n_buckets
+@dataclass(frozen=True)
+class Placement:
+    """Where every row of an encode goes: the bucket plan the driver
+    computes and ships to the stage-1 kernel, which places its rows with
+    :meth:`place`. This is the one placement rule of the engine; the
+    kernel applies it whether Spark feeds it the rows or it reads the
+    input files itself, and ``plan_partition_ids`` exposes it.
+
+    ``keys`` are the sorted sentinel salt keys (``_skey``), with the "o:"
+    fallback entry last when the plan has one; key i owns buckets
+    ``base[i] .. base[i] + nb[i] - 1``. Without keys (no salt column)
+    rows spread round-robin. ``salt`` and ``hash_cols`` name the batch
+    columns the rule reads, ``skip`` the buckets whose rows are dropped
+    (resume: partitions the head already holds)."""
+
+    P: int
+    keys: tuple = ()
+    base: tuple = ()
+    nb: tuple = ()
+    salt: str | None = None
+    hash_cols: tuple = ()
+    skip: frozenset = frozenset()
+
+    def place(self, tbl, row0: int, split: int):
+        """Target bucket (0..P-1) of every row of ``tbl``, an Arrow table
+        or batch of input split ``split`` whose first row is the split's
+        row ``row0``:
+
+        - with keys, ``base + pmod(xxhash64(hash_cols, 42), nb)`` of the
+          row's key (rows of a one-bucket key are not hashed). A
+          ``__skey`` column (``_skey``, computed by Spark) replaces the
+          lookup by the salt value, and an ``__xh`` column
+          (``F.xxhash64`` of the hash columns) replaces the hash, for
+          types the kernel does not cover. A key the plan lacks goes to
+          the "o:" entry; without one it raises;
+        - without keys, ``(row index in split + split) mod P``: equal
+          counts per target."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        n = tbl.num_rows
+        if not self.keys:
+            return (np.arange(row0, row0 + n, dtype=np.int64) + split) % self.P
+        names = tbl.schema.names
+        if "__skey" in names:
+            col, keys = tbl.column("__skey"), list(self.keys)
+        else:
+            col = tbl.column(self.salt)
+            keys = [k[2:] if k.startswith("v:") else None for k in self.keys]
+        vals = [k for k in keys if k is not None]
+        pos_of = np.array([i for i, k in enumerate(keys) if k is not None],
+                          dtype=np.int64)
+        hit = pc.index_in(col, value_set=pa.array(vals, col.type))
+        hit = hit.fill_null(-1).to_numpy(zero_copy_only=False)
+        pos = np.full(n, -1, dtype=np.int64)
+        pos[hit >= 0] = pos_of[hit[hit >= 0]]
+        if "__skey" not in names and "n:" in self.keys and col.null_count:
+            nulls = col.is_null().to_numpy(zero_copy_only=False)
+            pos[nulls] = self.keys.index("n:")
+        if (pos < 0).any():
+            if self.keys[-1] != "o:":
+                raise RuntimeError(
+                    "placement: a salt key is missing from the bucket plan "
+                    "(the input changed between placement scan and encode)"
+                )
+            pos[pos < 0] = len(self.keys) - 1
+        base = np.asarray(self.base, dtype=np.int64)[pos]
+        nb = np.asarray(self.nb, dtype=np.int64)[pos]
+        multi = np.flatnonzero(nb > 1)
+        if len(multi):
+            if "__xh" in names:
+                h = tbl.column("__xh").to_numpy(zero_copy_only=False)[multi]
+            else:
+                from fhirflat_spark.xxhash64 import xxhash64
+
+                idx = pa.array(multi)
+                h = xxhash64([tbl.column(c).take(idx) for c in self.hash_cols])
+            base[multi] += np.mod(h, nb[multi])
+        return base
 
 
-def _g_expr_literal(bucket_rows: list[tuple], hash_cols: list[str],
-                    caller_counts: bool):
-    """Global-bucket-ordinal expression via plan literals: one map lookup
-    gives (base offset, n_buckets) packed in a long; g = base + salt.
-    Rows whose key is missing fall back to the trailing "o:" entry when
-    caller stats were supplied (mirrors the join path's fallback)."""
-    packed = []
-    base = 0
-    for k, nb in bucket_rows:
-        packed.append((k, (base << _NB_BITS) | nb))
-        base += nb
-    args: list = []
-    for k, v in packed:
-        args.append(F.lit(k))
-        args.append(F.lit(v))
-    pk = F.element_at(F.create_map(*args), F.col("__skey"))
-    if caller_counts:  # "o:" is the last entry by construction
-        pk = F.coalesce(pk, F.lit(packed[-1][1]))
-    nb_col = pk.bitwiseAND(F.lit((1 << _NB_BITS) - 1))
-    base_col = F.shiftright(pk, _NB_BITS)
-    salt = F.pmod(F.xxhash64(*[_bq(c) for c in hash_cols]), nb_col)
-    return (base_col + salt).cast("int")
+def placement_plan(df: DataFrame, rows_per_bucket: int = 250_000,
+                   num_partitions: int | None = None,
+                   salt_col: str | None = "repo",
+                   key_counts: list[tuple] | None = None,
+                   stats_out: dict | None = None,
+                   weight_col: str | None = None) -> Placement:
+    """Skew-defusing placement plan of the encode, on the driver: the
+    ``Placement`` the stage-1 kernel places rows by. Tables without the
+    salt column spread round-robin (no skew key to defuse) over
+    ``P = num_partitions or max(ceil(n / rows_per_bucket),
+    defaultParallelism)`` targets. Buckets per salt key scale with that
+    key's observed row count (``_salted_prelude``) — a giant repo fans
+    out over many target partitions.
+
+    ``stats_out``: optional dict the planner fills with the (sentinel-
+    keyed) key counts it used — callers persist these as maintained
+    table statistics (the Iceberg partition-stats pattern)."""
+    if salt_col == "repo" and "repo" not in df.columns:
+        salt_col = None
+    if salt_col is None:
+        # no skew key: rows spread round-robin over targets in the kernel
+        # (by row index within the split, offset by the split) — NOT a
+        # content hash, whose binomial spread leaves partitions 5-10%
+        # under target and flags a freshly packed layout as fragmented
+        # (table_health min_fill boundary). Equal counts per target;
+        # deterministic given the input's split structure.
+        n = df.count()
+        default_par = df.sparkSession.sparkContext.defaultParallelism
+        return Placement(num_partitions
+                         or max(math.ceil(n / rows_per_bucket), default_par))
+    pre = _salted_prelude(df, rows_per_bucket, num_partitions, salt_col,
+                          key_counts, weight_col=weight_col)
+    if stats_out is not None:
+        stats_out["key_counts"] = pre["key_counts_sentinel"]
+        stats_out["caller_counts"] = pre.get("caller_counts", False)
+        stats_out["capped"] = pre.get("capped", False)
+    if pre["empty"]:
+        return Placement(num_partitions or 1)
+    keys, nb = zip(*pre["bucket_rows"])
+    base = [0]
+    for b in nb[:-1]:
+        base.append(base[-1] + b)
+    return Placement(pre["P"], tuple(keys), tuple(base), tuple(nb),
+                     salt_col, tuple(pre["hash_cols"]))
+
+
+def _placement_fields(df: DataFrame, columns: list[str],
+                      plan: Placement) -> tuple[list[tuple[str, str]], Placement]:
+    """The stage-1 input columns as (batch name, column) pairs — the
+    encoded ``columns`` as positional ``__c{i}`` names (pyspark's
+    mapInArrow resolves plain column names, which breaks on dotted flat
+    names), then ``__p{j}`` for salt/hash columns that are not encoded —
+    and ``plan`` rewritten to those batch names."""
+    fields = [(f"__c{i}", c) for i, c in enumerate(columns)]
+    extra = [c for c in dict.fromkeys((plan.salt, *plan.hash_cols))
+             if c is not None and c not in columns]
+    fields += [(f"__p{j}", c) for j, c in enumerate(extra)]
+    name = {c: b for b, c in reversed(fields)}
+    return fields, dataclasses.replace(
+        plan, salt=name.get(plan.salt),
+        hash_cols=tuple(name[c] for c in plan.hash_cols),
+    )
+
+
+def _spark_fed(df: DataFrame, plan: Placement) -> list:
+    """The columns Spark must compute for the kernel's placement: none
+    when the kernel covers it all, ``__skey`` when the salt column is
+    not a plain string, ``__xh`` (``F.xxhash64``) when a multi-bucket
+    key's hash columns have a type ``xxhash64.covered`` lacks."""
+    from fhirflat_spark.xxhash64 import covered
+
+    if not plan.keys:
+        return []
+    extra = []
+    salt_t = df.schema[plan.salt].dataType
+    if not (type(salt_t) is T.StringType and covered(salt_t)):
+        extra.append(_skey(plan.salt).alias("__skey"))
+    if max(plan.nb) > 1 and not all(
+            covered(df.schema[c].dataType) for c in plan.hash_cols):
+        extra.append(F.xxhash64(*[_bq(c) for c in plan.hash_cols]).alias("__xh"))
+    return extra
 
 
 def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
@@ -930,76 +1046,36 @@ def plan_partition_ids(df: DataFrame, rows_per_bucket: int = 250_000,
                        key_counts: list[tuple] | None = None,
                        stats_out: dict | None = None,
                        weight_col: str | None = None) -> tuple[DataFrame, int]:
-    """Skew-defusing placement plan of the encode: NO exchange — returns
-    ``df`` plus an ``__pb`` int column (target partition index, 0..P-1)
-    computed entirely map-side (broadcast joins + hash expressions).
-    Tables without the salt column spread round-robin (no skew key to
-    defuse).
+    """``df`` plus an ``__pb`` int column (target partition index, 0..P-1)
+    and P: the placement the encode's stage-1 kernel gives each row,
+    computed by the same ``Placement.place`` in a ``mapInArrow`` over
+    ``df`` (NO exchange). For inspecting placement; ``encode_table``
+    places inside its kernel."""
+    plan = placement_plan(df, rows_per_bucket, num_partitions, salt_col,
+                          key_counts, stats_out, weight_col)
+    fields, kplan = _placement_fields(df, df.columns, plan)
+    src = df.select(*[_bq(c).alias(b) for b, c in fields],
+                    *_spark_fed(df, plan))
+    out = [b for b, _ in fields[:len(df.columns)]]
 
-    Stage 1 (``encoded_pack_kernel_factory``) encodes each input split's
-    rows per ``__pb``, so the one exchange of the encode job moves
-    compressed chunk rows instead of every data row. Buckets per salt
-    key scale with that key's observed row count (``_salted_prelude``) —
-    a giant repo fans out over many target partitions.
+    def kernel(batches):
+        ctx = TaskContext.get()
+        split = ctx.partitionId() if ctx is not None else 0
+        row0 = 0
+        for b in batches:
+            pb = kplan.place(b, row0, split)
+            row0 += b.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [*b.select(out).columns, pa.array(pb, pa.int32())],
+                names=[*out, "__pb"],
+            )
 
-    ``stats_out``: optional dict the planner fills with the (sentinel-
-    keyed) key counts it used — callers persist these as maintained
-    table statistics (the Iceberg partition-stats pattern)."""
-    spark = df.sparkSession
-    if salt_col == "repo" and "repo" not in df.columns:
-        salt_col = None
-    default_par = spark.sparkContext.defaultParallelism
-
-    if salt_col is None:
-        n = df.count()
-        P = num_partitions or max(math.ceil(n / rows_per_bucket), default_par)
-        # no skew key: spread rows round-robin over targets, map-side.
-        # r6: per-split round-robin via the monotonic-id row counter
-        # (lower 33 bits = row index within the split), offset by the
-        # split id — NOT a content hash, whose binomial spread leaves
-        # partitions 5-10% under target and flags a freshly packed
-        # layout as fragmented (table_health min_fill boundary). Equal
-        # counts per target; deterministic given the input's split
-        # structure (a resume over the same input places rows as before).
-        rr = F.monotonically_increasing_id().bitwiseAND(
-            F.lit((1 << 33) - 1)
-        ) + F.spark_partition_id()
-        return df.withColumn("__pb", F.pmod(rr, F.lit(P)).cast("int")), P
-
-    pre = _salted_prelude(df, rows_per_bucket, num_partitions, salt_col,
-                          key_counts, weight_col=weight_col)
-    if stats_out is not None:
-        stats_out["key_counts"] = pre["key_counts_sentinel"]
-        stats_out["caller_counts"] = pre.get("caller_counts", False)
-        stats_out["capped"] = pre.get("capped", False)
-    if pre["empty"]:
-        P = num_partitions or 1
-        return pre["df"].drop("__skey").withColumn("__pb", F.lit(0)), P
-    bucket_rows, P, _with_buckets = pre["bucket_rows"], pre["P"], pre["with_buckets"]
-    df, orig_cols = pre["df"], pre["orig_cols"]
-
-    if len(bucket_rows) <= LITERAL_MAP_MAX_KEYS:
-        g = _g_expr_literal(bucket_rows, pre["hash_cols"],
-                            pre["caller_counts"] or pre["capped"])
-        out = df.withColumn("__pb", g)
-    elif len(bucket_rows) > 200_000:
-        # hash placement fallback: too many keys to broadcast an expanded
-        # bucket map (collision imbalance bounded at this scale because
-        # partitions ≫ buckets-per-partition)
-        out = _with_buckets(df).withColumn(
-            "__pb", F.pmod(F.hash("__skey", "__salt"), F.lit(P)).cast("int")
-        )
-    else:
-        # exact placement: global bucket ordinal g IS the partition index
-        expanded = []
-        g = 0
-        for k, nb in bucket_rows:
-            for s in range(nb):
-                expanded.append((k, s, g))
-                g += 1
-        exp_df = spark.createDataFrame(expanded, ["__skey", "__salt", "__pb"])
-        out = _with_buckets(df).join(F.broadcast(exp_df), ["__skey", "__salt"])
-    return out.select(*[_bq(c) for c in orig_cols], "__pb"), P
+    schema = T.StructType(
+        [T.StructField(b, f.dataType, f.nullable)
+         for b, f in zip(out, df.schema.fields)]
+        + [T.StructField("__pb", T.IntegerType(), False)]
+    )
+    return src.mapInArrow(kernel, schema).toDF(*df.columns, "__pb"), plan.P
 
 
 def encoded_shuffle_schema(n_cols: int) -> T.StructType:
@@ -1017,7 +1093,236 @@ def encoded_shuffle_schema(n_cols: int) -> T.StructType:
     )
 
 
-def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
+# the Arrow type mapInArrow delivers per Spark type (strings and binary
+# widen to the large types under spark.sql.execution.arrow.useLargeVarTypes,
+# timestamps carry the session zone); a type without an entry keeps the
+# input on the Spark-fed stage 1
+_ARROW_OF = {
+    T.BinaryType: pa.binary(), T.BooleanType: pa.bool_(),
+    T.ByteType: pa.int8(), T.ShortType: pa.int16(), T.IntegerType: pa.int32(),
+    T.LongType: pa.int64(), T.FloatType: pa.float32(),
+    T.DoubleType: pa.float64(), T.DateType: pa.date32(),
+    T.TimestampNTZType: pa.timestamp("us"),
+}
+
+
+def _exact_cast(src: pa.DataType, dst: pa.DataType) -> bool:
+    """True when every value of Arrow type ``src`` (as pyarrow reads a
+    parquet column, INT96 timestamps in micros) casts to ``dst`` without
+    change — the file path's condition for reading that column itself."""
+    if pa.types.is_dictionary(src):
+        src = src.value_type
+    if src == dst:
+        return True
+    if pa.types.is_large_string(dst) or pa.types.is_string(dst):
+        return pa.types.is_string(src) or pa.types.is_large_string(src)
+    if pa.types.is_large_binary(dst) or pa.types.is_binary(dst):
+        return pa.types.is_binary(src) or pa.types.is_large_binary(src)
+    if pa.types.is_integer(dst) and pa.types.is_integer(src):
+        return src.bit_width < dst.bit_width
+    if pa.types.is_timestamp(dst) and pa.types.is_timestamp(src):
+        # a zone-less column into a zoned one is a UTC instant (INT96, or
+        # a local timestamp Spark reads as one); units up to micros widen
+        return src.unit in ("s", "ms", "us") and (
+            src.tz is None or dst.tz is not None)
+    return False
+
+
+@dataclass(frozen=True)
+class _ParquetSource:
+    """Stage-1 input the kernel reads itself: the files of a bare parquet
+    scan, cut into (file, row-group range) units and assigned to tasks.
+
+    ``tasks[j]`` is task j's units in groups — each group is read, placed
+    and packed as one table, so a task holds at most about
+    ``spark.sql.files.maxPartitionBytes`` of input at a time, like one
+    Spark split. A unit is ``(path, row groups or None for the whole
+    file)``. ``fields`` maps each batch column to its file column, and
+    ``schema`` gives every batch column the Arrow type Spark's mapInArrow
+    would deliver."""
+
+    tasks: tuple
+    fields: tuple
+    schema: pa.Schema
+
+    def groups(self, task: int):
+        """Task ``task``'s input, one Arrow table per group."""
+        for group in self.tasks[task]:
+            yield pa.concat_tables([self._read(*u) for u in group])
+
+    def _read(self, path: str, row_groups) -> pa.Table:
+        import pyarrow.parquet as pq
+
+        from fhirflat_spark import fsio
+
+        fs, inner = fsio.resolve(path)
+        with pq.ParquetFile(inner, filesystem=fs,
+                            coerce_int96_timestamp_unit="us") as pf:
+            have = set(pf.schema_arrow.names)
+            want = [c for _, c in self.fields if c in have]
+            t = (pf.read(columns=want, use_threads=False) if row_groups is None
+                 else pf.read_row_groups(row_groups, columns=want,
+                                         use_threads=False))
+        lower = {c.lower() for c in have}
+        cols = []
+        for (name, c), f in zip(self.fields, self.schema):
+            if c in have:
+                cols.append(t.column(c).cast(f.type))
+            elif c.lower() in lower:  # Spark would match it, unlike pyarrow
+                raise RuntimeError(f"{path}: column {c!r} differs in case")
+            else:  # a file without the column reads as NULLs, as in Spark
+                cols.append(pa.nulls(t.num_rows, f.type))
+        return pa.Table.from_arrays(cols, schema=self.schema)
+
+
+def _parquet_scan(df: DataFrame) -> tuple[dict, list] | None:
+    """(column -> file column, [(path, bytes)] sorted by path) when the
+    optimized plan of ``df`` is plain-column projections over one
+    parquet ``LogicalRelation`` without partition columns; None for any
+    other plan (filters, computed columns, in-memory or cached frames)."""
+    def cls(o) -> str:
+        return o.getClass().getSimpleName()
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    names = None
+    if cls(plan) == "Project":
+        names = {}
+        items = plan.projectList()
+        for i in range(items.size()):
+            e = items.apply(i)
+            if cls(e) == "Alias" and cls(e.child()) == "AttributeReference":
+                names[e.name()] = e.child().name()
+            elif cls(e) == "AttributeReference":
+                names[e.name()] = e.name()
+            else:
+                return None
+        plan = plan.child()
+    if cls(plan) != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if cls(rel) != "HadoopFsRelation" or \
+            cls(rel.fileFormat()) != "ParquetFileFormat" or \
+            rel.partitionSchema().length():
+        return None
+    if names is None:
+        out = plan.output()
+        names = {out.apply(i).name(): out.apply(i).name()
+                 for i in range(out.size())}
+    if len(names) != len(df.columns):  # duplicate output names
+        return None
+    listing = rel.location().allFiles()
+    files = sorted((listing.apply(i).getPath().toString(),
+                    int(listing.apply(i).getLen()))
+                   for i in range(listing.size()))
+    return names, files
+
+
+def _parquet_source(df: DataFrame,
+                    fields: list[tuple[str, str]]) -> _ParquetSource | None:
+    """The file-read stage-1 input for ``df``, or None when ``df`` must
+    feed stage 1 through Spark: it is not a bare parquet scan
+    (``_parquet_scan``), it has no files, or a column's type is not one
+    Spark delivers that pyarrow reads exactly (``_exact_cast`` against
+    the first file's footer schema).
+
+    Units are whole files, and files above
+    ``spark.sql.files.maxPartitionBytes`` split at row-group boundaries
+    (their footers give the row-group sizes; besides the first
+    file's, for the type check, no other footer is read). They go largest first onto the task
+    with the fewest bytes, ``n`` tasks at most ``defaultParallelism``,
+    so the assignment is a pure function of the file listing; each
+    task's units run in path order, grouped up to the same byte size."""
+    import heapq
+
+    import pyarrow.parquet as pq
+
+    from fhirflat_spark import fsio
+    from fhirflat_spark.xxhash64 import covered
+
+    scan = _parquet_scan(df)
+    if scan is None or not scan[1]:
+        return None
+    names, files = scan
+    spark = df.sparkSession
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes",
+                           "false").lower() == "true"
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    arrow_fields = []
+    for name, c in fields:
+        f = df.schema[c]
+        if type(f.dataType) is T.StringType and covered(f.dataType):
+            t = pa.large_string() if large else pa.string()
+        elif type(f.dataType) is T.BinaryType and large:
+            t = pa.large_binary()
+        elif type(f.dataType) is T.TimestampType:
+            t = pa.timestamp("us", tz=zone)
+        elif type(f.dataType) in _ARROW_OF:
+            t = _ARROW_OF[type(f.dataType)]
+        else:
+            return None
+        arrow_fields.append(pa.field(name, t, f.nullable))
+    fs, inner = fsio.resolve(files[0][0])
+    with pq.ParquetFile(inner, filesystem=fs,
+                        coerce_int96_timestamp_unit="us") as pf:
+        file_schema = pf.schema_arrow
+    if any(b"legacy" in k for k in (file_schema.metadata or {})):
+        return None  # Spark would rebase its dates/timestamps
+    file_col = [names[c] for _, c in fields]
+    if any("." in fc for fc in file_col):
+        return None  # pyarrow would read a dotted name as a nested path
+    for fc, f in zip(file_col, arrow_fields):
+        if file_schema.get_field_index(fc) < 0 or \
+                not _exact_cast(file_schema.field(fc).type, f.type):
+            return None
+    max_bytes = int(spark._jsparkSession.sessionState().conf()
+                    .filesMaxPartitionBytes())
+    units = []  # (bytes, path, row groups)
+    for path, size in files:
+        if size <= max_bytes:
+            units.append((size, path, None))
+            continue
+        fs, inner = fsio.resolve(path)
+        with pq.ParquetFile(inner, filesystem=fs) as pf:
+            md = pf.metadata
+        rg_bytes = []
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            rg_bytes.append((sum(g.column(i).total_compressed_size
+                                 for i in range(g.num_columns)), rg))
+        units += [(b, path, tuple(rgs))
+                  for b, rgs in _byte_runs(rg_bytes, max_bytes)]
+    n = max(1, min(len(units), spark.sparkContext.defaultParallelism))
+    bins: list[list] = [[] for _ in range(n)]
+    heap = [(0, j) for j in range(n)]
+    for b, path, rgs in sorted(units, key=lambda u: (-u[0], u[1], u[2] or ())):
+        load, j = heapq.heappop(heap)
+        bins[j].append((b, path, rgs))
+        heapq.heappush(heap, (load + b, j))
+    tasks = tuple(
+        tuple(tuple(group) for _, group in _byte_runs(
+            [(b, (path, rgs)) for b, path, rgs in
+             sorted(units_j, key=lambda u: (u[1], u[2] or ()))], max_bytes))
+        for units_j in bins
+    )
+    return _ParquetSource(tasks, tuple(zip((b for b, _ in fields), file_col)),
+                          pa.schema(arrow_fields))
+
+
+def _byte_runs(sized, limit: int) -> list:
+    """Consecutive runs of ``(bytes, item)`` pairs as ``(bytes, [item,
+    ...])``: a run closes before an item would take it past ``limit``
+    bytes, and holds at least one item."""
+    runs: list = []
+    for b, item in sized:
+        if not runs or runs[-1][0] + b > limit:
+            runs.append([0, []])
+        runs[-1][0] += b
+        runs[-1][1].append(item)
+    return runs
+
+
+def encoded_pack_kernel_factory(columns: list[str], placement: Placement,
+                                tokens: list[int],
                                 codec_overrides: dict | None,
                                 name_map: dict[str, str] | None = None,
                                 codec_opts: dict | None = None,
@@ -1026,14 +1331,21 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                                 batch_rows: int = 16384,
                                 bloom_columns: frozenset[str] | None = None,
                                 ndv_columns: frozenset[str] | None = None,
-                                qsk_columns: frozenset[str] | None = None):
-    """Stage 1 of the encoded exchange (``shuffle=True``): encode THIS
-    input split's rows per target partition BEFORE the exchange, so the
+                                qsk_columns: frozenset[str] | None = None,
+                                source: _ParquetSource | None = None):
+    """Stage 1 of the encoded exchange (``shuffle=True``): place THIS
+    input split's rows (``placement``, dropping its ``skip`` buckets)
+    and encode them per target partition BEFORE the exchange, so the
     shuffle moves the final compressed chunk bytes (~0.25-0.3x of raw on
     this corpus) instead of every data row — and the expensive work
     (zstd/fsst/prefix kernels, stats, blooms) runs exactly once,
-    map-side, where the no-shuffle path already proved the input
-    conversion cheap.
+    map-side.
+
+    The input split is either the rows Spark feeds the task (one split
+    per Spark partition; ``src_split`` is the partition id) or, with
+    ``source``, the files the task reads itself (``_ParquetSource``; the
+    task's ``spark.range`` id is ``src_split``). Columns the batches
+    carry beyond ``columns`` serve placement only.
 
     Contrast with the removed blob pre-pack (SCALE.md): that variant
     shipped the RAW rows as Arrow-IPC blobs and still paid the full
@@ -1051,6 +1363,7 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
     base_opts = codec_opts or {}
     name_map = name_map or {c: c for c in columns}
     repo_batch_col = next((b for b, o in name_map.items() if o == "repo"), None)
+    skip = np.array(sorted(placement.skip), dtype=np.int64)
     # Slices below the stage-2 consolidation threshold are decoded and
     # re-encoded there REGARDLESS of how well stage 1 encoded them — so
     # running the full codec pipeline (selector trials, zstd-3, stats,
@@ -1091,14 +1404,10 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
     )
     full_schema = pa.schema(list(transit_schema) + list(extra_schema))
 
-    def kernel(batches):
-        ctx = TaskContext.get()
-        split = ctx.partitionId() if ctx is not None else 0
-        parts = [b for b in batches if b.num_rows]
-        if not parts:
-            return
+    def pack(tbl: pa.Table, pb, split: int, local: dict):
+        """Chunk rows of one placed table of split ``split``; ``local``
+        numbers each part's chunklets across the split's tables."""
         _lz4 = pa.Codec("lz4")  # per task: pa.Codec does not pickle
-        tbl = pa.Table.from_batches(parts).combine_chunks()
         # group the split by target bucket with a cheap stable integer
         # argsort (NOT a multi-key string sort: the full-split
         # (__pb, repo, path, commit) sort_indices + take measured ~1s/4
@@ -1107,29 +1416,27 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
         # run). Slices large enough to become final chunks directly get
         # a slice-local key sort below, which equals the old global
         # stable sort restricted to the slice.
-        pb_pre = tbl.column("__pb").to_numpy()
-        order = np.argsort(pb_pre, kind="stable")
-        tbl = tbl.take(pa.array(order))
-        pb = pb_pre[order]
-        data = tbl.drop_columns(["__pb"])
+        order = np.argsort(pb, kind="stable")
+        data = tbl.select(columns).take(pa.array(order))
+        pb = pb[order]
         bounds = np.flatnonzero(np.diff(pb)) + 1
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [len(pb)]))
         # transit rows accumulate into ONE combined output batch per
-        # task (plus one per real-encoded chunk): yielding each chunklet
-        # as its own 1-row batch costs an Arrow IPC frame per slice —
-        # splits x buckets frames on scattered inputs, measured ~1s/4
-        # cores of pure framing at 1M rows
+        # table (plus one per real-encoded chunk): yielding each
+        # chunklet as its own 1-row batch costs an Arrow IPC frame per
+        # slice — splits x buckets frames on scattered inputs, measured
+        # ~1s/4 cores of pure framing at 1M rows
         t_pid: list[int] = []
         t_rows: list[int] = []
         t_blob: list[bytes] = []
         t_tok: list[int] = []
+        t_seq: list[int] = []
         real: list[pa.RecordBatch] = []
         for s, e in zip(starts, ends):
             g = int(pb[s])
             part_id = part_offset + g
             tok = tokens[g]
-            local = 0
             sub = data.slice(s, e - s)
             if sub.num_rows < min_rows:
                 # transit chunklet: stage 2 consolidation re-encodes it
@@ -1146,6 +1453,8 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                     + _lz4.compress(ipc, asbytes=True)
                 )
                 t_tok.append(tok)
+                t_seq.append(local.get(part_id, 0))
+                local[part_id] = t_seq[-1] + 1
                 continue
             if sort_names:
                 # slice-local key sort (stable, equals the old global
@@ -1162,8 +1471,10 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                 for b in sl.to_batches():
                     if b.num_rows == 0:
                         continue
+                    seq = local.get(part_id, 0)
+                    local[part_id] = seq + 1
                     meta, out = _encode_one_batch(
-                        b, part_id, local, columns, name_map, overrides,
+                        b, part_id, seq, columns, name_map, overrides,
                         base_opts, repo_batch_col, bloom_columns,
                         ndv_columns, qsk_columns,
                     )
@@ -1171,7 +1482,7 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                         {
                             "meta_json": [json.dumps(meta)],
                             "src_split": [split],
-                            "local_seq": [local],
+                            "local_seq": [seq],
                             "__tok": [tok],
                         },
                         schema=extra_schema,
@@ -1180,7 +1491,6 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                         list(out.columns) + list(extra.columns),
                         schema=full_schema,
                     ))
-                    local += 1
         if t_pid:
             n_t = len(t_pid)
             payload = pa.StructArray.from_arrays(
@@ -1203,12 +1513,39 @@ def encoded_pack_kernel_factory(columns: list[str], tokens: list[int],
                     pa.nulls(n_t, pa.string()),
                     pa.array(["{}"] * n_t, pa.string()),
                     pa.array([split] * n_t, pa.int32()),
-                    pa.array([0] * n_t, pa.int32()),
+                    pa.array(t_seq, pa.int32()),
                     pa.array(t_tok, pa.int64()),
                 ],
                 schema=full_schema,
             )
         yield from real
+
+    def splits(batches):
+        """(split, table) of every input table of this task."""
+        if source is not None:
+            for b in batches:
+                for j in b.column("id").to_pylist():
+                    for t in source.groups(j):
+                        yield j, t
+            return
+        ctx = TaskContext.get()
+        parts = [b for b in batches if b.num_rows]
+        if parts:
+            yield (ctx.partitionId() if ctx is not None else 0,
+                   pa.Table.from_batches(parts))
+
+    def kernel(batches):
+        local: dict[int, dict] = {}  # split -> part id -> next local_seq
+        row0: dict[int, int] = {}
+        for split, tbl in splits(batches):
+            tbl = tbl.combine_chunks()
+            pb = placement.place(tbl, row0.get(split, 0), split)
+            row0[split] = row0.get(split, 0) + tbl.num_rows
+            if len(skip):
+                keep = ~np.isin(pb, skip)
+                tbl, pb = tbl.filter(pa.array(keep)), pb[keep]
+            if tbl.num_rows:
+                yield from pack(tbl, pb, split, local.setdefault(split, {}))
 
     return kernel
 
@@ -1374,6 +1711,74 @@ def encoded_merge_kernel_factory(n_cols: int, manifest_dir: str | None = None,
     return kernel
 
 
+def _encoded_exchange(df: DataFrame, columns: list[str], plan: Placement, *,
+                      codec_overrides: dict | None = None,
+                      codec_opts: dict | None = None, part_offset: int = 0,
+                      frag_dir: str | None = None,
+                      bloom: frozenset = frozenset(),
+                      ndv: frozenset = frozenset(),
+                      qsk: frozenset = frozenset()):
+    """The encoded exchange of ``shuffle=True`` up to the chunk write:
+    (stage-2 input, stage-2 merge kernel).
+
+    Stage 1 reads the input files itself when ``df`` is a bare parquet
+    scan (``_parquet_source``: ``spark.range`` tasks, no JVM scan, no
+    row transfer into Python) and otherwise takes the rows Spark feeds
+    it (``df.select(...)``, plus Spark-computed placement columns for
+    types the kernel does not hash — ``_spark_fed``). Either way the
+    kernel places the rows by ``plan`` and the ONE exchange hashes the
+    stage-1 chunk rows on ``__tok``."""
+    spark = df.sparkSession
+    fields, kplan = _placement_fields(df, columns, plan)
+    safe_names = [b for b, _ in fields[:len(columns)]]
+    name_map = dict(zip(safe_names, columns))
+    # Stage 2 derives part_id from the DATA (the merge kernel segments
+    # its input by part_id and flushes fragments per part), so its task
+    # count is free: run ~2 tasks per core instead of one per target
+    # partition. At P ≫ cores the per-task
+    # costs (python worker round-trip, scheduling, shuffle-block
+    # granularity — guide §2.2) otherwise dominate the merge stage;
+    # grouping bucket g → task g % n2 spreads each hot key's buckets
+    # evenly. Pure execution-level grouping: chunk layout, fragments
+    # and part ids are identical for any n2.
+    n2 = max(1, min(plan.P, spark.sparkContext.defaultParallelism * 2))
+    toks2 = partition_tokens(n2)
+    tokens = [toks2[g % n2] for g in range(plan.P)]
+    sort_names = [
+        s for s, c in zip(safe_names, columns)
+        if c in ("repo", "path", "commit")
+    ]
+    try:
+        batch_rows = int(
+            spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        )
+    except Exception:
+        from fhirflat_spark.session import ARROW_BATCH_ROWS as batch_rows
+    fed = _spark_fed(df, plan)
+    source = None if fed else _parquet_source(df, fields)
+    kernel = encoded_pack_kernel_factory(
+        safe_names, kplan, tokens, codec_overrides, name_map=name_map,
+        codec_opts=codec_opts, part_offset=part_offset,
+        sort_names=sort_names, batch_rows=batch_rows,
+        bloom_columns=bloom, ndv_columns=ndv, qsk_columns=qsk,
+        source=source,
+    )
+    if source is None:
+        stage1 = df.select(*[_bq(c).alias(b) for b, c in fields], *fed)
+    else:
+        stage1 = spark.range(0, len(source.tasks), 1, len(source.tasks))
+    stage1 = stage1.mapInArrow(kernel,
+                               schema=encoded_shuffle_schema(len(columns)))
+    merge = encoded_merge_kernel_factory(
+        len(columns), manifest_dir=frag_dir, columns=safe_names,
+        codec_overrides=codec_overrides, name_map=name_map,
+        codec_opts=codec_opts, batch_rows=batch_rows,
+        bloom_columns=bloom, ndv_columns=ndv,
+        qsk_columns=qsk, sort_names=sort_names,
+    )
+    return stage1.repartition(n2, F.col("__tok")), merge
+
+
 def detect_clustering(df: DataFrame, salt_col: str = "repo",
                       rows_per_bucket: int = 250_000) -> bool:
     """True when the input's existing splits are already clustered on the
@@ -1526,10 +1931,11 @@ def encode_table(
 
     ``shuffle`` is ``True`` (default), ``False`` or ``"auto"``.
 
-    ``shuffle=True`` re-clusters through the ENCODED exchange: placement
-    (``plan_partition_ids``) tags each row with its target partition
-    map-side; stage 1 groups each input split by target bucket and
-    kernel-encodes every (split, bucket) slice, and the one exchange
+    ``shuffle=True`` re-clusters through the ENCODED exchange: the
+    driver plans placement (``placement_plan``, one pruned counting
+    scan) and the stage-1 kernel places each row on its target
+    partition, groups its input split by target bucket and
+    kernel-encodes every (split, bucket) slice; the one exchange
     ships those COMPRESSED bytes (~0.3-0.5x of raw; slices below the
     consolidation threshold travel as lz4-framed Arrow IPC "transit"
     chunklets); stage 2 renumbers chunk_seq deterministically,
@@ -1537,10 +1943,30 @@ def encode_table(
     batch_rows//4 rows — keeps footprint stable on scattered inputs),
     and commits the fragments. It guarantees sorted-prefix locality +
     skew defusal regardless of input layout and reproduces the golden
-    manifest pin. Layout is a pure function of the input (same input
-    twice = same dataset checksum), which is what lets ``resume=True``
-    skip exactly the committed partitions: their rows are dropped before
-    stage 1 and the rest land where a clean encode puts them.
+    manifest pin.
+
+    When ``df`` is a bare parquet scan (plain columns of one parquet
+    relation: no filter, no partition columns, types pyarrow reads
+    exactly), stage 1 reads the files itself in ``spark.range`` tasks
+    (at most ``defaultParallelism``; files cut at row groups above
+    ``spark.sql.files.maxPartitionBytes``) instead of taking rows from
+    a JVM scan; any other input is fed by Spark. Both place rows by the
+    same rule, so a row with a ``repo`` goes to the same partition
+    either way.
+
+    Layout is a pure function of the input, the session's
+    ``defaultParallelism`` and the input's split structure — not of the
+    input alone. P of a table without ``repo`` and the "o:" fallback
+    size for caller ``key_counts`` read ``defaultParallelism``; rows of
+    a table without ``repo`` spread round-robin by their index within
+    their split; chunk order follows split order. The same input encoded
+    twice in the same session gives the same dataset checksum (a
+    parquet input split by its file listing, another input by Spark's
+    partitioning), which is what lets ``resume=True`` skip exactly the
+    committed partitions: their buckets' rows are dropped in stage 1
+    and the rest land where a clean encode puts them. A resume at
+    another parallelism or over a differently split input can place
+    rows differently (ROADMAP direction 1).
 
     ``shuffle=False`` is the layout-preserving mode: encode each input
     split in place with NO exchange — correct for any input, optimal when
@@ -1708,11 +2134,6 @@ def encode_table(
             pid = int(name[: -len(".json")])
             if pid >= part_offset and pid not in committed:
                 fsio.delete_file(f"{frag_dir}/{name}")
-    # pyspark's mapInArrow resolves plain column names, which breaks on
-    # dotted flat names (period.start) — feed it positional safe names and
-    # keep the original names inside the kernel for payload/stats keys
-    safe_names = [f"__c{i}" for i in range(len(columns))]
-    name_map = dict(zip(safe_names, columns))
     codec_opts = {"archive": True} if profile == "archive" else None
     plan_stats: dict = {}
 
@@ -1720,63 +2141,30 @@ def encode_table(
         # encoded exchange: encode map-side per target bucket, exchange
         # the COMPRESSED chunk bytes (~0.3-0.5x of raw), renumber +
         # consolidate + fragment-commit post-shuffle
-        bucketed, P = plan_partition_ids(
+        plan = placement_plan(
             df, rows_per_bucket=rows_per_bucket, num_partitions=num_partitions,
             key_counts=key_counts, stats_out=plan_stats, weight_col=weight_col,
         )
-        bucketed = bucketed.select(
-            *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)],
-            "__pb",
-        )
+        P = plan.P
         if skip:
             # resume: placement is a pure function of the input and stage
-            # 1 sets part_id = part_offset + __pb, so dropping the
+            # 1 sets part_id = part_offset + bucket, so dropping the
             # committed buckets' rows skips exactly the committed
             # partitions; the rest land where a clean encode puts them
-            bucketed = bucketed.where(
-                ~F.col("__pb").isin([p - part_offset for p in skip])
-            )
-        # Stage 2 derives part_id from the DATA (the merge kernel segments
-        # its input by part_id and flushes fragments per part), so its task
-        # count is free: run ~2 tasks per core instead of one per target
-        # partition. At P ≫ cores the per-task
-        # costs (python worker round-trip, scheduling, shuffle-block
-        # granularity — guide §2.2) otherwise dominate the merge stage;
-        # grouping bucket g → task g % n2 spreads each hot key's buckets
-        # evenly. Pure execution-level grouping: chunk layout, fragments
-        # and part ids are identical for any n2.
-        n2 = max(1, min(P, spark.sparkContext.defaultParallelism * 2))
-        toks2 = partition_tokens(n2)
-        tokens = [toks2[g % n2] for g in range(P)]
-        sort_names = [
-            s for s, c in zip(safe_names, columns)
-            if c in ("repo", "path", "commit")
-        ]
-        try:
-            batch_rows = int(
-                spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-            )
-        except Exception:
-            from fhirflat_spark.session import ARROW_BATCH_ROWS as batch_rows
-        stage1 = bucketed.mapInArrow(
-            encoded_pack_kernel_factory(
-                safe_names, tokens, codec_overrides, name_map=name_map,
-                codec_opts=codec_opts, part_offset=part_offset,
-                sort_names=sort_names, batch_rows=batch_rows,
-                bloom_columns=bloom_set, ndv_columns=ndv_set,
-                qsk_columns=qsk_set,
-            ),
-            schema=encoded_shuffle_schema(len(columns)),
-        )
-        source = stage1.repartition(n2, F.col("__tok"))
-        kernel = encoded_merge_kernel_factory(
-            len(columns), manifest_dir=frag_dir, columns=safe_names,
-            codec_overrides=codec_overrides, name_map=name_map,
-            codec_opts=codec_opts, batch_rows=batch_rows,
-            bloom_columns=bloom_set, ndv_columns=ndv_set,
-            qsk_columns=qsk_set, sort_names=sort_names,
+            plan = dataclasses.replace(
+                plan, skip=frozenset(p - part_offset for p in skip))
+        source, kernel = _encoded_exchange(
+            df, columns, plan, codec_overrides=codec_overrides,
+            codec_opts=codec_opts, part_offset=part_offset,
+            frag_dir=frag_dir, bloom=bloom_set, ndv=ndv_set, qsk=qsk_set,
         )
     else:  # layout-preserving: encode splits in place, no exchange
+        # pyspark's mapInArrow resolves plain column names, which breaks
+        # on dotted flat names (period.start) — feed it positional safe
+        # names and keep the original names inside the kernel for
+        # payload/stats keys
+        safe_names = [f"__c{i}" for i in range(len(columns))]
+        name_map = dict(zip(safe_names, columns))
         P = df.rdd.getNumPartitions()
         source = df.select(
             *[F.col(f"`{c}`").alias(s) for s, c in zip(safe_names, columns)]

@@ -62,10 +62,7 @@ def test_decode_table_via_routes_agree(spark, ds_dir):
     """decode_table's two physical read paths — the mapInArrow kernel and
     the named-source pyarrow-direct read — must return identical rows and
     schema (incl. merge-on-read deletes, upserts, column selection and
-    snapshot time travel), and "auto" must route through the source only
-    at/above the row gate."""
-    from fhirflat_spark import decode as dec
-
+    snapshot time travel), and "auto" must run the kernel path."""
     arrow = decode_table(spark, ds_dir, via="arrow")
     direct = decode_table(spark, ds_dir, via="datasource")
     assert direct.schema == arrow.schema
@@ -82,27 +79,13 @@ def test_decode_table_via_routes_agree(spark, ds_dir):
             df._jdf.queryExecution(), "formatted"
         )
 
-    # auto: this fixture is far below the gate → kernel path
+    # auto runs the kernel path at any size, snapshot reads included
     assert "MapInArrow" in plan(decode_table(spark, ds_dir))
-    old = dec.DATASOURCE_MIN_ROWS
-    dec.DATASOURCE_MIN_ROWS = 0
-    try:
-        assert "MapInArrow" not in plan(decode_table(spark, ds_dir))
-    finally:
-        dec.DATASOURCE_MIN_ROWS = old
+    assert "MapInArrow" in plan(decode_table(spark, ds_dir, snapshot=1))
+    assert "MapInArrow" not in plan(direct)
     # options the source cannot express must be rejected, never dropped
     with pytest.raises(ValueError, match="datasource"):
         decode_table(spark, ds_dir, with_positions=True, via="datasource")
-    # snapshot-aware gate: with the threshold between snap1's 250 rows
-    # and the current 350, a snapshot-1 read must stay on the kernel
-    # path (its size, not the current table's, pays the planning cost)
-    # while the plain read routes through the source (round-4 advice)
-    dec.DATASOURCE_MIN_ROWS = 300
-    try:
-        assert "MapInArrow" in plan(decode_table(spark, ds_dir, snapshot=1))
-        assert "MapInArrow" not in plan(decode_table(spark, ds_dir))
-    finally:
-        dec.DATASOURCE_MIN_ROWS = old
 
 
 def test_column_pruning_option(spark, ds_dir):

@@ -450,54 +450,102 @@ def test_encoded_shuffle_append_and_stats(spark, tmp_path):
     assert decode_table(spark, out).count() == 4000
 
 
-def test_literal_and_join_placement_agree(spark):
-    """The literal-map placement fast path must assign every row the same
-    target partition as the broadcast-join path (same bucket ordinals,
-    same tokens) — a divergence would silently change dataset layout."""
-    import fhirflat_spark.encode as E
+def _catalyst_pb(df, plan):
+    """Reference placement in Catalyst: ``base + pmod(xxhash64(hash
+    cols), nb)`` of each row's sentinel key, a key missing from the plan
+    taking the "o:" fallback entry."""
+    from pyspark.sql import types as T
+
+    spark = df.sparkSession
+    buckets = spark.createDataFrame(
+        list(zip(plan.keys, plan.base, plan.nb)),
+        T.StructType([T.StructField("__skey", T.StringType()),
+                      T.StructField("__base", T.LongType()),
+                      T.StructField("__nb", T.LongType())]),
+    )
+    skey = F.when(F.col("repo").isNull(), F.lit("n:")).otherwise(
+        F.concat(F.lit("v:"), F.col("repo").cast("string")))
+    out = df.withColumn("__skey", skey).join(
+        F.broadcast(buckets), "__skey", "left")
+    if plan.keys[-1] == "o:":
+        out = out.withColumn(
+            "__base", F.coalesce("__base", F.lit(plan.base[-1]))
+        ).withColumn("__nb", F.coalesce("__nb", F.lit(plan.nb[-1])))
+    ref = F.col("__base") + F.pmod(
+        F.xxhash64(*[F.col(f"`{c}`") for c in plan.hash_cols]), F.col("__nb"))
+    return out.withColumn("__ref", ref.cast("int"))
+
+
+def _placement_variant(spark, variant):
+    """(frame, placement kwargs) of one placement test table."""
+    from pyspark.sql import types as T
 
     df = gen_spark(spark, 1500, seed=13)
-    lit_df, p1 = E.plan_partition_ids(df, rows_per_bucket=300)
-    lit = {
-        (r["repo"], r["path"]): r["__pb"]
-        for r in lit_df.select("repo", "path", "__pb").collect()
-    }
-    saved = E.LITERAL_MAP_MAX_KEYS
-    E.LITERAL_MAP_MAX_KEYS = 0  # force the join path
-    try:
-        join_df, p2 = E.plan_partition_ids(df, rows_per_bucket=300)
-        joined = {
-            (r["repo"], r["path"]): r["__pb"]
-            for r in join_df.select("repo", "path", "__pb").collect()
-        }
-    finally:
-        E.LITERAL_MAP_MAX_KEYS = saved
-    assert p1 == p2
-    assert lit == joined
+    if variant == "strings":
+        return df, {}
+    if variant == "null_repo_stale_counts":
+        # NULL keys, and caller counts that miss one repo (the "o:" entry)
+        df = df.withColumn("repo", F.when(F.col("path").endswith("7"), None)
+                           .otherwise(F.col("repo")))
+        counts = sorted((r["repo"], r["count"]) for r in
+                        df.groupBy("repo").count().collect()
+                        if r["repo"] is not None)
+        return df, {"key_counts": [(None, 150), *counts[1:]]}
+    # an integer salt key (Spark computes the sentinel key) and a decimal
+    # hash column (Spark computes the hash)
+    return df.select(
+        F.length("repo").cast("int").alias("repo"),
+        F.length("path").cast(T.DecimalType(12, 2)).alias("path"),
+        "commit", "lang",
+    ), {}
 
 
-def test_join_path_encode_sha_parity(spark, tmp_path):
-    """Encoding through the broadcast-join placement path (the >1024-key
-    regime) must produce the EXACT same dataset checksum as the
-    literal-map fast path — placement, partitioning, sort, and chunking
-    all bit-identical. (Both planners run driver-side, so forcing the
-    threshold works.)"""
+@pytest.mark.parametrize("variant", ["strings", "null_repo_stale_counts",
+                                     "int_salt_decimal_hash"])
+def test_kernel_placement_matches_catalyst_reference(spark, variant):
+    """Every row's kernel placement (``plan_partition_ids``, the rule the
+    stage-1 kernel applies) equals the Catalyst reference of the same
+    bucket plan — with NULL keys, a stale caller key count, and the types
+    Spark hashes for the kernel."""
+    import fhirflat_spark.encode as E
+
+    df, kw = _placement_variant(spark, variant)
+    plan = E.placement_plan(df, rows_per_bucket=150, **kw)
+    assert max(plan.nb) > 1  # some key spans buckets: the hash is live
+    bucketed, P = E.plan_partition_ids(df, rows_per_bucket=150, **kw)
+    assert P == plan.P
+    out = _catalyst_pb(bucketed, plan)
+    assert out.count() == df.count()
+    assert out.where(F.col("__pb") != F.col("__ref")).count() == 0
+
+
+def test_kernel_placement_matches_catalyst_many_keys(spark, tmp_path):
+    """Exact placement at more than 1,024 salt keys (once a second,
+    join-based planner's regime): kernel and Catalyst agree row by row,
+    and the encode round-trips and is deterministic."""
     import fhirflat_spark.encode as E
     from fhirflat_spark.manifest import read_summary
 
-    df = gen_spark(spark, 2000, seed=7, partitions=4)
-    out_lit = str(tmp_path / "lit")
-    out_join = str(tmp_path / "join")
-    encode_table(df, out_lit, rows_per_bucket=400)
-    saved = E.LITERAL_MAP_MAX_KEYS
-    E.LITERAL_MAP_MAX_KEYS = 0
-    try:
-        encode_table(df, out_join, rows_per_bucket=400)
-    finally:
-        E.LITERAL_MAP_MAX_KEYS = saved
-    sha_lit = read_summary(spark, out_lit)["dataset_sha256"]
-    sha_join = read_summary(spark, out_join)["dataset_sha256"]
-    assert sha_lit == sha_join
+    df = spark.range(6000, numPartitions=4).select(
+        F.when(F.col("id") < 4500, F.concat(F.lit("r"), (F.col("id") % 1500)
+                                            .cast("string")))
+        .otherwise(F.lit("big")).alias("repo"),
+        F.concat(F.lit("p/"), F.col("id").cast("string")).alias("path"),
+        F.sha2(F.col("id").cast("string"), 256).alias("commit"),
+    )
+    plan = E.placement_plan(df, rows_per_bucket=300)
+    assert len(plan.keys) > 1024 and max(plan.nb) == 5
+    bucketed, _ = E.plan_partition_ids(df, rows_per_bucket=300)
+    assert _catalyst_pb(bucketed, plan).where(
+        F.col("__pb") != F.col("__ref")).count() == 0
+    shas = []
+    for d in ("a", "b"):
+        out = str(tmp_path / d)
+        encode_table(df, out, rows_per_bucket=300)
+        shas.append(read_summary(spark, out)["dataset_sha256"])
+    assert shas[0] == shas[1]
+    dec = decode_table(spark, out)
+    assert dec.exceptAll(df).count() + df.exceptAll(dec).count() == 0
 
 
 def test_column_selective_verify(spark, encoded):

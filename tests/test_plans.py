@@ -132,54 +132,47 @@ def test_decode_column_pruning_reaches_scan(spark, tmp_path, monkeypatch):
     assert dec.count() == 1000
 
 
-def _encoded_plan(spark) -> str:
+def _encoded_plan(spark, src: str | None = None) -> str:
     """Formatted plan of the encode pipeline: stage-1 encode kernel, ONE
-    repartition on __tok, stage-2 merge kernel."""
-    from pyspark.sql import functions as F
-
+    repartition on __tok, stage-2 merge kernel. With ``src`` (a parquet
+    directory) the input is a bare file scan, which stage 1 reads
+    itself; otherwise an in-memory frame feeds it."""
     from fhirflat_spark.datagen import gen_spark
     from fhirflat_spark.encode import (
+        _encoded_exchange,
         chunk_schema,
-        encoded_merge_kernel_factory,
-        encoded_pack_kernel_factory,
-        encoded_shuffle_schema,
-        partition_tokens,
-        plan_partition_ids,
+        placement_plan,
     )
 
     df = gen_spark(spark, 2000, seed=3)
-    cols = df.columns
-    safe = [f"__c{i}" for i in range(len(cols))]
-    bucketed, P = plan_partition_ids(df, rows_per_bucket=500)
-    bucketed = bucketed.select(
-        *[F.col(c).alias(s) for s, c in zip(safe, cols)], "__pb"
+    if src is not None:
+        df.write.parquet(src)
+        df = spark.read.parquet(src)
+    source, merge = _encoded_exchange(
+        df, df.columns, placement_plan(df, rows_per_bucket=500)
     )
-    stage1 = bucketed.mapInArrow(
-        encoded_pack_kernel_factory(
-            safe, partition_tokens(P), None, name_map=dict(zip(safe, cols))
-        ),
-        schema=encoded_shuffle_schema(len(cols)),
-    )
-    chunks = stage1.repartition(P, F.col("__tok")).mapInArrow(
-        encoded_merge_kernel_factory(len(cols)), schema=chunk_schema(len(cols))
-    )
+    chunks = source.mapInArrow(merge, schema=chunk_schema(len(df.columns)))
     return chunks._sc._jvm.PythonSQLUtils.explainString(
         chunks._jdf.queryExecution(), "formatted"
     )
 
 
-def test_encode_plan_single_shuffle(spark):
+def test_encode_plan_single_shuffle(spark, tmp_path):
     """The encode pipeline must contain exactly ONE data-sized exchange —
-    a second shuffle would be a 100-TB bug."""
+    a second shuffle would be a 100-TB bug — for an in-memory input
+    (Spark feeds stage 1) and for a parquet-file input (stage 1 reads
+    the files in ``spark.range`` tasks: no JVM scan of the rows)."""
     import re
 
-    plan = _encoded_plan(spark)
-    data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
-    assert len(data_exchanges) == 1, plan
-    # literal-map placement: bucket→partition mapping is a projection, so
-    # no BroadcastExchange may appear below the shuffle at default key
-    # counts (the join path is reserved for >LITERAL_MAP_MAX_KEYS repos)
-    assert "BroadcastExchange" not in plan, plan
+    for src in (None, str(tmp_path / "src")):
+        plan = _encoded_plan(spark, src)
+        data_exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
+        assert len(data_exchanges) == 1, plan
+        # placement runs in the stage-1 kernel: no join, no broadcast
+        assert "BroadcastExchange" not in plan, plan
+        assert "Join" not in plan, plan
+        if src is not None:
+            assert "Scan parquet" not in plan and "Range" in plan, plan
 
 
 def test_encoded_shuffle_plan_single_compressed_exchange(spark):

@@ -64,42 +64,37 @@ def main() -> None:
         )
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
 
-    # the encoded exchange: placement projection → stage-1 encode kernel
-    # → one exchange of compressed chunk rows → stage-2 merge kernel
-    from pyspark.sql import functions as F
+    # the encoded exchange, for both stage-1 inputs: a parquet-file input
+    # (the kernel reads the files in spark.range tasks) and an in-memory
+    # input (Spark feeds the rows). Each is stage-1 kernel (placement +
+    # encode) → ONE exchange of compressed chunk rows → stage-2 merge
+    import shutil
+    import tempfile
 
     from fhirflat_spark.datagen import gen_spark
     from fhirflat_spark.encode import (
+        _encoded_exchange,
         chunk_schema,
-        encoded_merge_kernel_factory,
-        encoded_pack_kernel_factory,
-        encoded_shuffle_schema,
-        partition_tokens,
-        plan_partition_ids,
+        placement_plan,
     )
 
-    df = gen_spark(spark, 5000, seed=3)
-    cols = df.columns
-    safe = [f"__c{i}" for i in range(len(cols))]
-    bucketed, P = plan_partition_ids(df, rows_per_bucket=1000)
-    bucketed = bucketed.select(
-        *[F.col(c).alias(a) for a, c in zip(safe, cols)], "__pb"
-    )
-    stage1 = bucketed.mapInArrow(
-        encoded_pack_kernel_factory(
-            safe, partition_tokens(P), None, name_map=dict(zip(safe, cols))
-        ),
-        schema=encoded_shuffle_schema(len(cols)),
-    )
-    chunks = stage1.repartition(P, F.col("__tok")).mapInArrow(
-        encoded_merge_kernel_factory(len(cols)), schema=chunk_schema(len(cols))
-    )
-    plan = chunks._sc._jvm.PythonSQLUtils.explainString(
-        chunks._jdf.queryExecution(), "formatted"
-    )
-    lines += ["## encode pipeline (stage-1 encode → compressed-chunk "
-              "exchange → stage-2 merge)",
-              "", "```", plan.rstrip(), "```", ""]
+    mem = gen_spark(spark, 5000, seed=3)
+    src = os.path.join(tempfile.mkdtemp(prefix="dump_plans_"), "src")
+    mem.write.parquet(src)
+    for label, df in (("parquet-file input", spark.read.parquet(src)),
+                      ("in-memory input", mem)):
+        source, merge = _encoded_exchange(
+            df, df.columns, placement_plan(df, rows_per_bucket=1000)
+        )
+        chunks = source.mapInArrow(merge,
+                                   schema=chunk_schema(len(df.columns)))
+        plan = chunks._sc._jvm.PythonSQLUtils.explainString(
+            chunks._jdf.queryExecution(), "formatted"
+        )
+        lines += [f"## encode pipeline, {label} (stage-1 encode → "
+                  "compressed-chunk exchange → stage-2 merge)",
+                  "", "```", plan.rstrip(), "```", ""]
+    shutil.rmtree(os.path.dirname(src), ignore_errors=True)
 
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/PLANS.md", "w") as f:
